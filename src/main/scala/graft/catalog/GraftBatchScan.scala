@@ -585,9 +585,6 @@ final class GraftBatchScan(
     // and/or key-set membership — and re-exposes the reader's own
     // vectors through a [[SelectedColumnVector]] selection (zero copy;
     // a batch with nothing deleted in range passes through untouched).
-    // Spark requires a UNIFORM columnar answer per scan, so columnar
-    // is claimed only when both the plain and extended batch readers
-    // vectorize; otherwise every split takes the row-masked path.
     val hasDvs = snap.dvFiles.nonEmpty
     val hasEq = snap.deleteFiles.nonEmpty
     val needMask = hasDvs || hasEq
@@ -595,46 +592,60 @@ final class GraftBatchScan(
     // the projection asks for the row's position metadata
     val needIdx = hasDvs || posRequested
     val fseq = filters.toIndexedSeq
-    val colPlain = ParquetReadBridge.columnarReadFunction(
-      table.session, snap.schema, dataRequired, fseq)
-    // one (row, columnar) ext reader pair per file SHAPE — positional
-    // layouts are identical, only names and usable filters differ
-    val readExts: Array[PartitionedFile => Iterator[InternalRow]] =
-      Array.tabulate(shapes.length) { k =>
-        val ss = shapeSchema(k)
-        val sf = shapeFilters(k, fseq)
-        if (needIdx) ParquetReadBridge.rowIndexReadFunction(
-          table.session, ss, ss, sf)
-        else ParquetReadBridge.readFunction(table.session, ss, ss, sf)
-      }
-    val colExts: Array[Option[PartitionedFile =>
-        Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]]] =
-      Array.tabulate(shapes.length) { k =>
-        val ss = shapeSchema(k)
-        val sf = shapeFilters(k, fseq)
-        if (needIdx) ParquetReadBridge.columnarRowIndexReadFunction(
-          table.session, ss, ss, sf)
-        else ParquetReadBridge.columnarReadFunction(table.session, ss, ss, sf)
-      }
+    val schemas = shapes.indices.map(shapeSchema)
     // the ext (masking/synthesizing/drift) path serves: any split with
     // deletes, any metadata projection, and any non-current shape —
     // Spark requires ONE columnar answer per scan, so columnar is
     // claimed only when every reader that could run vectorizes
-    // (shapes share types, so the per-shape answers always agree)
+    // (shapes share types, so the per-shape answers always agree).
+    // Probed before building anything: only the chosen flavour is built.
     val needExtPath = needMask || metaRequested || shapes.length > 1
-    val columnarOk =
-      if (metaRequested) colExts.forall(_.isDefined)
-      else colPlain.isDefined && (!needExtPath || colExts.forall(_.isDefined))
-    // one physical reader per delete file (write-time names, current
-    // types — the parquet reader upcasts widened keys), keyed by its
-    // manifest path
-    val deleteReaders = snap.deleteFiles.map { d =>
-      val phys = StructType(d.cols.map { case (wn, id) =>
-        org.apache.spark.sql.types.StructField(wn,
-          snap.schema.fields.find(_.name == currentById(id)).get.dataType,
-          nullable = true) })
-      d.path -> ParquetReadBridge.readFunction(table.session, phys, phys, Nil)
-    }.toMap
+    def extColumnar: Boolean = schemas.forall(ss =>
+      ParquetReadBridge.supportsColumnar(table.session, ss, needIdx))
+    val columnar =
+      if (metaRequested) extColumnar
+      else ParquetReadBridge.supportsColumnar(table.session, dataRequired,
+        withRowIndex = false) && (!needExtPath || extColumnar)
+    // Every reader function broadcasts its own copy of the session
+    // Hadoop conf, so build only those some split can reach. Reachable
+    // = the PUSHED-filter prune, taken before the LIMIT/TopN prefix and
+    // runtime filters: a runtime filter arriving later turns the prefix
+    // off, so the splits finally read can outgrow `groups` — never this.
+    val reachable = table.prunedFiles(snap, fseq)
+    def fast(e: DataFileEntry): Boolean = !metaRequested &&
+      shapeOf(e) == 0 && table.dvsOf(snap, e).isEmpty &&
+      !snap.deleteFiles.exists(_.seq > e.seq)
+    val fastReachable = reachable.exists(fast)
+    val extShapes = reachable.iterator.filterNot(fast).map(shapeOf).toSet
+    // one ext reader per reachable SHAPE, in the chosen flavour only —
+    // positional layouts are identical, only names and usable filters
+    // differ
+    def extReaders[T](flavour: Boolean)(
+        build: (StructType, Seq[Filter]) => Option[T]): Array[Option[T]] =
+      Array.tabulate(shapes.length) { k =>
+        if (flavour && extShapes(k)) build(schemas(k), shapeFilters(k, fseq))
+        else None
+      }
+    val readExts = extReaders(!columnar)((ss, sf) => Some(
+      if (needIdx) ParquetReadBridge.rowIndexReadFunction(
+        table.session, ss, ss, sf)
+      else ParquetReadBridge.readFunction(table.session, ss, ss, sf)))
+    val colExts = extReaders(columnar)((ss, sf) =>
+      if (needIdx) ParquetReadBridge.columnarRowIndexReadFunction(
+        table.session, ss, ss, sf)
+      else ParquetReadBridge.columnarReadFunction(table.session, ss, ss, sf))
+    // one physical reader per delete file newer than some reachable
+    // file (write-time names, current types — the parquet reader
+    // upcasts widened keys), keyed by its manifest path
+    val oldest = reachable.iterator.map(_.seq).minOption
+    val deleteReaders = snap.deleteFiles
+      .filter(d => oldest.exists(_ < d.seq)).map { d =>
+        val phys = StructType(d.cols.map { case (wn, id) =>
+          org.apache.spark.sql.types.StructField(wn,
+            snap.schema.fields.find(_.name == currentById(id)).get.dataType,
+            nullable = true) })
+        d.path -> ParquetReadBridge.readFunction(table.session, phys, phys, Nil)
+      }.toMap
     // required ordinal → physical ext-schema ordinal, or a negative
     // marker for a synthesized metadata column
     val outMap = required.fields.map(_.name match {
@@ -643,21 +654,21 @@ final class GraftBatchScan(
       case n => extIndex(n)
     })
     GraftPartitionReaderFactory(
-      ParquetReadBridge.readFunction(
-        table.session, snap.schema, dataRequired, fseq),
+      columnar,
+      Option.when(fastReachable && !columnar)(ParquetReadBridge.readFunction(
+        table.session, snap.schema, dataRequired, fseq)),
       readExts,
-      if (columnarOk) colPlain else None,
-      if (columnarOk) colExts
-      else Array.fill[Option[PartitionedFile =>
-        Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]]](
-        shapes.length)(None),
-      ParquetReadBridge.readFunction(table.session,
-        SnapshotTable.DvSchema, SnapshotTable.DvSchema, Nil),
+      if (fastReachable && columnar) ParquetReadBridge.columnarReadFunction(
+        table.session, snap.schema, dataRequired, fseq)
+      else None,
+      colExts,
+      Option.when(reachable.exists(e => table.dvsOf(snap, e).nonEmpty))(
+        ParquetReadBridge.readFunction(table.session,
+          SnapshotTable.DvSchema, SnapshotTable.DvSchema, Nil)),
       deleteReaders,
       required, extSchema.length, needIdx, outMap,
       Array.tabulate(shapes.length)(shapeDefaults))
   }
-
 
   /** Post-pruning statistics WITH per-column stats (VERDICT r14 #4):
     * rows come from the manifest (minus delete-vector rows whose
@@ -997,21 +1008,31 @@ final case class GraftInputPartition(key: Option[Any],
     new GenericInternalRow(Array[Any](key.orNull))
 }
 
+/** Per-scan reader functions. Only the readers some reachable split
+  * needs are built, each in the one flavour (`columnar` or row) the
+  * scan chose, so every slot is optional: `readFile`/`readColumnar`
+  * serve the fast path (current shape, nothing to mask),
+  * `readExts`/`readColumnarExts` the masking/synthesizing/drift path
+  * per file shape, `readDv` the delete vectors, `deleteReaders` each
+  * equality-delete file by manifest path. A split that lands on an
+  * unbuilt slot is a planning bug and fails with an internal error
+  * naming the slot — never an empty read.
+  */
 final case class GraftPartitionReaderFactory(
-    readFile: PartitionedFile => Iterator[InternalRow],
-    readExts: Array[PartitionedFile => Iterator[InternalRow]],
-    readColumnar: Option[PartitionedFile =>
-      Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]],
-    readColumnarExts: Array[Option[PartitionedFile =>
-      Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]]],
-    readDv: PartitionedFile => Iterator[InternalRow],
-    deleteReaders: Map[String, PartitionedFile => Iterator[InternalRow]],
+    columnar: Boolean,
+    readFile: Option[GraftPartitionReaderFactory.RowRead],
+    readExts: Array[Option[GraftPartitionReaderFactory.RowRead]],
+    readColumnar: Option[GraftPartitionReaderFactory.BatchRead],
+    readColumnarExts: Array[Option[GraftPartitionReaderFactory.BatchRead]],
+    readDv: Option[GraftPartitionReaderFactory.RowRead],
+    deleteReaders: Map[String, GraftPartitionReaderFactory.RowRead],
     required: StructType,
     physLen: Int,
     needIdx: Boolean,
     outMap: Array[Int],
     shapeDefaults: Array[Array[(Int, DataType, Any)]])
     extends PartitionReaderFactory {
+  import GraftPartitionReaderFactory.unbuilt
 
   /** Any synthesized metadata column routes every split through the
     * masked/synthesizing readers.
@@ -1021,12 +1042,10 @@ final case class GraftPartitionReaderFactory(
   /** Uniform per scan (Spark requires it): batches whenever the
     * projection is vectorizable — BatchScanExec then plans a COLUMNAR
     * scan and whole-stage codegen reads the vectors directly instead
-    * of row-at-a-time. The scan passes the columnar functions as
-    * `None` exactly when some split could not be served columnar.
+    * of row-at-a-time. The scan claims it exactly when every reader
+    * that could run vectorizes.
     */
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    if (metaRequested) readColumnarExts.forall(_.isDefined)
-    else readColumnar.isDefined
+  override def supportColumnarReads(p: InputPartition): Boolean = columnar
 
   /** The file's OR-ed delete vectors, loaded task-side (KB-sized
     * parquet reads; nothing ever sits on the driver).
@@ -1034,7 +1053,8 @@ final case class GraftPartitionReaderFactory(
   private def loadBitmap(ref: GraftDvRef): org.roaringbitmap.RoaringBitmap = {
     val bm = new org.roaringbitmap.RoaringBitmap()
     ref.dvFiles.foreach { case (p, len) =>
-      readDv(ParquetReadBridge.wholeFile(p, len)).foreach { r =>
+      readDv.getOrElse(unbuilt(s"delete-vector reader (for ${ref.dataRel})"))(
+        ParquetReadBridge.wholeFile(p, len)).foreach { r =>
         if (r.getUTF8String(0).toString == ref.dataRel) {
           val b = new org.roaringbitmap.RoaringBitmap()
           b.deserialize(java.nio.ByteBuffer.wrap(r.getBinary(1).clone()))
@@ -1055,7 +1075,9 @@ final case class GraftPartitionReaderFactory(
       val set = new java.util.HashSet[Any]()
       val loadOrds = Array.tabulate(g.ordinals.length)(identity)
       g.files.foreach { case (p, len, key) =>
-        deleteReaders(key)(ParquetReadBridge.wholeFile(p, len)).foreach { r =>
+        deleteReaders.getOrElse(key,
+          unbuilt(s"equality-delete reader for $key"))(
+          ParquetReadBridge.wholeFile(p, len)).foreach { r =>
           val k = GraftPartitionReaderFactory.keyOf(r, loadOrds, g.types,
             copy = true)
           if (k != null) { set.add(k); () }
@@ -1118,7 +1140,9 @@ final case class GraftPartitionReaderFactory(
     val constRow = new GenericInternalRow(
       Array[Any](UTF8String.fromString(s.path)) ++ defs.map(_._3))
     val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-    readExts(s.shape)(ParquetReadBridge.split(s.path, s.start, s.length))
+    readExts(s.shape).getOrElse(unbuilt(
+      s"row reader for file shape ${s.shape} (split ${s.path})"))(
+      ParquetReadBridge.split(s.path, s.start, s.length))
       .filter(r =>
         bm.forall(b =>
           !b.contains((r.getLong(idxOrdinal) & 0xFFFFFFFFL).toInt)) &&
@@ -1142,8 +1166,8 @@ final case class GraftPartitionReaderFactory(
       .getOrElse(Array.empty[(Array[Int], Array[DataType],
         java.util.HashSet[Any])])
     val eqDefs = eqDefaults(s.shape)
-    val open = readColumnarExts(s.shape).getOrElse(sys.error(
-      "columnar masked read requested without an extended batch reader"))
+    val open = readColumnarExts(s.shape).getOrElse(unbuilt(
+      s"columnar reader for file shape ${s.shape} (split ${s.path})"))
     open(ParquetReadBridge.split(s.path, s.start, s.length)).map { batch =>
       val rows = batch.numRows()
       // physical columns by ordinal; `_graft_pos` IS the row-index
@@ -1232,20 +1256,33 @@ final case class GraftPartitionReaderFactory(
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     chain(p, s =>
       if (fastPath(s))
-        readFile(ParquetReadBridge.split(s.path, s.start, s.length))
+        readFile.getOrElse(unbuilt(
+          s"row reader for file shape 0, fast path (split ${s.path})"))(
+          ParquetReadBridge.split(s.path, s.start, s.length))
       else masked(s))
 
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     chain(p, s =>
       if (fastPath(s))
-        readColumnar.getOrElse(sys.error(
-          "columnar reader requested but unsupported for this projection"))(
+        readColumnar.getOrElse(unbuilt(
+          s"columnar reader for file shape 0, fast path (split ${s.path})"))(
           ParquetReadBridge.split(s.path, s.start, s.length))
       else maskedColumnar(s))
 }
 
 object GraftPartitionReaderFactory {
+
+  type RowRead = PartitionedFile => Iterator[InternalRow]
+  type BatchRead = PartitionedFile =>
+    Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]
+
+  /** A split reached a reader slot the scan did not build — its
+    * reachable-file analysis missed a file it later planned.
+    */
+  private[catalog] def unbuilt(what: String): Nothing =
+    throw org.apache.spark.SparkException.internalError(
+      s"GraftBatchScan: no $what was built for this scan")
 
   /** `outMap` markers for synthesized row-identity metadata columns:
     * `PosMeta` = the parquet row-index column (file-absolute ordinal),

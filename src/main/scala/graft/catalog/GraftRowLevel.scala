@@ -377,6 +377,7 @@ final class GraftDeltaWriter(
     var current: Option[(Option[String], OutputWriter)] = None
     private var stats: InlineFileStats = null
     private var currentRel: String = null
+    private var currentPart: Option[String] = None
     val written = Seq.newBuilder[String]
     val entries = Seq.newBuilder[DataFileEntry]
     def write(row: InternalRow, part: Option[String]): Unit =
@@ -386,22 +387,22 @@ final class GraftDeltaWriter(
           w.write(row)
         case other =>
           closeCurrent(other.map(c => (c._1, c._2)))
-          val (w, rel) = openWriter(part, this)
+          val (w, rel, manifestPart) = openWriter(part, this)
           current = Some((part, w))
           currentRel = rel
+          currentPart = manifestPart
           stats = new InlineFileStats(rowSchema, bloom, ndv, zoneId)
           stats.update(row)
           w.write(row)
       }
     private def closeCurrent(
         c: Option[(Option[String], OutputWriter)]): Unit = c.foreach {
-      case (part, w) =>
+      case (_, w) =>
         w.close()
         // manifest stats computed inline with the write — the commit
-        // adopts these entries without any read-back job. Null and
-        // empty partition values both live in the default partition.
+        // adopts these entries without any read-back job
         entries += DataFileEntry(currentRel,
-          part.filter(_.nonEmpty), stats.rows, stats.finish(),
+          currentPart, stats.rows, stats.finish(),
           seq = -1L,
           bytes = fsys.getFileStatus(
             new Path(new Path(rootStr), currentRel)).getLen)
@@ -465,24 +466,29 @@ final class GraftDeltaWriter(
   override def reinsert(meta: InternalRow, row: InternalRow): Unit =
     updLane.write(row, partOf(row))
 
+  /** A fresh writer for `part`, its manifest-relative path, and the
+    * manifest partition value — the rendered segment decoded back, as
+    * [[StagedWriteTask]] derives it, so null, empty and a literal
+    * `__HIVE_DEFAULT_PARTITION__` value all read back as None.
+    */
   private def openWriter(part: Option[String],
-      lane: Lane): (OutputWriter, String) = {
+      lane: Lane): (OutputWriter, String, Option[String]) = {
     val (factory, conf) = dataFactory.getOrElse(sys.error(
       s"$dataRel: row image arrived for a delete-only write"))
     // Spark's own partition-segment rendering (Hive %XX escaping;
     // null/empty → __HIVE_DEFAULT_PARTITION__), so these directories
     // decode exactly like a partitionBy batch's
-    val dirRel = partExpr match {
-      case None => dataRel
-      case Some(_) => s"$dataRel/" + ExternalCatalogUtils
-        .getPartitionPathString(SnapshotTable.PartCol, part.orNull)
-    }
+    val seg = partExpr.map(_ => ExternalCatalogUtils
+      .getPartitionPathString(SnapshotTable.PartCol, part.orNull))
+    val dirRel = seg.fold(dataRel)(g => s"$dataRel/$g")
     val name = f"part-$partitionId%05d-$taskId-" +
       s"${UUID.randomUUID().toString.replace("-", "").take(8)}.parquet"
     lane.written += s"$dirRel/$name"
     (ParquetWriteBridge.newWriter(factory, conf.value,
       new Path(new Path(rootStr), s"$dirRel/$name").toString, rowSchema),
-      s"$dirRel/$name")
+      s"$dirRel/$name",
+      seg.flatMap(g => SnapshotTable.decodePartitionValue(
+        g.substring(SnapshotTable.PartCol.length + 1))))
   }
 
   private def writeDv(bitmaps: mutable.HashMap[String,

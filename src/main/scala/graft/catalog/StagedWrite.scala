@@ -2,6 +2,8 @@ package graft.catalog
 
 import java.util.UUID
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
@@ -147,12 +149,13 @@ private[catalog] final class StagedWriteTask(
     } catch {
       case e: Throwable =>
         // this attempt's files are orphans either way (only returned
-        // entries are adopted); reclaim them eagerly, best-effort
+        // entries are adopted); reclaim them eagerly, best-effort — a
+        // cleanup failure must never replace the task's own error
         try { if (writer != null) writer.close() }
-        catch { case _: java.io.IOException => }
+        catch { case NonFatal(_) => }
         written.result().foreach { p =>
           try { fs.delete(new Path(new Path(rootStr), p), false); () }
-          catch { case _: java.io.IOException => }
+          catch { case NonFatal(_) => }
         }
         throw e
     }

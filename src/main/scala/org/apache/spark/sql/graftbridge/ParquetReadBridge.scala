@@ -23,6 +23,19 @@ import org.apache.spark.sql.types.StructType
   * yields `InternalRow`s (the rows of the reused columnar batch) — the
   * DSv2 `PartitionReader[InternalRow]` contract.
   *
+  * Cost: every function this bridge returns closes over its OWN
+  * broadcast of the full session Hadoop conf (about 1 100 entries,
+  * Java-serialized per build) — 10–16 ms of planning time per reader,
+  * measured on a 4-vCPU Xeon VM, whether or not any task runs it.
+  * Callers must build only the readers some split will actually run;
+  * [[supportsColumnar]] answers the row-vs-columnar question without
+  * building one. [[graft.catalog.GraftBatchScan]] builds per scan only
+  * the readers its reachable files need. The streaming scans
+  * ([[graft.streaming.GraftTableStream]],
+  * [[graft.streaming.GraftChangesTableStream]]) still build one reader
+  * per file shape up front — deliberately left so, since no benchmark
+  * workload measures them.
+  *
   * Private-API note: `ParquetFileFormat` / `PartitionedFile` are
   * `org.apache.spark.sql.execution` internals, hence this bridge in
   * the `org.apache.spark.sql` namespace — same discipline as the
@@ -55,10 +68,9 @@ object ParquetReadBridge {
   def columnarReadFunction(spark: SparkSession, dataSchema: StructType,
       requiredSchema: StructType, filters: Seq[Filter])
       : Option[PartitionedFile => Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]] = {
-    val fmt = new ParquetFileFormat()
-    if (!fmt.supportBatch(spark, requiredSchema)) None
+    if (!supportsColumnar(spark, requiredSchema, withRowIndex = false)) None
     else {
-      val f = fmt.buildReaderWithPartitionValues(
+      val f = new ParquetFileFormat().buildReaderWithPartitionValues(
         sparkSession = spark,
         dataSchema = dataSchema,
         partitionSchema = StructType(Nil),
@@ -70,6 +82,17 @@ object ParquetReadBridge {
         .asInstanceOf[Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]])
     }
   }
+
+  /** Whether [[columnarReadFunction]] (or, with `withRowIndex`,
+    * [[columnarRowIndexReadFunction]]) would return `Some` for this
+    * projection — Spark's own `supportBatch` answer, probed WITHOUT
+    * building (and broadcasting) a reader.
+    */
+  def supportsColumnar(spark: SparkSession, requiredSchema: StructType,
+      withRowIndex: Boolean): Boolean =
+    new ParquetFileFormat().supportBatch(spark,
+      if (withRowIndex) StructType(requiredSchema.fields :+ rowIndexField)
+      else requiredSchema)
 
   /** [[readFunction]] with Spark's parquet ROW-INDEX column appended
     * as the LAST field of every row: the reader recognizes the

@@ -156,21 +156,15 @@ class InlineStatsSpec extends AnyFunSuite {
     assert(snap.files.isEmpty)
   }
 
-  test("native UPDATE delta: writer-inline stats match the read-back") {
-    val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ist")
-    spark.sql("DROP TABLE IF EXISTS graft.ist.u")
-    spark.sql("CREATE TABLE graft.ist.u (id BIGINT, kind STRING, v DOUBLE) " +
-      "PARTITIONED BY (kind) " +
-      "TBLPROPERTIES ('graft.bloom.columns'='id')")
-    spark.sql("INSERT INTO graft.ist.u SELECT id, " +
-      "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END, cast(id as double) " +
-      "FROM range(0, 1000)")
-    val t = SnapshotTable.load(spark, s"$wh/ist/u")
+  /** Compare the delta writer's inline entries for the files `dml`
+    * adds against a statsForStaged read-back over exactly those files.
+    */
+  private def assertDeltaParity(t: SnapshotTable, dml: String)
+      : Seq[DataFileEntry] = {
     val before = t.currentSnapshot().files.map(_.path).toSet
     // UPDATE routes through the native delta write (GraftDeltaWriter):
     // update images are freshly staged files with inline stats
-    spark.sql("UPDATE graft.ist.u SET v = v * 2 WHERE id % 10 = 3")
+    spark.sql(dml)
     val snap = t.currentSnapshot()
     val fresh = snap.files.filterNot(f => before.contains(f.path))
     assert(fresh.nonEmpty, "UPDATE staged no new files")
@@ -197,6 +191,38 @@ class InlineStatsSpec extends AnyFunSuite {
             s"  inline:    ${e.stats(c)}\n  read-back: ${r.stats(c)}")
       }
     }
+    fresh
+  }
+
+  test("native UPDATE delta: writer-inline stats match the read-back") {
+    val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ist")
+    spark.sql("DROP TABLE IF EXISTS graft.ist.u")
+    spark.sql("CREATE TABLE graft.ist.u (id BIGINT, kind STRING, v DOUBLE) " +
+      "PARTITIONED BY (kind) " +
+      "TBLPROPERTIES ('graft.bloom.columns'='id')")
+    spark.sql("INSERT INTO graft.ist.u SELECT id, " +
+      "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END, cast(id as double) " +
+      "FROM range(0, 1000)")
+    val t = SnapshotTable.load(spark, s"$wh/ist/u")
+    assertDeltaParity(t, "UPDATE graft.ist.u SET v = v * 2 WHERE id % 10 = 3")
+  }
+
+  test("native UPDATE delta: a literal default-partition value reads back as None") {
+    // the sentinel renders to the same segment as NULL, so the manifest
+    // value must be the decoded segment (None), not the raw string
+    val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ist")
+    spark.sql("DROP TABLE IF EXISTS graft.ist.hdp")
+    spark.sql("CREATE TABLE graft.ist.hdp (id BIGINT, kind STRING, v DOUBLE) " +
+      "PARTITIONED BY (kind)")
+    spark.sql("INSERT INTO graft.ist.hdp SELECT id, " +
+      "CASE WHEN id % 2 = 0 THEN '__HIVE_DEFAULT_PARTITION__' ELSE 'b' END, " +
+      "cast(id as double) FROM range(0, 200)")
+    val t = SnapshotTable.load(spark, s"$wh/ist/hdp")
+    val fresh = assertDeltaParity(t,
+      "UPDATE graft.ist.hdp SET v = -v WHERE id % 10 IN (2, 3)")
+    assert(fresh.map(_.partition).toSet == Set(None, Some("b")))
   }
 
   test("sort-by clustering survives the one-pass writer") {
