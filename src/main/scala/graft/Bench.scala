@@ -226,11 +226,20 @@ object Bench {
     // `"queries_omitted"` marks how many (fast) rows were cut so a
     // reader never mistakes the digest for the full registry; the full
     // line remains authoritative and is also written to bench_full.json.
+    // The first two errors ride ahead of the slow rows, so a failing
+    // run's tail still names what failed.
     val compactBudget = 1800
     val slowestFirst = results.toSeq.sortBy(-_._2)
-    val fixedHead = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"${cfg.sfDir}","errors_n":${errors.size},"calibration_sec":${fmt(calibration)},"calibration_sat_sec":${fmt(calibrationSat)},"calibration_sat_median":${fmt(calibrationSatMedian)},"headline":$hl,"queries_omitted":OMIT,"queries":"""
+    def jsonString(v: String): String =
+      "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val firstErrors = errors.toSeq.take(2)
+      .map { case (k, m) => jsonString(k) + ":" + jsonString(m.take(120)) }
+      .mkString("{", ",", "}")
+    def digestHead(omitted: Int): String = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"${cfg.sfDir}","errors_n":${errors.size},"errors":$firstErrors,"calibration_sec":${fmt(calibration)},"calibration_sat_sec":${fmt(calibrationSat)},"calibration_sat_median":${fmt(calibrationSatMedian)},"headline":$hl,"queries_omitted":$omitted,"queries":"""
     val fixedTail = s""","total_sec":${fmt(total)}}"""
-    val room = compactBudget - fixedHead.length - fixedTail.length - 8
+    // sized with the widest count: every row omitted
+    val room = compactBudget - digestHead(results.size).length -
+      fixedTail.length - 8
     val kept = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     var used = 2 // braces
     for ((k, v) <- slowestFirst) {
@@ -240,8 +249,7 @@ object Bench {
     val keptAsc = kept.sortBy(_._2)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    println(fixedHead.replace("OMIT", (results.size - kept.size).toString) +
-      keptAsc + fixedTail)
+    println(digestHead(results.size - kept.size) + keptAsc + fixedTail)
     try {
       val out = java.nio.file.Paths.get("bench_full.json")
       java.nio.file.Files.write(out,

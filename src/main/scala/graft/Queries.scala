@@ -71,6 +71,10 @@ object Queries {
     * bench run on each spread query. A bare scan's split count is a
     * pure function of the immutable file layout and the session's
     * split conf, so one planning per JVM serves every construction.
+    * Like [[graft.sources.Tables]]' schema cache it assumes IMMUTABLE
+    * inputs: keyed by path and parallelism only, never invalidated, so
+    * files rewritten under a live JVM (or a changed split conf) keep
+    * the first-seen count until the JVM restarts.
     */
   private val scanParts =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()

@@ -577,7 +577,18 @@ final class GraftBatchScan(
 
   override def planInputPartitions(): Array[InputPartition] = parts
 
-  override def createReaderFactory(): PartitionReaderFactory = {
+  // Built once per scan: Spark asks again on the plan copies it makes
+  // after `createSparkPlan` (`ApplyColumnarRulesAndInsertTransitions`
+  // and `SortExec.mapChildren` in `prepareForExecution` / AQE's
+  // `applyPhysicalRules` each copy `BatchScanExec`, whose `lazy val
+  // readerFactory` starts empty on the copy), and each build
+  // broadcasts one Hadoop conf per reader. The factory depends only on
+  // immutable scan state (snapshot, pushed filters, required schema):
+  // runtime filters only narrow the splits inside the pushed-filter
+  // prune it is built for.
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  private lazy val readerFactory: PartitionReaderFactory = {
     // merge-on-read costs neither the native path nor the columnar
     // path: a dv/eq-covered split reads batches over the EXTENDED
     // schema (missing key columns appended, row-index column last when

@@ -2202,9 +2202,11 @@ final class SnapshotTable private (
   /** SQL `DELETE FROM` routing — the Iceberg `write.delete.mode`
     * table property: `copy-on-write` (default — [[delete]] rewrites
     * hit files) or `merge-on-read` ([[deleteWithVectors]] commits
-    * positional vectors). Both SQL lowering paths (native v2
-    * `deleteWhere` and the DML resolution rule) call this, so the
-    * property cannot be bypassed by predicate shape.
+    * positional vectors). The native v2 `deleteWhere` and the DML
+    * resolution rule call this, so the property cannot be bypassed by
+    * predicate shape. A merge-on-read SQL delete that
+    * `GraftV2Table.canDeleteWhere` refuses writes the same vectors
+    * through the row-level delta write instead.
     */
   def deleteRouted(pred: Column): Snapshot =
     currentSnapshot().properties.get("graft.delete.mode") match {
@@ -2220,6 +2222,20 @@ final class SnapshotTable private (
           "merge-on-read or equality")
       case _ => delete(pred)
     }
+
+  /** True when a merge-on-read DELETE of `pred` opens no data file: no
+    * file is a candidate, or every candidate's manifest stats prove all
+    * its rows match, so [[deleteWithVectors]] only drops files. SQL
+    * `DELETE` keeps just these on the metadata path
+    * ([[GraftV2Table.canDeleteWhere]]); the rest plan a row-level
+    * delta write.
+    */
+  private[graft] def deleteIsMetadataOnly(pred: Column): Boolean = {
+    val base = currentSnapshot()
+    val candidates = pruneFiles(base, pred)
+    candidates.isEmpty ||
+      fullyMatchedFiles(base, pred, candidates).size == candidates.size
+  }
 
   def deleteWithVectors(pred: Column): Snapshot = {
     val base = currentSnapshot()

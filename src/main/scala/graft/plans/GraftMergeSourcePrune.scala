@@ -3,11 +3,12 @@ package graft.plans
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, In, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GenericInternalRow, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.{Inner, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, Filter, Join, LocalRelation, LogicalPlan, MergeRows, OneRowRelation, Project, Range, WriteDelta}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{approx_count_distinct, count, lit, max, min}
 import org.apache.spark.sql.graftbridge.{DatasetBridge, RowLevelBridge}
@@ -30,18 +31,26 @@ import graft.catalog.GraftRowLevelOperation
   * operations (`ReplaceData`); delta-based writes (`WriteDelta`) get
   * nothing, and the graft scan is a `V1Scan` bridge, which Spark's
   * `SupportsRuntimeV2Filtering` path cannot reach either. So the rule
-  * EXECUTES a bounded probe of the source during optimization (the
-  * same driver-side-collect discipline as [[GraftAggregatePushdown]]):
-  * one aggregate pass computing per-key (min, max,
-  * approx_count_distinct) + row count, then — when the distinct count
-  * is small — one exact `distinct().limit(K+1)` pass whose values
-  * become per-key `IN` predicates (point pruning: bounds + Blooms +
-  * bucket partition values). A wide key set degrades to the [min, max]
-  * range predicate (file skipping on range-clustered targets). The
-  * probe runs the source plan one extra time, so it is gated on the
-  * source's estimated size; a CDC-shaped merge (small source, huge
-  * target) is exactly where both the probe is cheap and the pruning
-  * pays at 100 TB.
+  * reads the source's join keys during optimization:
+  *
+  *  - a DRIVER-RESIDENT source — its key projection optimizes to one
+  *    `LocalRelation` (`createDataFrame`/`toDF` of local rows,
+  *    `VALUES`) — is read off its rows on the driver: row count, exact
+  *    distinct key tuples and each key's [min, max], with no Spark job;
+  *  - any other source runs a bounded two-pass probe (the same
+  *    driver-side-collect discipline as [[GraftAggregatePushdown]]):
+  *    one aggregate pass computing per-key (min, max,
+  *    approx_count_distinct) + row count, then — when the distinct
+  *    count is small — one exact `distinct().limit(K+1)` pass.
+  *
+  * Either way, at most `max-keys` distinct tuples become per-key `IN`
+  * predicates (point pruning: bounds + Blooms + bucket partition
+  * values), and a wider key set degrades to the [min, max] range
+  * predicate (file skipping on range-clustered targets). The probe
+  * runs the source plan one extra time, so the rule is gated on the
+  * source's estimated size (driver-resident sources too); a CDC-shaped
+  * merge (small source, huge target) is exactly where both the probe
+  * is cheap and the pruning pays at 100 TB.
   *
   * ## When the pushdown is sound
   *
@@ -165,46 +174,30 @@ final case class GraftMergeSourcePrune(session: SparkSession)
       .map(_.toLong).getOrElse(1L << 30)
     if (source.stats.sizeInBytes > maxSourceBytes) return None
 
-    // probe pass 1: per-key bounds + distinct estimate, one source scan
     val keyed = DatasetBridge.ofRows(session, Project(
       pairs.zipWithIndex.map { case ((_, e), i) => Alias(e, s"k$i")() },
       source))
-    val aggCols = pairs.indices.flatMap(i => Seq(min(s"k$i"), max(s"k$i"),
-      approx_count_distinct(s"k$i"))) :+ count(lit(1))
-    val stats = keyed.agg(aggCols.head, aggCols.tail: _*).collect().head
-    val rows = stats.getLong(aggCols.size - 1)
-
-    def rangePred(i: Int): Expression = {
-      val (attr, _) = pairs(i)
-      val (lo, hi) = (stats.get(i * 3), stats.get(i * 3 + 1))
-      if (lo == null) Literal.FalseLiteral // all source keys NULL
-      else And(
-        org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual(attr,
-          Literal.create(lo, attr.dataType)),
-        org.apache.spark.sql.catalyst.expressions.LessThanOrEqual(attr,
-          Literal.create(hi, attr.dataType)))
+    // a driver-resident source (local rows, VALUES) optimizes to one
+    // LocalRelation: its keys are read off the rows, with no job
+    val ks = keyed.queryExecution.optimizedPlan match {
+      case l: LocalRelation => localKeyStats(l, maxKeys)
+      case _ => probeKeyStats(keyed, pairs.size, maxKeys)
     }
 
     val perKey: Seq[Expression] =
-      if (rows == 0L) Seq(Literal.FalseLiteral)
-      else {
-        val distinctEst = pairs.indices.map(i => stats.getLong(i * 3 + 2)).max
-        val exact =
-          if (distinctEst > maxKeys) None
-          else {
-            // probe pass 2: exact key tuples, capped — over the cap
-            // (estimate undershot) fall back to ranges
-            val tuples = keyed.distinct().limit(maxKeys + 1).collect()
-            if (tuples.length > maxKeys) None else Some(tuples)
+      if (ks.rows == 0L) Seq(Literal.FalseLiteral)
+      else pairs.indices.map { i =>
+        val attr = pairs(i)._1
+        def literal(v: Any) = Literal.create(v, attr.dataType)
+        ks.exact match {
+          case Some(values) =>
+            if (values(i).isEmpty) Literal.FalseLiteral // all keys NULL
+            else In(attr, values(i).map(literal))
+          case None => ks.bounds(i) match {
+            case Some((lo, hi)) => And(GreaterThanOrEqual(attr, literal(lo)),
+              LessThanOrEqual(attr, literal(hi)))
+            case None => Literal.FalseLiteral // all source keys NULL
           }
-        exact match {
-          case Some(tuples) => pairs.zipWithIndex.map { case ((attr, _), i) =>
-            val vs = tuples.map(_.get(i)).filter(_ != null).distinct
-            if (vs.isEmpty) Literal.FalseLiteral
-            else In(attr,
-              vs.toIndexedSeq.map(v => Literal.create(v, attr.dataType)))
-          }
-          case None => pairs.indices.map(rangePred)
         }
       }
 
@@ -222,9 +215,53 @@ final case class GraftMergeSourcePrune(session: SparkSession)
       case other => other
     }
     logInfo(s"graft MERGE source-prune on ${op.v2Table.name()}: " +
-      s"$rows source rows -> ${pred.sql.take(200)}")
+      s"${ks.rows} source rows -> ${pred.sql.take(200)}")
     Some(WriteDelta(wd.table, wd.condition, newQuery, wd.originalTable,
       wd.projections, wd.write))
+  }
+
+  /** Keys of a driver-resident source, exact: row count, each key's
+    * [min, max] under Spark's ordering, and the distinct key tuples
+    * when they number at most `maxKeys`. Values stay in Catalyst's
+    * internal form, which `Literal.create` takes as is.
+    */
+  private def localKeyStats(l: LocalRelation, maxKeys: Int): KeyStats = {
+    val types = l.output.map(_.dataType)
+    // GenericInternalRow compares binary values by content
+    val tuples = l.data.map(r => new GenericInternalRow(
+      types.indices.map(i => r.get(i, types(i))).toArray[Any])).distinct
+    def nonNull(i: Int): Seq[Any] =
+      tuples.map(_.get(i, types(i))).filter(_ != null)
+    val bounds = types.indices.map { i =>
+      val ord = TypeUtils.getInterpretedOrdering(types(i))
+      val vs = nonNull(i)
+      Option.when(vs.nonEmpty)((vs.min(ord), vs.max(ord)))
+    }
+    KeyStats(l.data.size.toLong, bounds,
+      Option.when(tuples.size <= maxKeys)(
+        types.indices.map(i => nonNull(i).distinct)))
+  }
+
+  /** Keys of any other source, from two Spark passes: per-key bounds
+    * with a distinct estimate and the row count, then — when every
+    * estimate fits `maxKeys` — the exact tuples, capped (over the cap,
+    * the estimate undershot: ranges).
+    */
+  private def probeKeyStats(keyed: org.apache.spark.sql.DataFrame,
+      n: Int, maxKeys: Int): KeyStats = {
+    val aggCols = (0 until n).flatMap(i => Seq(min(s"k$i"), max(s"k$i"),
+      approx_count_distinct(s"k$i"))) :+ count(lit(1))
+    val stats = keyed.agg(aggCols.head, aggCols.tail: _*).collect().head
+    val bounds = (0 until n).map(i =>
+      Option(stats.get(i * 3)).map(lo => (lo, stats.get(i * 3 + 1))))
+    val exact =
+      if ((0 until n).map(i => stats.getLong(i * 3 + 2)).max > maxKeys) None
+      else {
+        val tuples = keyed.distinct().limit(maxKeys + 1).collect()
+        Option.when(tuples.length <= maxKeys)((0 until n).map(i =>
+          tuples.toSeq.map(_.get(i)).filter(_ != null).distinct))
+      }
+    KeyStats(stats.getLong(aggCols.size - 1), bounds, exact)
   }
 
   private def splitAnd(e: Expression): Seq[Expression] = e match {
@@ -255,4 +292,12 @@ object GraftMergeSourcePrune {
     * rewritten node).
     */
   private val Attempted = TreeNodeTag[Boolean]("graft.merge.source.prune")
+
+  /** The source keys the prune predicate is built from: row count,
+    * per-key [lo, hi] (None when every value is NULL) and, when the
+    * distinct key tuples fit `max-keys`, each key's distinct non-null
+    * values.
+    */
+  private final case class KeyStats(rows: Long,
+      bounds: Seq[Option[(Any, Any)]], exact: Option[Seq[Seq[Any]]])
 }

@@ -188,10 +188,11 @@ object GraftSqlDml
   }
 
   /** A `DELETE FROM` over a DSv2 graft table whose every conjunct has a
-    * `sources.Filter` form runs NATIVELY (planner → `SupportsDelete
-    * .deleteWhere` — the manifest-pruned COW delete); this rule only
-    * lowers the shapes the native path cannot express. DSv1 temp views
-    * have no native v2 delete, so those always lower here.
+    * `sources.Filter` form runs NATIVELY (Spark's row-level rewrite,
+    * shortcut to `SupportsDelete.deleteWhere` where
+    * `GraftV2Table.canDeleteWhere` admits it); this rule only lowers
+    * the shapes the native path cannot express. DSv1 temp views have
+    * no native v2 delete, so those always lower here.
     */
   private[plans] def nativeDeleteHandles(d: DeleteFromTable): Boolean = {
     def isV2(p: LogicalPlan): Boolean = p match {

@@ -29,6 +29,12 @@ object Tables {
     * per-query inference. Metadata only — every query still computes
     * its RESULT from the parquet bytes; plans are bit-identical
     * (the scan's ReadSchema is unchanged).
+    *
+    * Assumes IMMUTABLE inputs: entries are keyed by path alone and
+    * never invalidated. A file rewritten in place under a live JVM
+    * keeps serving its first-seen schema, and a schema inferred under
+    * one session's parquet conf (events' nanos-as-long flag) is served
+    * to every later session. Regenerate testdata only between JVMs.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String,
