@@ -56,9 +56,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * check. Filter-convertible DELETEs shortcut through the optimizer's
   * metadata-delete rule onto [[SnapshotTable.deleteRouted]] (the
   * `graft.delete.mode` property). The injected resolution rule
-  * ([[graft.plans.GraftSqlDmlRule]]) remains only as the DSv1
-  * temp-view shim — v2 statements never reach it (the analyzer's
-  * Resolution batch rewrites them first).
+  * ([[graft.plans.GraftSqlDmlRule]]) serves only temp views, whose
+  * `View` node hides the table from those rewrites — catalog
+  * statements never reach it (the analyzer's Resolution batch
+  * rewrites them first).
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with FunctionCatalog {

@@ -29,8 +29,8 @@ import org.apache.spark.util.SerializableConfiguration
   * `RewriteMergeIntoTable`) plan SQL `DELETE` / `UPDATE` / `MERGE
   * INTO` against `graft.db.t` — full SQL surface, including subqueries
   * in predicates and arbitrary `ON` conditions the injected
-  * resolution rule (`graft.plans.GraftSqlDmlRule`, now the DSv1
-  * temp-view shim) never supported, plus Spark's built-in MERGE
+  * resolution rule (`graft.plans.GraftSqlDmlRule`, now the temp-view
+  * shim) never supported, plus Spark's built-in MERGE
   * cardinality check.
   *
   * The operation is DELTA-based (merge-on-read): the scan exposes
@@ -54,7 +54,7 @@ import org.apache.spark.util.SerializableConfiguration
   * ordinary v2 filters (manifest stats prune candidate files); MERGE
   * reads the target without file-level runtime pruning (the join
   * filters rows, not files) — the manifest-pruned key-range MERGE
-  * remains available through the Scala API and DSv1 views. Positions
+  * remains available through the Scala API and `USING graft` views. Positions
   * are valid only against the scanned snapshot: the commit pins the
   * base version and raises [[SnapshotConflictException]] on any
   * concurrent commit.

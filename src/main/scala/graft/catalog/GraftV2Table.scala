@@ -16,27 +16,30 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The DSv2 `Table` for one graft snapshot table — what
   * [[GraftCatalog.loadTable]] hands Spark, making `graft.db.t` a
-  * native catalog table: scans plan through Spark's own v2 pushdown
+  * native catalog table, and what the `graft` data source's
+  * `getTable` returns for a path read ([[graft.sources
+  * .GraftDataSource]]): scans plan through Spark's own v2 pushdown
   * (manifest pruning via the same skip-only translation as every
   * other read path), `INSERT INTO` / `INSERT OVERWRITE` /
   * `df.writeTo(...)` route to the table's atomic commits, `DELETE
   * FROM` with pushable predicates runs as a native v2 metadata/COW
   * delete, and `TRUNCATE TABLE` is an atomic overwrite-to-empty.
-  * Time travel (`VERSION AS OF` / `TIMESTAMP AS OF`) arrives as a
-  * `pinned` version resolved by the catalog — a pinned table refuses
-  * writes, mirroring [[graft.sources.GraftRelation]].
+  * Time travel (`VERSION AS OF` / `TIMESTAMP AS OF`, or the path
+  * options `versionAsOf` / `tag` / `timestampAsOf`) arrives as a
+  * `pinned` version resolved by the caller — a pinned table refuses
+  * writes. `streaming = false` (the path surface) drops the streaming
+  * capabilities, so `readStream` / `writeStream.format("graft")` keep
+  * the data source's changelog source and sink.
   *
-  * The scan and write surfaces bridge through `V1Scan` / `V1Write` to
-  * the battle-tested [[SnapshotTable]] read/commit machinery: the
-  * physical plan below the bridge is Spark's own vectorized parquet
-  * scan over manifest-pruned files (the DataFrame returned by
-  * `scanFor`), so the v2 seam adds catalog-native addressing without
-  * forking the execution path the DSv1 relation already certifies.
+  * The scan is the native [[GraftBatchScan]] where eligible, else a
+  * `V1Scan` over [[SnapshotTable.scanFor]]; writes bridge through
+  * `V1Write` to the snapshot layer's commits.
   */
 final class GraftV2Table(
     val table: SnapshotTable,
     ident: String,
-    val pinned: Option[Long]) extends Table
+    val pinned: Option[Long],
+    streaming: Boolean = true) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations with SupportsMetadataColumns {
 
@@ -58,8 +61,8 @@ final class GraftV2Table(
   override def properties(): java.util.Map[String, String] =
     table.publishedSnapshot().properties.asJava
 
-  override def capabilities(): JSet[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
+  override def capabilities(): JSet[TableCapability] = {
+    val all = Set(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC,
       TableCapability.TRUNCATE,
@@ -78,18 +81,20 @@ final class GraftV2Table(
       // the Scala merge path performs), and re-resolves the target —
       // so the native SQL MERGE grows the schema in-statement exactly
       // like SnapshotTable.merge does
-      TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
+      TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
+    (if (streaming) all else all -- Set(TableCapability.MICRO_BATCH_READ,
+      TableCapability.STREAMING_WRITE)).asJava
+  }
 
-  /** Same drift guard as the DSv1 relation: an unpinned table loaded
-    * before a schema-evolving commit must not serve rows disagreeing
-    * with the analyzed schema.
+  /** An unpinned table loaded before a schema-evolving commit must not
+    * serve rows disagreeing with the analyzed schema.
     */
   private[catalog] def guardSchemaDrift(): Unit = {
     def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
     require(pinned.nonEmpty || shape(table.schemaAt(None)) == shape(schema),
       s"snapshot table ${table.root} evolved its schema since this " +
-        "statement was analyzed — re-run the statement to pick up the " +
-        "new schema")
+        "statement was analyzed — re-run the statement (or re-create " +
+        "the view / re-run spark.read) to pick up the new schema")
   }
 
   private def requireWritable(op: String): Unit =
@@ -480,20 +485,17 @@ final class GraftV2Table(
 }
 
 /** One metadata table (`graft.db.\`t#history\`` / `#partitions` /
-  * `#files` / `#tags`) as a read-only v2 table — resolved fresh per
-  * scan so it always describes the CURRENT snapshot; metadata-sized by
-  * construction.
+  * `#files` / `#tags`, or the path option `metadata`) as a read-only
+  * v2 table — the frame is rebuilt per scan so it always describes the
+  * CURRENT snapshot, even through a long-lived temp view that holds
+  * this instance; metadata-sized by construction.
   */
 final class GraftMetadataV2Table(
     table: SnapshotTable,
     ident: String,
     kind: String) extends Table with SupportsRead {
 
-  // resolved ONCE per loadTable (i.e. per statement): schema() is
-  // called repeatedly during analysis and each df build re-reads the
-  // version log — freshness is per-statement either way, since the
-  // catalog loads a new instance for every statement
-  private lazy val frame: DataFrame = kind match {
+  private def frame(): DataFrame = kind match {
     case "history" => table.historyDf()
     case "partitions" => table.partitionsDf()
     case "files" => table.filesDf()
@@ -504,7 +506,9 @@ final class GraftMetadataV2Table(
   }
 
   override def name(): String = ident
-  override def schema: StructType = frame.schema
+  // the shape is fixed per kind: resolved once, while schema() is
+  // called repeatedly during analysis
+  override lazy val schema: StructType = frame().schema
   override def partitioning(): Array[Transform] = Array.empty
   override def properties(): java.util.Map[String, String] =
     java.util.Collections.emptyMap()
@@ -519,8 +523,8 @@ final class GraftMetadataV2Table(
             context: SQLContext): T =
           new BaseRelation with TableScan {
             override val sqlContext: SQLContext = context
-            override def schema: StructType = frame.schema
-            override def buildScan(): RDD[Row] = frame.rdd
+            override def schema: StructType = GraftMetadataV2Table.this.schema
+            override def buildScan(): RDD[Row] = frame().rdd
           }.asInstanceOf[T]
       }
     }
@@ -547,46 +551,30 @@ final class GraftMetadataV2Table(
   * This is where the r15 tail's `skipNonAppends` dilemma resolves:
   * skip loses retractions, fail stops the pipeline — the change feed
   * represents them.
+  *
+  * A `window` fixes `(changesFrom, changesTo]` up front — the path
+  * read `format("graft").option("changesFrom", …).option("changesTo",
+  * …)` resolves its bounds in the data source: the columns are the
+  * table's at `changesTo`, and the table is batch-only (a changelog
+  * stream over a path keeps the data source's V1 source).
   */
 final class GraftChangesV2Table(
     table: SnapshotTable,
-    ident: String) extends Table with SupportsRead {
+    ident: String,
+    window: Option[(Long, Long)] = None) extends Table with SupportsRead {
 
   override def name(): String = ident
 
-  override val schema: StructType =
-    graft.streaming.GraftChangesSource.changeSchema(table.schemaAt(None))
+  override val schema: StructType = graft.streaming.GraftChangesSource
+    .changeSchema(table.schemaAt(window.map(_._2)))
 
   override def partitioning(): Array[Transform] = Array.empty
   override def properties(): java.util.Map[String, String] =
     java.util.Collections.emptyMap()
   override def capabilities(): JSet[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
-
-  /** `changesFrom`/`changesTo` bound resolution, V1-source parity:
-    * a version number, `earliest`, or a TAG name — plus the
-    * `<bound>Timestamp` variants (epoch millis or ISO-8601, resolved
-    * via `versionAsOf`).
-    */
-  private def versionOpt(options: CaseInsensitiveStringMap,
-      key: String): Option[Long] = {
-    require(!(options.containsKey(key) &&
-        options.containsKey(key + "Timestamp")),
-      s"pass $key OR ${key}Timestamp, not both")
-    Option(options.get(key)).map {
-      case "earliest" => table.log.versions().head
-      case v => scala.util.Try(v.toLong).getOrElse(
-        table.tags().getOrElse(v, sys.error(
-          s"$key: '$v' is neither a version number, 'earliest', nor a " +
-            s"tag; tags: ${table.tags().keys.mkString(", ")}")))
-    }.orElse(Option(options.get(key + "Timestamp")).map { v =>
-      val ms = scala.util.Try(v.toLong).getOrElse(
-        scala.util.Try(java.time.Instant.parse(v).toEpochMilli).getOrElse(
-          sys.error(s"${key}Timestamp must be epoch millis or ISO-8601, " +
-            s"got '$v'")))
-      table.versionAsOf(ms)
-    })
-  }
+    (if (window.isDefined) Set(TableCapability.BATCH_READ)
+    else Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ))
+      .asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with SupportsPushDownRequiredColumns {
@@ -607,8 +595,8 @@ final class GraftChangesV2Table(
             n
           }
           new graft.streaming.GraftChangesTableStream(table, schema,
-            required, checkpointLocation, versionOpt(options, "changesFrom"),
-            maxV,
+            required, checkpointLocation,
+            GraftV2Table.changesBound(table, options, "changesFrom"), maxV,
             updateImages = Option(options.get("updateImages"))
               .orElse(table.publishedSnapshot().properties
                 .get("graft.cdc.update-images"))
@@ -621,10 +609,11 @@ final class GraftChangesV2Table(
             override val sqlContext: SQLContext = context
             override def schema: StructType = required
             override def buildScan(): RDD[Row] = {
-              val from = versionOpt(options, "changesFrom")
-                .getOrElse(table.log.versions().head)
-              val to = versionOpt(options, "changesTo")
-                .getOrElse(table.currentVersion())
+              val (from, to) = window.getOrElse((
+                GraftV2Table.changesBound(table, options, "changesFrom")
+                  .getOrElse(table.log.versions().head),
+                GraftV2Table.changesBound(table, options, "changesTo")
+                  .getOrElse(table.currentVersion())))
               // opt-in per-commit labeled feed (update_preimage /
               // update_postimage): read option wins; the table
               // property sets a default for SQL-only consumers
@@ -645,6 +634,34 @@ final class GraftChangesV2Table(
 }
 
 object GraftV2Table {
+
+  /** A `changesFrom`/`changesTo` bound — one parser for the catalog
+    * change feed, the path changes window and the path changelog
+    * stream: a version number, `earliest`, or a TAG name (all-digit
+    * tag names are refused at tag() creation, so the routing is
+    * total), or under `<key>Timestamp` the latest version committed at
+    * or before an instant (epoch millis or ISO-8601).
+    */
+  private[graft] def changesBound(table: SnapshotTable,
+      options: CaseInsensitiveStringMap, key: String): Option[Long] = {
+    require(!(options.containsKey(key) &&
+        options.containsKey(key + "Timestamp")),
+      s"pass $key OR ${key}Timestamp, not both")
+    Option(options.get(key)).map {
+      case "earliest" => table.log.versions().head
+      case v => v.toLongOption.getOrElse(table.tags().getOrElse(v,
+        sys.error(s"$key: '$v' is neither a version number, 'earliest', " +
+          s"nor a tag at ${table.root}; tags: " +
+          table.tags().keys.mkString(", "))))
+    }.orElse(Option(options.get(key + "Timestamp")).map(v =>
+      table.versionAsOf(epochMillis(key + "Timestamp", v))))
+  }
+
+  /** An instant option: epoch millis or ISO-8601. */
+  private[graft] def epochMillis(key: String, v: String): Long =
+    v.toLongOption.orElse(scala.util.Try(
+      java.time.Instant.parse(v).toEpochMilli).toOption).getOrElse(
+      sys.error(s"$key must be epoch millis or ISO-8601, got '$v'"))
 
   /** Row-identity metadata columns the native row-level operations key
     * on (Iceberg's `_file`/`_pos` equivalents — prefixed to dodge user

@@ -4892,8 +4892,8 @@ object SnapshotTable {
   }
 
   /** Column names must be distinct CASE-INSENSITIVELY: field-id
-    * matching, stats maps and the scan strategy's by-name attribute
-    * remap (`GraftScanStrategy.build`) all key on names, and Spark's
+    * matching, stats maps and the native scan's per-shape schemas
+    * ([[GraftBatchScan]]) all key on names, and Spark's
     * default case-insensitive resolution would make `V` vs `v`
     * ambiguous at query time anyway. Checked at table creation AND on
     * every evolved write schema, so a colliding batch fails fast with

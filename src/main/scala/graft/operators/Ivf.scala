@@ -91,7 +91,7 @@ object Ivf {
     *    k-literal array into ONE subexpression-elimination method,
     *    which Janino refuses past its 64 KB limit (k = 1024 × d = 64
     *    trips it; the stage then silently runs interpreted — SURVEY
-    *    §20.7 #2, the ScaleSmoke ERROR);
+    *    §20.7 #2);
     *  - speed: the loop wins at EVERY k measured, including the
     *    registry's smallest (k = 16: dedup_semantic 1.07 → 0.46 s,
     *    sim_topk_ivf 2.04 → 1.56 s at sf0.1; k = 1024: 3.52 → 0.49 s)

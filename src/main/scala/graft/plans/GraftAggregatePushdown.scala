@@ -7,11 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeRef
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.graftbridge.FilterBridge
 
 import graft.catalog.SnapshotTable.MetaAgg
-import graft.sources.GraftRelation
 
 /** Aggregate pushdown into manifest metrics for SQL: a filterless,
   * ungrouped `COUNT(*)` / `COUNT(c)` / `MIN` / `MAX` / `SUM` over a

@@ -91,11 +91,9 @@ object GraftExtensions {
     functions.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
     }
-    // native physical planning for graft snapshot scans (kills the
-    // DSv1 RDD[Row] bridge; see GraftScanStrategy)
-    ext.injectPlannerStrategy(session => GraftScanStrategy(session))
-    // SQL MERGE INTO / DELETE FROM / UPDATE on graft snapshot tables
-    // (post-hoc: after resolution, before the v2-only CheckAnalysis)
+    // SQL MERGE INTO / DELETE FROM / UPDATE on `USING graft` temp
+    // views, which Spark's row-level rewrites do not see through
+    // (post-hoc: after resolution, before CheckAnalysis)
     ext.injectPostHocResolutionRule(session => GraftSqlDmlRule(session))
     // filterless COUNT/MIN/MAX over a graft relation → manifest answer
     ext.injectOptimizerRule(session => GraftAggregatePushdown(session))
@@ -132,8 +130,6 @@ object GraftExtensions {
       spark.sessionState.functionRegistry.registerFunction(
         FunctionIdentifier(name), info(name, usage), builder)
     }
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[GraftScanStrategy]))
-      spark.experimental.extraStrategies ++= Seq(GraftScanStrategy(spark))
     installScanStats(spark)
   }
 }

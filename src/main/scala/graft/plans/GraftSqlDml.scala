@@ -8,29 +8,30 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeS
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, InsertStarAction, LogicalPlan, MergeIntoTable, OverwritePartitionsDynamic, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable, View}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge}
 
 import graft.catalog.{InsertClause, MergeAction => GMergeAction, MergeClause, SnapshotTable}
-import graft.sources.GraftRelation
 
-/** SQL row-level DML for the DSv1 TEMP-VIEW seam (`CREATE TEMPORARY
-  * VIEW … USING graft`) — the shim this rule has been reduced to since
-  * [[graft.catalog.GraftV2Table]] implements
-  * `SupportsRowLevelOperations`: catalog tables (`graft.db.t`) are
-  * rewritten NATIVELY by Spark's own analyzer Resolution batch
-  * (delta-based merge-on-read — [[graft.catalog.GraftRowLevelOperation]])
-  * before this post-hoc rule ever runs, so the v2 arms of `targetOf`
-  * below serve only `OverwritePartitionsDynamic` (not a row-level
-  * operation) in practice.
+/** SQL row-level DML for `graft` TEMP VIEWS (`CREATE TEMPORARY VIEW
+  * … USING graft`, or any temp view over a graft table). Catalog
+  * tables (`graft.db.t`) are rewritten NATIVELY by Spark's own
+  * analyzer Resolution batch (delta-based merge-on-read —
+  * [[graft.catalog.GraftRowLevelOperation]], via
+  * [[graft.catalog.GraftV2Table]]'s `SupportsRowLevelOperations`)
+  * before this post-hoc rule ever runs. A temp view wraps the same
+  * [[graft.catalog.GraftV2Table]] relation in a `View` node, which
+  * those rewrites do not look through, so its statements land here
+  * and lower onto the Scala API — honouring `graft.update.mode` /
+  * `graft.merge.mode`. On catalog tables the rule serves only
+  * `OverwritePartitionsDynamic` (not a row-level operation).
   *
   * Spark's parser produces `MergeIntoTable` / `DeleteFromTable` /
-  * `UpdateTable` and its analyzer resolves them against any relation,
-  * but only v2 tables have a built-in rewrite — a v1 relation fails in
-  * CheckAnalysis. This post-hoc resolution rule intercepts the resolved
-  * statements BEFORE that check and lowers them to runnable commands
-  * over [[graft.catalog.SnapshotTable]]:
+  * `UpdateTable` and its analyzer resolves them against the view, but
+  * nothing rewrites them — they would fail in CheckAnalysis. This
+  * post-hoc resolution rule intercepts the resolved statements BEFORE
+  * that check and lowers them to runnable commands over
+  * [[graft.catalog.SnapshotTable]]:
   *
   *  - `DELETE FROM v WHERE p` → `delete(p)` (COW, manifest-pruned)
   *  - `UPDATE v SET c = e WHERE p` → `update(Seq(c -> e), p)`
@@ -155,9 +156,8 @@ object GraftSqlDml
   private[plans] def fail(msg: String): Nothing =
     throw new UnsupportedOperationException(msg)
 
-  /** One graft DML target, whichever seam it arrived through: a DSv1
-    * temp view over [[GraftRelation]] or a DSv2 catalog table
-    * ([[graft.catalog.GraftV2Table]]).
+  /** One graft DML target: the snapshot table (or branch handle) a
+    * [[graft.catalog.GraftV2Table]] relation reads, and its pin.
     */
   final case class GraftTarget(table: SnapshotTable, pinned: Option[Long])
 
@@ -168,10 +168,6 @@ object GraftSqlDml
     p match {
       case SubqueryAlias(_, child) => targetOf(child)
       case v: View => targetOf(v.child)
-      case lr: LogicalRelation => lr.relation match {
-        case gr: GraftRelation => Some(GraftTarget(gr.table, gr.pinned))
-        case _ => None
-      }
       case dsv2: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
         dsv2.table match {
           case g: graft.catalog.GraftV2Table =>
@@ -191,13 +187,14 @@ object GraftSqlDml
     * `sources.Filter` form runs NATIVELY (Spark's row-level rewrite,
     * shortcut to `SupportsDelete.deleteWhere` where
     * `GraftV2Table.canDeleteWhere` admits it); this rule only lowers
-    * the shapes the native path cannot express. DSv1 temp views have
-    * no native v2 delete, so those always lower here.
+    * the shapes the native path cannot express. A temp view's `View`
+    * node hides the table from the row-level rewrite — only
+    * `deleteWhere` would remain, and it refuses a merge-on-read delete
+    * that is not metadata-only — so view DELETEs always lower here.
     */
   private[plans] def nativeDeleteHandles(d: DeleteFromTable): Boolean = {
     def isV2(p: LogicalPlan): Boolean = p match {
       case SubqueryAlias(_, child) => isV2(child)
-      case v: View => isV2(v.child)
       case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => true
       case _ => false
     }

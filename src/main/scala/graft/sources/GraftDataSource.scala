@@ -1,15 +1,21 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext}
-import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{StructField, StructType}
+import scala.jdk.CollectionConverters._
 
-import graft.catalog.SnapshotTable
+import org.apache.spark.sql.{SQLContext, SparkSession}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.sources._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.catalog.{GraftChangesV2Table, GraftMetadataV2Table, GraftV2Table, SnapshotTable}
 
 /** Spark SQL data source for [[graft.catalog.SnapshotTable]] — the
   * integration that makes the snapshot layer consumable WITHOUT the
-  * Scala API, exactly how a SQL-only user reaches an Iceberg table:
+  * Scala API or a catalog, exactly how a SQL-only user reaches a
+  * path-based Iceberg table:
   *
   * {{{
   *   spark.read.format("graft").load("/warehouse/events")
@@ -22,16 +28,17 @@ import graft.catalog.SnapshotTable
   *   USING graft OPTIONS (path '/warehouse/events')
   * }}}
   *
-  * Implemented as a DSv1 `PrunedFilteredScan`: Catalyst pushes the
-  * query's source filters down, the relation prunes data FILES at the
-  * manifest (min/max stats + Bloom sidecars — [[graft.catalog
-  * .StatsPruner]], the same path `readWhere` uses), and every filter is
-  * declared unhandled so Catalyst re-applies them exactly — manifest
-  * pruning stays skip-only and can never change results. Merge-on-read
-  * equality deletes and field-id schema evolution apply as on every
-  * other read path.
+  * Batch reads are DSv2: [[getTable]] maps the path options onto the
+  * tables the catalog serves — [[GraftV2Table]] for the table, a pin
+  * or a branch, [[GraftChangesV2Table]] for a changes window,
+  * [[GraftMetadataV2Table]] for `metadata` — so a path read prunes,
+  * sizes, plans and guards schema drift exactly like `graft.db.t`.
+  * Those tables advertise neither batch writes nor streaming, so Spark
+  * takes this provider's V1 paths for the rest: `write...save` (which
+  * also creates a missing table), `readStream` (the changelog stream)
+  * and `writeStream` (the exactly-once sink).
   */
-final class GraftDataSource extends RelationProvider
+final class GraftDataSource extends TableProvider
     with CreatableRelationProvider with DataSourceRegister
     with StreamSourceProvider with StreamSinkProvider {
 
@@ -42,97 +49,79 @@ final class GraftDataSource extends RelationProvider
       sys.error("the graft data source requires a path: " +
         ".load(root) / .save(root) or OPTIONS (path '...')"))
 
-  override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val path = pathOf(parameters)
-    def longOpt(key: String, label: String): Option[Long] =
-      parameters.get(key).map { v =>
-        try v.toLong
-        catch {
-          case _: NumberFormatException =>
-            sys.error(s"$label must be a version number, got '$v'")
-        }
-      }
+  /** Spark asks this before every [[getTable]] only to hand the answer
+    * back; the table derives its schema from the snapshot log itself.
+    */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = null
+
+  /** Path options → the table that serves them. Spark calls this for
+    * stream reads and saves as well, so nothing here may refuse what
+    * only a batch read rejects: a missing table (a save creates it) or
+    * a changes window with one bound (a stream has no end) resolve to
+    * an [[Unreadable]] table, which fails only when read in batch.
+    */
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    def opt(key: String): Option[String] = Option(options.get(key))
+    val path = pathOf(options.asScala.toMap)
+    val spark = SparkSession.active
+    if (!SnapshotTable.exists(spark, path))
+      return new Unreadable(path, s"no graft table at $path")
+    val table = SnapshotTable.load(spark, path)
     // metadata tables (Iceberg `table.files` / `partitions` / `history`
     // / `refs`): OPTIONS (path '…', metadata 'partitions') reads the
     // manifest-derived introspection DataFrames — SQL-only users get
     // the same ops views the Scala API exposes, zero data-file I/O
-    parameters.get("metadata") match {
-      case Some(kind) =>
-        require(parameters.size <= 2 ||
-          parameters.keys.forall(k => k == "path" || k == "metadata" ||
-            k == "paths"),
-          "metadata tables take no other options (they describe the " +
-            "CURRENT snapshot; time travel does not apply)")
-        return new GraftMetadataRelation(sqlContext, path, kind.toLowerCase)
-      case None => ()
+    opt("metadata").foreach { kind =>
+      // CaseInsensitiveStringMap keys are lower-case
+      require(options.keySet.asScala.forall(Set("path", "metadata", "paths")),
+        "metadata tables take no other options (they describe the " +
+          "CURRENT snapshot; time travel does not apply)")
+      return new GraftMetadataV2Table(table, path, kind.toLowerCase)
     }
+    val pins = Seq("versionAsOf", "tag", "timestampAsOf")
     // CDC changelog surface: changesFrom/changesTo expose
-    // SnapshotTable.changes(from, to) to SQL-only consumers. Bounds
-    // are version numbers or TAG NAMES ("changes since the corpus the
-    // model trained on") — digits always mean a version; all-digit tag
-    // names are refused at tag() creation, so the routing is total.
-    def boundOpt(key: String): Option[Long] = parameters.get(key).map { v =>
-      scala.util.Try(v.toLong).getOrElse {
-        val tbl = SnapshotTable.load(sqlContext.sparkSession, path)
-        tbl.tags().getOrElse(v, sys.error(
-          s"$key: '$v' is neither a version number nor a tag at $path; " +
-            s"tags: ${tbl.tags().keys.mkString(", ")}"))
-      }
-    }
-    // Delta startingTimestamp analog: <bound>Timestamp resolves to the
-    // latest version committed at or before it (readAsOf semantics —
-    // "changes SINCE the corpus as of T"). Epoch millis or ISO-8601.
-    def tsBoundOpt(key: String, versionKey: String): Option[Long] = {
-      require(!(parameters.contains(key) && parameters.contains(versionKey)),
-        s"pass $versionKey OR $key, not both")
-      parameters.get(key).map { v =>
-        val ms = scala.util.Try(v.toLong).getOrElse(
-          scala.util.Try(java.time.Instant.parse(v).toEpochMilli).getOrElse(
-            sys.error(s"$key must be epoch millis or ISO-8601, got '$v'")))
-        SnapshotTable.load(sqlContext.sparkSession, path).versionAsOf(ms)
-      }
-    }
-    // evaluate both variants eagerly: the conflict check must fire
-    // even when the version-keyed option would win an orElse
-    val fromTs = tsBoundOpt("changesfromtimestamp", "changesfrom")
-    val toTs = tsBoundOpt("changestotimestamp", "changesto")
-    (boundOpt("changesfrom").orElse(fromTs),
-      boundOpt("changesto").orElse(toTs)) match {
-      case (Some(f), Some(t)) =>
-        require(Seq("versionasof", "tag", "timestampasof")
-          .forall(k => !parameters.contains(k)),
+    // SnapshotTable.changes(from, to) to SQL-only consumers; bounds as
+    // in GraftV2Table.changesBound
+    def bounded(key: String): Boolean =
+      options.containsKey(key) || options.containsKey(key + "Timestamp")
+    (bounded("changesFrom"), bounded("changesTo")) match {
+      case (true, true) =>
+        require(pins.forall(k => !options.containsKey(k)),
           "changesFrom/changesTo cannot combine with versionAsOf/tag/timestampAsOf")
-        return new GraftChangesRelation(sqlContext, path, f, t,
-          updateImages = parameters.get("updateimages")
-            .exists(_.equalsIgnoreCase("true")))
-      case (None, None) => ()
-      case _ => sys.error("pass BOTH changesFrom and changesTo (or neither)")
+        def bound(key: String) =
+          GraftV2Table.changesBound(table, options, key).get
+        return new GraftChangesV2Table(table, path,
+          Some((bound("changesFrom"), bound("changesTo"))))
+      case (false, false) => ()
+      // a stream read names only changesFrom; its V1 source resolves it
+      case _ => return new Unreadable(path,
+        "pass BOTH changesFrom and changesTo (or neither)")
     }
-    val version = longOpt("versionasof", "versionAsOf")
-    val tag = parameters.get("tag")
+    val version = opt("versionAsOf").map { v =>
+      v.toLongOption.getOrElse(
+        sys.error(s"versionAsOf must be a version number, got '$v'"))
+    }
+    // timestampAsOf: the latest snapshot committed at or before it
+    // (readAsOf semantics)
+    val ts = opt("timestampAsOf").map(GraftV2Table.epochMillis("timestampAsOf", _))
+    require(pins.count(options.containsKey) <= 1,
+      "pass at most one of versionAsOf, tag, timestampAsOf")
     // branch 'name': the view IS the branch — reads see the branch
     // head, INSERT/DML through the view land on the branch line
-    val branch = parameters.get("branch")
-    // timestampAsOf: epoch millis or ISO-8601 instant, resolved to the
-    // latest snapshot committed at or before it (readAsOf semantics)
-    val ts = parameters.get("timestampasof").map { v =>
-      try v.toLong
-      catch {
-        case _: NumberFormatException =>
-          try java.time.Instant.parse(v).toEpochMilli
-          catch {
-            case _: java.time.format.DateTimeParseException => sys.error(
-              s"timestampAsOf must be epoch millis or ISO-8601, got '$v'")
-          }
-      }
-    }
-    require(Seq(version, tag, ts).count(_.isDefined) <= 1,
-      "pass at most one of versionAsOf, tag, timestampAsOf")
-    require(branch.isEmpty || Seq(version, tag, ts).forall(_.isEmpty),
+    val branch = opt("branch")
+    require(branch.isEmpty || pins.forall(k => !options.containsKey(k)),
       "branch cannot combine with versionAsOf/tag/timestampAsOf " +
         "(time travel WITHIN a branch: read the branch handle's history)")
-    new GraftRelation(sqlContext, path, version, tag, ts, branch)
+    val pinned = (opt("tag"), ts) match {
+      case (Some(t), _) => Some(table.tags().getOrElse(t,
+        sys.error(s"no tag '$t' at $path; tags: ${table.tags().keys.mkString(", ")}")))
+      case (None, Some(ms)) => Some(table.versionAsOf(ms))
+      case _ => version
+    }
+    new GraftV2Table(branch.map(table.branch).getOrElse(table), path, pinned,
+      streaming = false)
   }
 
   /** Write side: `df.write.format("graft").mode(...).save(root)`.
@@ -141,13 +130,15 @@ final class GraftDataSource extends RelationProvider
     * optional hidden-partition spec from `partition` — `'month(ts)'`
     * or `'identity(col)'` — honored only at creation.
     * ErrorIfExists/Ignore follow their SaveMode contracts against
-    * table EXISTENCE.
+    * table EXISTENCE. The returned relation only carries the written
+    * table's schema: reads go through [[getTable]].
     */
   override def createRelation(sqlContext: SQLContext,
       mode: org.apache.spark.sql.SaveMode,
       parameters: Map[String, String],
       data: org.apache.spark.sql.DataFrame): BaseRelation = {
     import org.apache.spark.sql.SaveMode._
+    val ctx = sqlContext
     val spark = sqlContext.sparkSession
     val path = pathOf(parameters)
     // branch 'name' on the WRITE side too: the commit lands on the
@@ -161,20 +152,23 @@ final class GraftDataSource extends RelationProvider
         "branch first")
     if (exists && mode == ErrorIfExists)
       sys.error(s"graft table already exists at $path (SaveMode.ErrorIfExists)")
-    if (!exists || mode != Ignore) {
-      val base =
-        if (exists) SnapshotTable.load(spark, path)
-        else SnapshotTable.create(spark, path, data.schema,
-          spec = parameters.get("partition").map(parseSpec))
-      val table = branch.map(base.branch).getOrElse(base)
-      mode match {
-        case Overwrite => table.overwrite(data)
-        case _ if !exists => table.append(data) // fresh table: content
-        case Append => table.append(data)
-        case _ => () // Ignore / ErrorIfExists on existing: no write
+    val table =
+      if (!exists) SnapshotTable.create(spark, path, data.schema,
+        spec = parameters.get("partition").map(parseSpec))
+      else {
+        val base = SnapshotTable.load(spark, path)
+        branch.map(base.branch).getOrElse(base)
       }
+    mode match {
+      case Overwrite => table.overwrite(data)
+      case _ if !exists => table.append(data) // fresh table: content
+      case Append => table.append(data)
+      case _ => () // Ignore on an existing table: no write
     }
-    new GraftRelation(sqlContext, path, None, None, None, branch)
+    new BaseRelation {
+      override val sqlContext: SQLContext = ctx
+      override val schema: StructType = table.schemaAt(None)
+    }
   }
 
   /** Streaming read: `spark.readStream.format("graft")
@@ -200,25 +194,9 @@ final class GraftDataSource extends RelationProvider
     // version number or tag name — a stream resuming "since the tagged
     // corpus vintage" is the natural consumer shape; the timestamp
     // variant resolves via readAsOf semantics
-    require(!(parameters.contains("changesfrom") &&
-        parameters.contains("changesfromtimestamp")),
-      "pass changesFrom OR changesFromTimestamp, not both")
-    val from = parameters.get("changesfrom").map { v =>
-      scala.util.Try(v.toLong).getOrElse {
-        val tbl = SnapshotTable.load(sqlContext.sparkSession,
-          pathOf(parameters))
-        tbl.tags().getOrElse(v, sys.error(
-          s"changesFrom: '$v' is neither a version number nor a tag; " +
-            s"tags: ${tbl.tags().keys.mkString(", ")}"))
-      }
-    }.orElse(parameters.get("changesfromtimestamp").map { v =>
-      val ms = scala.util.Try(v.toLong).getOrElse(
-        scala.util.Try(java.time.Instant.parse(v).toEpochMilli).getOrElse(
-          sys.error("changesFromTimestamp must be epoch millis or " +
-            s"ISO-8601, got '$v'")))
-      SnapshotTable.load(sqlContext.sparkSession, pathOf(parameters))
-        .versionAsOf(ms)
-    })
+    val from = GraftV2Table.changesBound(
+      SnapshotTable.load(sqlContext.sparkSession, pathOf(parameters)),
+      new CaseInsensitiveStringMap(parameters.asJava), "changesFrom")
     require(!parameters.contains("changesto"),
       "a streaming changelog read is unbounded — changesTo only applies " +
         "to batch reads (spark.read)")
@@ -305,154 +283,18 @@ final class GraftDataSource extends RelationProvider
   }
 }
 
-final class GraftRelation(
-    override val sqlContext: SQLContext,
-    root: String,
-    versionAsOf: Option[Long],
-    tag: Option[String],
-    timestampAsOf: Option[Long] = None,
-    branch: Option[String] = None) extends BaseRelation
-    with PrunedFilteredScan with InsertableRelation {
-
-  /** The addressed line: the table's main log, or a named branch's —
-    * every read AND write through this relation follows it.
-    */
-  private[graft] val table = {
-    val base = SnapshotTable.load(sqlContext.sparkSession, root)
-    branch.map(base.branch).getOrElse(base)
-  }
-
-  /** Resolved once at relation creation: the version this relation
-    * reads (a tag resolves through the ref, a timestamp to the latest
-    * snapshot at or before it; None = follow current).
-    */
-  private[graft] val pinned: Option[Long] = (tag, timestampAsOf) match {
-    case (Some(t), _) => Some(table.tags().getOrElse(t,
-      sys.error(s"no tag '$t' at $root; tags: ${table.tags().keys.mkString(", ")}")))
-    case (None, Some(ms)) => Some(table.versionAsOf(ms))
-    case _ => versionAsOf
-  }
-
-  override val schema: StructType = table.schemaAt(pinned)
-
-  /** Manifest-exact table size estimate (row count × the schema's
-    * default width): without it `BaseRelation` reports
-    * `spark.sql.defaultSizeInBytes` (= effectively infinite) and a
-    * snapshot-table side of a join can NEVER auto-broadcast, however
-    * small. Row counts come from the manifests (zero data I/O), minus
-    * committed delete-vector cardinalities — the estimate only rounds
-    * up (equality deletes are not subtracted), so an oversized table
-    * never broadcasts by accident.
-    */
-  override def sizeInBytes: Long = {
-    val rows = table.scanEstimate(pinned, Nil)
-    rows * math.max(1, schema.defaultSize)
-  }
-
-  /** All filters stay Catalyst's responsibility — this relation uses
-    * them ONLY to skip files, so its row output may over-approximate
-    * and the exact semantics (incl. NULL handling) remain with the
-    * engine's own FilterExec.
-    */
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
-
-  /** A current-reading relation (no pin) follows the table, so new
-    * commits ARE visible — but a schema-evolving commit after the
-    * relation was analyzed would make rows disagree with the declared
-    * schema (silent corruption or a cast crash). Detect it and fail
-    * with the remedy instead. Shared by [[buildScan]] (DSv1 fallback)
-    * and [[graft.plans.GraftScanStrategy]] (the native plan path).
-    */
-  private[graft] def guardSchemaDrift(): Unit = {
-    def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-    require(pinned.nonEmpty || shape(table.schemaAt(None)) == shape(schema),
-      s"snapshot table at $root evolved its schema since this relation " +
-        "was created — re-create the view (or re-run spark.read) to " +
-        "pick up the new schema")
-  }
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    guardSchemaDrift()
-    val df = table.scanFor(pinned, filters.toIndexedSeq)
-    // empty projection (e.g. COUNT(*)) still needs the row multiset
-    val projected =
-      if (requiredColumns.isEmpty) df.select()
-      else df.select(requiredColumns.toIndexedSeq.map(c =>
-        org.apache.spark.sql.functions.col(
-          graft.catalog.SnapshotTable.quoted(c))): _*)
-    projected.rdd
-  }
-
-  /** SQL `INSERT INTO` / `INSERT OVERWRITE` on a graft temp view:
-    * atomic append or full-table overwrite (DSv1 overwrite contract).
-    */
-  override def insert(data: org.apache.spark.sql.DataFrame,
-      overwrite: Boolean): Unit = {
-    require(pinned.isEmpty, "cannot INSERT into a time-travel " +
-      "(versionAsOf / tag / timestampAsOf) relation")
-    if (overwrite) table.overwrite(data) else table.append(data)
-    ()
-  }
-}
-
-/** CDC changelog as a SQL relation: `spark.read.format("graft")
-  * .option("changesFrom", 2).option("changesTo", 4).load(root)` (or
-  * the OPTIONS form of CREATE TEMPORARY VIEW) surfaces
-  * [[graft.catalog.SnapshotTable.changes]] — `_change_type ∈ {insert,
-  * delete}` plus the table columns at `changesTo`'s schema — to
-  * SQL-only incremental consumers. Versions are pinned at relation
-  * creation, so repeated queries over one view read one consistent
-  * window. [[graft.plans.GraftScanStrategy]] plans it natively; this
-  * DSv1 `buildScan` is the fallback for subquery shapes. With
-  * `updateImages 'true'` the window is served per-commit with
-  * Delta-CDF labels ([[graft.catalog.SnapshotTable.changesCdf]]) —
-  * V2 `#changes` option parity for SQL-only consumers.
+/** What a path read that cannot be served resolves to: a missing
+  * table, or a changes window with one bound. Saves and streams never
+  * read its schema — they take the provider's V1 paths, which create
+  * the table or stream from the bound — so only a batch read fails,
+  * with `reason`, while Spark builds the relation.
   */
-final class GraftChangesRelation(
-    override val sqlContext: SQLContext,
-    root: String,
-    fromVersion: Long,
-    toVersion: Long,
-    updateImages: Boolean = false) extends BaseRelation with TableScan {
-
-  private[graft] val table = SnapshotTable.load(sqlContext.sparkSession, root)
-
-  private[graft] def changesDf: org.apache.spark.sql.DataFrame =
-    if (updateImages) table.changesCdf(fromVersion, toVersion)
-    else table.changes(fromVersion, toVersion)
-
-  override val schema: StructType = StructType(
-    StructField("_change_type", org.apache.spark.sql.types.StringType,
-      nullable = false) +: table.schemaAt(Some(toVersion)).fields)
-
-  override def buildScan(): RDD[Row] = changesDf.rdd
-}
-
-/** One metadata table (`history` / `partitions` / `files` / `tags`)
-  * of a graft snapshot table as a relation — resolved fresh on every
-  * scan so a long-lived temp view always describes the CURRENT
-  * snapshot. Metadata-sized by construction (rows ≈ commits, files, or
-  * partitions — never data rows).
-  */
-final class GraftMetadataRelation(
-    override val sqlContext: SQLContext,
-    root: String,
-    kind: String) extends BaseRelation with TableScan {
-
-  private def df: org.apache.spark.sql.DataFrame = {
-    val t = SnapshotTable.load(sqlContext.sparkSession, root)
-    kind match {
-      case "history" => t.historyDf()
-      case "partitions" => t.partitionsDf()
-      case "files" => t.filesDf()
-      case "tags" => t.tagsDf()
-      case "branches" => t.branchesDf()
-      case other => sys.error(s"unknown graft metadata table '$other' — " +
-        "one of: history, partitions, files, tags, branches")
-    }
-  }
-
-  override def schema: StructType = df.schema
-  override def buildScan(): RDD[Row] = df.rdd
+private final class Unreadable(path: String, reason: String) extends Table
+    with SupportsRead {
+  override def name(): String = path
+  override def schema(): StructType = throw new IllegalArgumentException(reason)
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    throw new IllegalArgumentException(reason)
 }

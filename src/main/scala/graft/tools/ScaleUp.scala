@@ -5,9 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Materializes an N×-scaled replica of the driver testdata (VERDICT r8
   * item 5: "one full-suite bench at sf1") so `graft.Bench` can run the
-  * ENTIRE query registry at 10× sf0.1 — the whole-suite complement to
-  * [[graft.ScaleSmoke]], which replays only the four heaviest families
-  * in-memory.
+  * ENTIRE query registry at 10× sf0.1.
   *
   * Replication is PERF-ONLY (no oracle at this scale) but honest:
   * every replica keeps the original's statistical shape and the

@@ -518,7 +518,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val p2 = finalPlan("SELECT f.id FROM graft.stats.fact f JOIN " +
       "(SELECT id FROM graft.stats.fact WHERE id < 1000) g ON f.id = g.id")
     assert(p2.contains("BroadcastHashJoin"), p2.take(3000))
-    // DSv1 path: read.format(\"graft\") reports sizeInBytes the same way
+    // the path read: read.format("graft") reports sizeInBytes the same way
     val warehouse = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val dimDs = spark.read.format("graft").load(s"$warehouse/stats/dim")
     assert(leafStats(dimDs) == dimBytes)

@@ -6,11 +6,15 @@ import java.time.Instant
 import java.util.concurrent.CountDownLatch
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2Relation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{PartitionSpec, Snapshot, SnapshotConflictException, SnapshotLog, SnapshotTable}
+import graft.catalog.{GraftBatchScan, PartitionSpec, Snapshot, SnapshotConflictException, SnapshotLog, SnapshotTable}
 
 /** Pins the snapshot layer's contract: atomic commits, optimistic
   * concurrency, time travel, rollback, expiry, hidden-partition
@@ -1824,25 +1828,46 @@ class SnapshotTableSpec extends AnyFunSuite {
       ("delete", 1L, 1.0), ("insert", 1L, 10.0)))
   }
 
+  /** Every native graft scan in an executed plan, adaptive stages
+    * included.
+    */
+  private def graftScans(p: SparkPlan): Seq[GraftBatchScan] = p match {
+    case a: AdaptiveSparkPlanExec => graftScans(a.executedPlan)
+    case s: QueryStageExec => graftScans(s.plan)
+    case b: BatchScanExec => b.scan match {
+      case g: GraftBatchScan => Seq(g)
+      case _ => Nil
+    }
+    case other => other.children.flatMap(graftScans)
+  }
+
+  private def v1Relations(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l }
+
+  private def v2Relations(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collect { case r: DataSourceV2Relation => r }
+
   test("graft scans plan natively: vectorized parquet, no RDD bridge, manifest pruning in-plan") {
     val t = rangeTable() // ids 1..40 in 4 decade files with min/max stats
     val df = spark.read.format("graft").load(t.root.toString)
       .filter(col("id") === 17L).select("id", "v")
     assert(df.collect().map(_.getLong(0)).toSeq == Seq(17L))
     val plan = df.queryExecution.executedPlan.toString
-    // the DSv1 bridge rendered as RowDataSourceScan / Scan ExistingRDD;
-    // the strategy plans the pruned read as a native parquet scan
+    // a row bridge renders as RowDataSourceScan / Scan ExistingRDD; the
+    // path read plans the native batch scan the catalog tables use
     assert(!plan.contains("RowDataSourceScan") && !plan.contains("ExistingRDD"),
       s"RDD bridge still in plan:\n$plan")
-    assert(plan.contains("FileScan parquet") || plan.contains("Scan parquet"),
-      s"expected a native parquet scan:\n$plan")
+    assert(graftScans(df.queryExecution.executedPlan).nonEmpty,
+      s"expected the native graft batch scan:\n$plan")
     // manifest pruning runs at PLANNING: a predicate outside every
-    // file's bounds leaves no parquet scan at all (pure metadata skip —
-    // through SQL, not just the Scala readWhere path)
+    // file's bounds plans no input partition at all (pure metadata
+    // skip — through SQL, not just the Scala readWhere path)
     val none = spark.read.format("graft").load(t.root.toString)
       .filter(col("id") === 999L)
     assert(none.count() == 0L)
-    assert(!none.queryExecution.executedPlan.toString.contains("FileScan"),
+    val noneScans = graftScans(none.queryExecution.executedPlan)
+    assert(noneScans.nonEmpty &&
+      noneScans.forall(_.toBatch.planInputPartitions().isEmpty),
       "all-files manifest skip should plan an empty scan")
     // aggregate over the SQL view stays on the native path too
     spark.sql("CREATE OR REPLACE TEMPORARY VIEW graft_plan_test " +
@@ -1851,6 +1876,71 @@ class SnapshotTableSpec extends AnyFunSuite {
       "SELECT count(*) AS n FROM graft_plan_test WHERE id BETWEEN 11 AND 20")
     assert(agg.as[Long].head() == 10L)
     assert(!agg.queryExecution.executedPlan.toString.contains("RowDataSourceScan"))
+  }
+
+  test("path reads resolve to the DSv2 tables: pins, branch, view, changes, metadata") {
+    val t = rangeTable() // v1 create, v2 ids 1..40
+    val root = t.root.toString
+    val v2 = t.currentVersion()
+    t.append(rows((41, "2024-05-01", 41.0)))
+    val v3 = t.currentVersion()
+    t.tag("two", v2)
+    t.createBranch("side")
+    t.branch("side").append(rows((42, "2024-05-02", 42.0)))
+    // filtered reads plan BatchScanExec over GraftBatchScan; no V1
+    // relation anywhere in the analyzed plan
+    def native(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
+      assert(df.collect().length == n)
+      assert(v1Relations(df).isEmpty, df.queryExecution.analyzed)
+      assert(graftScans(df.queryExecution.executedPlan).nonEmpty,
+        df.queryExecution.executedPlan)
+    }
+    def read(opts: (String, String)*) = spark.read.format("graft")
+      .options(opts.toMap).load(root).filter(col("id") > 0L)
+    native(read(), 41)
+    native(read("versionAsOf" -> v2.toString), 40)
+    native(read("tag" -> "two"), 40)
+    native(read("branch" -> "side"), 42)
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW graft_v2_path " +
+      s"USING graft OPTIONS (path '$root')")
+    native(spark.sql("SELECT * FROM graft_v2_path WHERE id > 0"), 41)
+    // a changes window keeps its schema at changesTo across a later
+    // ADD COLUMN, with the same rows as the Scala changelog
+    t.addColumns(Seq(StructField("extra", StringType)))
+    val chg = spark.read.format("graft").option("changesFrom", v2)
+      .option("changesTo", v3).load(root)
+    assert(chg.columns.toSeq == Seq("_change_type", "id", "ts", "v"))
+    assert(v2Relations(chg).nonEmpty && v1Relations(chg).isEmpty)
+    assert(chg.collect().toSet == t.changes(v2, v3).collect().toSet)
+    assert(chg.select("_change_type", "id").as[(String, Long)].collect()
+      .toSet == Set(("insert", 41L)))
+    val hist = spark.read.format("graft").option("metadata", "history")
+      .load(root)
+    assert(v2Relations(hist).nonEmpty && v1Relations(hist).isEmpty)
+    assert(hist.collect().toSet == t.historyDf().collect().toSet)
+    // no table at the path: the read fails naming it
+    val missing = freshRoot()
+    val e = intercept[Exception](spark.read.format("graft").load(missing))
+    assert(e.getMessage.contains(missing), e.getMessage)
+  }
+
+  test("temp-view DELETE on a merge-on-read table lowers onto delete vectors") {
+    val t = SnapshotTable.create(spark, freshRoot(), eventsSchema, None,
+      properties = Map("graft.delete.mode" -> "merge-on-read"))
+    // one file, so the DELETE matches part of it
+    t.append(rows((1, "2024-01-01", 1.0), (2, "2024-01-02", 2.0),
+      (3, "2024-01-03", 3.0)).coalesce(1))
+    val preFiles = t.currentSnapshot().files.map(_.path)
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW graft_mor_view " +
+      s"USING graft OPTIONS (path '${t.root}')")
+    // a predicate with a source-filter form: only the View node keeps
+    // it from the native delete, which would refuse it
+    spark.sql("DELETE FROM graft_mor_view WHERE id >= 2")
+    assert(t.read().select("id").as[Long].collect().toSeq == Seq(1L))
+    val s = t.currentSnapshot()
+    assert(s.operation == "delete-pos" && s.dvFiles.nonEmpty &&
+      s.files.map(_.path) == preFiles,
+      "merge-on-read DELETE must commit a delete vector, not rewrite")
   }
 
   test("write.distribution-mode=hash yields one file per partition per batch") {
@@ -2980,7 +3070,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     t.setProperties(Map("k" -> "v"))
     assert(t.changesRoute(t.currentVersion() - 1, t.currentVersion())
       == "netzero")
-    // DSv1 OPTIONS parity for the labeled feed: a copy-on-write update
+    // path OPTIONS parity for the labeled feed: a copy-on-write update
     // window read with updateImages 'true' serves CDF labels (the
     // relabeled netted diff — everything in an `update` commit IS an
     // update image) to a SQL-only consumer
@@ -2994,6 +3084,6 @@ class SnapshotTableSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(lbl.sorted.toSeq == Seq(
       ("update_postimage", 2L, 3.0), ("update_preimage", 2L, 2.0)),
-      s"DSv1 updateImages labels: ${lbl.mkString("; ")}")
+      s"path updateImages labels: ${lbl.mkString("; ")}")
   }
 }
