@@ -25,34 +25,15 @@ object Bench {
       try exec(fn) catch { case _: Throwable => () }
     }
 
-    // host-speed calibration (VERDICT r14 #6): a FIXED data-independent
-    // workload — 50M xxhash64 + shuffle-free aggregate over 32 range
-    // partitions — whose cost depends only on the host's available CPU,
-    // never on this repo's code or the SF. Its best-of-3 time rides the
-    // JSON as `calibration_sec`; cross-round totals divide by the ratio
-    // of calibration times to cancel shared-host contention (the r13→r14
-    // uniform ~1.5× inflation on untouched queries was exactly that).
-    import org.apache.spark.sql.functions.{col, sum, xxhash64}
-    def calibrateOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 50000000L, 1L, 32)
-        .select((xxhash64(col("id")) % 1000003L).as("h"))
-        .agg(sum("h")) // mod keeps the ANSI sum far from Long overflow
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val calibration = (1 to 3).map(_ => calibrateOnce()).min
-
-    // SATURATED calibration (SURVEY §19.8 #1, transition round r16+):
-    // the 50M-hash probe above finishes its 32 tasks in ~5 ms of CPU
-    // each, so its wall time is mostly job/stage scheduling overhead —
-    // which inflates faster under host contention than the bench
-    // queries' actual compute does (the r15 over-correction). This
-    // probe runs the SAME per-core workload × cores (32 tasks × 50M
-    // hashes each, ~seconds of sustained all-core compute), so its
-    // ratio across rounds models the contention a compute-bound query
-    // feels. Both numbers ride the JSON during the transition;
+    // host-speed calibration (SURVEY §19.8 #1): a FIXED data-independent
+    // workload whose cost depends only on the host's available CPU,
+    // never on this repo's code or the SF. 32 tasks × 50M xxhash64
+    // each is seconds of sustained all-core compute, so its ratio
+    // across rounds models the contention a compute-bound query feels
+    // (a probe of ~5 ms tasks measures mostly job scheduling, which
+    // inflates faster under contention and over-corrected r15).
     // BASELINE.md records the anchors and the formula.
+    import org.apache.spark.sql.functions.{col, sum, xxhash64}
     def calibrateSaturatedOnce(): Double = {
       val t0 = System.nanoTime()
       spark.range(0L, 1600000000L, 1L, 32)
@@ -215,7 +196,7 @@ object Bench {
     // fixture rows exist to clean.
     val satSer = (calibrationSatStart +: satSeries.toSeq)
       .map(fmt).mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"${cfg.sfDir}","fixtures":$fx,"calibration_sat_series":$satSer,"calibration_sat_median":${fmt(calibrationSatMedian)},"queries":$qs,"headline":$hl,"errors":$errs,"calibration_sec":${fmt(calibration)},"calibration_sat_sec":${fmt(calibrationSat)},"total_sec":${fmt(total)}}"""
+    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"${cfg.sfDir}","fixtures":$fx,"calibration_sat_series":$satSer,"calibration_sat_median":${fmt(calibrationSatMedian)},"queries":$qs,"headline":$hl,"errors":$errs,"calibration_sat_sec":${fmt(calibrationSat)},"total_sec":${fmt(total)}}"""
     println(fullLine)
     // The full line above (~6-10 KB for 172 queries) has NEVER fit the
     // driver's ~2000-char stdout tail capture — `parsed` was null in
@@ -235,7 +216,7 @@ object Bench {
     val firstErrors = errors.toSeq.take(2)
       .map { case (k, m) => jsonString(k) + ":" + jsonString(m.take(120)) }
       .mkString("{", ",", "}")
-    def digestHead(omitted: Int): String = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"${cfg.sfDir}","errors_n":${errors.size},"errors":$firstErrors,"calibration_sec":${fmt(calibration)},"calibration_sat_sec":${fmt(calibrationSat)},"calibration_sat_median":${fmt(calibrationSatMedian)},"headline":$hl,"queries_omitted":$omitted,"queries":"""
+    def digestHead(omitted: Int): String = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"${cfg.sfDir}","errors_n":${errors.size},"errors":$firstErrors,"calibration_sat_sec":${fmt(calibrationSat)},"calibration_sat_median":${fmt(calibrationSatMedian)},"headline":$hl,"queries_omitted":$omitted,"queries":"""
     val fixedTail = s""","total_sec":${fmt(total)}}"""
     // sized with the widest count: every row omitted
     val room = compactBudget - digestHead(results.size).length -

@@ -2488,8 +2488,8 @@ object Queries {
 
   /** Build-once CDC-upsert stream result: an ACTUAL two-micro-batch
     * file stream (insert evens, then keyed corrections) drained through
-    * [[graft.streaming.EventStream.upsertToSnapshotTable]] into a
-    * snapshot table. Batch order is pinned via file modification times
+    * the keyed `writeStream.format("graft")` sink into a snapshot
+    * table. Batch order is pinned via file modification times
     * (FileStreamSource processes oldest-first), so the corrections
     * deterministically land second and replace.
     */
@@ -2515,8 +2515,9 @@ object Queries {
       touch(s"$srcDir/b2", 1700000060000L)
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*")
-      val q = graft.streaming.EventStream.upsertToSnapshotTable(
-        stream, tableRoot, Seq("event_id"), ckpt)
+      val q = stream.writeStream.format("graft")
+        .option("keys", "event_id").outputMode("update")
+        .option("checkpointLocation", ckpt).start(tableRoot)
       try q.processAllAvailable() finally q.stop()
       tableRoot
     })
@@ -2624,8 +2625,9 @@ object Queries {
       touch(s"$srcDir/b2", 1700000060000L)
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*")
-      val q = graft.streaming.EventStream.upsertToSnapshotTable(
-        stream, tableRoot, Seq("event_id"), ckpt)
+      val q = stream.writeStream.format("graft")
+        .option("keys", "event_id").outputMode("update")
+        .option("checkpointLocation", ckpt).start(tableRoot)
       try q.processAllAvailable() finally q.stop()
       val tbl = graft.catalog.SnapshotTable.load(s, tableRoot)
       val h = tbl.history()

@@ -4,19 +4,18 @@ import java.time.Instant
 
 import scala.util.Try
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.FilterBridge
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
-/** Per-file column statistics: collection (one aggregate pass over the
-  * freshly staged files, piggy-backed on the row-count pass
-  * [[SnapshotTable]] already runs) and predicate evaluation for
-  * manifest-level FILE SKIPPING — the Iceberg data-file stats
+/** Per-file column statistics: their shape (which columns get bounds,
+  * sums and sketches; [[InlineFileStats]] collects them as writers
+  * stream rows) and predicate evaluation for manifest-level FILE
+  * SKIPPING — the Iceberg data-file stats
   * capability (`lower_bounds`/`upper_bounds`/`null_value_counts`,
   * which the reference's Iceberg tables get from the format and Athena
   * uses to skip files). Combined with [[SnapshotTable.compact]]'s
@@ -107,66 +106,6 @@ object FileStats {
   private[catalog] val NtzFormatter =
     java.time.format.DateTimeFormatter.ofPattern(NtzPattern)
 
-  /** The aggregate columns for one stats pass: for eligible field i,
-    * aliases `__min_i`, `__max_i`, `__nulls_i` (positional aliases —
-    * immune to hostile field names). Timestamps render as epoch micros
-    * so bounds are time-zone-free; everything else renders via cast to
-    * string and is re-typed at prune time from the schema.
-    */
-  def aggColumns(schema: StructType, bloom: BloomSpec = BloomSpec.Off,
-      ndv: NdvSpec = NdvSpec.Default): Seq[Column] = {
-    val stats = eligibleFields(schema).zipWithIndex.flatMap { case (f, i) =>
-      val c = col(quoted(f.name))
-      val (mn, mx) = f.dataType match {
-        case TimestampType =>
-          (unix_micros(min(c)).cast("string"),
-            unix_micros(max(c)).cast("string"))
-        case TimestampNTZType =>
-          (date_format(min(c), NtzPattern), date_format(max(c), NtzPattern))
-        case StringType =>
-          // bound the manifest: never ship multi-KB document bodies
-          // into the file list
-          (substring(min(c), 1, MaxStringBound),
-            when(length(max(c)) <= MaxStringBound, max(c)))
-        case _ =>
-          (min(c).cast("string"), max(c).cast("string"))
-      }
-      Seq(mn.as(s"__min_$i"), mx.as(s"__max_$i"),
-        sum(c.isNull.cast("long")).as(s"__nulls_$i"))
-    }
-    // per-file EXACT sums ride the SAME pass, integral/decimal columns
-    // only (float addition is order-dependent — no exact metadata
-    // answer exists): folded through decimal(38) so a 10⁸-row file of
-    // longs can never wrap, rendered as the decimal string. SQL SUM
-    // null semantics are free (sum of an all-NULL file is NULL).
-    val sums = summableFields(schema).map { case (f, i) =>
-      val c = col(quoted(f.name))
-      sum(c.cast(DecimalType(38, sumScale(f.dataType))))
-        .cast("string").as(s"__sum_$i")
-    }
-    // per-file HLL NDV sketches ride the SAME pass (see [[NdvSpec]]):
-    // the sketch hashes xxhash64 of the TYPED value — uniform across
-    // column types (hll_sketch_agg itself takes only int/long/string/
-    // binary), collision-negligible at estimation precision — with
-    // NULLs excluded (xxhash64(NULL) would fold them into the seed's
-    // hash and count a phantom value)
-    val ndvs =
-      if (!ndv.enabled) Nil
-      else eligibleFields(schema).zipWithIndex.map { case (f, i) =>
-        val c = col(quoted(f.name))
-        hll_sketch_agg(when(c.isNotNull, xxhash64(c)), ndv.lgk)
-          .as(s"__ndv_$i")
-      }
-    // opt-in per-file Bloom filters ride the SAME pass: xxhash64 is
-    // codegen'd, the filter state is a fixed word array per file
-    val blooms = bloomFields(schema, bloom).map { case (f, i) =>
-      graft.functions.BloomAgg.bloomAgg(
-        xxhash64(col(quoted(f.name))), bloom.bits, bloom.hashes)
-        .as(s"__bloom_$i")
-    }
-    stats ++ sums ++ ndvs ++ blooms
-  }
-
   /** Columns whose per-file exact sum is recorded (the SUM-pushdown
     * eligibility set): integral and decimal types.
     */
@@ -176,58 +115,8 @@ object FileStats {
     case _ => false
   }
 
-  def summableFields(schema: StructType): Seq[(StructField, Int)] =
-    eligibleFields(schema).zipWithIndex
-      .filter { case (f, _) => summable(f.dataType) }
-
-  private def sumScale(dt: DataType): Int = dt match {
-    case d: DecimalType => d.scale
-    case _ => 0
-  }
-
-  /** Bloom-indexed fields with their eligible-field ordinal. */
-  private def bloomFields(schema: StructType,
-      bloom: BloomSpec): Seq[(StructField, Int)] =
-    eligibleFields(schema).zipWithIndex
-      .filter { case (f, _) => bloom.columns.contains(f.name) }
-
   def eligibleFields(schema: StructType): Seq[StructField] =
     schema.fields.toIndexedSeq.filter(f => eligible(f.dataType))
-
-  /** Decode one aggregate row (positionally aligned with
-    * [[aggColumns]], starting at `offset`) into the manifest map.
-    */
-  def fromRow(schema: StructType, row: org.apache.spark.sql.Row,
-      offset: Int, bloom: BloomSpec = BloomSpec.Off,
-      ndv: NdvSpec = NdvSpec.Default): Map[String, ColStats] = {
-    def s(j: Int): Option[String] =
-      if (row.isNullAt(j)) None else Some(row.getString(j))
-    // the bloom/ndv aggs yield raw BINARY; encode here with the BASIC
-    // (un-chunked) codec — Spark's base64() SQL function MIME-chunks
-    // with line breaks, which is hostile inside a JSON manifest
-    def bin(j: Int): Option[String] =
-      if (row.isNullAt(j)) None
-      else Some(java.util.Base64.getEncoder
-        .encodeToString(row.getAs[Array[Byte]](j)))
-    val nStats = eligibleFields(schema).length
-    val nSums = summableFields(schema).length
-    val nNdv = if (ndv.enabled) nStats else 0
-    val sumAt = summableFields(schema).zipWithIndex.map {
-      case ((f, _), pos) => f.name -> (offset + nStats * 3 + pos)
-    }.toMap
-    val bloomAt = bloomFields(schema, bloom).zipWithIndex.map {
-      case ((f, _), pos) =>
-        f.name -> (offset + nStats * 3 + nSums + nNdv + pos)
-    }.toMap
-    eligibleFields(schema).zipWithIndex.map { case (f, i) =>
-      val b = offset + i * 3
-      f.name -> ColStats(s(b), s(b + 1),
-        if (row.isNullAt(b + 2)) 0L else row.getLong(b + 2),
-        bloomAt.get(f.name).flatMap(bin),
-        if (ndv.enabled) bin(offset + nStats * 3 + nSums + i) else None,
-        sumAt.get(f.name).flatMap(s))
-    }.toMap
-  }
 
   /** Driver-side union of per-file NDV sketches → the distinct-value
     * estimate over exactly those files. None when any kept file lacks
@@ -243,9 +132,6 @@ object FileStats {
       }
       math.max(1L, math.round(u.getEstimate))
     }.toOption
-
-  private def quoted(name: String): String =
-    "`" + name.replace("`", "``") + "`"
 }
 
 /** Driver-side evaluation of `sources.Filter` predicates against

@@ -275,11 +275,8 @@ final class GraftDeltaBatchWrite(table: SnapshotTable, baseVersion: Long,
       case Command.UPDATE => "update-pos"
       case Command.MERGE => "merge-pos"
     }
-    table.commitDelta(baseVersion, op,
-      if (entries.nonEmpty) Some(dataRel) else None,
-      entries.map(_.path), dvs,
-      updFiles = msgs.flatMap(_.updFiles).toSet,
-      inline = Some(entries))
+    table.commitDelta(baseVersion, op, entries, dvs,
+      updFiles = msgs.flatMap(_.updFiles).toSet)
     ()
   }
 

@@ -32,7 +32,7 @@ final class GraftStreamingWrite(
     table: SnapshotTable,
     writeSchema: StructType,
     queryId: String,
-    maintainEvery: Option[Int] = None) extends StreamingWrite {
+    maintainEvery: Option[Long] = None) extends StreamingWrite {
 
   // one staging dir per query instance; adopted file lists are
   // explicit, so a crashed epoch's leftovers are inert until
@@ -53,7 +53,7 @@ final class GraftStreamingWrite(
   // planned snapshot's shape: a schema evolution committing between
   // analysis-time table load and THIS construction would otherwise
   // stage files under the stale writeSchema while adoptStreamBatch
-  // reads them back under planned.schema — and the commit-time check
+  // labels them with planned.schema's ids — and the commit-time check
   // (latest vs planned, both post-evolution) would pass, silently
   // adopting mislabeled files
   {
@@ -129,8 +129,7 @@ final class GraftStreamingWrite(
     }
     val entries = messages.toSeq
       .collect { case m: GraftDeltaCommit => m.entries }.flatten
-    val adopted = table.adoptStreamBatch(dataRel, entries.map(_.path),
-      epochKey, epochId, planned, inline = Some(entries))
+    val adopted = table.adoptStreamBatch(epochKey, epochId, planned, entries)
     // streaming ingest accretes small files — `.option("maintainEvery",
     // n)` runs the table's own threshold-driven maintenance (compaction
     // / vector rewrite / vacuum per its TBLPROPERTIES) every n epochs,

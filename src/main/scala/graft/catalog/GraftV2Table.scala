@@ -215,12 +215,7 @@ final class GraftV2Table(
             s"streamFrom must be a version number or 'earliest', got '$v'"))
         }
         def posLong(key: String): Option[Long] =
-          Option(options.get(key)).map { v =>
-            val n = scala.util.Try(v.toLong).getOrElse(
-              sys.error(s"$key must be a positive number, got '$v'"))
-            require(n >= 1, s"$key must be >= 1, got $n")
-            n
-          }
+          GraftV2Table.positiveOption(key, Option(options.get(key)))
         new graft.streaming.GraftTableStream(table, schema, required,
           filters.toIndexedSeq, from,
           options.getBoolean("skipNonAppends", false),
@@ -384,15 +379,9 @@ final class GraftV2Table(
             "streaming writes into a graft table append — use " +
               "outputMode(Append); keyed CDC upserts go through " +
               "writeStream.format(\"graft\").option(\"keys\", …)")
-          val maintainEvery = Option(info.options().get("maintainEvery"))
-            .map { v =>
-              val n = scala.util.Try(v.toInt).getOrElse(sys.error(
-                s"maintainEvery must be a positive number, got '$v'"))
-              require(n >= 1, s"maintainEvery must be >= 1, got $n")
-              n
-            }
           new GraftStreamingWrite(table, info.schema(), info.queryId(),
-            maintainEvery)
+            GraftV2Table.positiveOption("maintainEvery",
+              Option(info.options().get("maintainEvery"))))
         }
       }
     }
@@ -588,15 +577,11 @@ final class GraftChangesV2Table(
 
         override def toMicroBatchStream(checkpointLocation: String)
             : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-          val maxV = Option(options.get("maxVersionsPerTrigger")).map { v =>
-            val n = scala.util.Try(v.toLong).getOrElse(sys.error(
-              s"maxVersionsPerTrigger must be a positive number, got '$v'"))
-            require(n >= 1, s"maxVersionsPerTrigger must be >= 1, got $n")
-            n
-          }
           new graft.streaming.GraftChangesTableStream(table, schema,
             required, checkpointLocation,
-            GraftV2Table.changesBound(table, options, "changesFrom"), maxV,
+            GraftV2Table.changesBound(table, options, "changesFrom"),
+            GraftV2Table.positiveOption("maxVersionsPerTrigger",
+              Option(options.get("maxVersionsPerTrigger"))),
             updateImages = Option(options.get("updateImages"))
               .orElse(table.publishedSnapshot().properties
                 .get("graft.cdc.update-images"))
@@ -656,6 +641,18 @@ object GraftV2Table {
     }.orElse(Option(options.get(key + "Timestamp")).map(v =>
       table.versionAsOf(epochMillis(key + "Timestamp", v))))
   }
+
+  /** A `key` option that must be a whole number >= 1 (trigger caps,
+    * maintenance cadence); None when unset.
+    */
+  private[graft] def positiveOption(key: String,
+      value: Option[String]): Option[Long] =
+    value.map { v =>
+      val n = scala.util.Try(v.toLong).getOrElse(
+        sys.error(s"$key must be a positive number, got '$v'"))
+      require(n >= 1, s"$key must be >= 1, got $n")
+      n
+    }
 
   /** An instant option: epoch millis or ISO-8601. */
   private[graft] def epochMillis(key: String, v: String): Long =

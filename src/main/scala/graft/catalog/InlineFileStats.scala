@@ -12,15 +12,19 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Per-file column statistics computed INLINE while a writer streams
   * rows into one parquet file — the Iceberg writer-metrics design
   * (guide §1.2 step 1: a commit must not RE-READ the bytes it just
-  * wrote to learn their bounds; at 100 TB the read-back job
-  * [[SnapshotTable.statsForStaged]] runs is a second full pass over
-  * every committed byte).
+  * wrote to learn their bounds; at 100 TB a read-back job would be a
+  * second full pass over every committed byte). This is the ONE
+  * implementation of manifest stats: the staged batch write
+  * ([[StagedWrite]]), the delta and streaming writers
+  * ([[GraftDeltaWriter]]) and [[SnapshotTable.importParquet]] all feed
+  * their rows through it.
   *
   * Exactness contract: the emitted [[ColStats]] are BYTE-IDENTICAL to
-  * what the read-back aggregation ([[FileStats.aggColumns]] decoded by
-  * [[FileStats.fromRow]]) produces for the same file — the manifest
-  * feeds metadata-only aggregates and file pruning, so the rendering,
-  * ordering and sketch semantics must match the SQL path exactly:
+  * what a SQL aggregate over the same file produces (min/max/null
+  * count per column, `sum` through decimal(38), `hll_sketch_agg`,
+  * `BloomAgg`) — the manifest feeds metadata-only aggregates and file
+  * pruning, so the rendering, ordering and sketch semantics must match
+  * the SQL path exactly:
   *
   *  - min/max use Spark's own comparison semantics (NaN greatest,
   *    `SQLOrderingUtil` float/double compare, UTF8String binary order,
@@ -43,9 +47,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Bloom filters replay `BloomAgg` (including the xxhash64-of-NULL
   *    = seed behavior of the un-guarded hash column).
   *
-  * `InlineStatsSpec` pins the equivalence against a live read-back on
-  * adversarial data (NaN, signed zero, 64/65-char strings, unicode,
-  * all-null columns, decimals, NTZ).
+  * `InlineStatsSpec` pins the equivalence against that aggregate,
+  * kept in test scope as the reference read-back, on adversarial data
+  * (NaN, signed zero, 64/65-char strings, unicode, all-null columns,
+  * decimals, NTZ).
   *
   * One collector instance per open file; not thread-safe.
   */
@@ -197,8 +202,8 @@ final class InlineFileStats(schema: StructType, bloom: BloomSpec,
           .asInstanceOf[UTF8String].toString)
     }
 
-  /** The manifest stats map — same keys and byte content as
-    * [[FileStats.fromRow]] over the read-back aggregate row.
+  /** The manifest stats map: one [[ColStats]] per stats-eligible
+    * column, keyed by column name.
     */
   def finish(): Map[String, ColStats] = {
     val b64 = Base64.getEncoder

@@ -2,12 +2,12 @@ package graft.catalog
 
 import java.time.{Instant, YearMonth}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Literal => CatalystLiteral}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.{ColumnBridge, ParquetReadBridge}
 import org.apache.spark.sql.types._
 
 import graft.schema.SchemaOps
@@ -1960,7 +1960,8 @@ final class SnapshotTable private (
     * extraction [[stage]] and [[stageDeleteKeys]] share — the two must
     * never diverge on path handling.
     */
-  private def stagedSubPath(uri: String, rel: String, marker: String): String = {
+  private[catalog] def stagedSubPath(uri: String, rel: String,
+      marker: String): String = {
     val path = SnapshotTable.uriPath(uri)
     val i = path.indexOf(marker)
     require(i >= 0, s"staged file $path outside batch dir $rel")
@@ -2574,10 +2575,11 @@ final class SnapshotTable private (
     * migration path (Iceberg's `add_files`/`snapshot` procedures): at
     * 100 TB a format adoption that rewrites data is not a migration,
     * it is a second copy of the corpus. The files are read ONCE for
-    * per-file accounting (row counts, min/max/null bounds, opt-in
-    * Blooms — the same one-pass [[FileStats]] aggregate every staged
-    * write runs, so manifest pruning works on imported files
-    * immediately), then referenced by ABSOLUTE path in the manifest.
+    * per-file accounting (row counts, min/max/null bounds, sums, NDV
+    * sketches, opt-in Blooms — the same [[InlineFileStats]] collector
+    * every graft writer runs, so manifest pruning works on imported
+    * files immediately), then referenced by ABSOLUTE path in the
+    * manifest.
     *
     * Semantics:
     *  - OWNERSHIP TRANSFERS: once imported, the files are table data —
@@ -2607,41 +2609,46 @@ final class SnapshotTable private (
     // values. Refuse that shape up front with the remedy named.
     val srcDir = new Path(dir)
     val srcFs = srcDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val leaves = scala.collection.mutable.ArrayBuffer.empty[String]
+    val leaves = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
     val it = srcFs.listFiles(srcDir, true)
     while (it.hasNext) {
       val st = it.next()
       val name = st.getPath.getName
       if (name.endsWith(".parquet") && !name.startsWith("_") &&
           !name.startsWith("."))
-        leaves += st.getPath.toString
+        leaves += st
     }
     require(leaves.nonEmpty, s"importParquet: no parquet files under $dir")
-    val df = spark.read.parquet(leaves.toSeq: _*)
+    val srcSchema = spark.read.parquet(leaves.map(_.getPath.toString).toSeq: _*)
+      .schema
     val inferred = spark.read.parquet(dir).schema.fieldNames.toSet
-    val dirDerived = inferred -- df.schema.fieldNames.toSet
+    val dirDerived = inferred -- srcSchema.fieldNames.toSet
     require(dirDerived.isEmpty,
       s"importParquet: column(s) ${dirDerived.mkString(", ")} are " +
         "directory-derived (Hive-style partition columns) and do not " +
         "exist in the data files — a zero-copy import would silently " +
         "read them as NULL; append() the source instead (the rewrite " +
         "materializes the partition values into the files)")
-    val srcSchema = df.schema
     SnapshotTable.requireDistinctNames(srcSchema)
     val props0 = currentSnapshot().properties
     val bloom = BloomSpec.fromProperties(props0)
     val ndv = NdvSpec.fromProperties(props0)
-    val aggs = Seq(count(lit(1)).as("__rows"),
-      first(col("_metadata.file_size")).as("__bytes")) ++
-      FileStats.aggColumns(srcSchema, bloom, ndv)
-    val entries = df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.map { r =>
-        val p = new Path(new java.net.URI(r.getString(0))).toUri.getPath
-        DataFileEntry(p, None, r.getLong(1),
-          FileStats.fromRow(srcSchema, r, 3, bloom, ndv), seq = -1L,
-          bytes = r.getLong(2))
+    // one task per leaf: the file is read whole under the source schema
+    // and its stats come from the same collector every graft writer
+    // runs. A file with no rows gets no entry (it holds nothing to
+    // adopt), so an all-empty source is refused below.
+    val read = ParquetReadBridge.readFunction(spark, srcSchema, srcSchema, Nil)
+    val zone = spark.sessionState.conf.sessionLocalTimeZone
+    val files = leaves.toSeq.map(st =>
+      (st.getPath.toString, st.getPath.toUri.getPath, st.getLen))
+    val entries = spark.sparkContext.parallelize(files, files.size)
+      .map { case (file, path, bytes) =>
+        val stats = new InlineFileStats(srcSchema, bloom, ndv, zone)
+        read(ParquetReadBridge.wholeFile(file, bytes)).foreach(stats.update)
+        DataFileEntry(path, None, stats.rows, stats.finish(), seq = -1L,
+          bytes = bytes)
       }
+      .collect().toSeq.filter(_.rows > 0)
     require(entries.nonEmpty, s"importParquet: no parquet files under $dir")
     commitRetry { latest =>
       require(latest.spec.isEmpty,
@@ -2854,10 +2861,10 @@ final class SnapshotTable private (
   }
 
   /** [[appendStreamBatch]]'s twin for EXECUTOR-staged files (the DSv2
-    * streaming write, [[GraftStreamingWrite]]): adopts the exact file
-    * list the epoch's commit messages name — a retried or speculative
-    * task's orphans in the staging dir are never double-counted —
-    * computing manifest stats in one read-back pass. Exactly-once per
+    * streaming write, [[GraftStreamingWrite]]): adopts exactly the
+    * `entries` the epoch's commit messages carry, with the manifest
+    * stats their writers computed — a retried or speculative task's
+    * orphans in the staging dir are never double-counted. Exactly-once per
     * `key` (a PER-QUERY property, so two concurrent streaming queries
     * into one table cannot swallow each other's epochs — the V1 sink's
     * single shared key cannot make that promise); a replayed epoch is
@@ -2867,24 +2874,17 @@ final class SnapshotTable private (
     * (the staged files carry the planned shape), and the restarted
     * query replans against the new table state.
     */
-  private[catalog] def adoptStreamBatch(dataRel: String,
-      files: Seq[String], key: String, epochId: Long,
-      planned: Snapshot,
-      inline: Option[Seq[DataFileEntry]] = None): Option[Snapshot] = {
+  private[catalog] def adoptStreamBatch(key: String, epochId: Long,
+      planned: Snapshot, entries: Seq[DataFileEntry]): Option[Snapshot] = {
     def committed(s: Snapshot): Boolean =
       s.properties.get(key).exists(SnapshotTable.epochOf(_) >= epochId)
     def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
     if (committed(currentSnapshot())) return None
-    // stats arrive INLINE with the epoch's commit messages (computed
-    // under the PLANNED snapshot's schema and spec — the shapes the
-    // executor writers actually produced; commit-time state is
-    // validated against the SAME plan below, so an evolution landing
-    // anywhere between query start and this epoch conflicts instead of
-    // mislabeling files). The read-back remains only for callers that
-    // staged files outside the graft writers.
-    val staged = inline.getOrElse(
-      statsForStaged(dataRel, planned.schema, planned.spec,
-        planned.properties, onlyFiles = Some(files)))
+    // the entries' stats were computed under the PLANNED snapshot's
+    // schema and spec — the shapes the executor writers actually
+    // produced; commit-time state is validated against the SAME plan
+    // below, so an evolution landing anywhere between query start and
+    // this epoch conflicts instead of mislabeling files
     var attempts = 0
     while (attempts < SnapshotTable.MaxCommitAttempts) {
       val latest = currentSnapshot()
@@ -2907,7 +2907,7 @@ final class SnapshotTable private (
             s"$epochId was planned — restart the query to replan")
       val candidate = next(latest, s"stream-append[$epochId]",
         latest.schema,
-        latest.files ++ staged.map(_.copy(cols = latest.ids,
+        latest.files ++ entries.map(_.copy(cols = latest.ids,
           nested = nestedPairsOf(latest))))
         // value carries the committing VERSION too ("epoch@version"):
         // maintenance GC retires keys of queries whose last commit
@@ -4167,8 +4167,8 @@ final class SnapshotTable private (
       if (sortCols.isEmpty && lead.isEmpty) df
       else df.sortWithinPartitions(lead ++ sortCols.map(col): _*)
     // ONE pass (guide §1.2 step 1): [[StagedWrite]] writes the rows AND
-    // computes each file's manifest stats inline, so no statsForStaged
-    // read-back job re-reads the staged bytes. The partitioned plan
+    // computes each file's manifest stats inline, so no job re-reads
+    // the staged bytes. The partitioned plan
     // sorts within tasks by PartCol FIRST — exactly the sort
     // FileFormatWriter inserted for the dynamic partitionBy write this
     // replaces (stable, so the sort-by clustering inside each
@@ -4209,73 +4209,11 @@ final class SnapshotTable private (
     }
   }
 
-  /** Manifest entries (partition value, row count, column stats,
-    * optional Bloom sidecars) for the parquet files staged under
-    * `rel` — ONE read-back discipline shared by [[stage]] and the
-    * native delta write ([[commitDelta]]), so files land in the
-    * manifest with identical pruning power no matter which writer
-    * produced the bytes. `schema` is the files' DATA schema (PartCol
-    * lives in the directory layout, not the rows).
-    */
-  private[catalog] def statsForStaged(rel: String, schema: StructType,
-      spec: Option[PartitionSpec],
-      props: Map[String, String],
-      onlyFiles: Option[Seq[String]] = None): Seq[DataFileEntry] = {
-    val dir = new Path(root, rel)
-    // a writer that produced no rows stages no directory at all
-    if (!fs.exists(dir) || onlyFiles.exists(_.isEmpty)) return Nil
-    val batch = rel.substring(rel.lastIndexOf('/') + 1)
-    val marker = s"/$batch/"
-    // explicit read-back schema: an EMPTY batch writes no parquet files
-    // under partitionBy, and schema inference would throw instead of
-    // yielding the legal zero-file manifest entry list
-    val readBackSchema = spec match {
-      case Some(_) => schema.add(PartCol, StringType)
-      case None => schema
-    }
-    val statSchema = schema // PartCol excluded: it lives in the manifest
-    val bloom = BloomSpec.fromProperties(props)
-    val ndv = NdvSpec.fromProperties(props)
-    val aggs = Seq(count(lit(1)).as("__rows"),
-      // byte size from the hidden file metadata: the manifest carries
-      // it so planners never stat files (exact task sizing at any
-      // file count, zero driver-side filesystem calls per query)
-      first(col("_metadata.file_size")).as("__bytes")) ++
-      FileStats.aggColumns(statSchema, bloom, ndv)
-    // `onlyFiles` = the EXPLICIT list a delta write's commit messages
-    // name: a retried or speculative task may leave complete-looking
-    // orphan files in the same batch dir, and adopting them would
-    // duplicate rows (stage()'s own writes go through Spark's committer
-    // and never have losers in the dir). basePath keeps the partition
-    // directories parsing as on a whole-dir read.
-    val frame = onlyFiles match {
-      case None => spark.read.schema(readBackSchema).parquet(dir.toString)
-      case Some(files) => spark.read.option("basePath", dir.toString)
-        .schema(readBackSchema)
-        .parquet(files.map(f => new Path(root, f).toString): _*)
-    }
-    frame
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.map { r =>
-        // the Hive %XX layer is undone separately for the partition
-        // VALUE only; the manifest stores the on-disk file name
-        val sub = stagedSubPath(r.getString(0), rel, marker)
-        val partition = sub.split('/').collectFirst {
-          case seg if seg.startsWith(s"$PartCol=") =>
-            decodePartitionValue(seg.substring(PartCol.length + 1))
-        }.flatten
-        DataFileEntry(s"$rel/$sub", partition, r.getLong(1),
-          FileStats.fromRow(statSchema, r, 3, bloom, ndv), seq = -1L,
-          bytes = r.getLong(2))
-      }
-  }
-
   /** Commit one native DSv2 row-level DELTA (`SupportsDelta` —
     * [[GraftRowLevel]]): adopt the data files the delta writers staged
-    * under `dataRel` (stats computed by [[statsForStaged]], the same
-    * job every writer path uses) and attach the positional delete
-    * vectors they wrote. `baseVersion` is the version the operation
+    * (`entries`, with the manifest stats the writers computed as the
+    * rows streamed through) and attach the positional delete vectors
+    * they wrote. `baseVersion` is the version the operation
     * SCANNED — row positions are only valid against that file set.
     *
     * Concurrency (VERDICT r12 #3): under the default
@@ -4296,18 +4234,11 @@ final class SnapshotTable private (
     * slip past its NOT MATCHED clauses).
     */
   private[catalog] def commitDelta(baseVersion: Long, op: String,
-      dataRel: Option[String], dataFiles: Seq[String],
+      entries: Seq[DataFileEntry],
       dvs: Seq[(String, Long, Seq[String], String)],
-      updFiles: Set[String] = Set.empty,
-      inline: Option[Seq[DataFileEntry]] = None): Snapshot = {
+      updFiles: Set[String] = Set.empty): Snapshot = {
     val base = snapshotAt(baseVersion)
-    // entries computed INLINE by the delta writers (r20) adopt without
-    // a read-back; the statsForStaged path remains for callers staging
-    // files outside the graft writers (tests, external adoption)
-    val staged = inline.getOrElse(dataRel.toSeq.flatMap(rel =>
-      statsForStaged(rel, base.schema, base.spec, base.properties,
-        onlyFiles = Some(dataFiles))))
-    if (staged.isEmpty && dvs.isEmpty) return currentSnapshot() // no-op
+    if (entries.isEmpty && dvs.isEmpty) return currentSnapshot() // no-op
     val serial = base.properties
       .getOrElse("graft.write.isolation-level", "snapshot") match {
       case "snapshot" => false
@@ -4353,7 +4284,7 @@ final class SnapshotTable private (
         // conflicts whenever we stage row images. (No key-column
         // narrowing: delta images are FULL rows, so the delete's key
         // columns always intersect the write set.)
-        if (staged.nonEmpty &&
+        if (entries.nonEmpty &&
             latest.deleteFiles.exists(_.seq > baseVersion))
           conflict("committed equality deletes after this statement's " +
             "scan (its appended row images carry a newer sequence " +
@@ -4361,7 +4292,7 @@ final class SnapshotTable private (
             "resurrect)")
       }
       val c = next(latest, op, latest.schema, latest.files ++
-        staged.map(f => f.copy(cols = base.ids, nested = nestedPairsOf(base),
+        entries.map(f => f.copy(cols = base.ids, nested = nestedPairsOf(base),
           upd = updFiles.contains(f.path))))
       c.copy(dvFiles = c.dvFiles ++
         dvs.map { case (p, rows, dataPaths, dvOp) =>
@@ -4460,7 +4391,7 @@ object SnapshotTable {
     Some(boundLiteral(dt, best))
   }
 
-  /** Parse a manifest-rendered bound (see [[FileStats.aggColumns]] for
+  /** Parse a manifest-rendered bound (see [[InlineFileStats]] for
     * the per-type renderings) back to an exactly-equal JVM value; None
     * when the rendering is not exactly invertible (non-finite floats,
     * malformed fixed-width NTZ shapes).

@@ -18,10 +18,10 @@ import org.apache.spark.util.SerializableConfiguration
 /** ONE-PASS staged batch write: executors stream rows into parquet
   * files AND compute each file's manifest statistics inline
   * ([[InlineFileStats]]), returning complete [[DataFileEntry]]s to the
-  * driver — so a commit never launches the
-  * [[SnapshotTable.statsForStaged]] read-back job that re-reads every
-  * byte it just wrote (guide §1.2 step 1: remove a whole pass; at
-  * 100 TB the read-back is a second full scan of the committed data).
+  * driver — so a commit never launches a job that re-reads every byte
+  * it just wrote to learn its stats (guide §1.2 step 1: remove a whole
+  * pass; at 100 TB a read-back is a second full scan of the committed
+  * data).
   *
   * Layout parity with the `DataFrame.write.partitionBy` path it
   * replaces:
@@ -47,7 +47,14 @@ object StagedWrite {
   /** Executes `prepared` (data columns, plus the partition-value
     * string as the LAST column when `partitioned`) and stages its rows
     * under `root/rel`, returning one manifest entry per written file
-    * (`seq` = -1 staging sentinel, same as the read-back produced).
+    * (`seq` = -1 staging sentinel).
+    *
+    * Precondition when `partitioned`: each task's rows arrive sorted
+    * (or at least grouped) by the partition value. A task rolls to a
+    * new file whenever the value changes, so unsorted input would
+    * silently multiply the file count. The only caller,
+    * [[SnapshotTable]]'s `stage`, sorts within tasks by
+    * [[SnapshotTable.PartCol]] first.
     */
   def run(root: Path, rel: String, prepared: DataFrame,
       dataSchema: StructType, partitioned: Boolean, bloom: BloomSpec,

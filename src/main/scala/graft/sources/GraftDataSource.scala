@@ -200,16 +200,9 @@ final class GraftDataSource extends TableProvider
     require(!parameters.contains("changesto"),
       "a streaming changelog read is unbounded — changesTo only applies " +
         "to batch reads (spark.read)")
-    val maxPerTrigger = parameters.get("maxversionspertrigger").map { v =>
-      val n = try v.toLong catch {
-        case _: NumberFormatException =>
-          sys.error(s"maxVersionsPerTrigger must be a positive number, got '$v'")
-      }
-      require(n >= 1, s"maxVersionsPerTrigger must be >= 1, got $n")
-      n
-    }
     new graft.streaming.GraftChangesSource(sqlContext, pathOf(parameters),
-      from, metadataPath, maxPerTrigger)
+      from, metadataPath, GraftV2Table.positiveOption(
+        "maxVersionsPerTrigger", parameters.get("maxversionspertrigger")))
   }
 
   /** `writeStream.format("graft").start(root)` — exactly-once append

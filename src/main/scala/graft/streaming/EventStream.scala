@@ -256,68 +256,6 @@ object EventStream {
       }
       .start()
 
-  /** EXACTLY-ONCE continuous ingest into a [[graft.catalog.SnapshotTable]]:
-    * each micro-batch commits atomically with its batch id recorded IN
-    * the commit ([[graft.catalog.SnapshotTable.appendStreamBatch]]), so
-    * a post-crash replay of an already-committed batch is skipped — the
-    * transactional-sink upgrade over [[writeToTable]]'s at-least-once +
-    * downstream-dedup recipe. Schema evolution per micro-batch carries
-    * over from the snapshot append path.
-    */
-  def writeToSnapshotTable(stream: DataFrame, tableRoot: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.catalog.SnapshotTable.load(batch.sparkSession, tableRoot)
-          .appendStreamBatch(batch, batchId)
-        ()
-      }
-      .start()
-
-  /** CDC-style continuous UPSERT into a [[graft.catalog.SnapshotTable]]:
-    * each micro-batch replaces rows matching `keyCols` in ONE atomic
-    * snapshot commit ([[graft.catalog.SnapshotTable.upsert]] — touched-
-    * partition-bounded rewrite, schema evolution carried over). A
-    * post-crash micro-batch replay re-applies the same keyed upsert,
-    * which is idempotent — the standard recipe that makes foreachBatch's
-    * at-least-once effectively exactly-once for keyed data, here with
-    * the added guarantee that readers never observe a half-applied
-    * batch (the swap is one commit). A concurrent EXTERNAL writer
-    * surfaces as [[graft.catalog.SnapshotConflictException]], which
-    * TERMINATES the streaming query (foreachBatch semantics — there is
-    * no per-batch auto-retry); on restart from the checkpoint the batch
-    * replays against the new table state, and keyed idempotence makes
-    * that replay safe. Run a retrying supervisor if external writers
-    * are expected. Empty micro-batches are no-ops (upsert
-    * short-circuits before any rewrite).
-    *
-    * A table carrying `graft.merge.mode=merge-on-read` routes each
-    * micro-batch through the MoR MERGE instead (positional delete
-    * vectors hide the replaced row images, only the new images append
-    * — the same keyed replace-or-insert semantics, committed as
-    * `merge-pos`): per-batch write cost is O(changed rows) rather than
-    * O(touched partitions), the shape a continuous CDC feed needs at
-    * 100 TB where a micro-batch touching 1000 scattered keys must not
-    * rewrite 1000 files. Replay idempotence carries over — re-merging
-    * an already-applied batch re-hides the (identical) images and
-    * re-appends the same values, converging to the same state.
-    */
-  def upsertToSnapshotTable(stream: DataFrame, tableRoot: String,
-      keyCols: Seq[String],
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val tbl = graft.catalog.SnapshotTable.load(batch.sparkSession, tableRoot)
-        if (tbl.currentSnapshot().properties
-            .get("graft.merge.mode").contains("merge-on-read")) {
-          if (!batch.isEmpty) tbl.merge(batch, keyCols)
-        } else tbl.upsert(batch, keyCols)
-        ()
-      }
-      .start()
-
   /** CDC replication consumer — the downstream half of the changelog:
     * apply a graft change stream (`_change_type` ∈ insert/delete plus
     * the table columns, i.e. `readStream.format("graft")

@@ -165,39 +165,11 @@ final class GraftChangesSource(
     // an AvailableNow run never plans past its start-time fence
     val latest = availableNowFence
       .fold(t.currentVersion())(math.min(t.currentVersion(), _))
-    if (latest <= lastPlanned) return None
-    // live versions in the backlog window — expired ones are gone from
-    // the log and show up as GAPS in this ascending sequence
-    val live = t.log.versions().filter(v => v > lastPlanned && v <= latest)
-    if (live.isEmpty) return None
-    val capped = maxVersionsPerTrigger match {
-      case Some(m) => live.take(math.min(m, Int.MaxValue.toLong).toInt)
-      case None => live
+    GraftChangesSource.nextBatchEnd(t, lastPlanned, latest,
+        maxVersionsPerTrigger).map { end =>
+      lastPlanned = end
+      LongOffset(end)
     }
-    def isBlind(v: Long): Boolean =
-      t.log.operationOf(v).exists(graft.catalog.SnapshotTable.isBlindOp)
-    // the batch always admits its first candidate; it EXTENDS only over
-    // a contiguous run of SAME-CLASS commits starting right after
-    // lastPlanned. Blind runs coalesce (metadata path, O(new files));
-    // rewriting runs also coalesce — the diff path reads only the run's
-    // ENDPOINTS, so one diff over k rewrites is cheaper than k diffs,
-    // and the netting stays maximal. What never happens is a MIXED
-    // batch: a rewriting commit must not drag blind neighbors onto the
-    // diff path, and vice versa. Expired versions are gaps in `capped`
-    // and break contiguity, isolating their sub-range onto the
-    // endpoint diff.
-    var end = capped.head
-    var prev = capped.head
-    val headClass = isBlind(capped.head)
-    var extending = capped.head == lastPlanned + 1
-    val it = capped.iterator.drop(1)
-    while (extending && it.hasNext) {
-      val v = it.next()
-      if (v == prev + 1 && isBlind(v) == headClass) { end = v; prev = v }
-      else extending = false
-    }
-    lastPlanned = end
-    Some(LongOffset(end))
   }
 
   private def version(o: Offset): Long = o match {
@@ -212,21 +184,8 @@ final class GraftChangesSource(
     // restart recovery replays checkpointed ranges through here before
     // any getOffset call — advance the admission anchor past them
     if (toV > lastPlanned) lastPlanned = toV
-    val changes = table.changes(fromV, toV)
-    // conform to the pinned stream schema (see scaladoc): project the
-    // declared columns, null-filling any the evolved table lost. Cast
-    // only on a REAL type change — Spark refuses a Cast between types
-    // that differ solely in nested nullability (array<float> where
-    // containsNull flipped: "cannot cast ARRAY<FLOAT> to ARRAY<FLOAT>"),
-    // and a nullability-only difference needs no value conversion
-    val conformed = changes.select(schema.fields.toIndexedSeq.map { f =>
-      if (changes.columns.contains(f.name)) {
-        val c = col(SnapshotTable.quoted(f.name))
-        if (changes.schema(f.name).dataType.sql == f.dataType.sql) c.as(f.name)
-        else c.cast(f.dataType).as(f.name)
-      } else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-    StreamingBridge.asStreaming(sqlContext, conformed)
+    StreamingBridge.asStreaming(sqlContext,
+      GraftChangesSource.conform(table.changes(fromV, toV), schema))
   }
 
   override def stop(): Unit = ()
@@ -234,6 +193,9 @@ final class GraftChangesSource(
   override def toString: String = s"GraftChangesSource[$root, from=$base]"
 }
 
+/** The change-feed planning both change streams share — this V1
+  * source and the catalog's [[GraftChangesTableStream]].
+  */
 object GraftChangesSource {
   /** `_change_type` + the table columns — identical to the batch
     * changelog relation's shape.
@@ -241,4 +203,59 @@ object GraftChangesSource {
   def changeSchema(tableSchema: StructType): StructType =
     StructType(StructField("_change_type", StringType,
       nullable = false) +: tableSchema.fields)
+
+  /** End version of the next change batch after `after`, admitting
+    * live versions up to `bound` and at most `maxVersions` of them;
+    * None when no live version lies in (after, bound].
+    *
+    * The batch always admits its first candidate; it EXTENDS only over
+    * a contiguous run of SAME-CLASS commits starting right after
+    * `after`. Blind runs coalesce (metadata path, O(new files));
+    * rewriting runs also coalesce — the diff path reads only the run's
+    * ENDPOINTS, so one diff over k rewrites is cheaper than k diffs,
+    * and the netting stays maximal. What never happens is a MIXED
+    * batch: a rewriting commit must not drag blind neighbors onto the
+    * diff path, and vice versa. Expired versions are gone from the log,
+    * so they show up as gaps that break contiguity, isolating their
+    * sub-range onto the endpoint diff.
+    */
+  def nextBatchEnd(table: SnapshotTable, after: Long, bound: Long,
+      maxVersions: Option[Long]): Option[Long] = {
+    if (bound <= after) return None
+    val live = table.log.versions().filter(v => v > after && v <= bound)
+    if (live.isEmpty) return None
+    val capped = maxVersions match {
+      case Some(m) => live.take(math.min(m, Int.MaxValue.toLong).toInt)
+      case None => live
+    }
+    def isBlind(v: Long): Boolean =
+      table.log.operationOf(v).exists(SnapshotTable.isBlindOp)
+    var end = capped.head
+    var prev = capped.head
+    val headClass = isBlind(capped.head)
+    var extending = capped.head == after + 1
+    val it = capped.iterator.drop(1)
+    while (extending && it.hasNext) {
+      val v = it.next()
+      if (v == prev + 1 && isBlind(v) == headClass) { end = v; prev = v }
+      else extending = false
+    }
+    Some(end)
+  }
+
+  /** `changes` conformed to a stream's pinned `schema`: project the
+    * declared columns, null-filling any the evolved table lost. Cast
+    * only on a REAL type change — Spark refuses a Cast between types
+    * that differ solely in nested nullability (array<float> where
+    * containsNull flipped: "cannot cast ARRAY<FLOAT> to ARRAY<FLOAT>"),
+    * and a nullability-only difference needs no value conversion.
+    */
+  def conform(changes: DataFrame, schema: StructType): DataFrame =
+    changes.select(schema.fields.toIndexedSeq.map { f =>
+      if (changes.columns.contains(f.name)) {
+        val c = col(SnapshotTable.quoted(f.name))
+        if (changes.schema(f.name).dataType.sql == f.dataType.sql) c.as(f.name)
+        else c.cast(f.dataType).as(f.name)
+      } else lit(null).cast(f.dataType).as(f.name)
+    }: _*)
 }

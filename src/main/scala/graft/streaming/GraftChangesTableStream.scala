@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.ParquetReadBridge
 import org.apache.spark.sql.types.StructType
 
@@ -80,35 +79,14 @@ final class GraftChangesTableStream(
   override def latestOffset(): Offset = GraftStreamOffset(head)
 
   /** Same-class contiguous-run coalescing under the version cap — the
-    * V1 changes source's admission rule ([[GraftChangesSource
-    * .getOffset]]): one mid-backlog compaction must not drag blind
-    * neighbors onto the endpoint-diff path, and vice versa. Expired
-    * versions appear as gaps and isolate their sub-range onto the
-    * diff.
+    * admission rule both change streams share
+    * ([[GraftChangesSource.nextBatchEnd]]).
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[GraftStreamOffset].v
     val bound = fence.map(math.min(_, head)).getOrElse(head)
-    if (bound <= s) return GraftStreamOffset(s)
-    val live = table.log.versions().filter(v => v > s && v <= bound)
-    if (live.isEmpty) return GraftStreamOffset(s)
-    val capped = maxVersionsPerTrigger match {
-      case Some(m) => live.take(math.min(m, Int.MaxValue.toLong).toInt)
-      case None => live
-    }
-    def isBlind(v: Long): Boolean =
-      table.log.operationOf(v).exists(SnapshotTable.isBlindOp)
-    var end = capped.head
-    var prev = capped.head
-    val headClass = isBlind(capped.head)
-    var extending = capped.head == s + 1
-    val it = capped.iterator.drop(1)
-    while (extending && it.hasNext) {
-      val v = it.next()
-      if (v == prev + 1 && isBlind(v) == headClass) { end = v; prev = v }
-      else extending = false
-    }
-    GraftStreamOffset(end)
+    GraftStreamOffset(GraftChangesSource.nextBatchEnd(table, s, bound,
+      maxVersionsPerTrigger).getOrElse(s))
   }
 
   override def deserializeOffset(json: String): Offset =
@@ -292,18 +270,8 @@ final class GraftChangesTableStream(
       // labels replay-stable exactly like the two-label diff's rows
       val changes =
         if (updateImages) table.changesCdf(s, e) else table.changes(s, e)
-      // conform to the pinned stream schema (V1 source contract): cast
-      // only on a REAL type change — nullability-only differences need
-      // no conversion and Spark refuses such casts
-      val conformed = changes.select(pinned.fields.toIndexedSeq.map { f =>
-        if (changes.columns.contains(f.name)) {
-          val c = col(SnapshotTable.quoted(f.name))
-          if (changes.schema(f.name).dataType.sql == f.dataType.sql)
-            c.as(f.name)
-          else c.cast(f.dataType).as(f.name)
-        } else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-      conformed.write.mode("overwrite").parquet(dir.toString)
+      GraftChangesSource.conform(changes, pinned)
+        .write.mode("overwrite").parquet(dir.toString)
     }
     val sized = fs.listStatus(dir).toSeq
       .filter(_.getPath.getName.endsWith(".parquet"))

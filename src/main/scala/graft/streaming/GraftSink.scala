@@ -29,8 +29,13 @@ import graft.catalog.SnapshotTable
   * mode routes per the table's `graft.merge.mode`: `merge-on-read`
   * commits each batch as a MoR MERGE (vectors + appended images,
   * O(changed rows) — the 100 TB CDC shape), default as the
-  * partition-bounded keyed upsert; replay safety comes from keyed
-  * idempotence, same contract as [[EventStream.upsertToSnapshotTable]].
+  * partition-bounded keyed upsert. A post-crash replay of a keyed
+  * batch re-applies the same upsert, which is idempotent, so keyed
+  * mode is effectively exactly-once for keyed data; readers never see
+  * a half-applied batch (each is one commit). A concurrent external
+  * writer surfaces as a [[graft.catalog.SnapshotConflictException]]
+  * that stops the query; on restart the batch replays against the new
+  * table state. Empty keyed batches are no-ops.
   * Schema evolution per micro-batch carries over from the underlying
   * write verbs on both routes.
   */

@@ -79,7 +79,7 @@ class DeltaConflictSpec extends AnyFunSuite {
     // concurrent blind append lands AFTER the delta's scan
     t.append(Seq((20L, "z")).toDF("id", "v").coalesce(1))
     // delete row ordinal 0 of file A (id=1), scanned at `base`
-    val snap = t.commitDelta(base, "delete-pos", None, Nil,
+    val snap = t.commitDelta(base, "delete-pos", Nil,
       Seq(stageDv(t, fileA, Seq(0))))
     assert(snap.version > base + 1, "delta rebased onto the appended head")
     val ids = t.read().select("id").as[Long].collect().toSet
@@ -92,10 +92,10 @@ class DeltaConflictSpec extends AnyFunSuite {
     val Seq(fileA, fileB) = t.currentSnapshot().files.map(_.path).toSeq
     val base = t.currentVersion()
     // first statement: vector over file B, commits at head
-    t.commitDelta(t.currentVersion(), "delete-pos", None, Nil,
+    t.commitDelta(t.currentVersion(), "delete-pos", Nil,
       Seq(stageDv(t, fileB, Seq(0)))) // id=10
     // second statement scanned BEFORE the first committed, touches A only
-    t.commitDelta(base, "delete-pos", None, Nil,
+    t.commitDelta(base, "delete-pos", Nil,
       Seq(stageDv(t, fileA, Seq(2)))) // id=3
     assert(t.read().select("id").as[Long].collect().toSet ==
       Set(1L, 2L, 11L))
@@ -105,10 +105,10 @@ class DeltaConflictSpec extends AnyFunSuite {
     val t = mkTable()
     val fileA = t.currentSnapshot().files.head.path
     val base = t.currentVersion()
-    t.commitDelta(t.currentVersion(), "delete-pos", None, Nil,
+    t.commitDelta(t.currentVersion(), "delete-pos", Nil,
       Seq(stageDv(t, fileA, Seq(0))))
     val e = intercept[SnapshotConflictException] {
-      t.commitDelta(base, "update-pos", None, Nil,
+      t.commitDelta(base, "update-pos", Nil,
         Seq(stageDv(t, fileA, Seq(1))))
     }
     assert(e.getMessage.contains("delete vectors"))
@@ -121,7 +121,7 @@ class DeltaConflictSpec extends AnyFunSuite {
     // compaction rewrites both single-file batches into one file
     assert(t.compact(minFiles = 2).nonEmpty)
     val e = intercept[SnapshotConflictException] {
-      t.commitDelta(base, "delete-pos", None, Nil,
+      t.commitDelta(base, "delete-pos", Nil,
         Seq(stageDv(t, fileA, Seq(0))))
     }
     assert(e.getMessage.contains("rewrote/removed"))
@@ -134,7 +134,7 @@ class DeltaConflictSpec extends AnyFunSuite {
     val base = t.currentVersion()
     t.addColumns(Seq(StructField("w", IntegerType)))
     val e = intercept[SnapshotConflictException] {
-      t.commitDelta(base, "delete-pos", None, Nil,
+      t.commitDelta(base, "delete-pos", Nil,
         Seq(stageDv(t, fileA, Seq(0))))
     }
     assert(e.getMessage.contains("schema"))
@@ -142,7 +142,8 @@ class DeltaConflictSpec extends AnyFunSuite {
 
   /** Stage one data file holding `rows` under a fresh batch dir —
     * exactly what the delta writers' update-image path produces —
-    * returning (rel dir, rel file) for [[SnapshotTable.commitDelta]].
+    * returning (rel dir, rel file); [[StatsReadBack]] builds its
+    * manifest entry for [[SnapshotTable.commitDelta]].
     */
   private def stageData(t: SnapshotTable,
       rows: Seq[(Long, String)]): (String, String) = {
@@ -169,8 +170,12 @@ class DeltaConflictSpec extends AnyFunSuite {
     // UPDATE-shaped delta scanned at `base`: mark ordinal 1 (id=2)
     // deleted in file A and stage its updated image
     val (rel, file) = stageData(t, Seq((2L, "B-updated")))
+    val scanned = t.snapshotAt(base)
+    val images = StatsReadBack.statsForStaged(t, rel, scanned.schema,
+      scanned.spec, scanned.properties, onlyFiles = Some(Seq(file)))
+    assert(images.map(_.path) == Seq(file))
     val e = intercept[SnapshotConflictException] {
-      t.commitDelta(base, "update-pos", Some(rel), Seq(file),
+      t.commitDelta(base, "update-pos", images,
         Seq(stageDv(t, fileA, Seq(1))))
     }
     assert(e.getMessage.contains("equality deletes"))
@@ -185,7 +190,7 @@ class DeltaConflictSpec extends AnyFunSuite {
     val fileA = t.currentSnapshot().files.head.path
     val base = t.currentVersion()
     t.deleteByKeys(Seq(10L).toDF("id"), Seq("id"))
-    t.commitDelta(base, "delete-pos", None, Nil,
+    t.commitDelta(base, "delete-pos", Nil,
       Seq(stageDv(t, fileA, Seq(0)))) // id=1
     assert(t.read().select("id").as[Long].collect().toSet ==
       Set(2L, 3L, 11L))
@@ -198,7 +203,7 @@ class DeltaConflictSpec extends AnyFunSuite {
     val base = t.currentVersion()
     t.append(Seq((20L, "z")).toDF("id", "v").coalesce(1))
     val e = intercept[SnapshotConflictException] {
-      t.commitDelta(base, "delete-pos", None, Nil,
+      t.commitDelta(base, "delete-pos", Nil,
         Seq(stageDv(t, fileA, Seq(0))))
     }
     assert(e.getMessage.contains("serializable"))

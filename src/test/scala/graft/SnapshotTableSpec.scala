@@ -542,8 +542,13 @@ class SnapshotTableSpec extends AnyFunSuite {
     }
   }
 
-  test("writeToSnapshotTable streams micro-batches exactly-once into the table") {
-    import graft.streaming.EventStream
+  /** Keyed CDC upsert of `stream` into the table at `root` on `id`. */
+  private def upsertStream(stream: org.apache.spark.sql.DataFrame,
+      root: String, ckpt: String): org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream.format("graft").option("keys", "id")
+      .outputMode("update").option("checkpointLocation", ckpt).start(root)
+
+  test("graft sink streams micro-batches exactly-once into the table") {
     val srcDir = Files.createTempDirectory("snap-stream-src").toString
     val ckpt = Files.createTempDirectory("snap-stream-ckpt").toString
     val root = freshRoot()
@@ -552,7 +557,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     rows((2, "2024-02-06", 2.0)).coalesce(1).write.parquet(s"$srcDir/f2")
     val stream = spark.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*")
-    val q = EventStream.writeToSnapshotTable(stream, root, ckpt)
+    val q = stream.writeStream.format("graft")
+      .option("checkpointLocation", ckpt).start(root)
     try q.processAllAvailable() finally q.stop()
     val t = SnapshotTable.load(spark, root)
     assert(t.read().select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
@@ -560,8 +566,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.currentSnapshot().properties.contains(SnapshotTable.StreamBatchProp))
   }
 
-  test("upsertToSnapshotTable streams keyed CDC micro-batches atomically") {
-    import graft.streaming.EventStream
+  test("keyed graft sink streams CDC micro-batches atomically") {
     val srcDir = Files.createTempDirectory("snap-ups-src").toString
     val ckpt = Files.createTempDirectory("snap-ups-ckpt").toString
     val root = freshRoot()
@@ -573,7 +578,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$srcDir/f2")
     val stream = spark.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*")
-    val q = EventStream.upsertToSnapshotTable(stream, root, Seq("id"), ckpt)
+    val q = upsertStream(stream, root, ckpt)
     try q.processAllAvailable() finally q.stop()
     val t = SnapshotTable.load(spark, root)
     val got = t.read().select("id", "v").as[(Long, Double)].collect().toMap
@@ -584,8 +589,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.history().count(_.operation.startsWith("upsert")) == 2)
   }
 
-  test("upsertToSnapshotTable on a merge-on-read table commits vectors per micro-batch; replay converges") {
-    import graft.streaming.EventStream
+  test("keyed graft sink on merge-on-read commits vectors; replay converges") {
     val srcDir = Files.createTempDirectory("snap-morups-src").toString
     val ckpt = Files.createTempDirectory("snap-morups-ckpt").toString
     val root = freshRoot()
@@ -599,7 +603,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$srcDir/f2")
     val stream = spark.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*")
-    val q = EventStream.upsertToSnapshotTable(stream, root, Seq("id"), ckpt)
+    val q = upsertStream(stream, root, ckpt)
     try q.processAllAvailable() finally q.stop()
     val t = SnapshotTable.load(spark, root)
     val expect = Map(1L -> 10.0, 2L -> 20.0, 3L -> 3.0)
@@ -618,10 +622,10 @@ class SnapshotTableSpec extends AnyFunSuite {
     // post-crash replay (fresh checkpoint, same source) re-applies the
     // same keyed merges — state converges, nothing duplicates
     val ckpt2 = Files.createTempDirectory("snap-morups-ckpt2").toString
-    val q2 = EventStream.upsertToSnapshotTable(
+    val q2 = upsertStream(
       spark.readStream.schema(eventsSchema)
         .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*"),
-      root, Seq("id"), ckpt2)
+      root, ckpt2)
     try q2.processAllAvailable() finally q2.stop()
     val t2 = SnapshotTable.load(spark, root)
     assert(t2.read().select("id", "v").as[(Long, Double)].collect().toMap

@@ -7,13 +7,13 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the [[InlineFileStats]]/[[StagedWrite]] ↔ [[SnapshotTable.statsForStaged]]
-  * equivalence: a staged batch's manifest entries (bounds, null counts,
-  * exact sums, NDV sketch bytes, Bloom filter bytes, row counts, file
-  * bytes, partition values) computed INLINE during the write must be
-  * BYTE-IDENTICAL to what the read-back aggregation over the same
-  * staged files reports — the one-pass commit path (r20) must not
-  * change a single manifest byte vs the two-pass path it replaces.
+/** Pins the [[InlineFileStats]] ↔ [[StatsReadBack]] equivalence: the
+  * manifest entries (bounds, null counts, exact sums, NDV sketch bytes,
+  * Bloom filter bytes, row counts, file bytes, partition values) that
+  * the writers ([[StagedWrite]], the delta writer) and
+  * [[SnapshotTable.importParquet]] compute INLINE must be
+  * BYTE-IDENTICAL to what the reference read-back aggregation over the
+  * same files reports.
   */
 class InlineStatsSpec extends AnyFunSuite {
 
@@ -80,14 +80,14 @@ class InlineStatsSpec extends AnyFunSuite {
   }
 
   /** Compare the inline-computed manifest entries against a fresh
-    * statsForStaged read-back over the exact same staged files.
+    * reference read-back over the exact same staged files.
     */
   private def assertParity(t: SnapshotTable, snap: Snapshot): Unit = {
     val fresh = snap.files.filter(_.path.nonEmpty)
     assert(fresh.nonEmpty, "append staged no files")
     val rel = fresh.head.path.split('/').init.takeWhile(!_.contains("=")).mkString("/")
-    val readBack = t.statsForStaged(rel, snap.schema, snap.spec,
-      snap.properties).map(e => e.path -> e).toMap
+    val readBack = StatsReadBack.statsForStaged(t, rel, snap.schema,
+      snap.spec, snap.properties).map(e => e.path -> e).toMap
     assert(readBack.keySet == fresh.map(_.path).toSet,
       s"file sets differ: ${readBack.keySet} vs ${fresh.map(_.path)}")
     fresh.foreach { e =>
@@ -156,8 +156,18 @@ class InlineStatsSpec extends AnyFunSuite {
     assert(snap.files.isEmpty)
   }
 
+  /** The committed manifest may have offloaded big inline blooms to
+    * ref: sidecars (a SnapshotLog post-commit transform) — resolve
+    * tokens back to payloads before comparing.
+    */
+  private def resolved(t: SnapshotTable, st: ColStats, path: String): ColStats =
+    st.copy(bloom = st.bloom.map(b =>
+      if (b.startsWith(SnapshotLog.RefPrefix))
+        t.log.resolveBloom(b, path).getOrElse(b)
+      else b))
+
   /** Compare the delta writer's inline entries for the files `dml`
-    * adds against a statsForStaged read-back over exactly those files.
+    * adds against a reference read-back over exactly those files.
     */
   private def assertDeltaParity(t: SnapshotTable, dml: String)
       : Seq[DataFileEntry] = {
@@ -170,23 +180,15 @@ class InlineStatsSpec extends AnyFunSuite {
     assert(fresh.nonEmpty, "UPDATE staged no new files")
     val rel = fresh.head.path.split('/').init
       .takeWhile(!_.contains("=")).mkString("/")
-    val readBack = t.statsForStaged(rel, snap.schema, snap.spec,
-      snap.properties, onlyFiles = Some(fresh.map(_.path)))
+    val readBack = StatsReadBack.statsForStaged(t, rel, snap.schema,
+      snap.spec, snap.properties, onlyFiles = Some(fresh.map(_.path)))
       .map(e => e.path -> e).toMap
     fresh.foreach { e =>
       val r = readBack(e.path)
       assert(e.partition == r.partition && e.rows == r.rows &&
         e.bytes == r.bytes, s"entry mismatch for ${e.path}")
-      // the committed manifest may have offloaded big inline blooms to
-      // ref: sidecars (a SnapshotLog post-commit transform) — resolve
-      // tokens back to payloads before comparing
-      def resolved(st: ColStats, path: String): ColStats =
-        st.copy(bloom = st.bloom.map(b =>
-          if (b.startsWith(SnapshotLog.RefPrefix))
-            t.log.resolveBloom(b, path).getOrElse(b)
-          else b))
       e.stats.keySet.foreach { c =>
-        assert(resolved(e.stats(c), e.path) == r.stats(c),
+        assert(resolved(t, e.stats(c), e.path) == r.stats(c),
           s"ColStats mismatch for $c in ${e.path}:\n" +
             s"  inline:    ${e.stats(c)}\n  read-back: ${r.stats(c)}")
       }
@@ -223,6 +225,40 @@ class InlineStatsSpec extends AnyFunSuite {
     val fresh = assertDeltaParity(t,
       "UPDATE graft.ist.hdp SET v = -v WHERE id % 10 IN (2, 3)")
     assert(fresh.map(_.partition).toSet == Set(None, Some("b")))
+  }
+
+  test("importParquet: per-file stats are byte-identical to the read-back") {
+    val src = Files.createTempDirectory("inline-stats-src").resolve("src")
+      .toString
+    gnarlyDf().repartition(3).write.parquet(src)
+    val leaves = new java.io.File(src).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).toSeq
+    assert(leaves.size == 3, s"multi-file source expected: $leaves")
+    val t = SnapshotTable.create(spark, freshRoot(), schema, None,
+      properties = Map("graft.bloom.columns" -> "l,s",
+        "graft.stats.ndv" -> "on"))
+    val snap = t.importParquet(src)
+    val fresh = snap.files
+    val readBack = StatsReadBack.statsForImport(t, leaves,
+      spark.read.parquet(leaves: _*).schema, snap.properties)
+      .map(e => e.path -> e).toMap
+    assert(readBack.keySet == fresh.map(_.path).toSet,
+      s"file sets differ: ${readBack.keySet} vs ${fresh.map(_.path)}")
+    fresh.foreach { e =>
+      val r = readBack(e.path)
+      assert(e.partition.isEmpty && r.partition.isEmpty)
+      assert(e.rows == r.rows, s"rows of ${e.path}")
+      assert(e.bytes == r.bytes, s"bytes of ${e.path}")
+      assert(e.stats.keySet == r.stats.keySet, s"stat columns of ${e.path}")
+      e.stats.keySet.foreach { c =>
+        assert(resolved(t, e.stats(c), e.path) == r.stats(c),
+          s"ColStats mismatch for $c in ${e.path}:\n" +
+            s"  inline:    ${e.stats(c)}\n  read-back: ${r.stats(c)}")
+      }
+    }
+    assert(fresh.map(_.rows).sum == 7L)
+    assert(fresh.forall(_.stats("l").bloom.nonEmpty) &&
+      fresh.forall(_.stats("i").ndv.nonEmpty), "Bloom and NDV recorded")
   }
 
   test("sort-by clustering survives the one-pass writer") {
