@@ -12,64 +12,43 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** NATIVE DSv2 batch scan for bucket-partitioned snapshot tables — the
-  * storage-partitioned-join (SPJ) path. The default read bridges
-  * through `V1Scan`, which can never report an `outputPartitioning`,
-  * so joining two co-bucketed 100 TB tables shuffles BOTH sides even
-  * though their layouts already agree. This scan reports
-  * `KeyGroupedPartitioning(bucket(n, source))` with one input
-  * partition per live bucket, each carrying its bucket value as the
-  * partition key — under `spark.sql.sources.v2.bucketing.enabled`,
-  * Spark's `EnsureRequirements` then plans a bucket-aligned join with
-  * NO exchange on either side (Iceberg's SPJ architecture; the
-  * `bucket` function the comparison resolves against is
-  * [[GraftFunctions]], committed round 13 exactly for this seam).
+/** The DSv2 scan of a graft snapshot table — every catalog and
+  * `format("graft")` read, batch or micro-batch, plans through it. It
+  * reads by name with Spark's own vectorized parquet reader, and
+  * resolves every read-time job itself:
   *
-  * Eligibility is decided per scan by [[GraftBatchScan.eligible]] and
-  * falls back to the V1 bridge whenever ANY read-time resolution work
-  * exists, keeping this path a pure by-name parquet read:
-  *
-  *  - bucket partition spec, and every file written under it
-  *    (`seq >= specSince` — legacy-spec files' partition values mean
-  *    something else);
-  *  - merge-on-read applies NATIVELY: positional delete vectors mask
-  *    row ordinals through the parquet row-index column, equality
-  *    deletes mask key tuples through task-side hash sets (both
-  *    selection-mapped on the columnar path) — only a delete file
-  *    whose key columns no longer resolve to hashable scalar columns
-  *    falls back;
-  *  - TOP-LEVEL schema drift (renamed/dropped/added/widened columns
-  *    pending in old files) reads natively through per-SHAPE physical
-  *    schemas resolved by field id — write-time names, current types
-  *    (the vectorized reader upcasts int→long / float→double), absent
-  *    columns null-filled by reserved name or substituted with their
-  *    initial-default constant; only NESTED remapping still falls
-  *    back;
+  *  - manifest pruning (min/max, Bloom, partition values) with the
+  *    same skip-only translation as every other read path, plus
+  *    LIMIT/TopN file prefixes and runtime (DPP) re-pruning;
+  *  - merge-on-read: positional delete vectors mask row ordinals
+  *    through the parquet row-index column, equality deletes mask key
+  *    tuples — scalar, struct or array keys — through task-side hash
+  *    sets (both selection-mapped on the columnar path);
+  *  - schema drift (renamed/dropped/added/widened columns, top-level
+  *    and nested) through per-SHAPE physical schemas resolved by field
+  *    id — write-time names, current types (the vectorized reader
+  *    upcasts int→long / float→double), absent columns null-filled by
+  *    reserved name or substituted with their initial-default constant;
   *  - row-identity METADATA columns (`_graft_file`/`_graft_pos`, a
-  *    row-level operation's scan) are SYNTHESIZED natively: the
-  *    split's path as a constant, the parquet row-index column as the
-  *    position — DML target reads stay columnar;
-  *  - the scan's analyzed schema equals the snapshot's (a
-  *    concurrently-evolved table falls back to the V1 path, whose
-  *    drift guard raises the proper error).
+  *    row-level operation's scan), synthesized from the split's path
+  *    and the parquet row-index column;
+  *  - manifest statistics for CBO and an exact metadata row count
+  *    ([[exactRowCount]]);
+  *  - the storage-partitioned join (SPJ): a bucket, identity or month
+  *    spec whose files were all written under it reports
+  *    `KeyGroupedPartitioning` with one input partition per live key,
+  *    so under `spark.sql.sources.v2.bucketing.enabled` Spark's
+  *    `EnsureRequirements` joins co-partitioned tables with NO
+  *    exchange (Iceberg's SPJ architecture; the transform functions
+  *    the comparison resolves against are [[GraftFunctions]]).
   *
-  * Reading reuses Spark's own vectorized parquet reader via
-  * [[ParquetReadBridge]] (same decode, rebase and widening rules as
-  * every DataFrame read; pushed filters become row-group skips).
-  * Filters are skip-only here exactly as on the V1 path — the scan
-  * declares every filter residual, Catalyst re-applies them above.
+  * Filters are skip-only: the scan declares every filter residual and
+  * Catalyst re-applies them above. An empty snapshot plans zero splits
+  * and no partitioning claim. When the scan is built, a table read
+  * whose snapshot's columns are no longer the analyzed ones is
+  * refused, and a row-level operation's scan needs its projected
+  * columns at their analyzed types ([[GraftV2Table]]).
   */
-/** Scans able to answer an EXACT live row count from metadata alone —
-  * None whenever metadata cannot PROVE it (pending equality deletes,
-  * pushed filters, limit/TopN, unprovable delete-vector coverage).
-  * The strict twin of `SupportsReportStatistics`, whose numRows may
-  * round up; exact consumers ([[graft.operators.Ivf.metadataRowCount]])
-  * match this trait instead.
-  */
-private[graft] trait GraftExactRows {
-  def exactRowCount: Option[Long]
-}
-
 final class GraftBatchScan(
     table: SnapshotTable,
     snap: Snapshot,
@@ -78,23 +57,21 @@ final class GraftBatchScan(
     spjKey: Option[GraftSpjKey],
     limit: Option[Int] = None,
     topn: Option[GraftTopN] = None,
-    stream: Option[() =>
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream] =
-      None) extends Scan with Batch
+    stream: () =>
+      org.apache.spark.sql.connector.read.streaming.MicroBatchStream)
+    extends Scan with Batch
     with SupportsReportStatistics with SupportsReportPartitioning
-    with SupportsRuntimeFiltering with GraftExactRows {
+    with SupportsRuntimeFiltering {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  /** `spark.readStream.table(…)` over a batch-eligible table: the
-    * appends-only micro-batch tail ([[graft.streaming
-    * .GraftTableStream]]), wired by the scan builder.
+  /** `spark.readStream.table(…)`: the appends-only micro-batch tail
+    * ([[graft.streaming.GraftTableStream]]), wired by the scan builder.
     */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    stream.map(_()).getOrElse(throw new UnsupportedOperationException(
-      s"${description()}: micro-batch read not configured for this scan"))
+    stream()
 
   override def description(): String =
     s"GraftBatchScan(${table.root}" +
@@ -135,9 +112,7 @@ final class GraftBatchScan(
   // pending deletes), tasks load the KB-sized key files into hash
   // sets, and rows whose key tuple is deleted — under Iceberg
   // sequence-number scoping, enforced per FILE at planning — are
-  // masked out exactly like dv ordinals. With this, a table under
-  // `graft.delete.mode=equality` (or deleteByKeys / CDC retractions)
-  // keeps the native columnar scan instead of the V1 anti-join bridge.
+  // masked out exactly like dv ordinals.
   private val currentById: Map[Int, String] =
     snap.ids.map { case (n, id) => id -> n }.toMap
   private val eqKeyCols: Seq[String] = snap.deleteFiles
@@ -148,9 +123,8 @@ final class GraftBatchScan(
   // not parquet columns — the reader SYNTHESIZES them (the split's
   // qualified path as a per-split constant; the parquet row-index
   // column, file-absolute so correct under byte-range splits — the
-  // same generator behind `_metadata.row_index` and the dv masks).
-  // With this, DELETE/UPDATE/MERGE target scans keep the native
-  // columnar path instead of paying the V1 row bridge per row.
+  // same generator behind `_metadata.row_index` and the dv masks), so
+  // DELETE/UPDATE/MERGE target scans stay columnar.
   private val dataRequired: StructType = StructType(
     required.fields.filterNot(f => GraftV2Table.MetaCols.contains(f.name)))
   private val posRequested: Boolean =
@@ -168,9 +142,8 @@ final class GraftBatchScan(
 
   // ---- schema-DRIFT file shapes, read natively: files written before
   // a column add/rename/drop carry different (write-name, field-id)
-  // pairs than the snapshot, and previously forced the whole table
-  // onto the V1 bridge — the steady state of an EVOLVING table, this
-  // engine's headline feature. Files group by their effective pair
+  // pairs than the snapshot — the steady state of an EVOLVING table,
+  // this engine's headline feature. Files group by their effective pair
   // list ("shape"); each shape gets its own physical read schema with
   // the SAME positional layout as [[extSchema]] (one outMap serves
   // every shape), names resolved to the shape's write-time names
@@ -249,7 +222,7 @@ final class GraftBatchScan(
 
   /** Catalyst-internal initial-default of a field, when recorded —
     * evaluated once driver-side with the SAME `lit(s).cast(dt)`
-    * semantics the V1 path projects ([[SnapshotTable.initialDefault]];
+    * semantics the DataFrame read projects ([[SnapshotTable.initialDefault]];
     * the recorded types are restricted to atomic round-trippable ones
     * by `renderDefault`, all of which have constant-vector setters).
     */
@@ -681,6 +654,20 @@ final class GraftBatchScan(
       Array.tabulate(shapes.length)(shapeDefaults))
   }
 
+  /** EXACT live row count from the manifest alone, or None when
+    * metadata cannot know it: pending equality deletes (match counts
+    * are data-dependent), pushed filters / limit / TopN (the scan
+    * returns a subset), unsound or overlapping delete-vector coverage
+    * (the subtraction cannot prove position-disjointness). This is the
+    * strict twin of [[estimateStatistics]]'s numRows, which rounds UP
+    * on those shapes because CBO estimates may — an "exact" consumer
+    * ([[graft.operators.Ivf.metadataRowCount]]) must refuse instead.
+    */
+  def exactRowCount: Option[Long] =
+    if (filters.nonEmpty || runtimeFilters.nonEmpty ||
+        limit.isDefined || topn.isDefined) None
+    else SnapshotTable.exactLiveRows(snap)
+
   /** Post-pruning statistics WITH per-column stats (VERDICT r14 #4):
     * rows come from the manifest (minus delete-vector rows whose
     * entries are fully contained in the kept set), and each required
@@ -694,20 +681,6 @@ final class GraftBatchScan(
     * multi-snapshot-table joins with. All metadata-only — no file is
     * opened at any table size.
     */
-  /** EXACT live row count from the manifest alone, or None when
-    * metadata cannot know it: pending equality deletes (match counts
-    * are data-dependent), pushed filters / limit / TopN (the scan
-    * returns a subset), unsound or overlapping delete-vector coverage
-    * (the subtraction cannot prove position-disjointness). This is the
-    * strict twin of [[estimateStatistics]]'s numRows, which rounds UP
-    * on those shapes because CBO estimates may — an "exact" consumer
-    * ([[graft.operators.Ivf.metadataRowCount]]) must refuse instead.
-    */
-  override def exactRowCount: Option[Long] =
-    if (filters.nonEmpty || runtimeFilters.nonEmpty ||
-        limit.isDefined || topn.isDefined) None
-    else SnapshotTable.exactLiveRows(snap)
-
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val kept = groups.flatMap(_._2)
@@ -812,10 +785,6 @@ object GraftBatchScan {
     case _ => None
   }
 
-  /** Session kill-switch (default on): `spark.sql.graft.nativeBatchScan`. */
-  def enabled(table: SnapshotTable): Boolean =
-    table.session.conf.get("spark.sql.graft.nativeBatchScan", "true") == "true"
-
   /** Session kill-switch (default on) for ORDER BY + LIMIT file
     * pruning: `spark.sql.graft.topnPrune` — the parity seam
     * TopNPushdownSpec drives both ways on every pinned answer.
@@ -839,61 +808,16 @@ object GraftBatchScan {
     case _ => false
   }
 
-  /** Key column types the native equality-delete mask can hash: scalar
-    * internal representations with value equality, plus binary (byte
-    * arrays wrap in content-equal ByteBuffers at key build —
-    * [[GraftPartitionReaderFactory.keyOf]]); nested types excluded.
+  /** The SPJ claim of a scan over `snap`, defined only when the
+    * partitioning report is sound: a bucket spec, an identity spec
+    * over a long/int/string column (the partition value parses back to
+    * the column's type) or a zone-sound month spec, with at least one
+    * file and every file written under the current spec — legacy-spec
+    * files' partition values mean something else. Other tables read
+    * natively, just without a partitioning claim.
     */
-  private def eqMaskType(dt: DataType): Boolean = dt match {
-    case org.apache.spark.sql.types.ByteType |
-         org.apache.spark.sql.types.ShortType | IntegerType | LongType |
-         org.apache.spark.sql.types.FloatType |
-         org.apache.spark.sql.types.DoubleType | StringType |
-         org.apache.spark.sql.types.BooleanType | DateType |
-         TimestampType | TimestampNTZType |
-         org.apache.spark.sql.types.BinaryType => true
-    case _: org.apache.spark.sql.types.DecimalType => true
-    case _ => false
-  }
-
-  /** None = V1 fallback; Some(spjKey) = native, where spjKey is
-    * defined only when the SPJ partitioning report is sound: a bucket
-    * spec, or an identity spec over a long/int/string column (the
-    * partition value parses back to the column's type), with every
-    * file written under the current spec — legacy-spec files'
-    * partition values mean something else. Month and other
-    * identity-typed tables still read natively, just without a
-    * partitioning claim.
-    */
-  def eligible(table: SnapshotTable, snap: Snapshot, analyzed: StructType,
-      required: StructType): Option[Option[GraftSpjKey]] = {
-    // merge-on-read never forces the V1 fallback anymore: positional
-    // delete vectors mask by row ordinal (VERDICT r14 #2) and equality
-    // deletes by task-side key sets — PROVIDED every delete file's key
-    // columns still resolve (by field id) to live top-level columns of
-    // hashable scalar types; anything else (dropped key column, binary
-    // or nested keys) keeps the V1 anti-join path
-    val curById = snap.ids.map { case (n, id) => id -> n }.toMap
-    // a delete key must resolve (by field id) to a live top-level
-    // column of a hashable type; initial-DEFAULTED keys are fine — the
-    // mask substitutes the default into key tuples for shapes
-    // predating the column, so deletes match LOGICAL rows (the same
-    // value the V1 anti-join's projection sees)
-    val eqOk = snap.deleteFiles.forall(_.cols.forall { case (_, id) =>
-      curById.get(id)
-        .flatMap(n => snap.schema.fields.find(_.name == n))
-        .map(_.dataType).exists(eqMaskType)
-    })
-    val nativeOk = enabled(table) &&
-      eqOk &&
-      snap.files.nonEmpty &&
-      // schema drift — top-level AND nested add/rename/drop/widen —
-      // reads natively through per-shape schemas; initial-defaulted
-      // columns substitute constant vectors in shapes that predate
-      // them
-      snap.schema == analyzed
-    if (!nativeOk) None
-    else Some(snap.spec.filter(_ =>
+  def spjKey(table: SnapshotTable, snap: Snapshot): Option[GraftSpjKey] =
+    snap.spec.filter(_ => snap.files.nonEmpty &&
       snap.files.forall(_.seq >= snap.specSince)).flatMap {
       case PartitionSpec(source, SnapshotTable.BucketXform(n)) =>
         Some(GraftSpjKey.Bucket(n.toInt, source))
@@ -920,8 +844,7 @@ object GraftBatchScan {
             GraftSpjKey.Month(source)
         }
       case _ => None
-    })
-  }
+    }
 }
 
 /** The SPJ key of an eligible partition spec: the v2 transform the
@@ -990,12 +913,6 @@ final case class GraftEqGroup(ordinals: Array[Int], types: Array[DataType],
 
 final case class GraftEqRef(groups: Array[GraftEqGroup])
 
-/** Delete-vector refs for one data file: `dataRel` is the file's
-  * MANIFEST-relative path (the key the dv parquet rows carry);
-  * `dvFiles` are (qualified path, byte length) of every covering
-  * vector parquet. KB-sized reads, loaded task-side so no bitmap ever
-  * sits on the driver.
-  */
 /** A pushed ORDER BY + LIMIT, reduced to its FIRST sort key — pruning
   * on a key prefix is sound for any suffix (ties at the threshold are
   * kept, so later keys are free to break them). `nullsFirst` is the
@@ -1004,6 +921,12 @@ final case class GraftEqRef(groups: Array[GraftEqGroup])
 final case class GraftTopN(col: String, dt: DataType, desc: Boolean,
     nullsFirst: Boolean, k: Int)
 
+/** Delete-vector refs for one data file: `dataRel` is the file's
+  * MANIFEST-relative path (the key the dv parquet rows carry);
+  * `dvFiles` are (qualified path, byte length) of every covering
+  * vector parquet. KB-sized reads, loaded task-side so no bitmap ever
+  * sits on the driver.
+  */
 final case class GraftDvRef(dataRel: String, dvFiles: Array[(String, Long)])
 
 /** One task's splits; `partitionKey` is the partition value Spark
@@ -1337,9 +1260,10 @@ object GraftPartitionReaderFactory {
   /** The row's key tuple under `ordinals`/`types`: null when any
     * component is NULL (SQL `=` never matches NULL — the row survives,
     * a null delete tuple deletes nothing); a single bare value for
-    * 1-column keys, a List for composites. `copy = true` detaches
-    * values from the reader's reused buffers before they go into a
-    * hash set (strings are the only buffer-backed maskable type).
+    * 1-column keys, a `java.util.List` for composites. Components are
+    * [[keyValue]]s, so a key set matches exactly where Spark's join
+    * would. `copy = true` detaches values from the reader's reused
+    * buffers before they go into a hash set.
     */
   private[catalog] def keyOf(r: InternalRow, ordinals: Array[Int],
       types: Array[DataType], copy: Boolean,
@@ -1353,29 +1277,52 @@ object GraftPartitionReaderFactory {
       case Some(v) => v == null
       case None => r.isNullAt(ordinals(i))
     }
-    def value(i: Int): Any = {
-      val v = defaults.getOrElse(ordinals(i), r.get(ordinals(i), types(i)))
-      v match {
-        case u: UTF8String if copy => UTF8String.fromString(u.toString)
-        // byte arrays compare by REFERENCE — wrap for the content
-        // equality/hashCode a key set needs (cloned when the value
-        // outlives the reader's reused buffer)
-        case a: Array[Byte] =>
-          java.nio.ByteBuffer.wrap(if (copy) a.clone() else a)
-        case other => other
-      }
-    }
+    def value(i: Int): Any = keyValue(
+      defaults.getOrElse(ordinals(i), r.get(ordinals(i), types(i))),
+      types(i), copy)
     if (ordinals.length == 1) {
       if (isNull(0)) null else value(0)
     } else {
+      val b = new Array[AnyRef](ordinals.length)
       var i = 0
-      val b = List.newBuilder[Any]
       while (i < ordinals.length) {
         if (isNull(i)) return null
-        b += value(i)
+        b(i) = value(i).asInstanceOf[AnyRef]
         i += 1
       }
-      b.result()
+      java.util.Arrays.asList(b: _*)
     }
+  }
+
+  /** One key component as a value with Java `equals`/`hashCode` equal
+    * exactly when Spark's join keys are: floats and doubles normalized
+    * as `NormalizeFloatingNumbers` does (-0.0 is 0.0, every NaN is one
+    * NaN; boxed equality then matches NaN to NaN), byte arrays wrapped
+    * for content equality, structs and arrays as lists of their
+    * normalized fields or elements — a NULL inside one equals NULL, as
+    * in Spark's struct and array equality. Strings are copied out of
+    * the reader's buffer when `copy`; nested containers are always
+    * fresh lists.
+    */
+  private def keyValue(v: Any, dt: DataType, copy: Boolean): Any = v match {
+    case null => null
+    case f: Float => if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f
+    case d: Double => if (d == 0.0d) 0.0d else if (d.isNaN) Double.NaN else d
+    case u: UTF8String if copy => u.clone()
+    case a: Array[Byte] => java.nio.ByteBuffer.wrap(if (copy) a.clone() else a)
+    case row: InternalRow =>
+      val st = dt.asInstanceOf[StructType]
+      java.util.Arrays.asList(Array.tabulate[AnyRef](st.length)(i =>
+        if (row.isNullAt(i)) null
+        else keyValue(row.get(i, st(i).dataType), st(i).dataType, copy)
+          .asInstanceOf[AnyRef]): _*)
+    case arr: org.apache.spark.sql.catalyst.util.ArrayData =>
+      val et = dt.asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
+      java.util.Arrays.asList(Array.tabulate[AnyRef](arr.numElements())(i =>
+        if (arr.isNullAt(i)) null
+        else keyValue(arr.get(i, et), et, copy).asInstanceOf[AnyRef]): _*)
+    case _: org.apache.spark.sql.catalyst.util.MapData =>
+      sys.error("equality-delete keys cannot be maps")
+    case other => other
   }
 }

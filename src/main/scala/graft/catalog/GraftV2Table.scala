@@ -31,9 +31,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * capabilities, so `readStream` / `writeStream.format("graft")` keep
   * the data source's changelog source and sink.
   *
-  * The scan is the native [[GraftBatchScan]] where eligible, else a
-  * `V1Scan` over [[SnapshotTable.scanFor]]; writes bridge through
-  * `V1Write` to the snapshot layer's commits.
+  * Every read, batch or micro-batch, is one [[GraftBatchScan]]; writes
+  * bridge through `V1Write` to the snapshot layer's commits.
   */
 final class GraftV2Table(
     val table: SnapshotTable,
@@ -86,16 +85,31 @@ final class GraftV2Table(
       TableCapability.STREAMING_WRITE)).asJava
   }
 
-  /** An unpinned table loaded before a schema-evolving commit must not
-    * serve rows disagreeing with the analyzed schema.
+  /** A table loaded before a schema-evolving commit must not serve rows
+    * disagreeing with the analyzed schema: the snapshot a scan reads
+    * must carry the analyzed (name, type) columns.
     */
-  private[catalog] def guardSchemaDrift(): Unit = {
+  private def guardSchemaDrift(snap: Snapshot): Unit = {
     def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-    require(pinned.nonEmpty || shape(table.schemaAt(None)) == shape(schema),
+    require(shape(snap.schema) == shape(schema),
       s"snapshot table ${table.root} evolved its schema since this " +
         "statement was analyzed — re-run the statement (or re-create " +
         "the view / re-run spark.read) to pick up the new schema")
   }
+
+  /** A row-level operation's scan of version `snap`: every data column
+    * it projects must be there at the analyzed type.
+    */
+  private def requireProjected(snap: Snapshot, required: StructType): Unit =
+    required.fieldNames.filterNot(GraftV2Table.MetaCols.contains).foreach {
+      n =>
+        val t = schema(n).dataType
+        require(snap.schema.fields.exists(f => f.name == n && f.dataType == t),
+          s"snapshot table ${table.root}: column $n is not ${t.sql} at " +
+            s"version ${snap.version}, which this row-level operation " +
+            "reads — publish() or abortAudit() the staged schema change, " +
+            "or re-run the statement")
+    }
 
   private def requireWritable(op: String): Unit =
     require(pinned.isEmpty,
@@ -177,26 +191,25 @@ final class GraftV2Table(
       override def isPartiallyPushed(): Boolean = true
 
       override def build(): Scan = {
-        // native batch path first: a bucket-partitioned snapshot with
-        // no read-time resolution work reports KeyGroupedPartitioning
-        // and joins co-bucketed tables WITHOUT a shuffle (SPJ) — see
-        // GraftBatchScan for the eligibility contract and fallback
         val snap = version.map(table.snapshotAt)
           .getOrElse(table.publishedSnapshot())
-        GraftBatchScan.eligible(table, snap, schema, required) match {
-          case Some(bucket) =>
-            return new GraftBatchScan(table, snap, required, filters,
-              bucket, limit, topn, Some(() => microBatchStream()))
-          case None => ()
-        }
-        v1Scan()
+        // a row-level operation's scan reads its base version, the
+        // head, which an open audit window may have evolved past the
+        // published schema the statement was analyzed against; its
+        // commit checks that drift, the scan needs only the columns it
+        // projects at their analyzed types
+        if (version == pinned) guardSchemaDrift(snap)
+        else requireProjected(snap, required)
+        new GraftBatchScan(table, snap, required, filters,
+          GraftBatchScan.spjKey(table, snap), limit, topn,
+          () => microBatchStream())
       }
 
-      /** `spark.readStream.table(…)` lands here through either scan:
-        * an appends-only micro-batch tail of the table, planned from
-        * the manifests ([[graft.streaming.GraftTableStream]]). Batch
-        * eligibility (MoR state, drift) is irrelevant to the tail —
-        * it reads only files APPENDED after the stream starts.
+      /** `spark.readStream.table(…)` lands here through the scan's
+        * `toMicroBatchStream`: an appends-only micro-batch tail of the
+        * table, planned from the manifests ([[graft.streaming
+        * .GraftTableStream]]). It reads only files APPENDED after the
+        * stream starts.
         */
       private def microBatchStream()
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
@@ -227,51 +240,6 @@ final class GraftV2Table(
               s"maxFilesPerTrigger must fit in an Int, got $n")
             n.toInt
           })
-      }
-
-      private def v1Scan(): Scan = new V1Scan
-          with org.apache.spark.sql.connector.read.SupportsReportStatistics
-          with GraftExactRows {
-        override def readSchema(): StructType = required
-
-        /** Exact metadata row count for [[GraftExactRows]] consumers —
-          * None under pushed limit/TopN (the scan returns a prefix) or
-          * whenever [[SnapshotTable.exactRowCount]] cannot prove it.
-          */
-        override def exactRowCount: Option[Long] =
-          if (limit.isDefined || topn.isDefined) None
-          else table.exactRowCount(version, filters.toIndexedSeq)
-
-        override def toMicroBatchStream(checkpointLocation: String)
-            : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-          microBatchStream()
-
-        /** Post-pushdown, manifest-pruned estimate: row count is exact
-          * per surviving file (minus fully-covered delete vectors),
-          * width is the REQUIRED projection's `defaultSize` — so a
-          * filtered dimension read of a huge table reports the pruned
-          * size and Catalyst auto-broadcasts it, the decision stock
-          * Spark can never make when a relation defaults to
-          * `defaultSizeInBytes` (= never broadcast). Estimates only
-          * round up: partially-covered vectors and equality deletes
-          * are not subtracted.
-          */
-        override def estimateStatistics()
-            : org.apache.spark.sql.connector.read.Statistics = {
-          val rows = table.scanEstimate(version, filters.toIndexedSeq)
-          val width = math.max(1, required.defaultSize)
-          new org.apache.spark.sql.connector.read.Statistics {
-            override def sizeInBytes(): java.util.OptionalLong =
-              java.util.OptionalLong.of(rows * width)
-            override def numRows(): java.util.OptionalLong =
-              java.util.OptionalLong.of(rows)
-          }
-        }
-
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T =
-          new GraftV2ScanRelation(context, GraftV2Table.this, version,
-            filters, required).asInstanceOf[T]
       }
     }
 
@@ -660,11 +628,6 @@ object GraftV2Table {
       java.time.Instant.parse(v).toEpochMilli).toOption).getOrElse(
       sys.error(s"$key must be epoch millis or ISO-8601, got '$v'"))
 
-  /** Row-identity metadata columns the native row-level operations key
-    * on (Iceberg's `_file`/`_pos` equivalents — prefixed to dodge user
-    * column collisions; `SupportsMetadataColumns` hides shadowed names
-    * anyway).
-    */
   /** `graft.db.t` → ``graft.db.`t#changes` `` (error-message helper). */
   private[catalog] def changesName(ident: String): String =
     ident.split('.').toSeq match {
@@ -672,6 +635,11 @@ object GraftV2Table {
       case _ => s"`$ident#changes`"
     }
 
+  /** Row-identity metadata columns the native row-level operations key
+    * on (Iceberg's `_file`/`_pos` equivalents — prefixed to dodge user
+    * column collisions; `SupportsMetadataColumns` hides shadowed names
+    * anyway).
+    */
   private[catalog] val MetaFileCol = "_graft_file"
   private[catalog] val MetaPosCol = "_graft_pos"
   private[catalog] val MetaCols: Set[String] = Set(MetaFileCol, MetaPosCol)
@@ -747,51 +715,5 @@ object GraftV2Table {
       case _: AlwaysFalse => Some(lit(false))
       case _ => None
     }
-  }
-}
-
-/** The `V1Scan` landing relation: Spark's v2 pushdown has already
-  * settled the final filter and projection set, so `buildScan` is one
-  * manifest-pruned snapshot read projected to the required columns.
-  * Filters re-apply above (skip-only contract), merge-on-read deletes
-  * and field-id evolution apply inside `scanFor` as on every path.
-  * When the projection requests the row-identity METADATA columns (a
-  * row-level operation's scan), the snapshot read runs position-aware
-  * and surfaces (file URI, row ordinal) under the metadata names.
-  */
-private final class GraftV2ScanRelation(
-    override val sqlContext: SQLContext,
-    v2: GraftV2Table,
-    version: Option[Long],
-    filters: Array[Filter],
-    required: StructType) extends BaseRelation with TableScan {
-
-  override def schema: StructType = required
-
-  override def buildScan(): RDD[Row] = {
-    // a row-level scan is pinned to its operation's base version —
-    // schema drift is then checked by the commit, not the scan
-    if (version.isEmpty) v2.guardSchemaDrift()
-    val needsPos = required.fieldNames.exists(
-      GraftV2Table.MetaCols.contains)
-    val df0 = v2.table.scanFor(version, filters.toIndexedSeq,
-      withPos = needsPos)
-    val df =
-      if (!needsPos) df0
-      else df0
-        .withColumnRenamed(SnapshotTable.DvFileCol, GraftV2Table.MetaFileCol)
-        .withColumnRenamed(SnapshotTable.DvPosCol, GraftV2Table.MetaPosCol)
-    // Catalyst may prune NESTED fields too (SELECT meta.boost arrives
-    // as meta: struct<boost>): the declared schema must match the rows
-    // byte-for-byte, so conform each struct column to the pruned shape
-    // by NAME — a bare top-level select would return the full struct
-    // under a narrower declared type and fail row encoding
-    val projected =
-      if (required.isEmpty) df.select()
-      else graft.schema.SchemaOps.alignTo(
-        df.select(required.fieldNames.toIndexedSeq.map(c =>
-          org.apache.spark.sql.functions.col(SnapshotTable.quoted(c))): _*),
-        required)
-    projected.rdd
   }
 }

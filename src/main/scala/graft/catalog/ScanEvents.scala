@@ -3,7 +3,7 @@ package graft.catalog
 import scala.collection.mutable
 
 /** Driver-side scan observability: every manifest-pruned snapshot scan
-  * ([[SnapshotTable.scanFor]]) reports how many data files the
+  * ([[GraftBatchScan]]) reports how many data files the
   * manifest kept out of the snapshot's total. Recording is thread-local
   * and OFF unless a capture block is active, so the hot path pays one
   * ThreadLocal read. This is what lets a test (or an operator audit)

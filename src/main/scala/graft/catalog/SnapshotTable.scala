@@ -2,7 +2,7 @@ package graft.catalog
 
 import java.time.{Instant, YearMonth}
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Literal => CatalystLiteral}
@@ -1266,22 +1266,6 @@ final class SnapshotTable private (
   private[graft] def schemaAt(version: Option[Long]): StructType =
     version.map(snapshotAt(_).schema).getOrElse(schema)
 
-  /** Scan hook for the `graft` Spark data source
-    * ([[graft.sources.GraftDataSource]]): read `version` (None =
-    * current) with already-translated source filters pruning files at
-    * the manifest. SKIP-ONLY — the caller (Catalyst, via
-    * `unhandledFilters`) re-applies every filter exactly, so pruning
-    * can never change results.
-    */
-  private[graft] def scanFor(version: Option[Long],
-      filters: Seq[org.apache.spark.sql.sources.Filter],
-      withPos: Boolean = false): DataFrame = {
-    val s = version.map(snapshotAt).getOrElse(publishedSnapshot())
-    val kept = prunedFiles(s, filters)
-    ScanEvents.record(root.toString, kept.size, s.files.size)
-    readWithDeletes(s.schema, s.ids, s, kept, withPos = withPos)
-  }
-
   /** The shared manifest prune every scan path uses: min/max column
     * stats + Bloom sidecars + bucket-transform partition values.
     * Skip-only — a kept file may hold no matching row.
@@ -1307,41 +1291,6 @@ final class SnapshotTable private (
     else fastKept.filter(f => StatsPruner.mayMatchAll(
       effectiveStats(currentById, f), s.schema, residual, log.resolveBloom) &&
       bucketMayMatch(s, f, filters))
-  }
-
-  /** Manifest-only row estimate for the file set a scan with `filters`
-    * would read — zero data I/O, the number Catalyst needs to decide
-    * whether a (possibly filtered) snapshot read is broadcast-able.
-    * Exact file-level row counts from the manifests, minus positional
-    * delete-vector cardinalities whose covered files all survive the
-    * prune (a partially-covered vector is NOT subtracted — estimates
-    * only ever round UP, so a too-big table never broadcasts by
-    * accident). Equality deletes are ignored for the same reason:
-    * their matched-row count is unknowable without reading.
-    */
-  /** EXACT live row count from the manifest alone, or None when
-    * metadata cannot prove it: pending equality deletes (match counts
-    * are data-dependent), any pushed filters (the read is a subset),
-    * or delete-vector coverage whose position-disjointness is
-    * unprovable (a path covered by two vectors). The strict twin of
-    * [[scanEstimate]], which rounds UP on those shapes because CBO
-    * estimates may — exact consumers must refuse instead.
-    */
-  private[graft] def exactRowCount(version: Option[Long],
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Option[Long] =
-    if (filters.nonEmpty) None
-    else SnapshotTable.exactLiveRows(
-      version.map(snapshotAt).getOrElse(publishedSnapshot()))
-
-  private[graft] def scanEstimate(version: Option[Long],
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Long = {
-    val s = version.map(snapshotAt).getOrElse(publishedSnapshot())
-    val kept = prunedFiles(s, filters)
-    val keptPaths = kept.map(_.path).toSet
-    val hidden = s.dvFiles
-      .filter(_.dataPaths.forall(keptPaths.contains))
-      .map(_.rows).sum
-    math.max(0L, kept.map(_.rows).sum - hidden)
   }
 
   private def pruneFiles(s: Snapshot, pred: Column): Seq[DataFileEntry] = {
@@ -2014,7 +1963,10 @@ final class SnapshotTable private (
                 s"equality-delete file ${d.path} references dropped " +
                   s"field id $id — dropColumn should have refused"))
             }
+            // a USING join moves the key columns first: restore order
             df.join(readDeleteKeys(target, d, keyNames), keyNames, "left_anti")
+              .select(df.columns.toIndexedSeq.map(c =>
+                col(SnapshotTable.quoted(c))): _*)
         }
       }.reduce(_ unionByName _)
   }
@@ -2606,23 +2558,19 @@ final class SnapshotTable private (
     // later addresses leaf files directly with an explicit schema, so
     // they'd come back all-NULL: manifest stats contradicting scans,
     // and an adopted partitioned dataset silently losing its partition
-    // values. Refuse that shape up front with the remedy named.
-    val srcDir = new Path(dir)
-    val srcFs = srcDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val leaves = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
-    val it = srcFs.listFiles(srcDir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_") &&
-          !name.startsWith("."))
-        leaves += st
-    }
+    // values. Refuse that shape up front with the remedy named. Spark's
+    // own file index lists `dir`: it shows only the files a Spark read
+    // would (no `_temporary/`, `.staging/`, `_SUCCESS`, …) and discovers
+    // the partition directories, without inferring a schema.
+    val index = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+      spark, Seq(new Path(dir)), Map.empty, None)
+    val leaves = index.allFiles().filter(_.getPath.getName.endsWith(".parquet"))
     require(leaves.nonEmpty, s"importParquet: no parquet files under $dir")
-    val srcSchema = spark.read.parquet(leaves.map(_.getPath.toString).toSeq: _*)
+    val srcSchema = spark.read.parquet(leaves.map(_.getPath.toString): _*)
       .schema
-    val inferred = spark.read.parquet(dir).schema.fieldNames.toSet
-    val dirDerived = inferred -- srcSchema.fieldNames.toSet
+    val resolver = spark.sessionState.conf.resolver
+    val dirDerived = index.partitionSchema.fieldNames
+      .filterNot(n => srcSchema.fieldNames.exists(resolver(_, n)))
     require(dirDerived.isEmpty,
       s"importParquet: column(s) ${dirDerived.mkString(", ")} are " +
         "directory-derived (Hive-style partition columns) and do not " +
@@ -2639,7 +2587,7 @@ final class SnapshotTable private (
     // adopt), so an all-empty source is refused below.
     val read = ParquetReadBridge.readFunction(spark, srcSchema, srcSchema, Nil)
     val zone = spark.sessionState.conf.sessionLocalTimeZone
-    val files = leaves.toSeq.map(st =>
+    val files = leaves.map(st =>
       (st.getPath.toString, st.getPath.toUri.getPath, st.getLen))
     val entries = spark.sparkContext.parallelize(files, files.size)
       .map { case (file, path, bytes) =>
@@ -4313,9 +4261,10 @@ object SnapshotTable {
   /** EXACT live row count of a snapshot from its manifest, or None
     * when metadata cannot prove it: pending equality deletes (match
     * counts are data-dependent) or delete-vector coverage whose
-    * position-disjointness is unprovable. Shared by the exact-count
-    * consumers ([[GraftExactRows]]); the estimating twin
-    * ([[SnapshotTable.scanEstimate]]) rounds up instead of refusing.
+    * position-disjointness is unprovable. Backs
+    * [[GraftBatchScan.exactRowCount]]; the estimating twin
+    * ([[GraftBatchScan.estimateStatistics]]) rounds up instead of
+    * refusing.
     */
   private[graft] def exactLiveRows(s: Snapshot): Option[Long] = {
     if (s.deleteFiles.nonEmpty) return None
@@ -4723,7 +4672,7 @@ object SnapshotTable {
     * month-boundary matches between tables rendered under different
     * zones. With the zone pinned, every write renders identically
     * regardless of the writing session, range pruning decodes with the
-    * same zone, and [[GraftBatchScan.eligible]] claims Month SPJ only
+    * same zone, and [[GraftBatchScan.spjKey]] claims Month SPJ only
     * when the pinned zone matches the zone `months()` binds (the scan
     * session's). Date / timestamp_ntz sources are wall-time and need
     * no pin.

@@ -36,7 +36,6 @@ final case class GraftConfig(
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.installScanStats(s)
     s
   }
 }

@@ -938,12 +938,7 @@ object Ivf {
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     def ofScan(scan: org.apache.spark.sql.connector.read.Scan): Option[Long] =
       scan match {
-        case g: graft.catalog.GraftExactRows => g.exactRowCount
-        case w: org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper =>
-          w.v1Scan match {
-            case g: graft.catalog.GraftExactRows => g.exactRowCount
-            case _ => None
-          }
+        case g: graft.catalog.GraftBatchScan => g.exactRowCount
         case _ => None
       }
     def walk(p: LogicalPlan): Option[Long] = p match {

@@ -100,27 +100,10 @@ object GraftExtensions {
     // native delta MERGE: source-derived key predicate → manifest file
     // pruning on the target scan (see GraftMergeSourcePrune)
     ext.injectOptimizerRule(session => GraftMergeSourcePrune(session))
-    // GraftScanStats (manifest stats through the V1ScanWrapper) can
-    // NOT be injected here: every extension optimizer hook
-    // (operator-optimization, pre-CBO) runs BEFORE the "Early Filter
-    // and Projection Push-Down" batch that creates the V1ScanWrapper
-    // it rewrites. It rides spark.experimental.extraOptimizations
-    // (the "User Provided Optimizers" batch — the last logical batch,
-    // after pushdown, before physical join planning), installed by
-    // [[installScanStats]] from GraftConfig / register().
     // NO parser seam: time travel (VERSION/TIMESTAMP AS OF) and CALL
     // procedures are native DSv2 catalog paths — see
     // graft.catalog.GraftCatalog / GraftCatalogProcedures
   }
-
-  /** Install [[GraftScanStats]] on a live session — the only seam that
-    * runs AFTER scan pushdown and BEFORE join planning (see the
-    * injection note above). Idempotent; called by every graft session
-    * builder (`GraftConfig.newSession`, test session, `register`).
-    */
-  def installScanStats(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[GraftScanStats]))
-      spark.experimental.extraOptimizations ++= Seq(GraftScanStats(spark))
 
   /** Register on a live session (tests / notebooks that didn't set
     * `spark.sql.extensions`).
@@ -130,6 +113,5 @@ object GraftExtensions {
       spark.sessionState.functionRegistry.registerFunction(
         FunctionIdentifier(name), info(name, usage), builder)
     }
-    installScanStats(spark)
   }
 }

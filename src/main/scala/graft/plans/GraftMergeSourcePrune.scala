@@ -21,17 +21,17 @@ import graft.catalog.GraftRowLevelOperation
   * closes that gap at the logical level: it derives a key predicate
   * from the SOURCE side of the merge join and injects it as an
   * ordinary static filter above the target's row-level scan relation,
-  * where the existing v2→v1 pushdown lands it in the manifest pruner
-  * ([[graft.catalog.SnapshotTable.scanFor]] — min/max bounds, Bloom
-  * sidecars, bucket-transform partition values all apply, the same
-  * machinery `readKeysIn` probes).
+  * where the v2 filter pushdown lands it in the manifest pruner
+  * ([[graft.catalog.SnapshotTable.prunedFiles]] via
+  * [[graft.catalog.GraftBatchScan]] — min/max bounds, Bloom sidecars,
+  * bucket-transform partition values all apply, the same machinery
+  * `readKeysIn` probes).
   *
   * Spark's own runtime group filtering
   * (`RowLevelOperationRuntimeGroupFiltering`) covers only GROUP-based
   * operations (`ReplaceData`); delta-based writes (`WriteDelta`) get
-  * nothing, and the graft scan is a `V1Scan` bridge, which Spark's
-  * `SupportsRuntimeV2Filtering` path cannot reach either. So the rule
-  * reads the source's join keys during optimization:
+  * nothing. So the rule reads the source's join keys during
+  * optimization:
   *
   *  - a DRIVER-RESIDENT source — its key projection optimizes to one
   *    `LocalRelation` (`createDataFrame`/`toDF` of local rows,

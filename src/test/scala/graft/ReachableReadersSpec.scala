@@ -62,8 +62,11 @@ class ReachableReadersSpec extends AnyFunSuite {
     rows
   }
 
-  private def v1Rows(q: String): Seq[Row] =
-    withConf("spark.sql.graft.nativeBatchScan", "false")(sorted(sql(q).collect()))
+  /** The merge-on-read table through `SnapshotTable.read()`, the
+    * DataFrame path the native scan must agree with.
+    */
+  private def readRows(where: String = "true"): Seq[Row] =
+    sorted(morTable.read().where(where).collect())
 
   // ---- merge-on-read table: four file shapes (add, rename, add), two
   // single-file appends of 100 ids per shape, delete vectors over every
@@ -117,7 +120,7 @@ class ReachableReadersSpec extends AnyFunSuite {
       assert(n < everyReader,
         s"id=$id: $n broadcasts, not fewer than every reader's $everyReader")
       assert(rows == model.filter(_.getLong(0) == id))
-      assert(rows == v1Rows(q))
+      assert(rows == readRows(s"id = $id"))
     }
   }
 
@@ -144,7 +147,7 @@ class ReachableReadersSpec extends AnyFunSuite {
     updated ++= (240L to 260L)
     assert(nativeRows(all) == model)
     assert(rowPath(nativeRows(all)) == model)
-    assert(v1Rows(all) == model)
+    assert(readRows() == model)
   }
 
   // ---- LIMIT / TopN prefixes under a later runtime filter: 20 single-

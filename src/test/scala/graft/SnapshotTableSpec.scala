@@ -2695,6 +2695,53 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(hive.getMessage.contains("directory-derived"), hive.getMessage)
   }
 
+  test("importParquet adopts only files Spark's listing shows") {
+    val base = java.nio.file.Files.createTempDirectory("graft-import-hidden")
+    val src = base.resolve("src").toString
+    (1L to 5L).map(i => (i, s"v$i")).toDF("id", "s")
+      .coalesce(1).write.parquet(src)
+    // a half-committed job's leftovers: a task attempt under
+    // _temporary/ and a staging copy under .staging/
+    Seq("_temporary/0", ".staging").foreach { hidden =>
+      (900L to 902L).map(i => (i, s"x$i")).toDF("id", "s")
+        .coalesce(1).write.parquet(s"$src/$hidden/tmp")
+      val d = new java.io.File(s"$src/$hidden/tmp")
+      d.listFiles().filter(_.getName.endsWith(".parquet")).foreach(f =>
+        assert(f.renameTo(new java.io.File(s"$src/$hidden/part-0.parquet"))))
+      d.listFiles().foreach(_.delete())
+      assert(d.delete())
+    }
+    val t = SnapshotTable.create(spark, freshRoot(),
+      spark.read.parquet(src).schema)
+    t.importParquet(src)
+    assert(t.currentSnapshot().files.size == 1)
+    assert(t.currentSnapshot().files.forall(f =>
+      !f.path.contains("_temporary") && !f.path.contains(".staging")))
+    assert(t.read().count() == 5L)
+    assert(spark.read.parquet(src).count() == 5L,
+      "Spark's own listing skips the same files")
+  }
+
+  test("importParquet takes partition directories from Spark's discovery") {
+    val base = java.nio.file.Files.createTempDirectory("graft-import-disc")
+    // `b=2` is a partition directory, `sub` ends discovery above it, so
+    // `a=1` names no column; `b` is in the data, so nothing is refused
+    val src = base.resolve("a=1/sub/b=2").toString
+    (1L to 3L).map(i => (i, 2)).toDF("id", "b").coalesce(1).write.parquet(src)
+    val t = SnapshotTable.create(spark, freshRoot(),
+      spark.read.parquet(src).schema)
+    t.importParquet(base.toString)
+    assert(t.read().count() == 3L)
+    // a single file under a `k=v` directory adopts with no directory
+    // columns: the file's own directory is the base
+    val leaf = new java.io.File(src).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val u = SnapshotTable.create(spark, freshRoot(),
+      spark.read.parquet(src).schema)
+    u.importParquet(leaf.getPath)
+    assert(u.read().count() == 3L)
+  }
+
   test("grouped aggregate pushdown: GROUP BY the identity-partition key answers from the manifest") {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val schema = StructType(Seq(StructField("id", LongType),

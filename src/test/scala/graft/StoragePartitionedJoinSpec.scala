@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.functions.{count, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.SnapshotTable
@@ -13,8 +13,7 @@ import graft.catalog.SnapshotTable
   * the round-13 FunctionCatalog seam was built for. Also pins that
   * read-time resolution work (delete vectors, equality deletes,
   * schema evolution, row-identity metadata columns) stays on the
-  * native scan with identical results — as of r15 only nested
-  * remapping and initial-defaults revert to the V1 bridge.
+  * native scan with results identical to `SnapshotTable.read()`.
   */
 class StoragePartitionedJoinSpec extends AnyFunSuite {
 
@@ -54,13 +53,11 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     assert(plan.contains("BatchScan") && plan.contains("GraftBatchScan"),
       s"bucket table must plan the native batch scan:\n${plan.take(2000)}")
     assert(!plan.contains("RowDataSourceScan"), plan.take(2000))
-    // exactness vs the V1 path, same snapshot
+    // exactness vs the DataFrame read, same snapshot
     val native = df.as[(Long, Double)].collect().sortBy(_._1).toSeq
-    withConf("spark.sql.graft.nativeBatchScan" -> "false") {
-      val v1 = spark.table("graft.spj.a").as[(Long, Double)]
-        .collect().sortBy(_._1).toSeq
-      assert(native == v1)
-    }
+    val ref = SnapshotTable.load(spark, s"$warehouse/spj/a").read()
+      .as[(Long, Double)].collect().sortBy(_._1).toSeq
+    assert(native == ref)
     assert(native.size == 10000 && native.head == ((0L, 0.0)))
     // bucket pruning: an equality filter opens only the key's bucket
     val one = spark.table("graft.spj.a").filter($"id" === 42L)
@@ -122,13 +119,11 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     val plan = finalPlan(df)
     assert(plan.contains("GraftBatchScan"),
       s"identity-partitioned scan must be native:\n${plan.take(2000)}")
-    assert(!plan.contains("GraftV2ScanRelation"), plan.take(2000))
     val got = df.as[(Double, Long)].collect().head
-    withConf("spark.sql.graft.nativeBatchScan" -> "false") {
-      val v1 = sql("SELECT sum(v) AS s, count(*) AS n FROM graft.spj.u " +
-        "WHERE id % 2 = 0").as[(Double, Long)].collect().head
-      assert(got == v1, s"native $got vs v1 $v1")
-    }
+    val ref = SnapshotTable.load(spark, s"$warehouse/spj/u").read()
+      .where("id % 2 = 0").agg(sum("v").as("s"), count("*").as("n"))
+      .as[(Double, Long)].collect().head
+    assert(got == ref, s"native $got vs DataFrame read $ref")
     assert(got._2 == 4500)
     // flat projections read COLUMNAR: whole ColumnarBatches flow into
     // codegen (ColumnarToRow above the scan), rows never materialize

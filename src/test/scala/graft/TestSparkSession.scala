@@ -23,7 +23,6 @@ object TestSparkSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.installScanStats(s)
     s
   }
 }
