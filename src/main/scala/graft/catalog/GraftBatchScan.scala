@@ -30,8 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    upcasts int→long / float→double), absent columns null-filled by
   *    reserved name or substituted with their initial-default constant;
   *  - row-identity METADATA columns (`_graft_file`/`_graft_pos`, a
-  *    row-level operation's scan), synthesized from the split's path
-  *    and the parquet row-index column;
+  *    row-level operation's scan), synthesized from the file's
+  *    manifest path and the parquet row-index column;
+  *  - `input_file_name()`: each split reports its file as Spark's own
+  *    file scans do;
   *  - manifest statistics for CBO and an exact metadata row count
   *    ([[exactRowCount]]);
   *  - the storage-partitioned join (SPJ): a bucket, identity or month
@@ -73,9 +75,18 @@ final class GraftBatchScan(
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     stream()
 
-  override def description(): String =
+  /** Root and SPJ key, then the read schema and pushed filters, each
+    * abbreviated at `spark.sql.maxMetadataStringLength` as Spark's
+    * file scans print them.
+    */
+  override def description(): String = {
+    val max = table.session.sessionState.conf.maxMetadataStringLength
+    def abbrev(s: String) = org.apache.commons.lang3.StringUtils.abbreviate(s, max)
     s"GraftBatchScan(${table.root}" +
-      spjKey.map(k => s", ${k.describe})").getOrElse(")")
+      spjKey.map(k => s", ${k.describe})").getOrElse(")") +
+      s" ReadSchema: ${abbrev(required.catalogString)}, " +
+      s"PushedFilters: ${abbrev(filters.mkString("[", ", ", "]"))}"
+  }
 
   // DPP seam (Iceberg's SparkBatchQueryScan shape): a selective join
   // side's keys arrive as an IN filter after its stage materializes,
@@ -120,8 +131,8 @@ final class GraftBatchScan(
 
   // ---- row-identity METADATA columns, served natively: a row-level
   // operation's scan requests `_graft_file`/`_graft_pos`, which are
-  // not parquet columns — the reader SYNTHESIZES them (the split's
-  // qualified path as a per-split constant; the parquet row-index
+  // not parquet columns — the reader SYNTHESIZES them (the file's
+  // manifest path as a per-split constant; the parquet row-index
   // column, file-absolute so correct under byte-range splits — the
   // same generator behind `_metadata.row_index` and the dv masks), so
   // DELETE/UPDATE/MERGE target scans stay columnar.
@@ -479,7 +490,7 @@ final class GraftBatchScan(
       def dvRef(e: DataFileEntry): Option[GraftDvRef] = {
         val dvs = table.dvsOf(snap, e)
         if (dvs.isEmpty) None
-        else Some(GraftDvRef(e.path, dvs.map(d =>
+        else Some(GraftDvRef(dvs.map(d =>
           dvLens.getOrElseUpdate(d.path, {
             val p = new Path(table.root, d.path)
             (fs.makeQualified(p).toString, fs.getFileStatus(p).getLen)
@@ -515,7 +526,8 @@ final class GraftBatchScan(
           val p = new Path(table.root, e.path)
           val len =
             if (e.bytes > 0) e.bytes else fs.getFileStatus(p).getLen
-          (fs.makeQualified(p).toString, len, dvRef(e), eqRef(e), shapeOf(e))
+          (fs.makeQualified(p).toString, len, dvRef(e), eqRef(e), shapeOf(e),
+            e.path)
         })
       }
       val totalBytes = sized.iterator.flatMap(_._2.iterator.map(_._2)).sum
@@ -524,10 +536,10 @@ final class GraftBatchScan(
         table.session, totalBytes, fileCount)
       val openCost = ParquetReadBridge.openCostInBytes(table.session)
       cachedParts = sized.flatMap { case (key, files) =>
-        val splits = files.flatMap { case (path, len, dv, eq, shape) =>
-          if (len <= target) Seq(GraftSplit(path, 0L, len, dv, eq, shape))
-          else (0L until len by target).map(off =>
-            GraftSplit(path, off, math.min(target, len - off), dv, eq, shape))
+        val splits = files.flatMap { case (path, len, dv, eq, shape, rel) =>
+          if (len <= target) Seq(GraftSplit(path, 0L, len, dv, eq, shape, rel))
+          else (0L until len by target).map(off => GraftSplit(path, off,
+            math.min(target, len - off), dv, eq, shape, rel))
         }.sortBy(-_.length)
         val bins = Array.newBuilder[InputPartition]
         val cur = scala.collection.mutable.ArrayBuffer.empty[GraftSplit]
@@ -896,11 +908,12 @@ object GraftSpjKey {
 /** One byte-range split of one parquet file (whole file when
   * `start == 0 && length == file length`); `dv` carries the file's
   * positional-delete-vector refs when any cover it, `eq` its
-  * applicable equality-delete refs (sequence-scoped at planning).
+  * applicable equality-delete refs (sequence-scoped at planning);
+  * `rel` is the file's manifest path, the `_graft_file` value.
   */
 final case class GraftSplit(path: String, start: Long, length: Long,
     dv: Option[GraftDvRef] = None, eq: Option[GraftEqRef] = None,
-    shape: Int = 0)
+    shape: Int = 0, rel: String = "")
 
 /** Equality deletes applicable to one data file, grouped by ORDERED
   * key shape: `ordinals`/`types` locate the key columns in the scan's
@@ -921,13 +934,12 @@ final case class GraftEqRef(groups: Array[GraftEqGroup])
 final case class GraftTopN(col: String, dt: DataType, desc: Boolean,
     nullsFirst: Boolean, k: Int)
 
-/** Delete-vector refs for one data file: `dataRel` is the file's
-  * MANIFEST-relative path (the key the dv parquet rows carry);
-  * `dvFiles` are (qualified path, byte length) of every covering
-  * vector parquet. KB-sized reads, loaded task-side so no bitmap ever
-  * sits on the driver.
+/** Delete-vector refs for one data file: `dvFiles` are (qualified
+  * path, byte length) of every covering vector parquet, whose rows
+  * key on the split's manifest path. KB-sized reads, loaded task-side
+  * so no bitmap ever sits on the driver.
   */
-final case class GraftDvRef(dataRel: String, dvFiles: Array[(String, Long)])
+final case class GraftDvRef(dvFiles: Array[(String, Long)])
 
 /** One task's splits; `partitionKey` is the partition value Spark
   * groups and aligns on (null row field = the null partition). Under
@@ -984,12 +996,13 @@ final case class GraftPartitionReaderFactory(
   /** The file's OR-ed delete vectors, loaded task-side (KB-sized
     * parquet reads; nothing ever sits on the driver).
     */
-  private def loadBitmap(ref: GraftDvRef): org.roaringbitmap.RoaringBitmap = {
+  private def loadBitmap(ref: GraftDvRef,
+      rel: String): org.roaringbitmap.RoaringBitmap = {
     val bm = new org.roaringbitmap.RoaringBitmap()
     ref.dvFiles.foreach { case (p, len) =>
-      readDv.getOrElse(unbuilt(s"delete-vector reader (for ${ref.dataRel})"))(
+      readDv.getOrElse(unbuilt(s"delete-vector reader (for $rel)"))(
         ParquetReadBridge.wholeFile(p, len)).foreach { r =>
-        if (r.getUTF8String(0).toString == ref.dataRel) {
+        if (r.getUTF8String(0).toString == rel) {
           val b = new org.roaringbitmap.RoaringBitmap()
           b.deserialize(java.nio.ByteBuffer.wrap(r.getBinary(1).clone()))
           bm.or(b)
@@ -1050,7 +1063,7 @@ final case class GraftPartitionReaderFactory(
     * row contract allows reuse; buffering consumers copy).
     */
   private def masked(s: GraftSplit): Iterator[InternalRow] = {
-    val bm = s.dv.map(loadBitmap)
+    val bm = s.dv.map(loadBitmap(_, s.rel))
     val eqSets = s.eq.map(loadEqSets)
       .getOrElse(Array.empty[(Array[Int], Array[DataType],
         java.util.HashSet[Any])])
@@ -1072,7 +1085,7 @@ final case class GraftPartitionReaderFactory(
     val needsConst =
       outMap.contains(GraftPartitionReaderFactory.FileMeta) || defs.nonEmpty
     val constRow = new GenericInternalRow(
-      Array[Any](UTF8String.fromString(s.path)) ++ defs.map(_._3))
+      Array[Any](UTF8String.fromString(s.rel)) ++ defs.map(_._3))
     val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
     readExts(s.shape).getOrElse(unbuilt(
       s"row reader for file shape ${s.shape} (split ${s.path})"))(
@@ -1095,7 +1108,7 @@ final case class GraftPartitionReaderFactory(
     */
   private def maskedColumnar(s: GraftSplit)
       : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val bm = s.dv.map(loadBitmap)
+    val bm = s.dv.map(loadBitmap(_, s.rel))
     val eqSets = s.eq.map(loadEqSets)
       .getOrElse(Array.empty[(Array[Int], Array[DataType],
         java.util.HashSet[Any])])
@@ -1105,7 +1118,7 @@ final case class GraftPartitionReaderFactory(
     open(ParquetReadBridge.split(s.path, s.start, s.length)).map { batch =>
       val rows = batch.numRows()
       // physical columns by ordinal; `_graft_pos` IS the row-index
-      // vector; `_graft_file` is a constant vector of the split path;
+      // vector; `_graft_file` is a constant vector of the manifest path;
       // a shape's defaulted absent columns substitute constant vectors
       // of the default value (the reader null-filled them)
       val defs = shapeDefaults(s.shape)
@@ -1115,7 +1128,7 @@ final case class GraftPartitionReaderFactory(
           case GraftPartitionReaderFactory.PosMeta => batch.column(physLen)
           case GraftPartitionReaderFactory.FileMeta =>
             GraftPartitionReaderFactory.constVector(rows, StringType,
-              UTF8String.fromString(s.path))
+              UTF8String.fromString(s.rel))
           case o => defs.collectFirst { case (`o`, dt, v) =>
             GraftPartitionReaderFactory.constVector(rows, dt, v)
           }.getOrElse(batch.column(o))
@@ -1160,7 +1173,9 @@ final case class GraftPartitionReaderFactory(
   }
 
   /** Chained per-split reader; record-reader cleanup rides the task
-    * completion listener the parquet bridge registers.
+    * completion listener the parquet bridge registers. Each split it
+    * opens becomes the task's `input_file_name()`, as in Spark's own
+    * `FilePartitionReader`.
     */
   private def chain[T](p: InputPartition,
       open: GraftSplit => Iterator[T]): PartitionReader[T] = {
@@ -1172,12 +1187,14 @@ final case class GraftPartitionReaderFactory(
 
       override def next(): Boolean = {
         while (!current.hasNext && files.hasNext) {
-          current = open(files.next())
+          val s = files.next()
+          ParquetReadBridge.setInputFile(s.path, s.start, s.length)
+          current = open(s)
         }
         if (current.hasNext) { value = current.next(); true } else false
       }
       override def get(): T = value
-      override def close(): Unit = ()
+      override def close(): Unit = ParquetReadBridge.unsetInputFile()
     }
   }
 
@@ -1220,7 +1237,7 @@ object GraftPartitionReaderFactory {
 
   /** `outMap` markers for synthesized row-identity metadata columns:
     * `PosMeta` = the parquet row-index column (file-absolute ordinal),
-    * `FileMeta` = the split's qualified file path as a constant.
+    * `FileMeta` = the file's manifest path as a constant.
     */
   private[catalog] final val PosMeta = -1
   private[catalog] final val FileMeta = -2

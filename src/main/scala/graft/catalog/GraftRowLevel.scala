@@ -34,8 +34,8 @@ import org.apache.spark.util.SerializableConfiguration
   * cardinality check.
   *
   * The operation is DELTA-based (merge-on-read): the scan exposes
-  * each row's identity as two metadata columns — the data file URI
-  * and the row ordinal ([[GraftV2Table.MetaFileCol]] /
+  * each row's identity as two metadata columns — the data file's
+  * manifest path and the row ordinal ([[GraftV2Table.MetaFileCol]] /
   * [[GraftV2Table.MetaPosCol]], served by the same position-aware
   * snapshot read the Scala-API vector paths use) — and the write
   * receives per-row deltas: DELETEs and UPDATEs mark positions into
@@ -254,7 +254,7 @@ final class GraftDeltaBatchWrite(table: SnapshotTable, baseVersion: Long,
     val dvFactory = ParquetWriteBridge.writerFactory(spark,
       SnapshotTable.DvSchema)
     new GraftDeltaWriterFactory(table.root.toString,
-      table.qualifiedRootPath, dataRel, dvRel, rowSchema, partExpr,
+      dataRel, dvRel, rowSchema, partExpr,
       dataFactory, dvFactory,
       BloomSpec.fromProperties(base.properties),
       NdvSpec.fromProperties(base.properties),
@@ -306,7 +306,6 @@ final case class GraftDeltaCommit(
 
 final class GraftDeltaWriterFactory(
     rootStr: String,
-    rootPathStr: String,
     dataRel: String,
     dvRel: String,
     rowSchema: StructType,
@@ -319,7 +318,7 @@ final class GraftDeltaWriterFactory(
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
-    new GraftDeltaWriter(rootStr, rootPathStr, dataRel, dvRel, rowSchema,
+    new GraftDeltaWriter(rootStr, dataRel, dvRel, rowSchema,
       partExpr, dataFactory, dvFactory, partitionId, taskId,
       bloom, ndv, zoneId)
 }
@@ -338,7 +337,6 @@ final class GraftDeltaWriterFactory(
   */
 final class GraftDeltaWriter(
     rootStr: String,
-    rootPathStr: String,
     dataRel: String,
     dvRel: String,
     rowSchema: StructType,
@@ -413,18 +411,10 @@ final class GraftDeltaWriter(
   private lazy val partProj =
     partExpr.map(e => UnsafeProjection.create(Seq(e)))
 
-  /** Manifest-relative path of a scanned file URI — the same
-    * uriPath-decode + root-strip discipline as every vector path.
-    */
-  private def relOf(uri: String): String = {
-    val p = SnapshotTable.uriPath(uri)
-    if (p.startsWith(rootPathStr + "/")) p.stripPrefix(rootPathStr + "/")
-    else p
-  }
-
+  /** Mark the row `id` = (manifest path, ordinal) in `bitmaps`. */
   private def mark(bitmaps: mutable.HashMap[String,
       org.roaringbitmap.RoaringBitmap], id: InternalRow): Unit = {
-    val rel = relOf(id.getUTF8String(0).toString)
+    val rel = id.getUTF8String(0).toString
     val pos = id.getLong(1)
     require(pos <= 0xFFFFFFFFL,
       s"row ordinal $pos exceeds the 32-bit vector domain in $rel " +

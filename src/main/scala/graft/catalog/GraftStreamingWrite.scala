@@ -84,7 +84,6 @@ final class GraftStreamingWrite(
     val dvFactory = ParquetWriteBridge.writerFactory(spark,
       SnapshotTable.DvSchema)
     val rootStr = table.root.toString
-    val rootPathStr = table.qualifiedRootPath
     val rel = dataRel
     val schema = writeSchema
     val bloom = BloomSpec.fromProperties(snap.properties)
@@ -96,7 +95,7 @@ final class GraftStreamingWrite(
         // insert-only use of the delta writer (DataWriter.write =
         // insert); file names get a fresh uuid per open, so epochs
         // and retried attempts never collide in the shared dir
-        new GraftDeltaWriter(rootStr, rootPathStr, rel, rel, schema,
+        new GraftDeltaWriter(rootStr, rel, rel, schema,
           partExpr, Some(dataFactory), dvFactory, partitionId, taskId,
           bloom, ndv, zone)
     }

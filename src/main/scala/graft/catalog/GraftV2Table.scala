@@ -31,6 +31,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * capabilities, so `readStream` / `writeStream.format("graft")` keep
   * the data source's changelog source and sink.
   *
+  * A `view` is a snapshot the snapshot layer reads itself
+  * ([[SnapshotTable]]'s own frames: a file subset, a render schema,
+  * or no deletes at all): the table scans exactly that snapshot,
+  * refuses every write, and is no DML or metadata-aggregate target.
+  *
   * Every read, batch or micro-batch, is one [[GraftBatchScan]]; writes
   * bridge through `V1Write` to the snapshot layer's commits.
   */
@@ -38,13 +43,15 @@ final class GraftV2Table(
     val table: SnapshotTable,
     ident: String,
     val pinned: Option[Long],
-    streaming: Boolean = true) extends Table
+    streaming: Boolean = true,
+    private[graft] val view: Option[Snapshot] = None) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations with SupportsMetadataColumns {
 
   override def name(): String = ident
 
-  override val schema: StructType = table.schemaAt(pinned)
+  override val schema: StructType =
+    view.map(_.schema).getOrElse(table.schemaAt(pinned))
 
   override def partitioning(): Array[Transform] =
     table.publishedSnapshot().spec.toArray.map { ps =>
@@ -111,9 +118,11 @@ final class GraftV2Table(
             "or re-run the statement")
     }
 
-  private def requireWritable(op: String): Unit =
+  private def requireWritable(op: String): Unit = {
+    require(view.isEmpty, s"cannot $op a snapshot read of ${table.root}")
     require(pinned.isEmpty,
       s"cannot $op a time-travel (VERSION/TIMESTAMP AS OF) table")
+  }
 
   // ---------------------------------------------------------------- read
 
@@ -191,15 +200,17 @@ final class GraftV2Table(
       override def isPartiallyPushed(): Boolean = true
 
       override def build(): Scan = {
-        val snap = version.map(table.snapshotAt)
-          .getOrElse(table.publishedSnapshot())
+        val snap = view.getOrElse(version.map(table.snapshotAt)
+          .getOrElse(table.publishedSnapshot()))
         // a row-level operation's scan reads its base version, the
         // head, which an open audit window may have evolved past the
         // published schema the statement was analyzed against; its
         // commit checks that drift, the scan needs only the columns it
-        // projects at their analyzed types
-        if (version == pinned) guardSchemaDrift(snap)
-        else requireProjected(snap, required)
+        // projects at their analyzed types. A view is its own schema.
+        if (view.isEmpty) {
+          if (version == pinned) guardSchemaDrift(snap)
+          else requireProjected(snap, required)
+        }
         new GraftBatchScan(table, snap, required, filters,
           GraftBatchScan.spjKey(table, snap), limit, topn,
           () => microBatchStream())
@@ -245,10 +256,11 @@ final class GraftV2Table(
 
   // ---------------------------------------------- row-level operations
 
-  /** Row identity for the native delta operations: the data file URI
-    * and row ordinal, served by the position-aware snapshot read (the
-    * same `_metadata` plumbing the Scala-API vector paths use).
-    * Non-nullable by construction — Spark refuses nullable row IDs.
+  /** Row identity for the native delta operations and the snapshot
+    * layer's own position reads: the data file's MANIFEST path (the key
+    * delete vectors carry, so no path is ever decoded) and the row
+    * ordinal within the file. Non-nullable by construction — Spark
+    * refuses nullable row IDs.
     */
   override def metadataColumns(): Array[MetadataColumn] = Array(
     new MetadataColumn {
@@ -256,7 +268,7 @@ final class GraftV2Table(
       override def dataType: DataType = StringType
       override def isNullable: Boolean = false
       override def comment: String =
-        "data file URI of the row (graft row-level operations)"
+        "manifest path of the row's data file (graft row-level operations)"
     },
     new MetadataColumn {
       override def name: String = GraftV2Table.MetaPosCol

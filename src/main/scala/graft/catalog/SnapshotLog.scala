@@ -66,7 +66,7 @@ final case class DataFileEntry(path: String, partition: Option[String],
 
 /** One equality-delete file (merge-on-read — Iceberg v2 delete files):
   * a parquet file of DISTINCT key tuples whose matching data rows are
-  * removed at READ time by anti-join, so a point delete commits
+  * masked at READ time by the scan, so a point delete commits
   * O(deleted keys) bytes instead of rewriting data files. `cols` are
   * the key columns as (write-time name, field id) pairs — reads match
   * through the ids, so renames don't break pending deletes; `seq` is
@@ -277,7 +277,10 @@ final class SnapshotLog(val root: Path, conf: Configuration) {
     * list (ADVICE r17: count + first path let a synthetic/reordered
     * same-version snapshot poach another's positional masks and
     * mis-prune), cheap because manifest entries are shared via
-    * [[manifestCache]] and `String` caches its hashCode. Eviction is
+    * [[manifestCache]] and `String` caches its hashCode, plus the
+    * schema and field ids the index resolves names through (a read
+    * view of a version may render it under another snapshot's
+    * columns). Eviction is
     * LRU (access-order `LinkedHashMap`), not clear-all — the
     * hot current-version index survives a burst of historical reads,
     * and the pinned count bounds driver memory with the oldest, not
@@ -293,7 +296,8 @@ final class SnapshotLog(val root: Path, conf: Configuration) {
 
   def statsIndexOf(s: Snapshot): StatsIndex = {
     val fp = scala.util.hashing.MurmurHash3.orderedHash(
-      s.files.iterator.map(_.path.hashCode))
+      s.files.iterator.map(_.path.hashCode) ++
+        Iterator(s.schema.hashCode, s.ids.hashCode))
     val key = (s.version, s.files.length, fp)
     val hit = statsIndexCache.synchronized(statsIndexCache.get(key))
     if (hit != null) hit

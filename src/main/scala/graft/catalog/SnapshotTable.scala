@@ -7,7 +7,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Literal => CatalystLiteral}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, ParquetReadBridge}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge, ParquetReadBridge}
 import org.apache.spark.sql.types._
 
 import graft.schema.SchemaOps
@@ -268,7 +269,7 @@ final class SnapshotTable private (
     // restore them here, unlike readTimestampRange). Refuse, same as
     // upsert/overwritePartitions, with the migrateSpec remedy.
     requireUniformSpec(s, "readPartitions")
-    readWithDeletes(s.schema, s.ids, s, s.files.filter(f => pred(f.partition)))
+    readFiles(s, s.files.filter(f => pred(f.partition)))
   }
 
   /** Point-lookup read on a `bucket[N]`-partitioned table: each key
@@ -298,7 +299,7 @@ final class SnapshotTable private (
       case Some(b) => s.files.filter(_.partition.exists(b.contains))
       case None => s.files
     }
-    readWithDeletes(s.schema, s.ids, s, pruned)
+    readFiles(s, pruned)
       .filter(col(SnapshotTable.quoted(spec.source)).isin(keys: _*))
   }
 
@@ -394,7 +395,7 @@ final class SnapshotTable private (
         case None => true // no stats recorded: conservative keep
       }
     }
-    val pruned = readWithDeletes(s.schema, s.ids, s, kept)
+    val pruned = readFiles(s, kept)
     if (residual)
       pruned.filter(col(SnapshotTable.quoted(column)).isInCollection(ks))
     else pruned
@@ -431,7 +432,7 @@ final class SnapshotTable private (
     val pruned = s.files.filter(f =>
       if (f.seq >= s.specSince) f.partition.exists(months.contains)
       else true)
-    readWithDeletes(s.schema, s.ids, s, pruned)
+    readFiles(s, pruned)
       .filter(col(spec.source) >= lit(java.sql.Timestamp.from(from)) &&
         col(spec.source) < lit(java.sql.Timestamp.from(until)))
   }
@@ -452,7 +453,7 @@ final class SnapshotTable private (
       s"inverted range: $fromVersion .. $toVersion")
     val to = log.read(toVersion)
     val fromPaths = log.read(fromVersion).files.map(_.path).toSet
-    readWithDeletes(to.schema, to.ids, to, to.files.filterNot(f => fromPaths.contains(f.path)))
+    readFiles(to, to.files.filterNot(f => fromPaths.contains(f.path)))
   }
 
   /** CDC CHANGELOG between two versions (Iceberg `changelog_view` with
@@ -505,12 +506,12 @@ final class SnapshotTable private (
     val sTo = endpointSnap(toVersion)
     val rs = Option(render).getOrElse(sTo)
     if (fromVersion == toVersion)
-      return readWithDeletes(rs.schema, rs.ids, sTo, Nil)
+      return readFiles(sTo, Nil, rs)
         .select(lit("").as("_change_type") +: changeCols(rs): _*).limit(0)
     val sFrom = endpointSnap(fromVersion)
     changesRouteOf(sFrom, sTo, rs) match {
       case "netzero" =>
-        readWithDeletes(rs.schema, rs.ids, sTo, Nil)
+        readFiles(sTo, Nil, rs)
           .select(lit("").as("_change_type") +: changeCols(rs): _*).limit(0)
       case "fast" => changesFast(sFrom, sTo, rs)
       case _ => changesDiff(sFrom, sTo, rs)
@@ -539,7 +540,7 @@ final class SnapshotTable private (
     * route — an append-only window must never silently degrade to the
     * endpoint diff (VERDICT r17 #8), including across schema
     * EVOLUTION: metadata-only evolution commits add and remove no
-    * files, and [[readResolved]]'s per-file field-id resolution
+    * files, and the scan's per-file field-id resolution ([[readFiles]])
     * renders pre-evolution appends under the endpoint schema (renames
     * follow ids, added columns null-fill or surface their recorded
     * initial default), so they classify as blind here exactly as the
@@ -713,8 +714,7 @@ final class SnapshotTable private (
     val toIds = rs.ids.map(_.swap).toMap
     val fromPaths = sFrom.files.map(_.path).toSet
     val newFiles = sTo.files.filterNot(f => fromPaths.contains(f.path))
-    val inserts = readWithDeletes(rs.schema, rs.ids, sTo, newFiles,
-        targetNested = rs.nestedIds)
+    val inserts = readFiles(sTo, newFiles, rs)
       .select(lit("insert").as("_change_type") +: changeCols(rs): _*)
     val newDels = sTo.deleteFiles.filter(_.seq > sFrom.version)
     if (newDels.isEmpty) return inserts
@@ -723,10 +723,8 @@ final class SnapshotTable private (
       .reduce(_ unionByName _).distinct()
     // every from-visible file has seq ≤ from < delete seq, so the
     // new delete files apply to ALL of them — plain semi-join
-    val deletes =
-      readWithDeletes(rs.schema, rs.ids, sFrom, sFrom.files,
-          targetNested = rs.nestedIds)
-        .join(keys, keyNames, "left_semi")
+    val deletes = readFiles(sFrom, sFrom.files, rs)
+      .join(keys, keyNames, "left_semi")
         .select(lit("delete").as("_change_type") +: changeCols(rs): _*)
     // NET the two sides (multiset): a key deleted and re-appended with
     // IDENTICAL content inside the window must emit nothing, matching
@@ -754,13 +752,9 @@ final class SnapshotTable private (
     val rs = Option(render).getOrElse(sTo)
     val names = rs.schema.fieldNames.toIndexedSeq
     val mf = mapFields(rs.schema)
-    val toDf = encodeMapCols(
-      readWithDeletes(rs.schema, rs.ids, sTo, sTo.files,
-        targetNested = rs.nestedIds), mf)
+    val toDf = encodeMapCols(readFiles(sTo, sTo.files, rs), mf)
       .withColumn("__w", lit(1L))
-    val fromDf = encodeMapCols(
-      readWithDeletes(rs.schema, rs.ids, sFrom, sFrom.files,
-        targetNested = rs.nestedIds), mf)
+    val fromDf = encodeMapCols(readFiles(sFrom, sFrom.files, rs), mf)
       .withColumn("__w", lit(-1L))
     val diffed = toDf.unionByName(fromDf)
       .groupBy(names.map(n => col(SnapshotTable.quoted(n))): _*)
@@ -918,8 +912,7 @@ final class SnapshotTable private (
           else (newDvs, Seq.empty[DvFileEntry])
         val sp = snapshotAt(v - 1)
         def img(files: Seq[DataFileEntry], label: String): DataFrame =
-          readWithDeletes(sEnd.schema, sEnd.ids, sv, files,
-              targetNested = sEnd.nestedIds)
+          readFiles(sv, files, sEnd)
             .select(lit(label).as("_change_type") +: changeCols(sEnd): _*)
         img(updF, "update_postimage")
           .unionByName(img(insF, "insert"))
@@ -955,8 +948,7 @@ final class SnapshotTable private (
         val newFiles = sv.files.filter(_.seq == v)
         val (updF, plainF) = newFiles.partition(_.upd)
         def rd(owner: Snapshot, files: Seq[DataFileEntry]): DataFrame =
-          readWithDeletes(sEnd.schema, sEnd.ids, owner, files,
-            targetNested = sEnd.nestedIds)
+          readFiles(owner, files, sEnd)
         val keyExprs = keyNames.map(n => col(SnapshotTable.quoted(n)))
         val post = rd(sv, updF)
         val oldRows = rd(sp, removed)
@@ -974,30 +966,23 @@ final class SnapshotTable private (
   }
 
   /** The pre-commit content of the rows the given vectors masked:
-    * covered files read under the TO schema in the PREVIOUS snapshot's
-    * context (its own deletes applied — a position already dead at
-    * v−1 is not part of commit v's change), position-semi-joined
-    * against the vectors' bitmaps. O(covered files + masked rows).
+    * positions live under `sPrev` (its own deletes applied — a position
+    * already dead at v−1 is not part of commit v's change) that the
+    * vectors mask, read under the TO schema. Two reads of the covered
+    * files, with and without the new vectors, anti-joined on
+    * (file, position). O(covered files).
     */
   private def readAtDvPositions(sTo: Snapshot, sPrev: Snapshot,
       dvEntries: Seq[DvFileEntry]): DataFrame = {
     val covered = dvEntries.flatMap(_.dataPaths).toSet
     val files = sPrev.files.filter(f => covered.contains(f.path))
-    val base = readWithDeletes(sTo.schema, sTo.ids, sPrev, files,
-      targetNested = sTo.nestedIds, withPos = true)
-    if (dvEntries.isEmpty || files.isEmpty)
-      return base.drop(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol)
-      .limit(0)
-    // the position frame's columns collide with the withPos metadata
-    // names (__graft_dvf/__graft_dvp) — rename before the join
-    val dead = dvPositionsDf(files, dvEntries)
-      .withColumnRenamed("__graft_dvf", "__cdf_f")
-      .withColumnRenamed("__graft_dvp", "__cdf_p")
-    base.withColumn("__graft_dvfn",
-        SnapshotTable.uriPathCol(col(SnapshotTable.DvFileCol)))
-      .join(dead, col("__graft_dvfn") === col("__cdf_f") &&
-        col(SnapshotTable.DvPosCol) === col("__cdf_p"), "left_semi")
-      .drop("__graft_dvfn", SnapshotTable.DvFileCol, SnapshotTable.DvPosCol)
+    if (dvEntries.isEmpty || files.isEmpty) return readFiles(sPrev, Nil, sTo)
+    val pos = Seq(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol)
+    val survivors = readFiles(sPrev.copy(dvFiles = sPrev.dvFiles ++ dvEntries),
+      files, sTo, withPos = true).select(pos.map(col): _*)
+    readFiles(sPrev, files, sTo, withPos = true)
+      .join(survivors, pos, "left_anti")
+      .drop(pos: _*)
   }
 
   /** Stats-pruned read: files whose manifest column bounds PROVE no
@@ -1012,7 +997,7 @@ final class SnapshotTable private (
     */
   def readWhere(pred: Column): DataFrame = {
     val s = publishedSnapshot()
-    readWithDeletes(s.schema, s.ids, s, pruneFiles(s, pred)).filter(pred)
+    readFiles(s, pruneFiles(s, pred)).filter(pred)
   }
 
   /** The file subset a [[readWhere]] of `pred` would open — exposed so
@@ -1419,24 +1404,13 @@ final class SnapshotTable private (
     // manifest unopened; only the rest pay the discovery scan
     val covered = fullyMatchedFiles(base, pred, candidates0)
     val candidates = candidates0.filterNot(f => covered(f.path))
-    val hit =
-      if (candidates.isEmpty) Nil
-      else {
-        // RAW read for file discovery: input_file_name() cannot span a
-        // multi-source plan (the MoR anti-join). A file whose only
-        // matches are MoR-deleted rewrites needlessly but correctly —
-        // the survivors below ARE delete-applied
-        val hitPaths = readResolved(base.schema, base.ids, base, candidates).filter(pred)
-          .select(input_file_name().as("__f")).distinct()
-          .collect().map(r => relPath(r.getString(0))).toSet
-        candidates.filter(f => hitPaths.contains(f.path))
-      }
+    val hit = filesHolding(base, candidates, pred)
     if (hit.isEmpty && covered.isEmpty) return base // nothing matches
     val hitSet = hit.map(_.path).toSet
     // keep rows where pred is FALSE or NULL: <=> TRUE is null-safe
     val staged =
       if (hit.isEmpty) Nil
-      else stage(readWithDeletes(base.schema, base.ids, base, hit)
+      else stage(readFiles(base, hit)
         .filter(!(pred <=> lit(true))), base.spec, base.properties)
     commitStrict(base, next(base, "delete", base.schema,
       base.files.filterNot(f => hitSet.contains(f.path) || covered(f.path)) ++
@@ -1462,19 +1436,11 @@ final class SnapshotTable private (
     // from the manifest without opening them
     val covered = fullyMatchedFiles(base, pred, candidates0)
     val candidates = candidates0.filterNot(f => covered(f.path))
-    val hit =
-      if (candidates.isEmpty) Nil
-      else {
-        val hitPaths = readResolved(base.schema, base.ids, base, candidates)
-          .filter(pred)
-          .select(input_file_name().as("__f")).distinct()
-          .collect().map(r => relPath(r.getString(0))).toSet
-        candidates.filter(f => hitPaths.contains(f.path))
-      }
+    val hit = filesHolding(base, candidates, pred)
     val hitSet = hit.map(_.path).toSet
     val survivors =
       if (hit.isEmpty) Nil
-      else stage(readWithDeletes(base.schema, base.ids, base, hit)
+      else stage(readFiles(base, hit)
         .filter(!(pred <=> lit(true))), base.spec, base.properties)
     val incoming = stage(alignForWrite(df, base.schema), base.spec,
       base.properties, applyLayout = true)
@@ -1504,15 +1470,7 @@ final class SnapshotTable private (
     require(missing.isEmpty,
       s"update assigns unknown column(s): ${missing.mkString(", ")}")
     val byName = set.toMap
-    val candidates = pruneFiles(base, pred)
-    val hit =
-      if (candidates.isEmpty) Nil
-      else {
-        val hitPaths = readResolved(base.schema, base.ids, base, candidates).filter(pred)
-          .select(input_file_name().as("__f")).distinct()
-          .collect().map(r => relPath(r.getString(0))).toSet
-        candidates.filter(f => hitPaths.contains(f.path))
-      }
+    val hit = filesHolding(base, pruneFiles(base, pred), pred)
     if (hit.isEmpty) return base // nothing matches: no new snapshot
     val hitSet = hit.map(_.path).toSet
     val outCols = base.schema.fields.toIndexedSeq.map { f =>
@@ -1522,8 +1480,7 @@ final class SnapshotTable private (
         case None => col(SnapshotTable.quoted(f.name))
       }
     }
-    val rewritten = readWithDeletes(base.schema, base.ids, base, hit)
-      .select(outCols: _*)
+    val rewritten = readFiles(base, hit).select(outCols: _*)
     val staged = stage(rewritten, base.spec, base.properties)
     commitStrict(base, next(base, "update", base.schema,
       base.files.filterNot(f => hitSet.contains(f.path)) ++
@@ -1557,8 +1514,7 @@ final class SnapshotTable private (
     val byName = set.toMap
     val candidates = pruneFiles(base, pred)
     if (candidates.isEmpty) return base
-    val marked = readWithDeletes(base.schema, base.ids, base, candidates,
-        withPos = true)
+    val marked = readFiles(base, candidates, withPos = true)
       .filter(pred <=> lit(true))
       .localCheckpoint(true)
     val stagedDv = stageDvsFor(marked)
@@ -1576,9 +1532,7 @@ final class SnapshotTable private (
     val c = next(base, "update-pos", base.schema, base.files ++
       staged.map(_.copy(cols = base.ids, nested = nestedPairsOf(base),
         upd = true)))
-    commitStrict(base, c.copy(dvFiles = c.dvFiles ++
-      stagedDv.map { case (p, rows, dataPaths) =>
-        DvFileEntry(p, rows, dataPaths, c.version, "update") }))
+    commitStrict(base, withVectors(base, c, stagedDv, "update"))
   }
 
   /** SQL `UPDATE` routing — the Iceberg `write.update.mode` table
@@ -1688,6 +1642,9 @@ final class SnapshotTable private (
         s"INSERT target column $n is not in the table schema")
     val ig = integrate(base, evolved)
     val (pairs, nestedPairs) = (ig.pairs, ig.nested)
+    // the target read renders under the evolved schema by field id
+    val target = base.copy(schema = evolved, fieldIds = pairs,
+      nestedIds = ig.nestedIds2)
     // alignForWrite: a source that OMITS a defaulted column carries
     // the write-default into BOTH the UPDATE SET * and INSERT branches
     // ("the writer doesn't know the column"), matching append/upsert —
@@ -1732,27 +1689,19 @@ final class SnapshotTable private (
       else if (mor) candidates // no rewrite → no hit-refinement job:
         // positions come only from rows a clause actually fires on
       else {
-        // RAW read (input_file_name() cannot span the MoR anti-join);
-        // over-approximates hits by MoR-deleted keys only — hitRows
-        // below is delete-applied, so content stays exact. __f is
-        // captured BEFORE any join so it always binds to the scan.
-        val raw = readResolved(evolved, pairs, base, candidates,
-            targetNested = ig.nestedIds2)
-          .withColumn("__graft_f", input_file_name())
+        val rows = readFiles(base, candidates, target, withPos = true)
         val hitDf = nmbsFires match {
-          case None => raw.join(srcKeys, on, "left_semi")
+          case None => rows.join(srcKeys, on, "left_semi")
           case Some(fires) =>
-            raw.alias("t")
+            rows.alias("t")
               .join(srcKeys.withColumn("__graft_m", lit(1)), on, "left")
               .filter(col("__graft_m").isNotNull || fires)
         }
-        val hitPaths = hitDf.select(col("__graft_f")).distinct()
-          .collect().map(r => relPath(r.getString(0))).toSet
+        val hitPaths = pathsOf(hitDf)
         candidates.filter(f => hitPaths.contains(f.path))
       }
     val hitSet = hit.map(_.path).toSet
-    val hitRows = readWithDeletes(evolved, pairs, base, hit,
-      targetNested = ig.nestedIds2, withPos = mor)
+    val hitRows = readFiles(base, hit, target, withPos = mor)
     // expression-list projection under the t/s aliases: assigned
     // columns evaluate and cast to the declared type, the rest take
     // `restFrom` (t.* for UPDATE SET, NULL for column-list INSERT)
@@ -1885,11 +1834,8 @@ final class SnapshotTable private (
             upd = true)) ++
           stagedIns.map(_.copy(cols = pairs, nested = nestedPairs)))
         .copy(nestedIds = ig.nestedIds2)
-      commitStrict(base, c.copy(dvFiles = c.dvFiles ++
-        stagedDvUpd.map { case (p, rows, dataPaths) =>
-          DvFileEntry(p, rows, dataPaths, c.version, "update") } ++
-        stagedDvDel.map { case (p, rows, dataPaths) =>
-          DvFileEntry(p, rows, dataPaths, c.version) }))
+      commitStrict(base, withVectors(base,
+        withVectors(base, c, stagedDvUpd, "update"), stagedDvDel, "delete"))
     } else {
       val staged = stage(
         (emitted ++ additions).reduce(_ unionByName _),
@@ -1917,59 +1863,67 @@ final class SnapshotTable private (
     path.substring(i + marker.length)
   }
 
-  /** Manifest path of an absolute data-file URI (the inverse of the
-    * staging path layout; URI-decoded like [[stage]]'s read-back).
-    * Paths OUTSIDE the table root (importParquet adoptions are
-    * referenced by absolute path) come back unchanged — stripping the
-    * leading slash there would produce a path matching NO manifest
-    * entry, making COW hit-detection silently skip imported files.
+  private def readSnapshot(s: Snapshot): DataFrame = readFiles(s, s.files)
+
+  /** THE snapshot reader: rows of `files` (a subset of `owner`'s) with
+    * `owner`'s merge-on-read deletes applied — none when `raw` — under
+    * `as`'s columns by field id (default `owner`'s own; a changelog
+    * renders under its query endpoint, an evolving write under its
+    * evolved schema). The frame plans one [[GraftBatchScan]] over a
+    * read view of `owner` ([[GraftV2Table]]'s `view`), so every read
+    * shares the catalog scan's field-id resolution, delete-vector and
+    * equality-delete masks, and file naming. `withPos` adds each row's
+    * manifest path and ordinal as [[SnapshotTable.DvFileCol]] /
+    * [[SnapshotTable.DvPosCol]]. Legacy entries (no recorded `cols`)
+    * resolve through `owner`'s ids.
     */
-  private def relPath(uri: String): String = {
-    val p = SnapshotTable.uriPath(uri)
-    val rootPath = fs.makeQualified(root).toUri.getPath
-    if (p.startsWith(rootPath + "/")) p.stripPrefix(rootPath + "/")
-    else p
+  private def readFiles(owner: Snapshot, files: Seq[DataFileEntry],
+      as: Snapshot = null, withPos: Boolean = false,
+      raw: Boolean = false): DataFrame = {
+    val t = Option(as).getOrElse(owner)
+    if (files.isEmpty) {
+      // nothing to scan: a typed empty frame, position columns included
+      // (a row-level read whose predicate pruned every file still
+      // projects them)
+      val empty = spark.createDataFrame(new java.util.ArrayList[Row](), t.schema)
+      return if (!withPos) empty
+      else empty
+        .withColumn(SnapshotTable.DvFileCol, lit(null).cast(StringType))
+        .withColumn(SnapshotTable.DvPosCol, lit(null).cast(LongType))
+    }
+    // every column reads nullable: a file that predates one null-fills it
+    val view = owner.copy(
+      schema = SnapshotTable.nullableType(t.schema).asInstanceOf[StructType],
+      fieldIds = t.ids,
+      nestedIds = t.nestedIds,
+      files = files.map(f => if (f.cols.isEmpty) f.copy(cols = owner.ids) else f),
+      deleteFiles = if (raw) Nil else owner.deleteFiles,
+      dvFiles = if (raw) Nil else owner.dvFiles)
+    val df = DatasetBridge.ofRows(spark, DataSourceV2Relation.create(
+      new GraftV2Table(this, root.toString, None, streaming = false,
+        view = Some(view)), None, None))
+    if (!withPos) df
+    else df.select(col("*"),
+      col(GraftV2Table.MetaFileCol).as(SnapshotTable.DvFileCol),
+      col(GraftV2Table.MetaPosCol).as(SnapshotTable.DvPosCol))
   }
 
-  private def readSnapshot(s: Snapshot): DataFrame =
-    readWithDeletes(s.schema, s.ids, s, s.files)
+  /** The manifest paths a [[readFiles]] `withPos` frame's rows come from. */
+  private def pathsOf(rows: DataFrame): Set[String] =
+    rows.select(col(SnapshotTable.DvFileCol)).distinct()
+      .collect().map(_.getString(0)).toSet
 
-  /** [[readWithDvs]] plus merge-on-read equality-delete application:
-    * rows from data files that PREDATE a delete file (data seq <
-    * delete seq) and match its keys are anti-joined away. Files are
-    * grouped by their applicable-delete set (bounded by the live
-    * delete-file count, which compaction keeps small), so each group is
-    * one scan plus one anti-join per applicable delete. Positional
-    * delete vectors apply UNDERNEATH ([[readWithDvs]]), so both
-    * row-level MoR mechanisms compose.
+  /** Copy-on-write hit discovery: the `candidates` holding a live row
+    * where `pred` is TRUE — one scoped job, deletes applied, so a file
+    * whose only matches are already deleted is left alone.
     */
-  private def readWithDeletes(target: StructType, targetIds: Seq[(String, Int)],
-      owner: Snapshot, files: Seq[DataFileEntry],
-      targetNested: Seq[(String, Int)] = null,
-      withPos: Boolean = false): DataFrame = {
-    val dels = owner.deleteFiles
-    if (dels.isEmpty || files.isEmpty)
-      return readWithDvs(target, targetIds, owner, files, targetNested,
-        withPos)
-    val currentById = targetIds.map { case (n, id) => id -> n }.toMap
-    files.groupBy(f => dels.filter(_.seq > f.seq).map(_.path).toSet)
-      .toSeq.map { case (applicable, fs) =>
-        val base = readWithDvs(target, targetIds, owner, fs, targetNested,
-          withPos)
-        dels.filter(d => applicable.contains(d.path)).foldLeft(base) {
-          (df, d) =>
-            val keyNames = d.cols.map { case (_, id) =>
-              currentById.getOrElse(id, sys.error(
-                s"equality-delete file ${d.path} references dropped " +
-                  s"field id $id — dropColumn should have refused"))
-            }
-            // a USING join moves the key columns first: restore order
-            df.join(readDeleteKeys(target, d, keyNames), keyNames, "left_anti")
-              .select(df.columns.toIndexedSeq.map(c =>
-                col(SnapshotTable.quoted(c))): _*)
-        }
-      }.reduce(_ unionByName _)
-  }
+  private def filesHolding(base: Snapshot, candidates: Seq[DataFileEntry],
+      pred: Column): Seq[DataFileEntry] =
+    if (candidates.isEmpty) Nil
+    else {
+      val hit = pathsOf(readFiles(base, candidates, withPos = true).filter(pred))
+      candidates.filter(f => hit.contains(f.path))
+    }
 
   /** The positional-delete-vector coverage of `f` in `owner`: vectors
     * that list the file's manifest path (path-exact coverage; `seq`
@@ -1981,89 +1935,11 @@ final class SnapshotTable private (
   private[catalog] def dvsOf(owner: Snapshot, f: DataFileEntry): Seq[DvFileEntry] =
     owner.dvByPath.getOrElse(f.path, Nil).filter(_.seq > f.seq)
 
-  /** [[readResolved]] plus positional-delete-vector application: rows
-    * of covered files whose (file, row ordinal) is set in a live
-    * vector are anti-joined away. The vectors are read DISTRIBUTED
-    * (one tiny parquet scan, bitmaps decoded executor-side into
-    * (file, position) pairs), so no deleted-position list ever sits on
-    * the driver; uncovered files skip the machinery entirely and the
-    * join is position-exact regardless of column content — positional
-    * deletes survive any schema evolution.
-    */
-  private def readWithDvs(target: StructType, targetIds: Seq[(String, Int)],
-      owner: Snapshot, files: Seq[DataFileEntry],
-      targetNested: Seq[(String, Int)] = null,
-      withPos: Boolean = false): DataFrame = {
-    if (owner.dvFiles.isEmpty || files.isEmpty)
-      return readResolved(target, targetIds, owner, files, withPos = withPos,
-        targetNested = targetNested)
-    val (hit, clean) = files.partition(f => dvsOf(owner, f).nonEmpty)
-    if (hit.isEmpty) return readResolved(target, targetIds, owner, files,
-      withPos = withPos, targetNested = targetNested)
-    val dvEntries = hit.flatMap(f => dvsOf(owner, f)).distinct
-    val deadPos = dvPositionsDf(hit, dvEntries)
-    val scanned = readResolved(target, targetIds, owner, hit, withPos = true,
-      targetNested = targetNested)
-      // _metadata.file_path is a URI ("file:/…"); decode to the bare
-      // path through the SAME helper deleteWithVectors keys on, so
-      // percent-encoded partition values (':', '%', space) land on
-      // relToAbs' rendering instead of resurrecting deleted rows.
-      // The decoded key lives in a SIDE column: with `withPos` the
-      // caller gets the raw `_metadata.file_path` URI (uriPath is not
-      // idempotent on '%'-bearing paths — normalizing twice would
-      // double-decode)
-      .withColumn("__graft_dvfn",
-        SnapshotTable.uriPathCol(col(SnapshotTable.DvFileCol)))
-    val survivors0 = scanned.join(deadPos,
-        scanned("__graft_dvfn") === deadPos("__graft_dvf") &&
-          scanned(SnapshotTable.DvPosCol) === deadPos("__graft_dvp"),
-        "left_anti")
-      .drop("__graft_dvfn")
-    val survivors =
-      if (withPos) survivors0
-      else survivors0.drop(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol)
-    if (clean.isEmpty) survivors
-    else readResolved(target, targetIds, owner, clean, withPos = withPos,
-      targetNested = targetNested).unionByName(survivors)
-  }
-
-  /** The (normalized absolute path, row ordinal) pairs the given
-    * vectors mask within `files`, read DISTRIBUTED (one tiny parquet
-    * scan, bitmaps decoded executor-side) — no position list ever
-    * sits on the driver. Columns `__graft_dvf`/`__graft_dvp`, keyed
-    * on the `_metadata.file_path` rendering after [[uriPath]] decode.
-    */
-  private def dvPositionsDf(files: Seq[DataFileEntry],
-      dvEntries: Seq[DvFileEntry]): DataFrame = {
-    // rel-path → the NORMALIZED absolute path _metadata.file_path
-    // renders (scheme stripped) — tiny, broadcast with the decode
-    val relToAbs = spark.sparkContext.broadcast(files.map(f =>
-      f.path -> fs.makeQualified(new Path(root, f.path)).toUri.getPath).toMap)
-    import spark.implicits._
-    spark.read.schema(SnapshotTable.DvSchema)
-      .parquet(dvEntries.map(d => new Path(root, d.path).toString): _*)
-      .select(col("path"), col("dv"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (rel, bytes) =>
-        relToAbs.value.get(rel) match {
-          case None => Iterator.empty // covers a file outside this read
-          case Some(abs) =>
-            val bm = new org.roaringbitmap.RoaringBitmap()
-            bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
-            val it = bm.iterator()
-            new Iterator[(String, Long)] {
-              def hasNext: Boolean = it.hasNext
-              def next(): (String, Long) =
-                (abs, java.lang.Integer.toUnsignedLong(it.next()))
-            }
-        }
-      }.toDF("__graft_dvf", "__graft_dvp")
-  }
-
   /** Read one equality-delete file's key tuples under CURRENT names and
     * (possibly widened) types: physical columns are the write-time
     * names in `d.cols`, re-aliased to `keyNames` (id-matched, so
-    * renames don't break pending deletes).
+    * renames don't break pending deletes). The changelog's fast route
+    * semi-joins these keys; reads mask them in the scan.
     */
   private def readDeleteKeys(target: StructType, d: DeleteFileEntry,
       keyNames: Seq[String]): DataFrame = {
@@ -2080,12 +1956,14 @@ final class SnapshotTable private (
     * zero data files rewritten — and subsequent reads drop matching
     * rows from data files that predate the delete. The scale complement
     * to copy-on-write [[delete]]: a point delete against a 1 GB file
-    * costs a few KB instead of the rewrite; reads pay one broadcast-
-    * sized anti-join until [[compact]]/[[maintain]] folds the delete
-    * into a rewrite and retires the entry.
+    * costs a few KB instead of the rewrite; each scan task loads the
+    * key set into a hash set and masks matching rows
+    * ([[GraftBatchScan]]) until [[compact]]/[[maintain]] folds the
+    * delete into a rewrite and retires the entry.
     *
     * Key rows with any NULL component are ignored (SQL equality — a
-    * NULL key matches nothing). Keys appended again AFTER the delete
+    * NULL key matches nothing); NaN keys are kept, since Spark's
+    * equality matches NaN to NaN. Keys appended again AFTER the delete
     * are unaffected (sequence-number semantics). Blind-commutative:
     * lost commit races rebase and retry.
     */
@@ -2097,7 +1975,8 @@ final class SnapshotTable private (
     val aligned = keys
       .select(on.map(k => col(SnapshotTable.quoted(k))
         .cast(base.schema(k).dataType).as(k)): _*)
-      .na.drop("any").distinct()
+      .filter(on.map(k => col(SnapshotTable.quoted(k)).isNotNull).reduce(_ && _))
+      .distinct()
     val staged = stageDeleteKeys(aligned)
     if (staged.isEmpty) return base // no non-null keys: no new snapshot
     commitRetry { latest =>
@@ -2140,7 +2019,7 @@ final class SnapshotTable private (
     * rewritten. The scale story the reference's own
     * `optimize_rewrite_delete_file_threshold` knob exists to manage:
     * deleting one row from a 1 GB file costs the vector, not the
-    * rewrite; reads anti-join positions until [[compact]]/[[maintain]]
+    * rewrite; reads mask the positions until [[compact]]/[[maintain]]
     * folds vectors into a rewrite and retires them.
     *
     * vs [[delete]] (copy-on-write): same SQL semantics (TRUE deletes;
@@ -2203,18 +2082,44 @@ final class SnapshotTable private (
     // row an older vector or equality delete already hides is a no-op)
     val staged =
       if (candidates.isEmpty) Nil
-      else stageDvsFor(readResolved(base.schema, base.ids, base,
-        candidates, withPos = true).filter(pred <=> lit(true)))
+      else stageDvsFor(readFiles(base, candidates, withPos = true, raw = true)
+        .filter(pred <=> lit(true)))
     if (staged.isEmpty && covered.isEmpty) return base // nothing matched
     val c = next(base, "delete-pos", base.schema,
       base.files.filterNot(f => covered(f.path)))
-    commitStrict(base, c.copy(dvFiles = c.dvFiles ++
-      staged.map { case (p, rows, dataPaths) =>
-        DvFileEntry(p, rows, dataPaths, c.version) }))
+    commitStrict(base, withVectors(base, c, staged, "delete"))
+  }
+
+  /** `c` with `staged` vectors (path, rows, covered data paths) of
+    * kind `op` attached, after [[requireLiveCoverage]].
+    */
+  private def withVectors(base: Snapshot, c: Snapshot,
+      staged: Seq[(String, Long, Seq[String])], op: String): Snapshot = {
+    requireLiveCoverage(base, staged.flatMap(_._3))
+    c.copy(dvFiles = c.dvFiles ++ staged.map { case (p, rows, dataPaths) =>
+      DvFileEntry(p, rows, dataPaths, c.version, op) })
+  }
+
+  /** Every path new delete vectors cover must be a live data file of
+    * the snapshot they were computed against: a vector over any other
+    * path masks nothing, so the rows it was written to delete would
+    * silently stay.
+    */
+  private def requireLiveCoverage(base: Snapshot,
+      covered: Iterable[String]): Unit = {
+    val live = base.files.iterator.map(_.path).toSet
+    val phantom = covered.iterator.filterNot(live.contains).toSeq.distinct
+    if (phantom.nonEmpty)
+      throw new IllegalStateException(
+        s"delete vectors cover ${phantom.size} path(s) that are not live " +
+          s"data files of version ${base.version} at $root (" +
+          phantom.take(3).mkString(", ") +
+          (if (phantom.size > 3) ", …" else "") + ") — refusing a " +
+          "commit whose deletes would not apply")
   }
 
   /** Roaring-bitmap delete vectors for a frame carrying
-    * ([[SnapshotTable.DvFileCol]] = raw file URI, [[SnapshotTable
+    * ([[SnapshotTable.DvFileCol]] = manifest path, [[SnapshotTable
     * .DvPosCol]] = row ordinal): positions group per file EXECUTOR-side
     * (no deleted-position list ever on the driver), each file's bitmap
     * is built, run-optimized and serialized in its task, and the
@@ -2226,18 +2131,12 @@ final class SnapshotTable private (
     *         vector file; empty when no position was marked.
     */
   private def stageDvsFor(positions: DataFrame): Seq[(String, Long, Seq[String])] = {
-    val rootPathStr = fs.makeQualified(root).toUri.getPath
     import spark.implicits._
     val perFile = positions
       .select(col(SnapshotTable.DvFileCol), col(SnapshotTable.DvPosCol))
       .as[(String, Long)]
       .groupByKey(_._1)
-      .mapGroups { (uri, it) =>
-        val p = SnapshotTable.uriPath(uri)
-        val rel =
-          if (p.startsWith(rootPathStr + "/"))
-            p.stripPrefix(rootPathStr + "/")
-          else p
+      .mapGroups { (rel, it) =>
         val bm = new org.roaringbitmap.RoaringBitmap()
         it.foreach { case (_, pos) =>
           require(pos <= 0xFFFFFFFFL,
@@ -2277,8 +2176,8 @@ final class SnapshotTable private (
 
   /** Vectors still applicable given the post-commit data-file list: an
     * entry retires when NONE of its covered paths is live (every
-    * covered file was rewritten — the rewrite read through
-    * [[readWithDvs]], folding the vector in).
+    * covered file was rewritten — the rewrite read through the
+    * vector's mask, folding it in).
     */
   private def dvLive(files: Seq[DataFileEntry],
       dvs: Seq[DvFileEntry]): Seq[DvFileEntry] = {
@@ -2373,124 +2272,6 @@ final class SnapshotTable private (
     }
   }
 
-  /** Read `files` under the `target` schema, matching file columns to
-    * target columns by FIELD ID (`targetIds`): a file written before a
-    * rename reads through its old physical name, a file written before
-    * a column was added null-fills it, and a file still containing a
-    * DROPPED-then-re-added name contributes NULLs for the new column
-    * (its physical data belongs to the retired id — Iceberg
-    * no-resurrection semantics). Files sharing a write schema are read
-    * in ONE `spark.read` (so the per-commit batch stays a single scan);
-    * legacy entries without recorded `cols` map positionally via the
-    * owning snapshot's ids.
-    */
-  private def readResolved(target: StructType, targetIds: Seq[(String, Int)],
-      owner: Snapshot, files: Seq[DataFileEntry],
-      withPos: Boolean = false,
-      targetNested: Seq[(String, Int)] = null): DataFrame = {
-    if (files.isEmpty) {
-      // the position columns must exist even on the zero-file frame —
-      // a row-level scan whose predicate pruned EVERY file still
-      // projects them (and typed, so downstream schemas agree)
-      val empty = spark.createDataFrame(new java.util.ArrayList[Row](), target)
-      return if (!withPos) empty
-      else empty
-        .withColumn(SnapshotTable.DvFileCol, lit(null).cast(StringType))
-        .withColumn(SnapshotTable.DvPosCol, lit(null).cast(LongType))
-    }
-    // nested struct-field ids of the TARGET schema ("<pid>.<name>" →
-    // id); null means "the owner snapshot's" (the common case — an
-    // evolving write passes its own so new nested fields resolve)
-    val tnMap = Option(targetNested).getOrElse(owner.nestedIds).toMap
-    val idByName = targetIds.toMap
-    val fieldById: Map[Int, StructField] =
-      target.fields.toIndexedSeq
-        .flatMap(f => idByName.get(f.name).map(_ -> f)).toMap
-    val groups = files.groupBy(f =>
-      (if (f.cols.nonEmpty) f.cols else owner.ids, f.nested))
-    val parts = groups.toSeq.map { case ((pairs, fileNested), fs) =>
-      val live = pairs.filter { case (_, id) => fieldById.contains(id) }
-      // this file group's write-time (parentId, writeName) per nested id
-      val fileNestedById: Map[Int, (Int, String)] =
-        fileNested.flatMap { case (k, id) =>
-          val dot = k.indexOf('.')
-          if (dot <= 0) None
-          else k.substring(0, dot).toIntOption
-            .map(pid => id -> (pid, k.substring(dot + 1)))
-        }.toMap
-      // explicit leaf-file list: Spark takes each file's parent as its
-      // base path, so the staging dirs' __graft_p=... segments do NOT
-      // surface as a partition column (pinned in SnapshotTableSpec);
-      // requesting the CURRENT (possibly widened) type per id lets the
-      // parquet reader widen older int32/float pages at scan.
-      // STRUCT columns resolve one level deep by NESTED field id: the
-      // physical request uses the file's write-time nested names, and
-      // `rebuild` reconstructs the target struct (renames re-aliased,
-      // added/dropped-and-readded fields null-filled, struct NULLness
-      // preserved). A field without a tracked id — or a file from
-      // before nested tracking — maps by name, the legacy behavior.
-      val rebuild = scala.collection.mutable.Map.empty[String, Column]
-      val physFields = live.map { case (wn, id) =>
-        fieldById(id).dataType match {
-          case st: StructType =>
-            val resolved = st.fields.toIndexedSeq.map { nf =>
-              tnMap.get(s"$id.${nf.name}") match {
-                case Some(nid) => fileNestedById.get(nid) match {
-                  case Some((p, fwn)) if p == id => (nf, Some(fwn))
-                  case Some(_) => (nf, None) // retired parent: never read
-                  case None =>
-                    if (fileNested.isEmpty) (nf, Some(nf.name)) // legacy
-                    else (nf, None) // file predates the field (or re-add)
-                }
-                case None => (nf, Some(nf.name)) // untracked: by name
-              }
-            }
-            val physNested = resolved.collect { case (nf, Some(fwn)) =>
-              StructField(fwn, nf.dataType, nullable = true) }
-            val passthrough =
-              resolved.forall { case (nf, r) => r.contains(nf.name) }
-            if (!passthrough) {
-              val parent = col(SnapshotTable.quoted(wn))
-              rebuild(wn) = when(parent.isNull,
-                  lit(null).cast(StructType(st.fields.map(_.copy(nullable = true)))))
-                .otherwise(struct(resolved.map {
-                  case (nf, Some(fwn)) => parent.getField(fwn).as(nf.name)
-                  case (nf, None) => lit(null).cast(nf.dataType).as(nf.name)
-                }: _*))
-            }
-            StructField(wn, StructType(physNested), nullable = true)
-          case dt => StructField(wn, dt, nullable = true)
-        }
-      }
-      val physical = StructType(physFields)
-      val df = spark.read.schema(physical)
-        .parquet(fs.map(f => new Path(root, f.path).toString): _*)
-      val writeNameById = live.map { case (wn, id) => id -> wn }.toMap
-      val cols = target.fields.toIndexedSeq.map { tf =>
-        idByName.get(tf.name).flatMap(writeNameById.get) match {
-          case Some(wn) => rebuild.get(wn) match {
-            case Some(rebuilt) => rebuilt.as(tf.name)
-            case None => col(SnapshotTable.quoted(wn)).as(tf.name)
-          }
-          case None =>
-            // a file that predates the column surfaces its
-            // initial-default (Iceberg v3) — plain NULL otherwise
-            SnapshotTable.initialDefault(tf)
-              .getOrElse(lit(null).cast(tf.dataType)).as(tf.name)
-        }
-      }
-      // the hidden parquet metadata columns ride through the projection
-      // when positional-delete application (or position discovery)
-      // needs them — file path + row ordinal within the file
-      val extra =
-        if (!withPos) Nil
-        else Seq(col("_metadata.file_path").as(SnapshotTable.DvFileCol),
-          col("_metadata.row_index").as(SnapshotTable.DvPosCol))
-      df.select(cols ++ extra: _*)
-    }
-    parts.reduce(_ unionByName _)
-  }
-
   // ------------------------------------------------------------------
   // Writes
   // ------------------------------------------------------------------
@@ -2554,7 +2335,7 @@ final class SnapshotTable private (
     // read through the explicit LEAF-FILE list, never the directory:
     // spark.read.parquet(dir) infers Hive-style partition columns from
     // directory names — those columns would enter the schema and the
-    // per-file stats (min=max=value, nullCount=0), but readResolved
+    // per-file stats (min=max=value, nullCount=0), but the scan
     // later addresses leaf files directly with an explicit schema, so
     // they'd come back all-NULL: manifest stats contradicting scans,
     // and an adopted partitioned dataset silently losing its partition
@@ -2714,11 +2495,13 @@ final class SnapshotTable private (
     // partitions) — the cost class of the rewrite itself.
     val idByName = ig.ids2.toMap
     val op = s"upsert[${keyCols.map(idByName).mkString(",")}]"
+    // the base read renders under the evolved schema by field id
+    val target = base.copy(schema = evolved, fieldIds = pairs,
+      nestedIds = ig.nestedIds2)
     base.spec match {
       case None =>
         // unpartitioned: whole-table rewrite, still one atomic commit
-        val current = readWithDeletes(evolved, pairs, base, base.files,
-          targetNested = ig.nestedIds2)
+        val current = readFiles(base, base.files, target)
         val survivors = current.join(keys, keyCols, "left_anti")
         val oldKeys = current.select(keyCols.map(col): _*).distinct()
         val matched = incoming.join(oldKeys, keyCols, "left_semi")
@@ -2734,13 +2517,11 @@ final class SnapshotTable private (
         val pExpr = SnapshotTable.partitionExpr(spec, evolved,
           base.properties)
         val touched = incoming.select(pExpr.as("p")).distinct()
-          .unionByName(readWithDeletes(evolved, pairs, base, base.files,
-              targetNested = ig.nestedIds2)
+          .unionByName(readFiles(base, base.files, target)
             .join(keys, keyCols, "left_semi").select(pExpr.as("p")).distinct())
           .distinct().collect().map(r => Option(r.getString(0))).toSet
         val touchedFiles = base.files.filter(f => touched.contains(f.partition))
-        val current = readWithDeletes(evolved, pairs, base, touchedFiles,
-          targetNested = ig.nestedIds2)
+        val current = readFiles(base, touchedFiles, target)
         val survivors = current.join(keys, keyCols, "left_anti")
         // keys of the touched partitions suffice for the matched/fresh
         // split: any base row matching an incoming key is in a touched
@@ -2911,7 +2692,7 @@ final class SnapshotTable private (
       else {
         val rows = pFiles.map(_.rows).sum
         val nOut = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-        val raw = readWithDeletes(latest.schema, latest.ids, latest, pFiles)
+        val raw = readFiles(latest, pFiles)
         val data =
           if (zOrderBy.nonEmpty) {
             // N-D Morton clustering (Iceberg/Delta Z-ORDER rewrite):
@@ -4195,6 +3976,7 @@ final class SnapshotTable private (
         "use snapshot (write-set revalidation) or serializable")
     }
     val touched = dvs.flatMap(_._3).toSet // data paths our vectors cover
+    requireLiveCoverage(base, touched)
     commitRetry { latest =>
       if (latest.version != baseVersion) {
         def conflict(why: String): Nothing =
@@ -4247,13 +4029,6 @@ final class SnapshotTable private (
           DvFileEntry(p, rows, dataPaths, c.version, dvOp) })
     }
   }
-
-  /** Decoded absolute filesystem path of the table root — the prefix
-    * the delta writers strip from scanned file URIs to recover
-    * manifest-relative paths (same discipline as [[relPath]]).
-    */
-  private[catalog] def qualifiedRootPath: String =
-    fs.makeQualified(root).toUri.getPath
 }
 
 object SnapshotTable {
@@ -4281,25 +4056,16 @@ object SnapshotTable {
     * `_metadata.file_path` / `input_file_name()`: percent-encoding
     * rides ON TOP of Hive's own %XX dir-name escaping, so decode
     * exactly ONCE via `URI.getPath`; strings that don't parse as a
-    * URI (or whose path component is empty) pass through raw. This is
-    * the SINGLE normalization every delete-vector / manifest path
-    * comparison shares — `relPath`, `stagedSubPath`,
-    * `deleteWithVectors` and `readWithDvs` must all key on the same
-    * rendering or a vector covers a phantom path (the DELETE silently
-    * never applies) / the read-side anti-join misses (deleted rows
-    * resurrect) whenever a partition value carries ':', '%' or a
-    * space.
+    * URI (or whose path component is empty) pass through raw. Only the
+    * read-backs of freshly staged delete-key and vector files
+    * ([[stagedSubPath]], `rewriteDeleteVectors`) decode paths; data
+    * files are named by their manifest path everywhere else.
     */
   private[catalog] def uriPath(uri: String): String =
-    graft.functions.UriPath.decode(uri)
-
-  /** [[uriPath]] as a column: the [[graft.functions.UriPathExpr]]
-    * codegen expression (VERDICT r17 #5 — formerly a Scala `udf`, the
-    * engine's last interpreted per-row hop, on the MoR DV anti-join
-    * read path of every scanned row of a DV-covered file).
-    */
-  private[catalog] val uriPathCol: Column => Column =
-    graft.functions.UriPath.uriPath
+    try {
+      val p = new java.net.URI(uri).getPath
+      if (p == null || p.isEmpty) uri else p
+    } catch { case _: java.net.URISyntaxException => uri }
 
   /** One aggregate for [[SnapshotTable.metadataAggregate]] /
     * [[SnapshotTable.aggregate]]: `op` ∈ `count_star` | `count` |
@@ -4466,9 +4232,9 @@ object SnapshotTable {
     */
   private[graft] val PartCol = "__graft_p"
 
-  /** Projection aliases for the hidden parquet metadata columns the
-    * positional-delete machinery rides on (file path URI + row ordinal
-    * within the file) — never part of a table schema.
+  /** Projection aliases for the row-identity columns the positional-
+    * delete machinery rides on (the data file's manifest path + row
+    * ordinal within the file) — never part of a table schema.
     */
   private[graft] val DvFileCol = "__graft_dvf"
   private[graft] val DvPosCol = "__graft_dvp"
@@ -4481,6 +4247,16 @@ object SnapshotTable {
     StructField("path", StringType, nullable = false),
     StructField("dv", BinaryType, nullable = false),
     StructField("rows", LongType, nullable = false)))
+
+  /** `dt` with every field, element and map value nullable. */
+  private[catalog] def nullableType(dt: DataType): DataType = dt match {
+    case st: StructType => StructType(st.fields.map(f =>
+      f.copy(dataType = nullableType(f.dataType), nullable = true)))
+    case ArrayType(et, _) => ArrayType(nullableType(et), containsNull = true)
+    case MapType(kt, vt, _) => MapType(kt, nullableType(vt),
+      valueContainsNull = true)
+    case other => other
+  }
 
   /** Backtick-escape a column name for `functions.col`. */
   private[graft] def quoted(name: String): String =

@@ -170,7 +170,8 @@ object GraftSqlDml
       case v: View => targetOf(v.child)
       case dsv2: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
         dsv2.table match {
-          case g: graft.catalog.GraftV2Table =>
+          // a snapshot read's view is a frame, not the table
+          case g: graft.catalog.GraftV2Table if g.view.isEmpty =>
             Some(GraftTarget(g.table, g.pinned))
           case _ => None
         }

@@ -136,6 +136,17 @@ object ParquetReadBridge {
     columnarReadFunction(spark, dataSchema,
       StructType(requiredSchema.fields :+ rowIndexField), filters)
 
+  /** Report the split a task reads to `input_file_name()` — what
+    * Spark's own `FilePartitionReader` sets per file (the URL-encoded
+    * path); [[unsetInputFile]] clears it when the reader closes.
+    */
+  def setInputFile(path: String, start: Long, length: Long): Unit =
+    org.apache.spark.rdd.InputFileBlockHolder.set(
+      SparkPath.fromPathString(path).urlEncoded, start, length)
+
+  def unsetInputFile(): Unit =
+    org.apache.spark.rdd.InputFileBlockHolder.unset()
+
   /** One whole-file split (graft data files are written single-split
     * sized by the table's target file size).
     */

@@ -152,40 +152,4 @@ class ExprParityPropSpec extends AnyFunSuite {
     assert(bad.count() == 0L,
       s"divergence: ${bad.take(3).mkString("; ")}")
   }
-
-  test("UriPathExpr == udf(java.net.URI) formulation on URI-shaped strings") {
-    // the exact interpreted formulation the codegen expression replaced
-    // (VERDICT r17 #5): decode once via URI.getPath, raw on non-URIs
-    // and empty paths
-    val refUdf = udf((s: String) =>
-      try {
-        val p = new java.net.URI(s).getPath
-        if (p == null || p.isEmpty) s else p
-      } catch { case _: java.net.URISyntaxException => s })
-    val segs = Vector("data", "tbl", "p=1", "d%20ir", "x%25y", "a%3Ab",
-      "b 2", "c:d", "é", "m-0.parquet", "_graft_log", "00001", "~u")
-    val r = new Random(1234)
-    def path(n: Int): String =
-      (1 to n).map(_ => segs(r.nextInt(segs.length))).mkString("/", "/", "")
-    val uris = Seq("", "/", "file:///", "file://host", "file://host/p%20q",
-      "not a uri ::", "relative/path", "s3a://bucket/k%2Fey",
-      "hdfs://nn:8020/w/t/part-0.parquet", "file:///plain/dir/f.parquet",
-      "q?x=1#frag", "file:///a/b?q=1", "%") ++
-      (1 to 200).map { _ =>
-        val scheme = r.nextInt(4) match {
-          case 0 => "file://" case 1 => "s3a://bkt" case 2 => "" case _ => "hdfs://nn:8020"
-        }
-        scheme + path(1 + r.nextInt(4))
-      }
-    val bad = uris.toDF("u")
-      .select(col("u"), graft.functions.UriPath.uriPath(col("u")).as("fast"),
-        refUdf(col("u")).as("ref"))
-      .filter(not(col("fast") <=> col("ref")))
-    assert(bad.count() == 0L,
-      s"divergence: ${bad.take(5).mkString("; ")}")
-    // null passes through as null (NullIntolerant unary)
-    val n = Seq[String](null).toDF("u")
-      .select(graft.functions.UriPath.uriPath(col("u"))).collect()
-    assert(n.head.isNullAt(0))
-  }
 }
