@@ -3476,8 +3476,8 @@ object Queries {
     // only and classify as blind), never the two-endpoint diff the
     // netted machinery would pay, and the appended rows render under
     // the END schema by field id (value→score, props under its fresh
-    // id). The streaming side has served this shape directly since
-    // r17 (EvolvedShapes); this is its batch mirror.
+    // id). The change-feed stream serves this shape directly through
+    // the same field-id scan (GraftBatchScan); this is its batch mirror.
     QueryDef("snap_changes_evolved_append",
       (s, dir) => {
         val tbl = evolutionSnapshot(s, dir)
@@ -4580,7 +4580,7 @@ object Queries {
 
     QueryDef("sql_stream_evolved_tail",
       // r16: the appends-only tail STREAMS ACROSS schema evolutions by
-      // field id (GraftTableStream shape registry): a backfill whose
+      // field id (each batch one GraftBatchScan): a backfill whose
       // range spans a RENAME + an initial-DEFAULTED ADD delivers
       // pre-evolution files under the pinned (post-evolution) columns
       // — the renamed column reads the files' write-time name, the

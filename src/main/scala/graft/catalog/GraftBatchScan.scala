@@ -754,6 +754,16 @@ final class GraftBatchScan(
 
 object GraftBatchScan {
 
+  /** A scan of a read view ([[SnapshotTable.readView]]) with no pushed
+    * filters and no SPJ claim — what each micro-batch of a table stream
+    * plans its appended files through. The view itself never streams.
+    */
+  def ofView(table: SnapshotTable, view: Snapshot,
+      required: StructType): GraftBatchScan =
+    new GraftBatchScan(table, view, required, Array.empty, None,
+      stream = () => throw new UnsupportedOperationException(
+        s"a read view of ${table.root} does not stream"))
+
   /** Fold per-file manifest bounds into table-level (min, max) as
     * CATALYST-internal values (Int days for dates, Long micros for
     * timestamps, `Decimal` for decimals) — the representation catalyst
@@ -1243,10 +1253,11 @@ object GraftPartitionReaderFactory {
   private[catalog] final val FileMeta = -2
 
   /** A constant column vector of `v` (Catalyst-internal) — the
-    * synthesized `_graft_file` column and defaulted absent columns.
+    * synthesized `_graft_file` column, defaulted absent columns and the
+    * change feed's `_change_type`.
     * Types mirror `SnapshotTable.renderDefault`'s allowed universe.
     */
-  private[catalog] def constVector(rows: Int, dt: DataType, v: Any)
+  private[graft] def constVector(rows: Int, dt: DataType, v: Any)
       : org.apache.spark.sql.vectorized.ColumnVector = {
     val cv = new org.apache.spark.sql.execution.vectorized
       .ConstantColumnVector(rows, dt)

@@ -56,13 +56,10 @@ final class GraftStreamingWrite(
   // labels them with planned.schema's ids — and the commit-time check
   // (latest vs planned, both post-evolution) would pass, silently
   // adopting mislabeled files
-  {
-    def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-    if (shape(writeSchema) != shape(planned.schema))
-      throw new SnapshotConflictException(
-        s"table at ${table.root} evolved its schema between query " +
-          "analysis and write construction — restart the query to replan")
-  }
+  if (!SnapshotTable.sameColumns(writeSchema, planned.schema))
+    throw new SnapshotConflictException(
+      s"table at ${table.root} evolved its schema between query " +
+        "analysis and write construction — restart the query to replan")
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {

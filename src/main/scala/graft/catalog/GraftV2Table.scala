@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.catalog.constraints.Constraint
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDynamicOverwrite, SupportsOverwrite, SupportsTruncate, V1Write, Write, WriteBuilder}
@@ -50,8 +51,24 @@ final class GraftV2Table(
 
   override def name(): String = ident
 
-  override val schema: StructType =
+  private val declared: StructType =
     view.map(_.schema).getOrElse(table.schemaAt(pinned))
+
+  /** Every column nullable, as in the read view: a file that predates
+    * a column null-fills it, whatever nullability the snapshot records.
+    */
+  override val schema: StructType =
+    SnapshotTable.nullableType(declared).asInstanceOf[StructType]
+
+  /** The snapshot's non-nullable columns as enforced CHECK constraints:
+    * [[schema]] reads every column nullable, so Spark's write analysis
+    * refuses a NULL in INSERT, UPDATE and MERGE through these instead.
+    */
+  override def constraints(): Array[Constraint] =
+    declared.fields.filterNot(_.nullable).map(f =>
+      Constraint.check(s"${f.name}_not_null")
+        .predicateSql(s"${SnapshotTable.quoted(f.name)} IS NOT NULL")
+        .enforced(true).build(): Constraint)
 
   override def partitioning(): Array[Transform] =
     table.publishedSnapshot().spec.toArray.map { ps =>
@@ -96,13 +113,11 @@ final class GraftV2Table(
     * disagreeing with the analyzed schema: the snapshot a scan reads
     * must carry the analyzed (name, type) columns.
     */
-  private def guardSchemaDrift(snap: Snapshot): Unit = {
-    def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-    require(shape(snap.schema) == shape(schema),
+  private def guardSchemaDrift(snap: Snapshot): Unit =
+    require(SnapshotTable.sameColumns(snap.schema, schema),
       s"snapshot table ${table.root} evolved its schema since this " +
         "statement was analyzed — re-run the statement (or re-create " +
         "the view / re-run spark.read) to pick up the new schema")
-  }
 
   /** A row-level operation's scan of version `snap`: every data column
     * it projects must be there at the analyzed type.
@@ -111,7 +126,8 @@ final class GraftV2Table(
     required.fieldNames.filterNot(GraftV2Table.MetaCols.contains).foreach {
       n =>
         val t = schema(n).dataType
-        require(snap.schema.fields.exists(f => f.name == n && f.dataType == t),
+        require(snap.schema.fields.exists(f => f.name == n &&
+            SnapshotTable.nullableType(f.dataType) == t),
           s"snapshot table ${table.root}: column $n is not ${t.sql} at " +
             s"version ${snap.version}, which this row-level operation " +
             "reads — publish() or abortAudit() the staged schema change, " +
@@ -240,8 +256,7 @@ final class GraftV2Table(
         }
         def posLong(key: String): Option[Long] =
           GraftV2Table.positiveOption(key, Option(options.get(key)))
-        new graft.streaming.GraftTableStream(table, schema, required,
-          filters.toIndexedSeq, from,
+        new graft.streaming.GraftTableStream(table, schema, required, from,
           options.getBoolean("skipNonAppends", false),
           posLong("maxVersionsPerTrigger"),
           posLong("maxFilesPerTrigger").map { n =>
@@ -535,7 +550,8 @@ final class GraftChangesV2Table(
   override def name(): String = ident
 
   override val schema: StructType = graft.streaming.GraftChangesSource
-    .changeSchema(table.schemaAt(window.map(_._2)))
+    .changeSchema(SnapshotTable.nullableType(table.schemaAt(window.map(_._2)))
+      .asInstanceOf[StructType])
 
   override def partitioning(): Array[Transform] = Array.empty
   override def properties(): java.util.Map[String, String] =

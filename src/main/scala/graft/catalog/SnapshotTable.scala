@@ -544,7 +544,8 @@ final class SnapshotTable private (
     * renders pre-evolution appends under the endpoint schema (renames
     * follow ids, added columns null-fill or surface their recorded
     * initial default), so they classify as blind here exactly as the
-    * streaming side's EvolvedShapes direct serve does.
+    * change-feed stream's direct serve, which reads them through the
+    * same scan, does.
     */
   private[graft] def changesRoute(fromVersion: Long, toVersion: Long): String =
     if (fromVersion == toVersion) "netzero"
@@ -1891,17 +1892,10 @@ final class SnapshotTable private (
         .withColumn(SnapshotTable.DvFileCol, lit(null).cast(StringType))
         .withColumn(SnapshotTable.DvPosCol, lit(null).cast(LongType))
     }
-    // every column reads nullable: a file that predates one null-fills it
-    val view = owner.copy(
-      schema = SnapshotTable.nullableType(t.schema).asInstanceOf[StructType],
-      fieldIds = t.ids,
-      nestedIds = t.nestedIds,
-      files = files.map(f => if (f.cols.isEmpty) f.copy(cols = owner.ids) else f),
-      deleteFiles = if (raw) Nil else owner.deleteFiles,
-      dvFiles = if (raw) Nil else owner.dvFiles)
     val df = DatasetBridge.ofRows(spark, DataSourceV2Relation.create(
       new GraftV2Table(this, root.toString, None, streaming = false,
-        view = Some(view)), None, None))
+        view = Some(SnapshotTable.readView(owner, files, t, raw))),
+      None, None))
     if (!withPos) df
     else df.select(col("*"),
       col(GraftV2Table.MetaFileCol).as(SnapshotTable.DvFileCol),
@@ -4247,6 +4241,35 @@ object SnapshotTable {
     StructField("path", StringType, nullable = false),
     StructField("dv", BinaryType, nullable = false),
     StructField("rows", LongType, nullable = false)))
+
+  /** The read view [[GraftBatchScan]] plans a snapshot-layer read over:
+    * `owner` holding only `files` under `as`'s columns by field id,
+    * with `owner`'s merge-on-read deletes, none when `raw`. Every column
+    * reads nullable, because a file that predates one null-fills it.
+    * Legacy entries (no recorded `cols`) resolve through `owner`'s ids;
+    * a caller that knows the version which appended them stamps them
+    * with that version's ids first, as the micro-batch streams do.
+    */
+  private[graft] def readView(owner: Snapshot, files: Seq[DataFileEntry],
+      as: Snapshot, raw: Boolean): Snapshot =
+    owner.copy(
+      schema = nullableType(as.schema).asInstanceOf[StructType],
+      fieldIds = as.ids,
+      nestedIds = as.nestedIds,
+      files = files.map(f => if (f.cols.isEmpty) f.copy(cols = owner.ids) else f),
+      deleteFiles = if (raw) Nil else owner.deleteFiles,
+      dvFiles = if (raw) Nil else owner.dvFiles)
+
+  /** Whether `a` and `b` have the same column names and types, nested
+    * nullability aside: a table surface reads every column nullable
+    * ([[nullableType]]), while a snapshot keeps the nullability it was
+    * written with.
+    */
+  private[graft] def sameColumns(a: StructType, b: StructType): Boolean = {
+    def shape(s: StructType) =
+      s.fields.toSeq.map(f => (f.name, nullableType(f.dataType)))
+    shape(a) == shape(b)
+  }
 
   /** `dt` with every field, element and map value nullable. */
   private[catalog] def nullableType(dt: DataType): DataType = dt match {

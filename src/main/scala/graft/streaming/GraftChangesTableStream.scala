@@ -1,12 +1,17 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.graftbridge.ParquetReadBridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.catalog.SnapshotTable
+import graft.catalog.{DataFileEntry, GraftBatchScan, GraftPartitionReaderFactory, Snapshot, SnapshotTable}
 
 /** CDC change feed of a snapshot catalog table as a DSv2 micro-batch
   * stream — `spark.readStream.table("graft.db.\`t#changes\`")`: where
@@ -36,7 +41,11 @@ import graft.catalog.SnapshotTable
   * The column set is pinned at query start (the analyzed `#changes`
   * schema); later batches conform — added columns are ignored until
   * restart, renamed-away columns null-fill (the V1 source's
-  * fixed-schema-per-run contract).
+  * fixed-schema-per-run contract). A blind-append range is read
+  * directly: its appended files plan as one [[GraftBatchScan]] over a
+  * read view of the snapshot published at stream construction, the
+  * table tail's field-id read ([[GraftTableStream]]), with
+  * `_change_type = 'insert'` prepended.
   */
 final class GraftChangesTableStream(
     table: SnapshotTable,
@@ -98,9 +107,6 @@ final class GraftChangesTableStream(
   private def stageDir(s: Long, e: Long): Path =
     new Path(stageRoot, s"b_${s}_$e")
 
-  private def shp(st: StructType) =
-    st.fields.toSeq.map(f => (f.name, f.dataType))
-
   /** The table columns of the pinned change schema (everything after
     * the leading `_change_type`).
     */
@@ -112,59 +118,14 @@ final class GraftChangesTableStream(
   private val directRequired = StructType(
     required.fields.filterNot(_.name == "_change_type"))
 
-  /** Pinned FIELD-ID state for evolved direct serving — the tail's
-    * discipline ([[GraftTableStream]]): captured at stream
-    * construction; None when the table evolved between analysis and
-    * construction (such runs stage evolved ranges — correct, just not
-    * direct).
+  /** The snapshot published at stream construction, whose field ids
+    * direct reads resolve through; None when the table evolved between
+    * analysis and construction (such runs stage every range — correct,
+    * just not direct).
     */
-  private val pinnedIds: Option[(Seq[(String, Int)], Seq[(String, Int)])] = {
+  private val pinnedSnap: Option[Snapshot] = {
     val pub = table.publishedSnapshot()
-    if (shp(pub.schema) == shp(dataSchema))
-      Some((pub.ids, pub.nestedIds))
-    else None
-  }
-
-  // ---- evolved-shape DIRECT reads (r17, VERDICT r16 #8): a blind-
-  // append range on the far side of a schema evolution previously fell
-  // to the staged diff — one parquet write-amplification of the batch
-  // just because the shape differed. The tail's field-id resolution
-  // serves it directly: each distinct historical shape registers a
-  // physical read schema positionally aligned with [[directRequired]]
-  // (renames follow ids, absent columns null-fill under reserved names
-  // or surface their recorded initial default). Unresolvable shapes
-  // memoize None and stage — the fallback is never an error here.
-
-  private val shapeIdx = scala.collection.mutable.LinkedHashMap
-    .empty[(Seq[(String, Int)], Seq[(String, Int)]), Option[Int]]
-  private val shapeSchemas = scala.collection.mutable.ArrayBuffer
-    .empty[(StructType, Seq[(Int, org.apache.spark.sql.types.DataType, Any)])]
-
-  /** Direct shape index for a version's snapshot: 0 = the pinned
-    * shape, k ≥ 1 = the k-th registered evolved shape, None = not
-    * directly servable (stage instead).
-    */
-  private def directShapeFor(vSnap: graft.catalog.Snapshot): Option[Int] = {
-    // the pinned fast path needs ID equality, not just shape equality
-    // (ADVICE r17): two same-typed columns swapped via renames leave
-    // the shape identical while name-based reads would surface the
-    // wrong column's data — such versions route through field-id
-    // resolution like any other evolved shape
-    if (shp(vSnap.schema) == shp(dataSchema) &&
-        pinnedIds.exists { case (ids, nested) =>
-          vSnap.ids == ids && vSnap.nestedIds == nested
-        }) return Some(0)
-    shapeIdx.getOrElseUpdate((vSnap.ids, vSnap.nestedIds), {
-      pinnedIds.flatMap { case (pinnedSeq, pinnedNested) =>
-        EvolvedShapes.resolve(table.session, directRequired, dataSchema,
-            pinnedSeq.toMap, pinnedNested, vSnap) match {
-          case Left(_) => None // unresolvable: the staged path conforms
-          case Right((phys, defaults)) =>
-            shapeSchemas += ((phys, defaults))
-            Some(shapeSchemas.size)
-        }
-      }
-    })
+    Option.when(SnapshotTable.sameColumns(pub.schema, dataSchema))(pub)
   }
 
   /** Direct-serve plan for a pure blind-append range: the appended
@@ -172,13 +133,11 @@ final class GraftChangesTableStream(
     * `_change_type = 'insert'` synthesized per row — the COMMON case
     * (steady-state ingest) never write-amplifies the feed through the
     * checkpoint. Versions on either side of a schema EVOLUTION serve
-    * directly too (r17): their shapes register evolved physical read
-    * schemas resolved by field id, the tail's discipline. None when
-    * any version in range is row-changing (staging conforms the diff),
-    * has a shape field ids cannot resolve against the pinned columns
-    * (staging conforms), or is expired (staging serves the catch-up
-    * diff between living endpoints). Structural checks, never
-    * operation strings. Replays re-read the table files; a file
+    * directly too: the scan resolves every file by field id. None when
+    * any version in range is row-changing (staging conforms the diff)
+    * or is expired (staging serves the catch-up diff between living
+    * endpoints). Structural checks, never operation strings. Replays
+    * re-read the table files; a file
     * compacted AND expired inside a restart gap degrades, not crashes:
     * expiry can only delete a data file once NO live snapshot
     * references it, so a vanished direct file implies the range
@@ -192,20 +151,14 @@ final class GraftChangesTableStream(
     * deliberately declined (SURVEY §19.8 #4).
     */
   private def directAppendFiles(s: Long, e: Long,
-      fs: org.apache.hadoop.fs.FileSystem): Option[Seq[(String, Long, Int)]] = {
-    val out = Seq.newBuilder[(String, Long, Int)]
+      fs: org.apache.hadoop.fs.FileSystem): Option[Seq[DataFileEntry]] = {
+    val out = Seq.newBuilder[DataFileEntry]
     var prev: Option[(Long, Set[String])] = None
     var v = s + 1
     while (v <= e) {
       val snap =
         try table.snapshotAt(v)
         catch { case scala.util.control.NonFatal(_) => return None }
-      // 0 = pinned shape; k ≥ 1 = registered evolved shape (field-id
-      // resolution); None = unresolvable → the staged path conforms
-      val k = directShapeFor(snap) match {
-        case Some(x) => x
-        case None => return None
-      }
       val parentPaths = snap.parent match {
         case Some(p) if prev.exists(_._1 == p) => prev.get._2
         case Some(p) =>
@@ -219,16 +172,12 @@ final class GraftChangesTableStream(
           snap.deleteFiles.exists(_.seq == v) ||
           parentPaths.exists(!paths.contains(_))) return None
       prev = Some((v, paths))
-      val added = snap.files.filter(_.seq == v)
+      val added = GraftTableStream.appendedBy(snap)
       // legacy entries (no recorded size) need a stat; a missing file
       // here must fall back to staging, never throw out of planning
       if (added.exists(f => f.bytes <= 0L && !fs.exists(
           new Path(table.root, f.path)))) return None
-      added.foreach { f =>
-        val p = new Path(table.root, f.path)
-        out += ((fs.makeQualified(p).toString,
-          if (f.bytes > 0L) f.bytes else fs.getFileStatus(p).getLen, k))
-      }
+      out ++= added
       v += 1
     }
     Some(out.result())
@@ -241,28 +190,37 @@ final class GraftChangesTableStream(
     !required.fieldNames.contains("_change_type") ||
       required.fields.head.name == "_change_type"
 
+  /** The last planned batch, keyed by its offsets: the direct scan of
+    * a blind-append range, or None for a staged batch. Spark asks for
+    * the reader factory after the partitions, and plans the same batch
+    * again on copies of its scan node.
+    */
+  private var planned: Option[((Long, Long), Option[GraftBatchScan])] = None
+
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftStreamOffset].v
     val e = end.asInstanceOf[GraftStreamOffset].v
     val fs = stageRoot.getFileSystem(
       table.session.sessionState.newHadoopConf())
-    if (directEligible) {
-      directAppendFiles(s, e, fs) match {
-        case Some(tagged) =>
-          // partition shape: 0 = staged, 1 = direct pinned, k+1 =
-          // direct under evolved shape k. Shape groups plan separately
-          // (their reader schemas differ).
-          return tagged.groupBy(_._3).toSeq.sortBy(_._1)
-            .iterator.flatMap { case (k, grp) =>
-              StreamSplits.plan(table.session,
-                  grp.map(t => (t._1, t._2)))
-                .iterator.map(p => p.asInstanceOf[GraftStreamInputPartition]
-                  .copy(shape = k + 1): InputPartition)
-            }.toArray
-        case None => () // row-changing / unresolvable / expired: stage
-      }
+    if (!planned.exists(_._1 == (s, e))) {
+      // row-changing / expired ranges, and runs whose pinned ids are
+      // unavailable, stage
+      val direct = pinnedSnap.filter(_ => directEligible).flatMap(p =>
+        directAppendFiles(s, e, fs).map(files => GraftBatchScan.ofView(
+          table, SnapshotTable.readView(p, files, p, raw = true),
+          directRequired)))
+      planned = Some((s, e) -> direct)
     }
+    planned.get._2 match {
+      case Some(scan) => scan.planInputPartitions()
+      case None => stagedPartitions(s, e, fs)
+    }
+  }
+
+  /** Stage `changes(s, e]` once under the checkpoint and plan its files. */
+  private def stagedPartitions(s: Long, e: Long,
+      fs: org.apache.hadoop.fs.FileSystem): Array[InputPartition] = {
     val dir = stageDir(s, e)
     if (!fs.exists(new Path(dir, "_SUCCESS"))) {
       if (fs.exists(dir)) fs.delete(dir, true) // partial prior attempt
@@ -301,78 +259,69 @@ final class GraftChangesTableStream(
 
   override def stop(): Unit = ()
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val staged = ParquetReadBridge.readFunction(
-      table.session, pinned, required, Nil)
-    // direct reads: index 0 = pinned shape (pruned projection); the
-    // evolved shapes read their positional-rename physical schemas in
-    // full (write-time names differ — no pushed pruning, the
-    // projection above conforms)
-    val directs = ParquetReadBridge.readFunction(
-        table.session, dataSchema, directRequired, Nil) +:
-      shapeSchemas.toIndexedSeq.map { case (ss, _) =>
-        ParquetReadBridge.readFunction(table.session, ss, ss, Nil)
-      }
-    GraftChangesReaderFactory(staged, directs,
-      Seq.empty +: shapeSchemas.toIndexedSeq.map(_._2), directRequired,
-      required.fieldNames.contains("_change_type"))
-  }
+  /** The direct scan's own factory, `_change_type` prepended when
+    * projected; a staged batch reads its parquet files plainly.
+    */
+  override def createReaderFactory(): PartitionReaderFactory =
+    planned.flatMap(_._2) match {
+      case Some(scan) =>
+        val direct = scan.createReaderFactory()
+        if (required.fieldNames.contains("_change_type"))
+          InsertChangeReaderFactory(direct)
+        else direct
+      case None => StagedChangeReaderFactory(ParquetReadBridge.readFunction(
+        table.session, pinned, required, Nil))
+    }
 
   override def toString: String =
     s"GraftChangesTableStream[${table.root}]"
 }
 
-/** Reader for the change-feed stream: shape 0 partitions read STAGED
-  * batches (full pinned change schema on disk); shape k ≥ 1 partitions
-  * read appended table files DIRECTLY — k = 1 under the pinned shape,
-  * k ≥ 2 under the (k−1)-th registered EVOLVED physical schema — and
-  * synthesize `_change_type = 'insert'` per row via an executor-built
-  * unsafe projection, substituting recorded initial defaults into
-  * absent columns' slots (the reader null-filled them).
+final case class GraftStreamInputPartition(
+    splits: Array[(String, Long, Long)]) extends InputPartition
+
+/** Micro-batch split planner for staged change batches: byte-range
+  * splits to the session's `maxSplitBytes` target, largest-first
+  * bin-packing with the configured open cost — the same planning as
+  * every batch read.
   */
-final case class GraftChangesReaderFactory(
-    staged: org.apache.spark.sql.execution.datasources.PartitionedFile =>
-      Iterator[org.apache.spark.sql.catalyst.InternalRow],
-    directs: IndexedSeq[
-      org.apache.spark.sql.execution.datasources.PartitionedFile =>
-        Iterator[org.apache.spark.sql.catalyst.InternalRow]],
-    defaults: IndexedSeq[
-      Seq[(Int, org.apache.spark.sql.types.DataType, Any)]],
-    directRequired: StructType,
-    prependType: Boolean) extends PartitionReaderFactory {
-
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.read.PartitionReader
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val sp = p.asInstanceOf[GraftStreamInputPartition]
-    val read = if (sp.shape == 0) staged else directs(sp.shape - 1)
-    val base = sp.splits.iterator.flatMap { case (path, off, len) =>
-      read(ParquetReadBridge.split(path, off, len))
+private[streaming] object StreamSplits {
+  def plan(spark: org.apache.spark.sql.SparkSession,
+      sized: Seq[(String, Long)]): Array[InputPartition] = {
+    val target = ParquetReadBridge.maxSplitBytes(spark,
+      sized.iterator.map(_._2).sum, sized.size)
+    val openCost = ParquetReadBridge.openCostInBytes(spark)
+    val splits = sized.flatMap { case (path, len) =>
+      (0L until len by target).map(off =>
+        (path, off, math.min(target, len - off)))
+    }.sortBy(-_._3)
+    val bins = Array.newBuilder[InputPartition]
+    val cur = Seq.newBuilder[(String, Long, Long)]
+    var curBytes = 0L
+    var curN = 0
+    def flush(): Unit = if (curN > 0) {
+      bins += GraftStreamInputPartition(cur.result().toArray)
+      cur.clear(); curBytes = 0L; curN = 0
     }
-    val defs =
-      if (sp.shape >= 1 && sp.shape - 1 < defaults.length)
-        defaults(sp.shape - 1)
-      else Nil
-    val it =
-      if (sp.shape == 0 || (!prependType && defs.isEmpty)) base
-      else {
-        // codegen'd projections build executor-side (not serializable)
-        import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection}
-        val byOrd = defs.map(d => d._1 -> d).toMap
-        val body = directRequired.fields.toIndexedSeq.zipWithIndex.map {
-          case (f, i) => byOrd.get(i) match {
-            case Some((_, dt, v)) => Literal(v, dt)
-            case None => BoundReference(i, f.dataType, nullable = true)
-          }
-        }
-        val proj = UnsafeProjection.create(
-          if (prependType)
-            Literal(org.apache.spark.unsafe.types.UTF8String
-              .fromString("insert"),
-              org.apache.spark.sql.types.StringType) +: body
-          else body)
-        base.map(proj)
+    splits.foreach { sp =>
+      if (curN > 0 && curBytes + sp._3 + openCost > target) flush()
+      cur += sp; curBytes += sp._3 + openCost; curN += 1
+    }
+    flush()
+    bins.result()
+  }
+}
+
+/** Reader for a STAGED change batch: the full pinned change schema on
+  * disk, read under the pruned projection.
+  */
+final case class StagedChangeReaderFactory(
+    read: PartitionedFile => Iterator[InternalRow])
+    extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val it = p.asInstanceOf[GraftStreamInputPartition].splits.iterator
+      .flatMap { case (path, off, len) =>
+        read(ParquetReadBridge.split(path, off, len))
       }
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _
@@ -380,6 +329,46 @@ final case class GraftChangesReaderFactory(
         if (it.hasNext) { row = it.next(); true } else false
       override def get(): InternalRow = row
       override def close(): Unit = ()
+    }
+  }
+}
+
+/** A direct blind-append batch: the scan's reader, row or columnar as
+  * the scan chose, with `_change_type = 'insert'` prepended to every
+  * row or batch.
+  */
+final case class InsertChangeReaderFactory(scan: PartitionReaderFactory)
+    extends PartitionReaderFactory {
+
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    scan.supportColumnarReads(p)
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val r = scan.createReader(p)
+    new PartitionReader[InternalRow] {
+      private val tag = new GenericInternalRow(
+        Array[Any](UTF8String.fromString("insert")))
+      private val row = new JoinedRow
+      override def next(): Boolean = r.next()
+      override def get(): InternalRow = row(tag, r.get())
+      override def close(): Unit = r.close()
+    }
+  }
+
+  override def createColumnarReader(
+      p: InputPartition): PartitionReader[ColumnarBatch] = {
+    val r = scan.createColumnarReader(p)
+    new PartitionReader[ColumnarBatch] {
+      override def next(): Boolean = r.next()
+      override def get(): ColumnarBatch = {
+        val b = r.get()
+        new ColumnarBatch(
+          GraftPartitionReaderFactory.constVector(b.numRows(), StringType,
+            UTF8String.fromString("insert")) +:
+            Array.tabulate(b.numCols())(b.column),
+          b.numRows())
+      }
+      override def close(): Unit = r.close()
     }
   }
 }

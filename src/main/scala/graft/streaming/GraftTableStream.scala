@@ -1,15 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.graftbridge.ParquetReadBridge
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
-import graft.catalog.{DataFileEntry, SnapshotTable, StatsPruner}
+import graft.catalog.{DataFileEntry, GraftBatchScan, Snapshot, SnapshotTable}
 
 /** One consumed table version: offset `v` means "every commit through
   * version v is fully delivered" — the same one-offset-per-version
@@ -40,29 +35,26 @@ final case class GraftStreamOffset(v: Long) extends Offset {
   *
   * Options: `streamFrom` = first version whose files stream
   * (`earliest` = from the first commit; default = only commits after
-  * the query starts). Pushed filters prune appended files by manifest
-  * stats before any byte is read, and the parquet reader re-applies
-  * them as row-group skips.
+  * the query starts). Spark plans micro-batches without pushdown, so
+  * a filter over the stream applies above the scan to every appended
+  * row.
   *
-  * Schema evolution — the column set is PINNED at query start and
-  * versions on EITHER side of an evolution stream through it by FIELD
-  * ID (r16): a pinned column reads from a pre- or post-evolution file
-  * under its contemporaneous write-time name (renames follow the id,
-  * widened values upcast in the reader), a column the file predates
-  * resolves to a reserved absent name the parquet reader null-fills
-  * (never the current name — a dropped-and-re-added column's stale
-  * bytes must not surface), and columns added after query start are
-  * ignored until restart — the CDC source's fixed-schema-per-run
-  * contract, now shared by the tail. A pinned column with a recorded
-  * INITIAL DEFAULT that a file predates surfaces the DEFAULT, not
-  * null (an executor-side constant substitution — Iceberg v3
-  * semantics, same as the batch scan's).
+  * Schema evolution — the column set is PINNED to the snapshot
+  * published when the stream is built, and each batch plans its
+  * appended files as one [[GraftBatchScan]] over a read view of that
+  * snapshot ([[SnapshotTable.readView]]). Files on EITHER side of an
+  * evolution therefore resolve by FIELD ID exactly as a batch read
+  * does: renames follow the id (top-level and nested), widened values
+  * upcast in the reader, a column the file predates null-fills or
+  * surfaces its recorded INITIAL DEFAULT, and a dropped-and-re-added
+  * column never surfaces the dropped column's values. Columns added
+  * after query start are ignored until restart — the CDC source's
+  * fixed-schema-per-run contract.
   */
 final class GraftTableStream(
     table: SnapshotTable,
     tableSchema: StructType,
     required: StructType,
-    filters: Seq[Filter],
     streamFrom: Option[Long],
     skipNonAppends: Boolean,
     maxVersionsPerTrigger: Option[Long] = None,
@@ -71,16 +63,14 @@ final class GraftTableStream(
 
   private def head: Long = table.publishedSnapshot().version
 
-  /** Head at stream construction (query start or restart), plus the
-    * pinned FIELD-ID state evolved-shape reads resolve through — None
-    * when an evolution raced between analysis and construction (the
-    * pinned names would not match the ids; evolved reads then refuse).
+  /** The snapshot published at stream construction (query start or
+    * restart), whose field ids every batch reads through — None when
+    * an evolution raced between analysis and construction (the
+    * analyzed columns no longer match its ids; reads then refuse).
     */
-  private val (queryStartHead: Long,
-      pinnedIds: Option[(Map[String, Int], Seq[(String, Int)])]) = {
+  private val pinned: Option[Snapshot] = {
     val pub = table.publishedSnapshot()
-    val ok = shape(pub.schema) == shape(tableSchema)
-    (pub.version, if (ok) Some((pub.ids.toMap, pub.nestedIds)) else None)
+    Option.when(SnapshotTable.sameColumns(pub.schema, tableSchema))(pub)
   }
 
   /** Per-version appended-file counts, memoized so capped admission
@@ -165,69 +155,27 @@ final class GraftTableStream(
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  private def shape(s: StructType) =
-    s.fields.toSeq.map(f => (f.name, f.dataType))
-
-  // ---- evolved-shape reads: files on either side of a schema
-  // evolution stream through the PINNED columns by field id. Shape 0
-  // is the pinned (current-at-query-start) shape; each distinct
-  // historical/posterior shape discovered by planning registers a
-  // physical read schema — positionally identical to `required`,
-  // names resolved to the shape's write-time names, absent columns
-  // under reserved names the parquet reader null-fills. Append-only
-  // registry: partition shape indexes stay stable across batches.
-
-  private val shapeIdx = scala.collection.mutable.LinkedHashMap
-    .empty[(Seq[(String, Int)], Seq[(String, Int)]), Int]
-  /** Per registered shape: the physical read schema plus the
-    * initial-default substitutions (required ordinal → catalyst
-    * value) for absent columns that recorded one — the reader's null
-    * fill would misreport those, so an executor-side projection
-    * overwrites the slot with the constant (the batch scan's
-    * shapeDefaults, stream edition).
+  /** The scan of the last planned batch, keyed by its offsets: Spark
+    * asks for the reader factory after the partitions, and plans the
+    * same batch again on copies of its scan node.
     */
-  private val shapeSchemas = scala.collection.mutable.ArrayBuffer
-    .empty[(StructType, Seq[(Int, org.apache.spark.sql.types.DataType, Any)])]
-
-  private def boundaryError(v: Long, why: String): Nothing =
-    throw new IllegalStateException(
-      s"streaming read of ${table.root}: version $v lies across a " +
-        s"schema-evolution boundary the pinned query schema cannot " +
-        s"represent ($why). Restart the query, start past the " +
-        s"evolution (.option(\"streamFrom\", ${v + 1}) or later), or " +
-        "read through the change-feed table " +
-        "(readStream.table(\"graft.db.`t#changes`\"))")
-
-  /** Register (or look up) the shape of version `v`'s snapshot and
-    * return its index. Resolution lives in [[EvolvedShapes.resolve]]
-    * (shared with the change feed — the batch scan's positional rename
-    * trick: renames follow field ids, absent columns null-fill under
-    * reserved names or surface their recorded initial default).
-    */
-  private def shapeIndexFor(vSnap: graft.catalog.Snapshot, v: Long): Int = {
-    val key = (vSnap.ids, vSnap.nestedIds)
-    shapeIdx.getOrElseUpdate(key, {
-      val (idByName, pinnedNested) = pinnedIds.getOrElse(boundaryError(v,
-        "the table evolved between query analysis and stream start"))
-      EvolvedShapes.resolve(table.session, required, tableSchema,
-          idByName, pinnedNested, vSnap) match {
-        case Left(reason) => boundaryError(v, reason)
-        case Right((phys, defaults)) =>
-          shapeSchemas += ((phys, defaults))
-          shapeIdx.size + 1 // index 0 is the pinned shape
-      }
-    })
-  }
+  private var planned: Option[((Long, Long), GraftBatchScan)] = None
 
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftStreamOffset].v
-    val e = end.asInstanceOf[GraftStreamOffset].v
-    val fs = table.root.getFileSystem(
-      table.session.sessionState.newHadoopConf())
-    val filesByShape = scala.collection.mutable.LinkedHashMap
-      .empty[Int, scala.collection.mutable.Builder[DataFileEntry,
-        Seq[DataFileEntry]]]
+    val range = (start.asInstanceOf[GraftStreamOffset].v,
+      end.asInstanceOf[GraftStreamOffset].v)
+    if (!planned.exists(_._1 == range))
+      planned = Some(range -> scanOf(range._1, range._2))
+    planned.get._2.planInputPartitions()
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    planned.map(_._2).getOrElse(scanOver(Nil)).createReaderFactory()
+
+  /** One scan over the files the versions in `(s, e]` appended. */
+  private def scanOf(s: Long, e: Long): GraftBatchScan = {
+    val appended = Seq.newBuilder[DataFileEntry]
     // consecutive versions reuse the previous iteration's path set as
     // the parent set (and the cache carries it across triggers), so
     // each manifest in the range loads once — not once as itself plus
@@ -256,123 +204,36 @@ final class GraftTableStream(
             "skip such commits wholesale")
         // skipped: its staged files are rewrites of surviving rows
       } else {
-        val sameShape = shape(snap.schema) == shape(tableSchema)
-        val k = if (sameShape) 0 else shapeIndexFor(snap, v)
-        // manifest-stats pruning only on the pinned shape: historical
-        // stats key on write-time names (skip-only, so keeping the
-        // file is always sound)
-        val keep = snap.files.filter(f => f.seq == v &&
-          (k != 0 || filters.isEmpty ||
-            StatsPruner.mayMatchAll(f, tableSchema, filters)))
-        if (keep.nonEmpty)
-          filesByShape.getOrElseUpdate(k, Seq.newBuilder) ++= keep
+        val added = GraftTableStream.appendedBy(snap)
+        if (added.nonEmpty && pinned.isEmpty)
+          throw new IllegalStateException(
+            s"streaming read of ${table.root}: version $v lies across a " +
+              "schema-evolution boundary the pinned query schema cannot " +
+              "represent (the table evolved between query analysis and " +
+              "stream start, so the analyzed columns have no field ids). " +
+              "Restart the query, or read through the change-feed table " +
+              "(readStream.table(\"graft.db.`t#changes`\"))")
+        appended ++= added
       }
     }
     lastPathSet = prevPaths
-    // split + bin-pack to the same target every batch read uses; a
-    // backfill commit of many small files shares tasks, a single huge
-    // file fans out. Shape groups plan separately (their reader
-    // schemas differ).
-    filesByShape.iterator.flatMap { case (k, b) =>
-      val sized = b.result().map { f =>
-        val p = new Path(table.root, f.path)
-        val qualified = fs.makeQualified(p).toString
-        val bytes = if (f.bytes > 0L) f.bytes else fs.getFileStatus(p).getLen
-        (qualified, bytes)
-      }
-      StreamSplits.plan(table.session, sized).iterator.map(p =>
-        p.asInstanceOf[GraftStreamInputPartition].copy(shape = k))
-    }.toArray
+    scanOver(appended.result())
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // index 0: the pinned shape (filters push to row groups); evolved
-    // shapes read their positional-rename schemas with NO pushed
-    // filters (write-time names differ; Spark re-applies every filter
-    // above — the skip-only contract)
-    val reads = ParquetReadBridge.readFunction(
-      table.session, tableSchema, required, filters) +:
-      shapeSchemas.toIndexedSeq.map { case (ss, _) =>
-        ParquetReadBridge.readFunction(table.session, ss, ss, Nil)
-      }
-    GraftStreamReaderFactory(reads,
-      Seq.empty +: shapeSchemas.toIndexedSeq.map(_._2), required)
+  private def scanOver(files: Seq[DataFileEntry]): GraftBatchScan = {
+    val snap = pinned.getOrElse(table.publishedSnapshot())
+    GraftBatchScan.ofView(table,
+      SnapshotTable.readView(snap, files, snap, raw = true), required)
   }
 }
 
-final case class GraftStreamInputPartition(
-    splits: Array[(String, Long, Long)],
-    shape: Int = 0) extends InputPartition
+object GraftTableStream {
 
-/** Shared micro-batch split planner: byte-range splits to the
-  * session's `maxSplitBytes` target, largest-first bin-packing with
-  * the configured open cost — the table tail and the change-feed
-  * stream plan identically to every batch read.
-  */
-private[streaming] object StreamSplits {
-  def plan(spark: org.apache.spark.sql.SparkSession,
-      sized: Seq[(String, Long)]): Array[InputPartition] = {
-    val target = ParquetReadBridge.maxSplitBytes(spark,
-      sized.iterator.map(_._2).sum, sized.size)
-    val openCost = ParquetReadBridge.openCostInBytes(spark)
-    val splits = sized.flatMap { case (path, len) =>
-      (0L until len by target).map(off =>
-        (path, off, math.min(target, len - off)))
-    }.sortBy(-_._3)
-    val bins = Array.newBuilder[InputPartition]
-    val cur = Seq.newBuilder[(String, Long, Long)]
-    var curBytes = 0L
-    var curN = 0
-    def flush(): Unit = if (curN > 0) {
-      bins += GraftStreamInputPartition(cur.result().toArray)
-      cur.clear(); curBytes = 0L; curN = 0
-    }
-    splits.foreach { sp =>
-      if (curN > 0 && curBytes + sp._3 + openCost > target) flush()
-      cur += sp; curBytes += sp._3 + openCost; curN += 1
-    }
-    flush()
-    bins.result()
-  }
-}
-
-final case class GraftStreamReaderFactory(
-    reads: IndexedSeq[PartitionedFile => Iterator[InternalRow]],
-    defaults: IndexedSeq[Seq[(Int, org.apache.spark.sql.types.DataType, Any)]] =
-      IndexedSeq.empty,
-    rowSchema: StructType = new StructType())
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val sp = p.asInstanceOf[GraftStreamInputPartition]
-    val read = reads(sp.shape)
-    val base = sp.splits.iterator
-      .flatMap { case (path, off, len) =>
-        read(ParquetReadBridge.split(path, off, len))
-      }
-    val defs = if (sp.shape < defaults.length) defaults(sp.shape) else Nil
-    val it =
-      if (defs.isEmpty) base
-      else {
-        // substitute recorded initial defaults into the absent columns'
-        // slots (the reader null-filled them); codegen'd projections
-        // build executor-side
-        import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection}
-        val byOrd = defs.map(d => d._1 -> d).toMap
-        val proj = UnsafeProjection.create(
-          rowSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-            byOrd.get(i) match {
-              case Some((_, dt, v)) => Literal(v, dt)
-              case None => BoundReference(i, f.dataType, nullable = true)
-            }
-          })
-        base.map(proj)
-      }
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { row = it.next(); true } else false
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
-  }
+  /** The entries version `snap` appended. Legacy ones (no recorded ids)
+    * carry the ids of that version, the columns they were written under.
+    */
+  private[streaming] def appendedBy(snap: Snapshot): Seq[DataFileEntry] =
+    snap.files.filter(_.seq == snap.version).map(f =>
+      if (f.cols.isEmpty) f.copy(cols = snap.ids, nested = snap.nestedIds)
+      else f)
 }

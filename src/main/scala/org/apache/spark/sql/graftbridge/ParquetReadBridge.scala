@@ -30,11 +30,10 @@ import org.apache.spark.sql.types.StructType
   * Callers must build only the readers some split will actually run;
   * [[supportsColumnar]] answers the row-vs-columnar question without
   * building one. [[graft.catalog.GraftBatchScan]] builds per scan only
-  * the readers its reachable files need. The streaming scans
-  * ([[graft.streaming.GraftTableStream]],
-  * [[graft.streaming.GraftChangesTableStream]]) still build one reader
-  * per file shape up front — deliberately left so, since no benchmark
-  * workload measures them.
+  * the readers its reachable files need; the micro-batch streams plan
+  * their appended files through it too, and only a staged change-feed
+  * batch ([[graft.streaming.GraftChangesTableStream]]) builds a reader
+  * of its own.
   *
   * Private-API note: `ParquetFileFormat` / `PartitionedFile` are
   * `org.apache.spark.sql.execution` internals, hence this bridge in

@@ -61,6 +61,24 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(!spark.catalog.tableExists("graft.ddl1.ev"))
   }
 
+  test("a NOT NULL column reads nullable yet refuses NULL in INSERT, UPDATE and MERGE") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graft.nn")
+    sql("DROP TABLE IF EXISTS graft.nn.t")
+    sql("CREATE TABLE graft.nn.t (id BIGINT NOT NULL, v DOUBLE)")
+    sql("INSERT INTO graft.nn.t VALUES (1, 1.0), (2, 2.0)")
+    assert(spark.table("graft.nn.t").schema("id").nullable)
+    Seq("INSERT INTO graft.nn.t VALUES (NULL, 3.0)",
+      "UPDATE graft.nn.t SET id = NULL WHERE id = 1",
+      "MERGE INTO graft.nn.t t USING (SELECT CAST(NULL AS BIGINT) AS id, " +
+        "3.0 AS v) s ON t.id = s.id WHEN NOT MATCHED THEN INSERT *"
+    ).foreach { q =>
+      val e = intercept[Exception](sql(q))
+      assert(e.getMessage.contains("IS NOT NULL"), s"$q: ${e.getMessage}")
+    }
+    assert(sql("SELECT id, v FROM graft.nn.t ORDER BY id")
+      .as[(Long, Double)].collect().toSeq == Seq((1L, 1.0), (2L, 2.0)))
+  }
+
   test("ALTER TABLE: add/rename/drop/widen columns and set/unset properties") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.ddl2")
     sql("DROP TABLE IF EXISTS graft.ddl2.t")
