@@ -3957,7 +3957,8 @@ object Queries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private val sqlSurfaceQueries: Seq[QueryDef] = Seq(
-    // SQL MERGE INTO statement end-to-end (GraftSqlDmlRule): the SAME
+    // SQL MERGE INTO statement end-to-end (Spark's MERGE rewrite on a
+    // temp view, copy-on-write by default): the SAME
     // conditional-clause scenario snap_merge_conditional runs through
     // the Scala API, here driven entirely by spark.sql against a graft
     // temp view — first-match-wins clauses, NULL condition = keep —
@@ -4396,7 +4397,8 @@ object Queries {
 
     QueryDef("sql_update_native",
       (s, dir) => {
-        val tbl = statsSnapshot(s, dir, updNativeTableCache, "updnat") { tbl =>
+        val tbl = statsSnapshot(s, dir, updNativeTableCache, "updnat",
+            Map("graft.update.mode" -> "merge-on-read")) { tbl =>
           val ident = s"graft.db.snap_updnat_h${math.abs(dir.hashCode)}"
           s.sql(s"UPDATE $ident SET value = value + 5000.0 " +
             "WHERE event_id % 43 = 0")
@@ -4432,7 +4434,8 @@ object Queries {
     // merge-pos commit and the untouched pre-merge file set.
     QueryDef("sql_merge_native",
       (s, dir) => {
-        val tbl = statsSnapshot(s, dir, mergeNativeTableCache, "mrgnat") { tbl =>
+        val tbl = statsSnapshot(s, dir, mergeNativeTableCache, "mrgnat",
+            Map("graft.merge.mode" -> "merge-on-read")) { tbl =>
           val ident = s"graft.db.snap_mrgnat_h${math.abs(dir.hashCode)}"
           val m = t(s, dir, "events").filter(col("event_id") % 45 === 0)
             .withColumn("value", col("value") + lit(1000.0d))
@@ -4488,7 +4491,7 @@ object Queries {
     QueryDef("sql_merge_evolve",
       (s, dir) => {
         val tbl = statsSnapshot(s, dir, mergeEvolveNativeTableCache,
-          "mrgevn") { tbl =>
+          "mrgevn", Map("graft.merge.mode" -> "merge-on-read")) { tbl =>
           val ident = s"graft.db.snap_mrgevn_h${math.abs(dir.hashCode)}"
           val hits = t(s, dir, "events").filter(col("event_id") % 45 === 0)
           val upd = hits.withColumn("value", col("value") + lit(9000.0d))

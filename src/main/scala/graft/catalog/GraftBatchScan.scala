@@ -60,7 +60,8 @@ final class GraftBatchScan(
     limit: Option[Int] = None,
     topn: Option[GraftTopN] = None,
     stream: () =>
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream)
+      org.apache.spark.sql.connector.read.streaming.MicroBatchStream,
+    fileGroups: Boolean = false)
     extends Scan with Batch
     with SupportsReportStatistics with SupportsReportPartitioning
     with SupportsRuntimeFiltering {
@@ -99,8 +100,15 @@ final class GraftBatchScan(
   // evaluates any filter conservatively through [[StatsPruner]].
   private var runtimeFilters: Array[Filter] = Array.empty
 
+  /** A copy-on-write rewrite's scan (`fileGroups`) filters on its data
+    * files alone: Spark's `RowLevelOperationRuntimeGroupFiltering`
+    * collects the `_graft_file` of every matching row and hands the set
+    * back as one runtime `In`, which narrows the rewrite to those files.
+    * Any other scan lists its stats-eligible columns for DPP.
+    */
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
+    if (fileGroups) return Array(Expressions.column(GraftV2Table.MetaFileCol))
     // only columns in THIS scan's pruned projection: Spark resolves
     // every listed reference against the scan output and throws on a
     // projected-away column
@@ -313,8 +321,17 @@ final class GraftBatchScan(
   private var cachedGroups: Array[(Option[Any], Seq[DataFileEntry])] = null
   private def groups: Array[(Option[Any], Seq[DataFileEntry])] = {
     if (cachedGroups == null) {
-      val pruned = table.prunedFiles(snap,
-        filters.toIndexedSeq ++ runtimeFilters)
+      val fileSets = runtimeFilters.collect {
+        case org.apache.spark.sql.sources.In(GraftV2Table.MetaFileCol, ps) =>
+          ps.iterator.map(String.valueOf).toSet
+      }
+      // the matching-rows query read the PUBLISHED snapshot: a file it
+      // never saw (one an open audit window staged) is kept
+      lazy val seen = table.publishedSnapshot().files.map(_.path).toSet
+      val byStats = runtimeFilters
+        .filterNot(_.references.contains(GraftV2Table.MetaFileCol))
+      val pruned = table.prunedFiles(snap, filters.toIndexedSeq ++ byStats)
+        .filter(e => fileSets.forall(ps => ps(e.path) || !seen(e.path)))
       // pushed LIMIT (partial contract — Spark re-applies it above):
       // keep only a file PREFIX guaranteed to hold `n` live rows.
       // Guaranteed = manifest rows minus every delete-vector row that
@@ -561,6 +578,12 @@ final class GraftBatchScan(
   }
 
   override def planInputPartitions(): Array[InputPartition] = parts
+
+  /** The data files this scan reads, after every prune and runtime
+    * filter — the files a copy-on-write commit replaces.
+    */
+  private[catalog] def plannedFiles: Seq[DataFileEntry] =
+    groups.toSeq.flatMap(_._2)
 
   // Built once per scan: Spark asks again on the plan copies it makes
   // after `createSparkPlan` (`ApplyColumnarRulesAndInsertTransitions`

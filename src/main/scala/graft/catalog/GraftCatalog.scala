@@ -47,19 +47,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[SnapshotTable.versionAsOf]] — both land on a pinned
   * [[GraftV2Table]], which refuses writes.
   *
-  * MERGE, UPDATE and non-filter-convertible DELETEs plan NATIVELY:
-  * [[GraftV2Table]] implements `SupportsRowLevelOperations` with a
-  * delta-based operation ([[GraftRowLevelOperation]]), so Spark's own
-  * analyzer rewrites produce merge-on-read delete vectors plus
-  * appended row images — full SQL surface including subqueries and
+  * MERGE, UPDATE and DELETE plan NATIVELY: [[GraftV2Table]]
+  * implements `SupportsRowLevelOperations`, so Spark's own analyzer
+  * rewrites plan them — full SQL surface including subqueries and
   * arbitrary ON conditions, with Spark's built-in MERGE cardinality
-  * check. Filter-convertible DELETEs shortcut through the optimizer's
-  * metadata-delete rule onto [[SnapshotTable.deleteRouted]] (the
-  * `graft.delete.mode` property). The injected resolution rule
-  * ([[graft.plans.GraftSqlDmlRule]]) serves only temp views, whose
-  * `View` node hides the table from those rewrites — catalog
-  * statements never reach it (the analyzer's Resolution batch
-  * rewrites them first).
+  * check — as the operation the table's `graft.<command>.mode` names:
+  * a copy-on-write file rewrite ([[GraftCopyOnWriteOperation]], the
+  * default) or merge-on-read delete vectors plus appended row images
+  * ([[GraftRowLevelOperation]]). DELETEs [[GraftV2Table.canDeleteWhere]]
+  * admits shortcut through the optimizer's metadata-delete rule onto
+  * [[SnapshotTable.deleteRouted]]. Temp views of a graft table plan
+  * the same way ([[graft.plans.GraftViewDml]]).
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with FunctionCatalog {

@@ -14,7 +14,8 @@ import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, SortDirection, SortOrder => VSortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, WriterCommitMessage}
+import org.apache.spark.SparkException
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.graftbridge.ParquetWriteBridge
@@ -24,14 +25,14 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** NATIVE DSv2 row-level operations (`SupportsRowLevelOperations` /
-  * `SupportsDelta`) for graft catalog tables: Spark's OWN analyzer
-  * rewrites (`RewriteDeleteFromTable` / `RewriteUpdateTable` /
-  * `RewriteMergeIntoTable`) plan SQL `DELETE` / `UPDATE` / `MERGE
-  * INTO` against `graft.db.t` — full SQL surface, including subqueries
-  * in predicates and arbitrary `ON` conditions the injected
-  * resolution rule (`graft.plans.GraftSqlDmlRule`, now the temp-view
-  * shim) never supported, plus Spark's built-in MERGE
-  * cardinality check.
+  * `SupportsDelta`) for graft tables: Spark's OWN analyzer rewrites
+  * (`RewriteDeleteFromTable` / `RewriteUpdateTable` /
+  * `RewriteMergeIntoTable`) plan every SQL `DELETE` / `UPDATE` /
+  * `MERGE INTO` against `graft.db.t` or a `USING graft` temp view —
+  * full SQL surface, including subqueries in predicates and arbitrary
+  * `ON` conditions, plus Spark's built-in MERGE cardinality check.
+  * The table's `graft.<command>.mode` picks the operation: this one
+  * under merge-on-read, [[GraftCopyOnWriteOperation]] otherwise.
   *
   * The operation is DELTA-based (merge-on-read): the scan exposes
   * each row's identity as two metadata columns — the data file's
@@ -52,9 +53,8 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Scale posture: DELETE/UPDATE conditions push down to the scan as
   * ordinary v2 filters (manifest stats prune candidate files); MERGE
-  * reads the target without file-level runtime pruning (the join
-  * filters rows, not files) — the manifest-pruned key-range MERGE
-  * remains available through the Scala API and `USING graft` views. Positions
+  * prunes target files from the source's keys
+  * ([[graft.plans.GraftMergeSourcePrune]]). Positions
   * are valid only against the scanned snapshot: the commit pins the
   * base version and raises [[SnapshotConflictException]] on any
   * concurrent commit.
@@ -96,7 +96,8 @@ final class GraftRowLevelOperation(v2: GraftV2Table, cmd: Command)
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite =
-        new GraftDeltaWrite(v2.table, baseVersion, cmd, info.schema())
+        new GraftDeltaWrite(v2.table, baseVersion, cmd, info.schema(),
+          transforms = v2.streaming)
     }
 
   override def rowId(): Array[NamedReference] = Array(
@@ -108,6 +109,108 @@ final class GraftRowLevelOperation(v2: GraftV2Table, cmd: Command)
 
   override def description(): String =
     s"GraftRowLevelOperation[$cmd, base=v$baseVersion]"
+}
+
+/** COPY-ON-WRITE as Spark's GROUP-based row-level operation (Iceberg's
+  * `SparkCopyOnWriteOperation`): Spark plans the statement as
+  * `ReplaceData` — every row of each scanned data file flows to the
+  * write, changed or carried over — and the commit swaps the scanned
+  * files for the written ones.
+  *
+  *  - The scan is [[GraftBatchScan]] pinned to the base version. It
+  *    filters on `_graft_file` alone, so Spark's
+  *    `RowLevelOperationRuntimeGroupFiltering` first collects the files
+  *    that hold a matching row and the rewrite reads only those.
+  *  - The write streams rows through [[GraftDeltaWriter]]'s insert lane
+  *    ([[GraftFileWrite]]).
+  *  - ONE strict commit ([[SnapshotTable.commitRewrite]]) replaces
+  *    exactly the scanned files under the operation name the Scala
+  *    API's copy-on-write `delete` / `update` / `mergeConditional`
+  *    commit.
+  */
+final class GraftCopyOnWriteOperation(v2: GraftV2Table, cmd: Command)
+    extends RowLevelOperation {
+
+  /** The version scanned and replaced — the head, as for the delta
+    * operation ([[GraftRowLevelOperation.baseVersion]]).
+    */
+  private val baseVersion: Long = v2.table.currentVersion()
+
+  /** The scan Spark built for the statement: the files it finally
+    * reads are the files the commit replaces.
+    */
+  @volatile private var scan: Option[GraftBatchScan] = None
+
+  override def command(): Command = cmd
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    v2.scanBuilderAt(Some(baseVersion), rewrite = Some(s => scan = Some(s)))
+
+  override def requiredMetadataAttributes(): Array[NamedReference] =
+    Array(Expressions.column(GraftV2Table.MetaFileCol))
+
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WriteBuilder {
+      override def build(): Write = new GraftFileWrite(v2.table,
+        v2.table.snapshotAt(baseVersion), info.schema(), { entries =>
+          val scanned = scan.getOrElse(throw SparkException.internalError(
+            s"$description committed without a scan")).plannedFiles
+          v2.table.commitRewrite(baseVersion,
+            cmd.toString.toLowerCase(java.util.Locale.ROOT),
+            scanned.map(_.path).toSet, entries)
+          ()
+        })
+    }
+
+  override def description(): String =
+    s"GraftCopyOnWriteOperation[$cmd, base=v$baseVersion]"
+}
+
+/** The write half of a Spark-planned file replace — a copy-on-write
+  * rewrite ([[GraftCopyOnWriteOperation]]) or a dynamic partition
+  * overwrite ([[GraftV2Table]]): rows stream through
+  * [[GraftDeltaWriter]]'s insert lane (one open file per partition
+  * run, manifest stats inline), and `commit` receives the entries of
+  * every committed task. On a partitioned table each task sorts its
+  * rows by the partition SOURCE column, which every identity or month
+  * partition value is monotone in, so a task writes one file per
+  * partition; a bucket spec keeps the input order. The sort names a
+  * plain column, so a temp view's relation, which has no function
+  * catalog to resolve a transform through, plans it too.
+  */
+final class GraftFileWrite(table: SnapshotTable, snap: Snapshot,
+    rowSchema: StructType, commit: Seq[DataFileEntry] => Unit)
+    extends Write with RequiresDistributionAndOrdering {
+
+  override def requiredDistribution(): Distribution =
+    Distributions.unspecified()
+
+  override def requiredOrdering(): Array[VSortOrder] =
+    snap.spec.filterNot(ps => SnapshotTable.BucketXform.matches(ps.transform))
+      .map(ps => Expressions.sort(Expressions.column(ps.source),
+        SortDirection.ASCENDING))
+      .toArray
+
+  override def toBatch: BatchWrite = new BatchWrite {
+    private val dataRel = GraftDeltaWriterFactory.freshRel()
+
+    override def createBatchWriterFactory(
+        info: PhysicalWriteInfo): DataWriterFactory =
+      GraftDeltaWriterFactory(table, snap, dataRel, dataRel, rowSchema)
+
+    override def commit(messages: Array[WriterCommitMessage]): Unit =
+      GraftFileWrite.this.commit(messages.toSeq.collect {
+        case m: GraftDeltaCommit => m.entries }.flatten)
+
+    override def abort(messages: Array[WriterCommitMessage]): Unit = {
+      // best-effort; removeOrphanFiles reclaims whatever survives
+      val fs = table.root.getFileSystem(
+        table.session.sessionState.newHadoopConf())
+      try fs.delete(new Path(table.root, dataRel), true)
+      catch { case _: java.io.IOException => }
+      ()
+    }
+  }
 }
 
 /** The delta write: allocates the staging batch directories up front
@@ -151,22 +254,28 @@ final class GraftRowLevelOperation(v2: GraftV2Table, cmd: Command)
   * the local sort.
   */
 final class GraftDeltaWrite(table: SnapshotTable, baseVersion: Long,
-    cmd: Command, rowSchema: StructType) extends DeltaWrite
-    with RequiresDistributionAndOrdering {
+    cmd: Command, rowSchema: StructType, transforms: Boolean)
+    extends DeltaWrite with RequiresDistributionAndOrdering {
 
   private val base = table.snapshotAt(baseVersion)
 
   private def fileRef = Expressions.column(GraftV2Table.MetaFileCol)
   private def posRef = Expressions.column(GraftV2Table.MetaPosCol)
 
+  /** A month or bucket transform resolves through the catalog's
+    * FunctionCatalog, which a path table's relation (a `USING graft`
+    * view) lacks: there `transforms` is false and the transform is left
+    * out — the writers then open one file per partition run.
+    */
   private def partTransforms: Seq[VExpression] =
-    base.spec.toSeq.map { ps =>
+    base.spec.toSeq.flatMap { ps =>
       ps.transform match {
-        case "identity" => Expressions.column(ps.source)
-        case "month" => Expressions.apply(GraftFunctions.MonthsName,
-          Expressions.column(ps.source))
-        case SnapshotTable.BucketXform(n) => Expressions.bucket(n.toInt,
-          ps.source)
+        case "identity" => Some(Expressions.column(ps.source))
+        case _ if !transforms => None
+        case "month" => Some(Expressions.apply(GraftFunctions.MonthsName,
+          Expressions.column(ps.source)))
+        case SnapshotTable.BucketXform(n) => Some(Expressions.bucket(
+          n.toInt, ps.source))
         case other => throw org.apache.spark.SparkException.internalError(
           s"unknown partition transform '$other' in the manifest of " +
             s"${table.root}")
@@ -192,7 +301,7 @@ final class GraftDeltaWrite(table: SnapshotTable, baseVersion: Long,
   override def requiredDistribution(): Distribution =
     if (distributionMode == "none") Distributions.unspecified()
     else if (rowSchema.isEmpty) Distributions.clustered(Array(fileRef))
-    else if (base.spec.isEmpty) Distributions.unspecified()
+    else if (partTransforms.isEmpty) Distributions.unspecified()
     else Distributions.clustered((partTransforms :+ fileRef).toArray)
 
   override def requiredOrdering(): Array[VSortOrder] = {
@@ -219,47 +328,13 @@ final class GraftDeltaWrite(table: SnapshotTable, baseVersion: Long,
 final class GraftDeltaBatchWrite(table: SnapshotTable, baseVersion: Long,
     cmd: Command, rowSchema: StructType) extends DeltaBatchWrite {
 
-  private def freshRel(): String =
-    s"${SnapshotLog.DataDirName}/" +
-      UUID.randomUUID().toString.replace("-", "").take(16)
-
-  private val dataRel = freshRel()
-  private val dvRel = freshRel()
+  private val dataRel = GraftDeltaWriterFactory.freshRel()
+  private val dvRel = GraftDeltaWriterFactory.freshRel()
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val spark = table.session
-    val base = table.snapshotAt(baseVersion)
-    // the partition transform bound to the WRITE schema's ordinals:
-    // serialized as a Catalyst expression, projected per-row in the
-    // task — identical rendering to stage()'s withColumn, so the
-    // hand-laid __graft_p=... directories decode to the same manifest
-    // partition values
-    // DELETE carries no row images (row schema empty): no partition
-    // projection, no data-file factory — the writers only mark vectors
-    val partExpr: Option[Expression] =
-      if (rowSchema.isEmpty) None
-      else base.spec.map { ps =>
-        val dummy = spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), rowSchema)
-        val plan = dummy.select(
-          SnapshotTable.partitionExpr(ps, rowSchema, base.properties))
-          .queryExecution.analyzed.asInstanceOf[Project]
-        BindReferences.bindReference(plan.projectList.head,
-          plan.child.output)
-      }
-    val dataFactory =
-      if (rowSchema.isEmpty) None
-      else Some(ParquetWriteBridge.writerFactory(spark, rowSchema))
-    val dvFactory = ParquetWriteBridge.writerFactory(spark,
-      SnapshotTable.DvSchema)
-    new GraftDeltaWriterFactory(table.root.toString,
-      dataRel, dvRel, rowSchema, partExpr,
-      dataFactory, dvFactory,
-      BloomSpec.fromProperties(base.properties),
-      NdvSpec.fromProperties(base.properties),
-      spark.sessionState.conf.sessionLocalTimeZone)
-  }
+      info: PhysicalWriteInfo): DeltaWriterFactory =
+    GraftDeltaWriterFactory(table, table.snapshotAt(baseVersion), dataRel,
+      dvRel, rowSchema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: GraftDeltaCommit => m }
@@ -303,6 +378,47 @@ final case class GraftDeltaCommit(
     dataFiles: Seq[String],
     updFiles: Seq[String],
     entries: Seq[DataFileEntry] = Nil) extends WriterCommitMessage
+
+object GraftDeltaWriterFactory {
+
+  /** A fresh staging batch directory, manifest-relative. */
+  def freshRel(): String = s"${SnapshotLog.DataDirName}/" +
+    UUID.randomUUID().toString.replace("-", "").take(16)
+
+  /** The writer factory staging rows of `rowSchema` under `dataRel` and
+    * vectors under `dvRel`, laid out by `snap`'s partition spec and
+    * stats properties. The partition transform is bound to the row
+    * schema's ordinals — serialized as a Catalyst expression, projected
+    * per row in the task — and renders exactly as stage()'s withColumn,
+    * so the hand-laid `__graft_p=…` directories decode to the same
+    * manifest partition values. An empty row schema (a DELETE delta:
+    * vectors only) gets no partition projection and no data-file
+    * factory.
+    */
+  def apply(table: SnapshotTable, snap: Snapshot, dataRel: String,
+      dvRel: String, rowSchema: StructType): GraftDeltaWriterFactory = {
+    val spark = table.session
+    val partExpr: Option[Expression] =
+      if (rowSchema.isEmpty) None
+      else snap.spec.map { ps =>
+        val dummy = spark.createDataFrame(
+          java.util.Collections.emptyList[Row](), rowSchema)
+        val plan = dummy.select(
+          SnapshotTable.partitionExpr(ps, rowSchema, snap.properties))
+          .queryExecution.analyzed.asInstanceOf[Project]
+        BindReferences.bindReference(plan.projectList.head,
+          plan.child.output)
+      }
+    new GraftDeltaWriterFactory(table.root.toString, dataRel, dvRel,
+      rowSchema, partExpr,
+      Option.when(rowSchema.nonEmpty)(
+        ParquetWriteBridge.writerFactory(spark, rowSchema)),
+      ParquetWriteBridge.writerFactory(spark, SnapshotTable.DvSchema),
+      BloomSpec.fromProperties(snap.properties),
+      NdvSpec.fromProperties(snap.properties),
+      spark.sessionState.conf.sessionLocalTimeZone)
+  }
+}
 
 final class GraftDeltaWriterFactory(
     rootStr: String,

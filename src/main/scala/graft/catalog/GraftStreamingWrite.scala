@@ -1,15 +1,9 @@
 package graft.catalog
 
-import java.util.UUID
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.graftbridge.ParquetWriteBridge
 import org.apache.spark.sql.types.StructType
 
 /** DSv2 streaming write into a snapshot catalog table —
@@ -37,8 +31,7 @@ final class GraftStreamingWrite(
   // one staging dir per query instance; adopted file lists are
   // explicit, so a crashed epoch's leftovers are inert until
   // removeOrphanFiles reclaims them
-  private val dataRel = s"${SnapshotLog.DataDirName}/" +
-    UUID.randomUUID().toString.replace("-", "").take(16)
+  private val dataRel = GraftDeltaWriterFactory.freshRel()
 
   private val epochKey = s"${SnapshotTable.StreamBatchProp}.$queryId"
 
@@ -63,38 +56,16 @@ final class GraftStreamingWrite(
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val spark = table.session
-    val snap = planned
-    // the partition transform bound to the write schema's ordinals —
-    // the exact construction the delta write uses, so the hand-laid
-    // __graft_p=… directories decode to the same manifest values
-    val partExpr: Option[Expression] = snap.spec.map { ps =>
-      val dummy = spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), writeSchema)
-      val plan = dummy.select(
-        SnapshotTable.partitionExpr(ps, writeSchema, snap.properties))
-        .queryExecution.analyzed.asInstanceOf[Project]
-      BindReferences.bindReference(plan.projectList.head,
-        plan.child.output)
-    }
-    val dataFactory = ParquetWriteBridge.writerFactory(spark, writeSchema)
-    val dvFactory = ParquetWriteBridge.writerFactory(spark,
-      SnapshotTable.DvSchema)
-    val rootStr = table.root.toString
-    val rel = dataRel
-    val schema = writeSchema
-    val bloom = BloomSpec.fromProperties(snap.properties)
-    val ndv = NdvSpec.fromProperties(snap.properties)
-    val zone = spark.sessionState.conf.sessionLocalTimeZone
+    // the delta writers' own factory (partition transform bound as the
+    // delta write binds it), used insert-only: DataWriter.write =
+    // insert; file names get a fresh uuid per open, so epochs and
+    // retried attempts never collide in the shared dir
+    val writers = GraftDeltaWriterFactory(table, planned, dataRel, dataRel,
+      writeSchema)
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
           epochId: Long): DataWriter[InternalRow] =
-        // insert-only use of the delta writer (DataWriter.write =
-        // insert); file names get a fresh uuid per open, so epochs
-        // and retried attempts never collide in the shared dir
-        new GraftDeltaWriter(rootStr, rel, rel, schema,
-          partExpr, Some(dataFactory), dvFactory, partitionId, taskId,
-          bloom, ndv, zone)
+        writers.createWriter(partitionId, taskId)
     }
   }
 

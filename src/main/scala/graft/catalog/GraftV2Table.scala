@@ -29,22 +29,26 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * options `versionAsOf` / `tag` / `timestampAsOf`) arrives as a
   * `pinned` version resolved by the caller — a pinned table refuses
   * writes. `streaming = false` (the path surface) drops the streaming
-  * capabilities, so `readStream` / `writeStream.format("graft")` keep
-  * the data source's changelog source and sink.
+  * capabilities and `BATCH_WRITE`, so `readStream` /
+  * `writeStream.format("graft")` / `write.save` keep the data source's
+  * changelog source, sink and save.
   *
   * A `view` is a snapshot the snapshot layer reads itself
   * ([[SnapshotTable]]'s own frames: a file subset, a render schema,
   * or no deletes at all): the table scans exactly that snapshot,
   * refuses every write, and is no DML or metadata-aggregate target.
   *
-  * Every read, batch or micro-batch, is one [[GraftBatchScan]]; writes
-  * bridge through `V1Write` to the snapshot layer's commits.
+  * Every read, batch or micro-batch, is one [[GraftBatchScan]]. SQL
+  * DELETE / UPDATE / MERGE are Spark row-level plans chosen by the
+  * table's `graft.<command>.mode`; a dynamic partition overwrite is a
+  * native batch write; the other writes bridge through `V1Write` to the
+  * snapshot layer's commits.
   */
 final class GraftV2Table(
     val table: SnapshotTable,
     ident: String,
     val pinned: Option[Long],
-    streaming: Boolean = true,
+    private[catalog] val streaming: Boolean = true,
     private[graft] val view: Option[Snapshot] = None) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations with SupportsMetadataColumns {
@@ -105,7 +109,10 @@ final class GraftV2Table(
       // so the native SQL MERGE grows the schema in-statement exactly
       // like SnapshotTable.merge does
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
-    (if (streaming) all else all -- Set(TableCapability.MICRO_BATCH_READ,
+    // BATCH_WRITE serves only the dynamic overwrite: V1_BATCH_WRITE
+    // keeps every other batch write on the V1 bridge
+    (if (streaming) all + TableCapability.BATCH_WRITE
+    else all -- Set(TableCapability.MICRO_BATCH_READ,
       TableCapability.STREAMING_WRITE)).asJava
   }
 
@@ -134,7 +141,7 @@ final class GraftV2Table(
             "or re-run the statement")
     }
 
-  private def requireWritable(op: String): Unit = {
+  private[graft] def requireWritable(op: String): Unit = {
     require(view.isEmpty, s"cannot $op a snapshot read of ${table.root}")
     require(pinned.isEmpty,
       s"cannot $op a time-travel (VERSION/TIMESTAMP AS OF) table")
@@ -147,12 +154,14 @@ final class GraftV2Table(
 
   /** Scan builder pinned to `version` (None = published head): the
     * default read path passes the table's own pin; a row-level
-    * operation ([[GraftRowLevelOperation]]) passes ITS captured base
-    * version so scan and commit can never observe different file sets.
+    * operation passes ITS captured base version so scan and commit can
+    * never observe different file sets. A copy-on-write rewrite
+    * ([[GraftCopyOnWriteOperation]]) passes `rewrite`, which receives
+    * the built scan: its files are the ones the commit replaces.
     */
   private[catalog] def scanBuilderAt(version: Option[Long],
-      options: CaseInsensitiveStringMap =
-        CaseInsensitiveStringMap.empty()): ScanBuilder =
+      options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
+      rewrite: Option[GraftBatchScan => Unit] = None): ScanBuilder =
     new ScanBuilder with SupportsPushDownFilters
         with SupportsPushDownRequiredColumns
         with org.apache.spark.sql.connector.read.SupportsPushDownLimit
@@ -220,16 +229,27 @@ final class GraftV2Table(
           .getOrElse(table.publishedSnapshot()))
         // a row-level operation's scan reads its base version, the
         // head, which an open audit window may have evolved past the
-        // published schema the statement was analyzed against; its
-        // commit checks that drift, the scan needs only the columns it
-        // projects at their analyzed types. A view is its own schema.
+        // published schema the statement was analyzed against; a delta
+        // commit checks that drift, so its scan needs only the columns
+        // it projects at their analyzed types. A rewrite carries every
+        // column into the files it replaces, so it needs them all. A
+        // view is its own schema.
         if (view.isEmpty) {
           if (version == pinned) guardSchemaDrift(snap)
+          else if (rewrite.isDefined)
+            require(SnapshotTable.sameColumns(snap.schema, schema),
+              s"snapshot table ${table.root}: version ${snap.version}, " +
+                "whose files this copy-on-write statement rewrites, does " +
+                "not have the analyzed columns — publish() or " +
+                "abortAudit() the staged schema change, or re-run the " +
+                "statement")
           else requireProjected(snap, required)
         }
-        new GraftBatchScan(table, snap, required, filters,
+        val scan = new GraftBatchScan(table, snap, required, filters,
           GraftBatchScan.spjKey(table, snap), limit, topn,
-          () => microBatchStream())
+          () => microBatchStream(), fileGroups = rewrite.isDefined)
+        rewrite.foreach(_(scan))
+        scan
       }
 
       /** `spark.readStream.table(…)` lands here through the scan's
@@ -293,10 +313,13 @@ final class GraftV2Table(
     })
 
   /** Native `SupportsRowLevelOperations`: Spark's analyzer rewrites
-    * DELETE/UPDATE/MERGE over this table onto the DELTA operation
-    * ([[GraftRowLevelOperation]] — merge-on-read delete vectors plus
-    * appended row images). A DELETE that [[canDeleteWhere]] admits
-    * still shortcuts through [[deleteWhere]] (the optimizer's
+    * DELETE/UPDATE/MERGE over this table onto the operation the
+    * table's `graft.<command>.mode` names ([[SnapshotTable
+    * .mergeOnRead]]) — the DELTA operation under merge-on-read
+    * ([[GraftRowLevelOperation]]: delete vectors plus appended row
+    * images), the group-based rewrite under copy-on-write, the default
+    * ([[GraftCopyOnWriteOperation]]). A DELETE that [[canDeleteWhere]]
+    * admits still shortcuts through [[deleteWhere]] (the optimizer's
     * metadata-delete rule).
     */
   override def newRowLevelOperationBuilder(
@@ -304,7 +327,10 @@ final class GraftV2Table(
     requireWritable(s"${info.command} on")
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation =
-        new GraftRowLevelOperation(GraftV2Table.this, info.command)
+        if (SnapshotTable.mergeOnRead(table.currentSnapshot().properties,
+            info.command.toString.toLowerCase(java.util.Locale.ROOT)))
+          new GraftRowLevelOperation(GraftV2Table.this, info.command)
+        else new GraftCopyOnWriteOperation(GraftV2Table.this, info.command)
     }
   }
 
@@ -349,13 +375,15 @@ final class GraftV2Table(
         mode = "dynamic"; this
       }
 
-      override def build(): Write = new V1Write {
+      override def build(): Write =
+        if (mode == "dynamic") dynamicOverwrite(info) else bridged
+
+      private def bridged: Write = new V1Write {
         override def toInsertableRelation(): InsertableRelation =
           new InsertableRelation {
             override def insert(data: DataFrame, overwrite: Boolean): Unit = {
               mode match {
                 case "overwrite" => table.overwrite(data)
-                case "dynamic" => table.overwritePartitions(data)
                 case "where" => table.overwriteWhere(cond.get, data)
                 case _ => table.append(data)
               }
@@ -381,6 +409,25 @@ final class GraftV2Table(
       }
     }
 
+  /** Dynamic partition overwrite (SQL `INSERT OVERWRITE` under
+    * `partitionOverwriteMode=dynamic`, `writeTo(…).overwritePartitions()`)
+    * as a native batch write — Spark has no V1 fallback for it. The
+    * rows stage through the copy-on-write writer ([[GraftFileWrite]])
+    * laid out by the head they were planned against, and one commit
+    * replaces the partitions the staged files name
+    * ([[SnapshotTable.commitPartitionOverwrite]]).
+    */
+  private def dynamicOverwrite(info: LogicalWriteInfo): Write = {
+    val planned = table.currentSnapshot()
+    table.requireUniformSpec(planned, "overwritePartitions")
+    if (!SnapshotTable.sameColumns(info.schema(), planned.schema))
+      throw new SnapshotConflictException(
+        s"table at ${table.root} evolved its schema between analysis " +
+          "and write planning — re-run the statement")
+    new GraftFileWrite(table, planned, info.schema(),
+      entries => { table.commitPartitionOverwrite(planned, entries); () })
+  }
+
   // -------------------------------------------------------------- delete
 
   /** Which SQL `DELETE FROM` shapes take the metadata path
@@ -404,16 +451,16 @@ final class GraftV2Table(
     *    .equalityDeleteKeys]], committed as an equality-delete file
     *    without a scan) or a metadata-only delete.
     *
-    * Every other merge-on-read delete is a row-level write. Shapes with
-    * no `sources.Filter` column form never reach here: the DML
-    * resolution rule lowers them.
+    * Every other merge-on-read delete is a row-level write, and so is
+    * every shape with no top-level `sources.Filter` column form, in
+    * either mode.
     */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(f => GraftV2Table.filterToColumn(f).isDefined &&
       // v1 filters render nested struct fields as DOTTED names, which
       // filterToColumn would backtick into a (nonexistent) flat column
-      // — refuse those here; the DML resolution rule lowers them with
-      // real nested references instead
+      // — refuse those here; the row-level plan keeps the real nested
+      // references
       f.references.forall(schema.fieldNames.contains)) && {
       def metadataOnly = table.deleteIsMetadataOnly(predicateOf(filters))
       table.publishedSnapshot().properties.get("graft.delete.mode") match {

@@ -1540,16 +1540,14 @@ final class SnapshotTable private (
     * property as `graft.update.mode`: `copy-on-write` (default —
     * [[update]] rewrites hit files) or `merge-on-read`
     * ([[updateWithVectors]] hides old rows under positional vectors
-    * and appends the updated ones). Both SQL lowering paths call this,
-    * so the property cannot be bypassed by statement shape.
+    * and appends the updated ones). SQL `UPDATE` routes by the same
+    * property ([[SnapshotTable.mergeOnRead]]) to the matching Spark
+    * row-level plan.
     */
   def updateRouted(set: Seq[(String, Column)], pred: Column): Snapshot =
-    currentSnapshot().properties.get("graft.update.mode") match {
-      case Some("merge-on-read") => updateWithVectors(set, pred)
-      case Some(other) if other != "copy-on-write" => sys.error(
-        s"graft.update.mode='$other' — use copy-on-write or merge-on-read")
-      case _ => update(set, pred)
-    }
+    if (SnapshotTable.mergeOnRead(currentSnapshot().properties, "update"))
+      updateWithVectors(set, pred)
+    else update(set, pred)
 
   /** MERGE INTO, copy-on-write at FILE granularity: source key bounds
     * prune candidate files via manifest stats, only files holding an
@@ -1625,12 +1623,7 @@ final class SnapshotTable private (
     // vectors and APPENDS the new row images — untouched rows of
     // matched files stay in place, O(changed rows) written instead of
     // O(hit files) rewritten. The 100 TB shape for CDC-heavy tables.
-    val mor = base.properties.get("graft.merge.mode") match {
-      case Some("merge-on-read") => true
-      case Some(other) if other != "copy-on-write" => sys.error(
-        s"graft.merge.mode='$other' — use copy-on-write or merge-on-read")
-      case _ => false
-    }
+    val mor = SnapshotTable.mergeOnRead(base.properties, "merge")
     val evolved = SnapshotTable.evolve(base.schema, source.schema)
     require(on.forall(evolved.fieldNames.contains),
       s"merge keys ${on.mkString(",")} must exist in the table schema")
@@ -2025,29 +2018,23 @@ final class SnapshotTable private (
     * tuples, and being position-based it is column-independent — no
     * key column to strand on dropColumn.
     */
-  /** SQL `DELETE FROM` routing — the Iceberg `write.delete.mode`
-    * table property: `copy-on-write` (default — [[delete]] rewrites
-    * hit files) or `merge-on-read` ([[deleteWithVectors]] commits
-    * positional vectors). The native v2 `deleteWhere` and the DML
-    * resolution rule call this, so the property cannot be bypassed by
-    * predicate shape. A merge-on-read SQL delete that
-    * `GraftV2Table.canDeleteWhere` refuses writes the same vectors
-    * through the row-level delta write instead.
+  /** `DELETE` routing — the Iceberg `write.delete.mode` table
+    * property: `copy-on-write` (default — [[delete]] rewrites hit
+    * files) or `merge-on-read` ([[deleteWithVectors]] commits
+    * positional vectors). SQL's metadata-delete path (the native v2
+    * `deleteWhere`) calls this; every other SQL delete is a Spark
+    * row-level plan chosen by the same property
+    * ([[SnapshotTable.mergeOnRead]]): a copy-on-write rewrite or the
+    * delta write of the same vectors.
     */
   def deleteRouted(pred: Column): Snapshot =
-    currentSnapshot().properties.get("graft.delete.mode") match {
-      case Some("merge-on-read") => deleteWithVectors(pred)
-      // `equality` mode's key-predicate shortcut lives on the SQL path
-      // ([[GraftV2Table.deleteWhere]] → [[deleteByKeys]], O(keys)
-      // bytes, zero target scan); a predicate that is NOT key-shaped
-      // degrades to positional vectors — still merge-on-read, still no
-      // file rewrite
-      case Some("equality") => deleteWithVectors(pred)
-      case Some(other) if other != "copy-on-write" => sys.error(
-        s"graft.delete.mode='$other' — use copy-on-write, " +
-          "merge-on-read or equality")
-      case _ => delete(pred)
-    }
+    // `equality` mode's key-predicate shortcut lives on the SQL path
+    // ([[GraftV2Table.deleteWhere]] → [[deleteByKeys]], O(keys) bytes,
+    // zero target scan); here it is merge-on-read like any other
+    // predicate: positional vectors, no file rewrite
+    if (SnapshotTable.mergeOnRead(currentSnapshot().properties, "delete"))
+      deleteWithVectors(pred)
+    else delete(pred)
 
   /** True when a merge-on-read DELETE of `pred` opens no data file: no
     * file is a candidate, or every candidate's manifest stats prove all
@@ -3027,7 +3014,7 @@ final class SnapshotTable private (
     * value to come from the SAME spec — an identity value and a month
     * value share one namespace and could collide silently.
     */
-  private def requireUniformSpec(s: Snapshot, op: String): Unit =
+  private[catalog] def requireUniformSpec(s: Snapshot, op: String): Unit =
     require(s.files.forall(_.seq >= s.specSince),
       s"$op refused: data files written under an older partition spec " +
         "exist — run migrateSpec() (or compact) first")
@@ -3932,6 +3919,49 @@ final class SnapshotTable private (
     }
   }
 
+  /** Commit one Spark-planned copy-on-write rewrite
+    * ([[GraftCopyOnWriteOperation]]): the data files the rewrite scanned
+    * leave, the files its writers staged (manifest stats computed
+    * inline) arrive, in ONE strict commit against the scanned version —
+    * the staged files carry every surviving row of the scanned ones, so
+    * any commit since the scan raises [[SnapshotConflictException]]
+    * and nothing is published. A statement that read and wrote nothing
+    * commits nothing.
+    */
+  private[catalog] def commitRewrite(baseVersion: Long, op: String,
+      scanned: Set[String], entries: Seq[DataFileEntry]): Snapshot = {
+    val base = snapshotAt(baseVersion)
+    if (scanned.isEmpty && entries.isEmpty) return currentSnapshot()
+    commitStrict(base, next(base, op, base.schema,
+      base.files.filterNot(f => scanned(f.path)) ++
+        entries.map(_.copy(cols = base.ids, nested = nestedPairsOf(base)))))
+  }
+
+  /** Commit a dynamic partition overwrite planned by Spark (SQL `INSERT
+    * OVERWRITE` under `partitionOverwriteMode=dynamic`,
+    * `writeTo(…).overwritePartitions()`): the partitions the staged
+    * `entries` name replace every live file of those partitions, the
+    * rest stay — the commit [[overwritePartitions]] makes. Last
+    * committer wins per partition, so a concurrent commit rebases;
+    * one that changed the schema or the partition spec the files were
+    * written under raises [[SnapshotConflictException]].
+    */
+  private[catalog] def commitPartitionOverwrite(planned: Snapshot,
+      entries: Seq[DataFileEntry]): Snapshot = {
+    val replaced = entries.map(_.partition).toSet
+    commitRetry { latest =>
+      if (latest.schema != planned.schema || latest.ids != planned.ids ||
+          latest.spec != planned.spec || latest.specSince != planned.specSince)
+        throw new SnapshotConflictException(
+          s"table at $root evolved its schema or partition spec since " +
+            "the overwrite was planned — re-run the statement")
+      next(latest, "overwrite", latest.schema,
+        latest.files.filterNot(f => replaced(f.partition)) ++
+          entries.map(_.copy(cols = planned.ids,
+            nested = nestedPairsOf(planned))))
+    }
+  }
+
   /** Commit one native DSv2 row-level DELTA (`SupportsDelta` —
     * [[GraftRowLevel]]): adopt the data files the delta writers staged
     * (`entries`, with the manifest stats the writers computed as the
@@ -4259,6 +4289,24 @@ object SnapshotTable {
       files = files.map(f => if (f.cols.isEmpty) f.copy(cols = owner.ids) else f),
       deleteFiles = if (raw) Nil else owner.deleteFiles,
       dvFiles = if (raw) Nil else owner.dvFiles)
+
+  /** Whether `graft.<kind>.mode` routes row-level `kind` (`delete`,
+    * `update` or `merge`) to merge-on-read. Copy-on-write is the
+    * default, and the one rule every surface routes by: the Scala API,
+    * and catalog or temp-view SQL ([[GraftV2Table]]'s row-level
+    * operation builder). `equality` is a delete mode that is
+    * merge-on-read wherever a key-shaped shortcut does not apply.
+    */
+  private[graft] def mergeOnRead(props: Map[String, String],
+      kind: String): Boolean =
+    props.get(s"graft.$kind.mode") match {
+      case None | Some("copy-on-write") => false
+      case Some("merge-on-read") => true
+      case Some("equality") if kind == "delete" => true
+      case Some(other) => sys.error(s"graft.$kind.mode='$other' — use " +
+        (if (kind == "delete") "copy-on-write, merge-on-read or equality"
+        else "copy-on-write or merge-on-read"))
+    }
 
   /** Whether `a` and `b` have the same column names and types, nested
     * nullability aside: a table surface reads every column nullable

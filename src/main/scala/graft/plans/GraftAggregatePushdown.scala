@@ -1,12 +1,15 @@
 package graft.plans
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter, LocalRelation, LogicalPlan, Project, SubqueryAlias, View}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftbridge.FilterBridge
 
 import graft.catalog.SnapshotTable.MetaAgg
@@ -98,17 +101,13 @@ final case class GraftAggregatePushdown(session: SparkSession)
       rewritten.getOrElse(agg)
   }
 
-  /** The unpinned graft relation under `p`, provided nothing between
-    * the aggregate and the scan can change row multiplicity or values
-    * (only an attribute-reference projection is allowed).
-    */
   /** [[relationOf]] plus at most one Filter hop whose condition
     * translates COMPLETELY to source filters (a lost conjunct would
     * prove a weaker predicate — all-or-nothing, same discipline as
     * [[graft.catalog.StatsPruner.translateExact]]).
     */
   private def relationAndFilter(p: LogicalPlan)
-      : Option[(GraftSqlDml.GraftTarget,
+      : Option[(GraftAggregatePushdown.GraftTarget,
         Seq[org.apache.spark.sql.sources.Filter])] = p match {
     case Project(projList, child)
         if projList.forall(_.isInstanceOf[AttributeReference]) =>
@@ -128,18 +127,20 @@ final case class GraftAggregatePushdown(session: SparkSession)
     case other => relationOf(other).map((_, Nil))
   }
 
-  private def relationOf(p: LogicalPlan): Option[GraftSqlDml.GraftTarget] =
+  /** The graft relation under `p`, provided nothing between the
+    * aggregate and the scan can change row multiplicity or values (only
+    * an attribute-reference projection is allowed). Catalog relations
+    * are still visible here because this rule runs in the
+    * operator-optimization batch, before the v2 scan pushdown replaces
+    * the relation node.
+    */
+  private def relationOf(p: LogicalPlan)
+      : Option[GraftAggregatePushdown.GraftTarget] =
     p match {
-      // ONE definition of "which plans are graft targets" (temp-view
-      // relation or DSv2 catalog table): GraftSqlDml.targetOf — this
-      // rule adds only the pushdown-specific attribute-projection hop.
-      // Catalog relations are still visible here because this rule runs
-      // in the operator-optimization batch, before the v2 scan pushdown
-      // replaces the relation node.
       case Project(projList, child)
           if projList.forall(_.isInstanceOf[AttributeReference]) =>
         relationOf(child)
-      case leaf => GraftSqlDml.targetOf(leaf)
+      case leaf => GraftAggregatePushdown.targetOf(leaf)
     }
 
   /** Grouped output list: each expression is either the grouping
@@ -191,4 +192,29 @@ final case class GraftAggregatePushdown(session: SparkSession)
     }
     if (specs.exists(_.isEmpty)) None else Some(specs.flatten)
   }
+}
+
+object GraftAggregatePushdown {
+
+  /** One aggregate target: the snapshot table (or branch handle) a
+    * [[graft.catalog.GraftV2Table]] relation reads, and its pin.
+    */
+  final case class GraftTarget(table: graft.catalog.SnapshotTable,
+      pinned: Option[Long])
+
+  /** The graft table behind a (possibly aliased / view-wrapped) plan;
+    * None = not a graft table, leave the aggregate alone.
+    */
+  @tailrec private def targetOf(p: LogicalPlan): Option[GraftTarget] =
+    p match {
+      case SubqueryAlias(_, child) => targetOf(child)
+      case v: View => targetOf(v.child)
+      case r: DataSourceV2Relation => r.table match {
+        // a snapshot read's view is a frame, not the table
+        case g: graft.catalog.GraftV2Table if g.view.isEmpty =>
+          Some(GraftTarget(g.table, g.pinned))
+        case _ => None
+      }
+      case _ => None
+    }
 }

@@ -91,10 +91,10 @@ object GraftExtensions {
     functions.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
     }
-    // SQL MERGE INTO / DELETE FROM / UPDATE on `USING graft` temp
-    // views, which Spark's row-level rewrites do not see through
-    // (post-hoc: after resolution, before CheckAnalysis)
-    ext.injectPostHocResolutionRule(session => GraftSqlDmlRule(session))
+    // SQL MERGE INTO / DELETE FROM / UPDATE on graft temp views: the
+    // target's View node is stripped so Spark's row-level rewrites plan
+    // them as on the catalog table
+    ext.injectResolutionRule(_ => GraftViewDml)
     // filterless COUNT/MIN/MAX over a graft relation → manifest answer
     ext.injectOptimizerRule(session => GraftAggregatePushdown(session))
     // native delta MERGE: source-derived key predicate → manifest file

@@ -187,7 +187,8 @@ class AggPushdownSpec extends AnyFunSuite {
 
   test("LIMIT over delete vectors still returns enough rows") {
     sql("DROP TABLE IF EXISTS graft.agg.ld")
-    sql("CREATE TABLE graft.agg.ld (id BIGINT)")
+    sql("CREATE TABLE graft.agg.ld (id BIGINT) " +
+      "TBLPROPERTIES ('graft.delete.mode' = 'merge-on-read')")
     (0 until 10).foreach { i =>
       sql("INSERT INTO graft.agg.ld SELECT /*+ REPARTITION(1) */ id " +
         s"FROM range(${i * 100}, ${i * 100 + 100})")

@@ -23,6 +23,12 @@ class DeltaWriteSpec extends AnyFunSuite {
 
   private def sql(q: String): DataFrame = spark.sql(q)
 
+  /** Every row-level mode merge-on-read: these cases are about the
+    * delta write.
+    */
+  private val Mor = Seq("delete", "update", "merge")
+    .map(k => s"'graft.$k.mode'='merge-on-read'").mkString(", ")
+
   private def warehouse = spark.conf.get("spark.sql.catalog.graft.warehouse")
 
   /** Physical plan of an eagerly-executed command (MERGE/UPDATE/...):
@@ -39,7 +45,7 @@ class DeltaWriteSpec extends AnyFunSuite {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.dw")
     sql("DROP TABLE IF EXISTS graft.dw.t")
     sql("CREATE TABLE graft.dw.t (id BIGINT, kind STRING, v DOUBLE) " +
-      "PARTITIONED BY (kind)")
+      s"PARTITIONED BY (kind) TBLPROPERTIES ($Mor)")
     // two appends -> >=2 files per partition, 6 partitions
     sql("INSERT INTO graft.dw.t SELECT id, " +
       "concat('k', cast(id % 6 as string)), cast(id as double) " +
@@ -120,7 +126,7 @@ class DeltaWriteSpec extends AnyFunSuite {
   test("DELETE clusters by file: sort on (file, pos), disjoint vectors") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.dw")
     sql("DROP TABLE IF EXISTS graft.dw.d")
-    sql("CREATE TABLE graft.dw.d (id BIGINT, v DOUBLE)")
+    sql(s"CREATE TABLE graft.dw.d (id BIGINT, v DOUBLE) TBLPROPERTIES ($Mor)")
     sql("INSERT INTO graft.dw.d SELECT id, cast(id as double) " +
       "FROM range(0, 8000)")
     sql("INSERT INTO graft.dw.d SELECT id, cast(id as double) " +
@@ -155,7 +161,7 @@ class DeltaWriteSpec extends AnyFunSuite {
     sql("DROP TABLE IF EXISTS graft.dw.n")
     sql("CREATE TABLE graft.dw.n (id BIGINT, kind STRING, v DOUBLE) " +
       "PARTITIONED BY (kind) " +
-      "TBLPROPERTIES ('graft.write.distribution-mode'='none')")
+      s"TBLPROPERTIES ('graft.write.distribution-mode'='none', $Mor)")
     sql("INSERT INTO graft.dw.n SELECT id, " +
       "concat('k', cast(id % 4 as string)), cast(id as double) " +
       "FROM range(0, 4000)")
@@ -182,7 +188,7 @@ class DeltaWriteSpec extends AnyFunSuite {
   test("unpartitioned UPDATE keeps ordering without a clustered shuffle") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.dw")
     sql("DROP TABLE IF EXISTS graft.dw.u")
-    sql("CREATE TABLE graft.dw.u (id BIGINT, v DOUBLE)")
+    sql(s"CREATE TABLE graft.dw.u (id BIGINT, v DOUBLE) TBLPROPERTIES ($Mor)")
     sql("INSERT INTO graft.dw.u SELECT id, cast(id as double) " +
       "FROM range(0, 4000)")
     val plan = commandPlan(sql(
@@ -201,7 +207,7 @@ class DeltaWriteSpec extends AnyFunSuite {
   test("native MERGE prunes target files from the source keys") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.dw")
     sql("DROP TABLE IF EXISTS graft.dw.p")
-    sql("CREATE TABLE graft.dw.p (id BIGINT, v DOUBLE)")
+    sql(s"CREATE TABLE graft.dw.p (id BIGINT, v DOUBLE) TBLPROPERTIES ($Mor)")
     // 8 id-clustered appends -> every file covers a narrow id range
     (0 until 8).foreach { i =>
       sql(s"INSERT INTO graft.dw.p SELECT id, cast(id as double) " +
@@ -287,7 +293,10 @@ class DeltaWriteSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructField("v",
         org.apache.spark.sql.types.DoubleType)))
     val t = SnapshotTable.create(spark, root, schema,
-      Some(graft.catalog.PartitionSpec("ts", "month")))
+      Some(graft.catalog.PartitionSpec("ts", "month")),
+      graft.catalog.EvolvingWriter.DefaultTableProps ++
+        Seq("delete", "update", "merge").map(k =>
+          s"graft.$k.mode" -> "merge-on-read"))
     // ~6 distinct months
     t.append(spark.range(0, 5000).selectExpr("id",
       "timestamp_seconds(1700000000 + id * 3000) as ts",
@@ -322,7 +331,7 @@ class DeltaWriteSpec extends AnyFunSuite {
   test("MERGE WITH SCHEMA EVOLUTION grows the schema on the native SQL path") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.dw")
     sql("DROP TABLE IF EXISTS graft.dw.me")
-    sql("CREATE TABLE graft.dw.me (id BIGINT, v DOUBLE)")
+    sql(s"CREATE TABLE graft.dw.me (id BIGINT, v DOUBLE) TBLPROPERTIES ($Mor)")
     sql("INSERT INTO graft.dw.me SELECT id, cast(id as double) " +
       "FROM range(0, 10)")
     // source carries `tag`, unknown to the target: ids 0/2/4 update,
@@ -363,7 +372,7 @@ class DeltaWriteSpec extends AnyFunSuite {
     // type WIDENING evolves too: an int target column fed a bigint
     // source widens via UpdateColumnType; old narrow files still read
     sql("DROP TABLE IF EXISTS graft.dw.mw")
-    sql("CREATE TABLE graft.dw.mw (id BIGINT, cnt INT)")
+    sql(s"CREATE TABLE graft.dw.mw (id BIGINT, cnt INT) TBLPROPERTIES ($Mor)")
     sql("INSERT INTO graft.dw.mw SELECT id, cast(id as int) FROM range(0, 10)")
     spark.range(0, 2).selectExpr("id * 2 as id",
       "id * 10000000000 as cnt").createOrReplaceTempView("mw_src")
@@ -384,7 +393,7 @@ class DeltaWriteSpec extends AnyFunSuite {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.dw")
     sql("DROP TABLE IF EXISTS graft.dw.orph")
     sql("CREATE TABLE graft.dw.orph (id BIGINT, kind STRING, v DOUBLE) " +
-      "PARTITIONED BY (kind)")
+      s"PARTITIONED BY (kind) TBLPROPERTIES ($Mor)")
     sql("INSERT INTO graft.dw.orph SELECT id, " +
       "concat('k', cast(id % 3 as string)), cast(id as double) " +
       "FROM range(0, 3000)")
@@ -440,7 +449,7 @@ class DeltaWriteSpec extends AnyFunSuite {
   test("CDC provenance: UPDATE/MERGE flag update images; changesCdf labels pairs") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.dw")
     sql("DROP TABLE IF EXISTS graft.dw.cdf")
-    sql("CREATE TABLE graft.dw.cdf (id BIGINT, v DOUBLE)")
+    sql(s"CREATE TABLE graft.dw.cdf (id BIGINT, v DOUBLE) TBLPROPERTIES ($Mor)")
     sql("INSERT INTO graft.dw.cdf SELECT id, cast(id as double) " +
       "FROM range(0, 100)")
     val t = SnapshotTable.load(spark, s"$warehouse/dw/cdf")

@@ -353,7 +353,9 @@ class GraftCatalogSpec extends AnyFunSuite {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.rl")
     sql("DROP TABLE IF EXISTS graft.rl.t")
     sql("CREATE TABLE graft.rl.t (id BIGINT, kind STRING, v DOUBLE) " +
-      "PARTITIONED BY (kind)")
+      "PARTITIONED BY (kind) TBLPROPERTIES ('graft.delete.mode'=" +
+      "'merge-on-read', 'graft.update.mode'='merge-on-read', " +
+      "'graft.merge.mode'='merge-on-read')")
     sql("INSERT INTO graft.rl.t VALUES " +
       "(1,'a',1.0),(2,'a',2.0),(3,'b',3.0),(4,'b',4.0)")
     val warehouse = spark.conf.get("spark.sql.catalog.graft.warehouse")
@@ -399,10 +401,10 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(sql("SELECT id FROM graft.rl.t ORDER BY id")
       .as[Long].collect().toSeq == Seq(1L, 2L))
 
-    // a PUSHABLE delete keeps the metadata-delete shortcut → the
-    // graft.delete.mode routing (copy-on-write default: 'delete' op)
+    // a PUSHABLE delete that is not metadata-only: merge-on-read keeps
+    // it off the metadata-delete shortcut, so it is a delta too
     sql("DELETE FROM graft.rl.t WHERE id = 1")
-    assert(t.currentSnapshot().operation == "delete",
+    assert(t.currentSnapshot().operation == "delete-pos",
       t.currentSnapshot().operation)
     assert(sql("SELECT id FROM graft.rl.t").as[Long].collect().toSeq ==
       Seq(2L))
@@ -410,7 +412,9 @@ class GraftCatalogSpec extends AnyFunSuite {
     // SUBQUERY predicates — the surface the v1 rule refuses with a
     // named error — plan natively through the delta path
     sql("DROP TABLE IF EXISTS graft.rl.t2")
-    sql("CREATE TABLE graft.rl.t2 (id BIGINT, v DOUBLE)")
+    sql("CREATE TABLE graft.rl.t2 (id BIGINT, v DOUBLE) TBLPROPERTIES " +
+      "('graft.delete.mode'='merge-on-read', " +
+      "'graft.update.mode'='merge-on-read', 'graft.merge.mode'='merge-on-read')")
     sql("INSERT INTO graft.rl.t2 VALUES (1,1.0),(2,2.0),(3,3.0)")
     sql("DELETE FROM graft.rl.t2 WHERE id IN " +
       "(SELECT id + 1 FROM graft.rl.t2 WHERE id <= 1)")

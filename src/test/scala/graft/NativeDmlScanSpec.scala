@@ -30,6 +30,12 @@ class NativeDmlScanSpec extends AnyFunSuite {
 
   private def sql(q: String): DataFrame = spark.sql(q)
 
+  /** Every row-level mode merge-on-read: these cases are about the
+    * delta write.
+    */
+  private val Mor = Seq("delete", "update", "merge")
+    .map(k => s"'graft.$k.mode'='merge-on-read'").mkString(", ")
+
   private def warehouse = spark.conf.get("spark.sql.catalog.graft.warehouse")
 
   private def commandPlan(df: DataFrame): String =
@@ -41,7 +47,7 @@ class NativeDmlScanSpec extends AnyFunSuite {
   test("row-level DELETE: native columnar target scan, exact deletion") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.ndml")
     sql("DROP TABLE IF EXISTS graft.ndml.d")
-    sql("CREATE TABLE graft.ndml.d (id BIGINT, v DOUBLE)")
+    sql(s"CREATE TABLE graft.ndml.d (id BIGINT, v DOUBLE) TBLPROPERTIES ($Mor)")
     sql("INSERT INTO graft.ndml.d SELECT id, cast(id as double) " +
       "FROM range(0, 10000)")
     // `%` has no sources.Filter form, so the metadata-delete shortcut
@@ -64,7 +70,7 @@ class NativeDmlScanSpec extends AnyFunSuite {
 
   test("UPDATE on a dv-covered table: masked native scan, survivors only") {
     sql("DROP TABLE IF EXISTS graft.ndml.u")
-    sql("CREATE TABLE graft.ndml.u (id BIGINT, v DOUBLE)")
+    sql(s"CREATE TABLE graft.ndml.u (id BIGINT, v DOUBLE) TBLPROPERTIES ($Mor)")
     sql("INSERT INTO graft.ndml.u SELECT id, cast(id as double) " +
       "FROM range(0, 10000)")
     val t = SnapshotTable.load(spark, s"$warehouse/ndml/u")
@@ -87,7 +93,7 @@ class NativeDmlScanSpec extends AnyFunSuite {
   test("MERGE into a partitioned table: native target scan, exact result") {
     sql("DROP TABLE IF EXISTS graft.ndml.m")
     sql("CREATE TABLE graft.ndml.m (id BIGINT, kind STRING, v DOUBLE) " +
-      "PARTITIONED BY (kind)")
+      s"PARTITIONED BY (kind) TBLPROPERTIES ($Mor)")
     sql("INSERT INTO graft.ndml.m SELECT id, " +
       "concat('k', cast(id % 4 as string)), cast(id as double) " +
       "FROM range(0, 8000)")

@@ -21,7 +21,8 @@ import graft.catalog.{GraftBatchScan, GraftPartitionReaderFactory, ScanEvents, S
   * one Hadoop conf), a SQL point DELETE runs as the row-level delta
   * write instead of a read-collect-write-read chain, and a MERGE from
   * rows already on the driver derives its target prune without a
-  * probe job. Every case also checks the rows it leaves.
+  * probe job; a copy-on-write UPDATE and MERGE stay within pinned job
+  * and stage counts. Every case also checks the rows it leaves.
   */
 class StatementWorkSpec extends AnyFunSuite {
 
@@ -100,7 +101,8 @@ class StatementWorkSpec extends AnyFunSuite {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.stmt")
     sql(s"DROP TABLE IF EXISTS $Mor")
     sql(s"CREATE TABLE $Mor (id BIGINT, v DOUBLE) " +
-      "TBLPROPERTIES ('graft.delete.mode'='merge-on-read')")
+      "TBLPROPERTIES ('graft.delete.mode'='merge-on-read', " +
+      "'graft.update.mode'='merge-on-read')")
     (0 until 10).foreach { k =>
       if (k == 8) sql(s"ALTER TABLE $Mor ADD COLUMN w BIGINT")
       sql(s"INSERT INTO $Mor SELECT /*+ REPARTITION(1) */ id, " +
@@ -207,7 +209,8 @@ class StatementWorkSpec extends AnyFunSuite {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.stmt")
     sql(s"DROP TABLE IF EXISTS graft.stmt.$name")
     sql(s"CREATE TABLE graft.stmt.$name (id BIGINT, v DOUBLE) " +
-      s"TBLPROPERTIES ('graft.delete.mode'='merge-on-read'$props)")
+      "TBLPROPERTIES ('graft.delete.mode'='merge-on-read', " +
+      s"'graft.merge.mode'='merge-on-read'$props)")
     (0 until 8).foreach { k =>
       sql(s"INSERT INTO graft.stmt.$name SELECT /*+ REPARTITION(1) */ " +
         s"id, cast(id as double) FROM range(${k * 1000}, ${k * 1000 + 1000})")
@@ -261,5 +264,37 @@ class StatementWorkSpec extends AnyFunSuite {
     assert(work.jobs > offWork.jobs, s"probe jobs: $work vs $offWork")
     assert(kept < total, s"the target scan must prune: $kept of $total")
     assert(rows == mergeModel(keys) && offRows == rows)
+  }
+
+  test("a copy-on-write SQL UPDATE and MERGE from local rows stay within their work budget") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graft.stmt")
+    sql("DROP TABLE IF EXISTS graft.stmt.cow")
+    sql("CREATE TABLE graft.stmt.cow (id BIGINT, v DOUBLE)")
+    (0 until 4).foreach { k =>
+      sql("INSERT INTO graft.stmt.cow SELECT /*+ REPARTITION(1) */ id, " +
+        s"cast(id as double) FROM range(${k * 100}, ${k * 100 + 100})")
+    }
+    val t = SnapshotTable.load(spark, s"$warehouse/stmt/cow")
+    val (_, update) = workOf(
+      sql("UPDATE graft.stmt.cow SET v = -1 WHERE id % 1000 = 152"))
+    assert(t.currentSnapshot().operation == "update")
+    localRows(Seq(250L, 900L)).createOrReplaceTempView("stmt_cow_src")
+    val (_, merge) = workOf(sql(
+      """MERGE INTO graft.stmt.cow t USING stmt_cow_src s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET v = s.v
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+    assert(t.currentSnapshot().operation == "merge")
+    info(s"copy-on-write UPDATE: $update; MERGE: $merge")
+    // measured on a 4-core local session: 3 jobs / 3 stages (the
+    // matching-files query, then the rewrite) and 6 / 6 (the MERGE
+    // adds its join's stages)
+    assert(update.jobs <= 3 && update.stages <= 3, s"UPDATE: $update")
+    assert(merge.jobs <= 6 && merge.stages <= 6, s"MERGE: $merge")
+    // each statement replaced one file; the MERGE's insert rode along
+    assert(t.currentSnapshot().files.size == 4)
+    assert(sql("SELECT id, v FROM graft.stmt.cow").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toSeq.sorted ==
+      ((0L until 400L).map(id => id -> id.toDouble).toMap ++
+        Seq(152L -> -1.0, 250L -> -1.0, 900L -> -1.0)).toSeq.sorted)
   }
 }

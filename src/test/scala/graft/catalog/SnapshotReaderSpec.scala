@@ -37,7 +37,8 @@ class SnapshotReaderSpec extends AnyFunSuite {
     sql(s"DROP TABLE IF EXISTS graft.sr.$name")
     sql(s"CREATE TABLE graft.sr.$name (k STRING, v BIGINT) " +
       "PARTITIONED BY (k) " +
-      "TBLPROPERTIES ('graft.delete.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.delete.mode' = 'merge-on-read', " +
+      "'graft.update.mode' = 'merge-on-read')")
     sql(s"INSERT INTO graft.sr.$name VALUES ('a:b c', 0), ('a:b c', 100), " +
       "('x%20y', 1), ('x%20y', 101), ('p=q''s', 2), ('p=q''s', 102)")
     SnapshotTable.load(spark, s"$warehouse/sr/$name")
