@@ -611,6 +611,9 @@ final class GraftBatchScan(
     // the projection asks for the row's position metadata
     val needIdx = hasDvs || posRequested
     val fseq = filters.toIndexedSeq
+    // a rewrite must read every row of each file it keeps: its pushed
+    // filters skip files, never the parquet row groups of a kept file
+    val readFilters = if (fileGroups) Nil else fseq
     val schemas = shapes.indices.map(shapeSchema)
     // the ext (masking/synthesizing/drift) path serves: any split with
     // deletes, any metadata projection, and any non-current shape —
@@ -642,7 +645,7 @@ final class GraftBatchScan(
     def extReaders[T](flavour: Boolean)(
         build: (StructType, Seq[Filter]) => Option[T]): Array[Option[T]] =
       Array.tabulate(shapes.length) { k =>
-        if (flavour && extShapes(k)) build(schemas(k), shapeFilters(k, fseq))
+        if (flavour && extShapes(k)) build(schemas(k), shapeFilters(k, readFilters))
         else None
       }
     val readExts = extReaders(!columnar)((ss, sf) => Some(
@@ -675,10 +678,10 @@ final class GraftBatchScan(
     GraftPartitionReaderFactory(
       columnar,
       Option.when(fastReachable && !columnar)(ParquetReadBridge.readFunction(
-        table.session, snap.schema, dataRequired, fseq)),
+        table.session, snap.schema, dataRequired, readFilters)),
       readExts,
       if (fastReachable && columnar) ParquetReadBridge.columnarReadFunction(
-        table.session, snap.schema, dataRequired, fseq)
+        table.session, snap.schema, dataRequired, readFilters)
       else None,
       colExts,
       Option.when(reachable.exists(e => table.dvsOf(snap, e).nonEmpty))(
@@ -1035,11 +1038,8 @@ final case class GraftPartitionReaderFactory(
     ref.dvFiles.foreach { case (p, len) =>
       readDv.getOrElse(unbuilt(s"delete-vector reader (for $rel)"))(
         ParquetReadBridge.wholeFile(p, len)).foreach { r =>
-        if (r.getUTF8String(0).toString == rel) {
-          val b = new org.roaringbitmap.RoaringBitmap()
-          b.deserialize(java.nio.ByteBuffer.wrap(r.getBinary(1).clone()))
-          bm.or(b)
-        }
+        if (r.getUTF8String(0).toString == rel)
+          bm.or(GraftDeltaWriterFactory.bitmapOf(r.getBinary(1).clone()))
       }
     }
     bm

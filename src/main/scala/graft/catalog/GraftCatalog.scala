@@ -56,8 +56,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * default) or merge-on-read delete vectors plus appended row images
   * ([[GraftRowLevelOperation]]). DELETEs [[GraftV2Table.canDeleteWhere]]
   * admits shortcut through the optimizer's metadata-delete rule onto
-  * [[SnapshotTable.deleteRouted]]. Temp views of a graft table plan
-  * the same way ([[graft.plans.GraftViewDml]]).
+  * [[SnapshotTable.deleteRouted]], which drops the files the whole
+  * predicate's stats cover unopened and plans the rest as the same
+  * row-level operation. Temp views of a graft table plan the same way
+  * ([[graft.plans.GraftViewDml]]), and so do the Scala API's DELETE,
+  * UPDATE and MERGE: one engine, one conflict rule, on every surface.
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with FunctionCatalog {

@@ -23,6 +23,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+import org.roaringbitmap.RoaringBitmap
 
 /** NATIVE DSv2 row-level operations (`SupportsRowLevelOperations` /
   * `SupportsDelta`) for graft tables: Spark's OWN analyzer rewrites
@@ -37,8 +38,8 @@ import org.apache.spark.util.SerializableConfiguration
   * The operation is DELTA-based (merge-on-read): the scan exposes
   * each row's identity as two metadata columns — the data file's
   * manifest path and the row ordinal ([[GraftV2Table.MetaFileCol]] /
-  * [[GraftV2Table.MetaPosCol]], served by the same position-aware
-  * snapshot read the Scala-API vector paths use) — and the write
+  * [[GraftV2Table.MetaPosCol]], synthesized by [[GraftBatchScan]]) —
+  * and the write
   * receives per-row deltas: DELETEs and UPDATEs mark positions into
   * roaring-bitmap delete vectors built EXECUTOR-side, INSERTs and
   * update images stream into parquet data files written EXECUTOR-side
@@ -54,35 +55,31 @@ import org.apache.spark.util.SerializableConfiguration
   * Scale posture: DELETE/UPDATE conditions push down to the scan as
   * ordinary v2 filters (manifest stats prune candidate files); MERGE
   * prunes target files from the source's keys
-  * ([[graft.plans.GraftMergeSourcePrune]]). Positions
-  * are valid only against the scanned snapshot: the commit pins the
-  * base version and raises [[SnapshotConflictException]] on any
-  * concurrent commit.
+  * ([[graft.plans.GraftMergeSourcePrune]]). Positions are valid only
+  * against the scanned files: the commit ([[SnapshotTable
+  * .commitDeltaAt]]) rebases over a concurrent commit that leaves them
+  * untouched, and raises [[SnapshotConflictException]] otherwise, or on
+  * any concurrent commit under `graft.write.isolation-level=
+  * serializable`.
   */
 final class GraftRowLevelOperation(v2: GraftV2Table, cmd: Command)
     extends RowLevelOperation with SupportsDelta {
 
-  /** The version the statement scans AND commits against — captured
+  /** The snapshot the statement scans AND commits against — captured
     * once, so scan and commit can never observe different file sets.
     * The HEAD, not the published view: row-level writes target the
     * head like every other write verb, so a DML inside an open WAP
     * audit window sees (and edits) the unpublished rows instead of
-    * spuriously conflicting at commit.
+    * spuriously conflicting at commit. A front end's statement brings
+    * its own ([[GraftDml]]).
     */
-  private[graft] val baseVersion: Long = v2.table.currentVersion()
+  private[graft] val base: Snapshot = v2.rowLevelBase()
+  private[graft] def baseVersion: Long = base.version
 
-  /** The underlying catalog table, for the optimizer's source-derived
-    * MERGE pruning ([[graft.plans.GraftMergeSourcePrune]]).
+  /** The underlying table, for the optimizer's source-derived MERGE
+    * pruning ([[graft.plans.GraftMergeSourcePrune]]).
     */
   private[graft] def v2Table: GraftV2Table = v2
-
-  /** Data-file count / properties of the scanned base snapshot — the
-    * prune rule's gates, without exposing the snapshot type.
-    */
-  private[graft] def baseFileCount: Int =
-    v2.table.snapshotAt(baseVersion).files.size
-  private[graft] def baseProperties: Map[String, String] =
-    v2.table.snapshotAt(baseVersion).properties
 
   override def command(): Command = cmd
 
@@ -96,8 +93,7 @@ final class GraftRowLevelOperation(v2: GraftV2Table, cmd: Command)
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite =
-        new GraftDeltaWrite(v2.table, baseVersion, cmd, info.schema(),
-          transforms = v2.streaming)
+        new GraftDeltaWrite(v2, base, cmd, info.schema())
     }
 
   override def rowId(): Array[NamedReference] = Array(
@@ -124,17 +120,20 @@ final class GraftRowLevelOperation(v2: GraftV2Table, cmd: Command)
   *  - The write streams rows through [[GraftDeltaWriter]]'s insert lane
   *    ([[GraftFileWrite]]).
   *  - ONE strict commit ([[SnapshotTable.commitRewrite]]) replaces
-  *    exactly the scanned files under the operation name the Scala
-  *    API's copy-on-write `delete` / `update` / `mergeConditional`
-  *    commit.
+  *    exactly the scanned files, plus the stats-covered files of a
+  *    front end's DELETE, under the command's name (`delete` /
+  *    `update` / `merge`).
   */
 final class GraftCopyOnWriteOperation(v2: GraftV2Table, cmd: Command)
     extends RowLevelOperation {
 
-  /** The version scanned and replaced — the head, as for the delta
-    * operation ([[GraftRowLevelOperation.baseVersion]]).
+  /** The snapshot scanned and replaced — the head, as for the delta
+    * operation ([[GraftRowLevelOperation.base]]).
     */
-  private val baseVersion: Long = v2.table.currentVersion()
+  private[graft] val base: Snapshot = v2.rowLevelBase()
+
+  /** The underlying table, for [[graft.plans.GraftMergeSourcePrune]]. */
+  private[graft] def v2Table: GraftV2Table = v2
 
   /** The scan Spark built for the statement: the files it finally
     * reads are the files the commit replaces.
@@ -144,26 +143,25 @@ final class GraftCopyOnWriteOperation(v2: GraftV2Table, cmd: Command)
   override def command(): Command = cmd
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    v2.scanBuilderAt(Some(baseVersion), rewrite = Some(s => scan = Some(s)))
+    v2.scanBuilderAt(Some(base.version), rewrite = Some(s => scan = Some(s)))
 
   override def requiredMetadataAttributes(): Array[NamedReference] =
     Array(Expressions.column(GraftV2Table.MetaFileCol))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
-      override def build(): Write = new GraftFileWrite(v2.table,
-        v2.table.snapshotAt(baseVersion), info.schema(), { entries =>
+      override def build(): Write = new GraftFileWrite(v2.table, base,
+        info.schema(), { entries =>
           val scanned = scan.getOrElse(throw SparkException.internalError(
             s"$description committed without a scan")).plannedFiles
-          v2.table.commitRewrite(baseVersion,
+          v2.committed(v2.table.commitRewrite(base,
             cmd.toString.toLowerCase(java.util.Locale.ROOT),
-            scanned.map(_.path).toSet, entries)
-          ()
+            scanned.map(_.path).toSet ++ v2.covered, entries))
         })
     }
 
   override def description(): String =
-    s"GraftCopyOnWriteOperation[$cmd, base=v$baseVersion]"
+    s"GraftCopyOnWriteOperation[$cmd, base=v${base.version}]"
 }
 
 /** The write half of a Spark-planned file replace — a copy-on-write
@@ -253,11 +251,11 @@ final class GraftFileWrite(table: SnapshotTable, snap: Snapshot,
   * month — clustering would serialize them through one task), keeping
   * the local sort.
   */
-final class GraftDeltaWrite(table: SnapshotTable, baseVersion: Long,
-    cmd: Command, rowSchema: StructType, transforms: Boolean)
+final class GraftDeltaWrite(v2: GraftV2Table, base: Snapshot,
+    cmd: Command, rowSchema: StructType)
     extends DeltaWrite with RequiresDistributionAndOrdering {
 
-  private val base = table.snapshotAt(baseVersion)
+  private def table: SnapshotTable = v2.table
 
   private def fileRef = Expressions.column(GraftV2Table.MetaFileCol)
   private def posRef = Expressions.column(GraftV2Table.MetaPosCol)
@@ -271,7 +269,7 @@ final class GraftDeltaWrite(table: SnapshotTable, baseVersion: Long,
     base.spec.toSeq.flatMap { ps =>
       ps.transform match {
         case "identity" => Some(Expressions.column(ps.source))
-        case _ if !transforms => None
+        case _ if !v2.streaming => None
         case "month" => Some(Expressions.apply(GraftFunctions.MonthsName,
           Expressions.column(ps.source)))
         case SnapshotTable.BucketXform(n) => Some(Expressions.bucket(
@@ -322,19 +320,19 @@ final class GraftDeltaWrite(table: SnapshotTable, baseVersion: Long,
   override def distributionStrictlyRequired(): Boolean = false
 
   override def toBatch: DeltaBatchWrite =
-    new GraftDeltaBatchWrite(table, baseVersion, cmd, rowSchema)
+    new GraftDeltaBatchWrite(v2, base, cmd, rowSchema)
 }
 
-final class GraftDeltaBatchWrite(table: SnapshotTable, baseVersion: Long,
+final class GraftDeltaBatchWrite(v2: GraftV2Table, base: Snapshot,
     cmd: Command, rowSchema: StructType) extends DeltaBatchWrite {
 
+  private def table: SnapshotTable = v2.table
   private val dataRel = GraftDeltaWriterFactory.freshRel()
   private val dvRel = GraftDeltaWriterFactory.freshRel()
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =
-    GraftDeltaWriterFactory(table, table.snapshotAt(baseVersion), dataRel,
-      dvRel, rowSchema)
+    GraftDeltaWriterFactory(table, base, dataRel, dvRel, rowSchema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: GraftDeltaCommit => m }
@@ -350,9 +348,8 @@ final class GraftDeltaBatchWrite(table: SnapshotTable, baseVersion: Long,
       case Command.UPDATE => "update-pos"
       case Command.MERGE => "merge-pos"
     }
-    table.commitDelta(baseVersion, op, entries, dvs,
-      updFiles = msgs.flatMap(_.updFiles).toSet)
-    ()
+    v2.committed(table.commitDeltaAt(base, op, entries, dvs,
+      msgs.flatMap(_.updFiles).toSet, v2.covered))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -384,6 +381,44 @@ object GraftDeltaWriterFactory {
   /** A fresh staging batch directory, manifest-relative. */
   def freshRel(): String = s"${SnapshotLog.DataDirName}/" +
     UUID.randomUUID().toString.replace("-", "").take(16)
+
+  /** The vector encoder: `bitmaps` (manifest data path → deleted row
+    * ordinals) written in the calling task as ONE vector file at `rel`
+    * under `rootStr`, one run-optimized serialized bitmap per data file.
+    * Returns (total positions, covered data paths).
+    */
+  def writeVectors(rootStr: String, rel: String,
+      dvFactory: (OutputWriterFactory, SerializableConfiguration),
+      bitmaps: Iterator[(String, RoaringBitmap)]): (Long, Seq[String]) = {
+    val (factory, conf) = dvFactory
+    val w = ParquetWriteBridge.newWriter(factory, conf.value,
+      new Path(new Path(rootStr), rel).toString, SnapshotTable.DvSchema)
+    var rows = 0L
+    val covered = Seq.newBuilder[String]
+    bitmaps.foreach { case (dataPath, bm) =>
+      w.write(InternalRow(UTF8String.fromString(dataPath), bytesOf(bm),
+        bm.getLongCardinality))
+      rows += bm.getLongCardinality
+      covered += dataPath
+    }
+    w.close()
+    (rows, covered.result())
+  }
+
+  /** `bm` run-optimized and serialized, as a vector file stores it. */
+  def bytesOf(bm: RoaringBitmap): Array[Byte] = {
+    bm.runOptimize()
+    val buf = new Array[Byte](bm.serializedSizeInBytes())
+    bm.serialize(ByteBuffer.wrap(buf))
+    buf
+  }
+
+  /** A bitmap [[bytesOf]] serialized, decoded. */
+  def bitmapOf(bytes: Array[Byte]): RoaringBitmap = {
+    val bm = new RoaringBitmap()
+    bm.deserialize(ByteBuffer.wrap(bytes))
+    bm
+  }
 
   /** The writer factory staging rows of `rowSchema` under `dataRel` and
     * vectors under `dvRel`, laid out by `snap`'s partition spec and
@@ -473,9 +508,9 @@ final class GraftDeltaWriter(
   // via delete() is a genuine removal — reads mask both identically,
   // the labeled change feed does not
   private val delBitmaps =
-    mutable.HashMap.empty[String, org.roaringbitmap.RoaringBitmap]
+    mutable.HashMap.empty[String, RoaringBitmap]
   private val updBitmaps =
-    mutable.HashMap.empty[String, org.roaringbitmap.RoaringBitmap]
+    mutable.HashMap.empty[String, RoaringBitmap]
 
   /** One row-image output lane: its own open writer (keyed by the
     * partition value it serves) and its own file list. Two lanes —
@@ -528,15 +563,14 @@ final class GraftDeltaWriter(
     partExpr.map(e => UnsafeProjection.create(Seq(e)))
 
   /** Mark the row `id` = (manifest path, ordinal) in `bitmaps`. */
-  private def mark(bitmaps: mutable.HashMap[String,
-      org.roaringbitmap.RoaringBitmap], id: InternalRow): Unit = {
+  private def mark(bitmaps: mutable.HashMap[String, RoaringBitmap],
+      id: InternalRow): Unit = {
     val rel = id.getUTF8String(0).toString
     val pos = id.getLong(1)
     require(pos <= 0xFFFFFFFFL,
       s"row ordinal $pos exceeds the 32-bit vector domain in $rel " +
         "— split the file (compact with a smaller targetRowsPerFile)")
-    bitmaps.getOrElseUpdate(rel,
-      new org.roaringbitmap.RoaringBitmap()).add(pos.toInt)
+    bitmaps.getOrElseUpdate(rel, new RoaringBitmap()).add(pos.toInt)
   }
 
   private def partOf(row: InternalRow): Option[String] = partProj match {
@@ -594,30 +628,14 @@ final class GraftDeltaWriter(
         g.substring(SnapshotTable.PartCol.length + 1))))
   }
 
-  private def writeDv(bitmaps: mutable.HashMap[String,
-      org.roaringbitmap.RoaringBitmap], op: String)
-      : Seq[(String, Long, Seq[String], String)] =
+  private def writeDv(bitmaps: mutable.HashMap[String, RoaringBitmap],
+      op: String): Seq[(String, Long, Seq[String], String)] =
     if (bitmaps.isEmpty) Nil
     else {
-      val (factory, conf) = dvFactory
-      val name = f"dv-$op-$partitionId%05d-$taskId.parquet"
-      val rel = s"$dvRel/$name"
-      val w = ParquetWriteBridge.newWriter(factory, conf.value,
-        new Path(new Path(rootStr), rel).toString,
-        SnapshotTable.DvSchema)
-      var rows = 0L
-      val covered = Seq.newBuilder[String]
-      bitmaps.foreach { case (dataPath, bm) =>
-        bm.runOptimize()
-        val buf = new Array[Byte](bm.serializedSizeInBytes())
-        bm.serialize(ByteBuffer.wrap(buf))
-        w.write(InternalRow(UTF8String.fromString(dataPath), buf,
-          bm.getLongCardinality))
-        rows += bm.getLongCardinality
-        covered += dataPath
-      }
-      w.close()
-      Seq((rel, rows, covered.result(), op))
+      val rel = f"$dvRel/dv-$op-$partitionId%05d-$taskId.parquet"
+      val (rows, covered) = GraftDeltaWriterFactory.writeVectors(rootStr,
+        rel, dvFactory, bitmaps.iterator)
+      Seq((rel, rows, covered, op))
     }
 
   override def commit(): WriterCommitMessage = {

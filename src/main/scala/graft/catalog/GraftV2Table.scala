@@ -37,6 +37,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * ([[SnapshotTable]]'s own frames: a file subset, a render schema,
   * or no deletes at all): the table scans exactly that snapshot,
   * refuses every write, and is no DML or metadata-aggregate target.
+  * A `dml` is one statement the Scala API's DELETE/UPDATE/MERGE front
+  * ends plan over the table ([[GraftDml]]): its mode, its snapshot and
+  * its stats-covered files come from the statement, not from the
+  * table's properties.
   *
   * Every read, batch or micro-batch, is one [[GraftBatchScan]]. SQL
   * DELETE / UPDATE / MERGE are Spark row-level plans chosen by the
@@ -49,14 +53,15 @@ final class GraftV2Table(
     ident: String,
     val pinned: Option[Long],
     private[catalog] val streaming: Boolean = true,
-    private[graft] val view: Option[Snapshot] = None) extends Table
+    private[graft] val view: Option[Snapshot] = None,
+    private[graft] val dml: Option[GraftDml] = None) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations with SupportsMetadataColumns {
 
   override def name(): String = ident
 
-  private val declared: StructType =
-    view.map(_.schema).getOrElse(table.schemaAt(pinned))
+  private val declared: StructType = view.orElse(dml.map(_.target))
+    .map(_.schema).getOrElse(table.schemaAt(pinned))
 
   /** Every column nullable, as in the read view: a file that predates
     * a column null-fills it, whatever nullability the snapshot records.
@@ -64,15 +69,18 @@ final class GraftV2Table(
   override val schema: StructType =
     SnapshotTable.nullableType(declared).asInstanceOf[StructType]
 
-  /** The snapshot's non-nullable columns as enforced CHECK constraints:
-    * [[schema]] reads every column nullable, so Spark's write analysis
-    * refuses a NULL in INSERT, UPDATE and MERGE through these instead.
+  /** The snapshot's non-nullable columns and struct fields, at any
+    * depth, as enforced CHECK constraints: [[schema]] reads every column
+    * nullable, so Spark's write analysis refuses a NULL in INSERT,
+    * UPDATE and MERGE through these instead. A field is checked only
+    * where its parents are not NULL. A statement's own table checks the
+    * columns the head records, not the ones a MERGE source adds.
     */
   override def constraints(): Array[Constraint] =
-    declared.fields.filterNot(_.nullable).map(f =>
-      Constraint.check(s"${f.name}_not_null")
-        .predicateSql(s"${SnapshotTable.quoted(f.name)} IS NOT NULL")
-        .enforced(true).build(): Constraint)
+    GraftV2Table.notNullChecks(dml.fold(declared)(d =>
+      table.snapshotAt(d.target.version).schema)).map { case (name, sql) =>
+      Constraint.check(name).predicateSql(sql).enforced(true).build()
+    }.toArray
 
   override def partitioning(): Array[Transform] =
     table.publishedSnapshot().spec.toArray.map { ps =>
@@ -140,6 +148,20 @@ final class GraftV2Table(
             "reads — publish() or abortAudit() the staged schema change, " +
             "or re-run the statement")
     }
+
+  /** The snapshot a row-level operation scans and commits against:
+    * the statement's own for a front end's table, else the head.
+    */
+  private[catalog] def rowLevelBase(): Snapshot =
+    dml.fold(table.currentSnapshot())(_.target)
+
+  /** Files a front end's statement removes without reading them. */
+  private[catalog] def covered: Set[String] =
+    dml.fold(Set.empty[String])(_.covered)
+
+  /** Hand the snapshot a row-level commit published to the front end. */
+  private[catalog] def committed(s: Snapshot): Unit =
+    dml.foreach(_.committed(s))
 
   private[graft] def requireWritable(op: String): Unit = {
     require(view.isEmpty, s"cannot $op a snapshot read of ${table.root}")
@@ -225,16 +247,16 @@ final class GraftV2Table(
       override def isPartiallyPushed(): Boolean = true
 
       override def build(): Scan = {
-        val snap = view.getOrElse(version.map(table.snapshotAt)
-          .getOrElse(table.publishedSnapshot()))
+        val snap = view.orElse(dml.map(_.scanned)).getOrElse(version
+          .map(table.snapshotAt).getOrElse(table.publishedSnapshot()))
         // a row-level operation's scan reads its base version, the
         // head, which an open audit window may have evolved past the
         // published schema the statement was analyzed against; a delta
         // commit checks that drift, so its scan needs only the columns
         // it projects at their analyzed types. A rewrite carries every
         // column into the files it replaces, so it needs them all. A
-        // view is its own schema.
-        if (view.isEmpty) {
+        // view and a front end's statement are their own schema.
+        if (view.isEmpty && dml.isEmpty) {
           if (version == pinned) guardSchemaDrift(snap)
           else if (rewrite.isDefined)
             require(SnapshotTable.sameColumns(snap.schema, schema),
@@ -315,7 +337,8 @@ final class GraftV2Table(
   /** Native `SupportsRowLevelOperations`: Spark's analyzer rewrites
     * DELETE/UPDATE/MERGE over this table onto the operation the
     * table's `graft.<command>.mode` names ([[SnapshotTable
-    * .mergeOnRead]]) — the DELTA operation under merge-on-read
+    * .mergeOnRead]]), or a front end's statement forces ([[GraftDml]])
+    * — the DELTA operation under merge-on-read
     * ([[GraftRowLevelOperation]]: delete vectors plus appended row
     * images), the group-based rewrite under copy-on-write, the default
     * ([[GraftCopyOnWriteOperation]]). A DELETE that [[canDeleteWhere]]
@@ -327,8 +350,10 @@ final class GraftV2Table(
     requireWritable(s"${info.command} on")
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation =
-        if (SnapshotTable.mergeOnRead(table.currentSnapshot().properties,
-            info.command.toString.toLowerCase(java.util.Locale.ROOT)))
+        if (dml.fold(SnapshotTable.mergeOnRead(
+            table.currentSnapshot().properties,
+            info.command.toString.toLowerCase(java.util.Locale.ROOT)))(
+            _.mergeOnRead))
           new GraftRowLevelOperation(GraftV2Table.this, info.command)
         else new GraftCopyOnWriteOperation(GraftV2Table.this, info.command)
     }
@@ -434,15 +459,14 @@ final class GraftV2Table(
     * ([[deleteWhere]]) instead of Spark's row-level rewrite. Spark asks
     * after `RewriteDeleteFromTable` has planned the row-level delete
     * (`OptimizeMetadataOnlyDeleteFromTable`): true swaps that plan for
-    * [[deleteWhere]], false keeps the `WriteDelta` through
-    * [[GraftRowLevelOperation]] — the path UPDATE and MERGE take, with
-    * vectors built in the task and commit metadata carried inline.
-    * Iceberg's `SparkTable.canDeleteWhere` rule, per
+    * [[deleteWhere]], false keeps the planned `ReplaceData` or
+    * `WriteDelta`. Iceberg's `SparkTable.canDeleteWhere` rule, per
     * `graft.delete.mode`:
     *
     *  - `copy-on-write` (default): every predicate with a column form —
-    *    [[SnapshotTable.delete]] rewrites matched files for ANY
-    *    predicate;
+    *    [[SnapshotTable.deleteRouted]] re-plans it knowing the whole
+    *    predicate, so the files its stats prove fully matched drop
+    *    unopened and only the rest are rewritten;
     *  - `merge-on-read`: only a metadata-only delete — no candidate
     *    file, or every candidate's stats prove all its rows match
     *    ([[SnapshotTable.deleteIsMetadataOnly]]), so files drop from the
@@ -453,9 +477,11 @@ final class GraftV2Table(
     *
     * Every other merge-on-read delete is a row-level write, and so is
     * every shape with no top-level `sources.Filter` column form, in
-    * either mode.
+    * either mode. A front end's own statement ([[GraftDml]]) is always
+    * its row-level plan, so it never comes back through here.
     */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
+    dml.isEmpty &&
     filters.forall(f => GraftV2Table.filterToColumn(f).isDefined &&
       // v1 filters render nested struct fields as DOTTED names, which
       // filterToColumn would backtick into a (nonexistent) flat column
@@ -479,13 +505,12 @@ final class GraftV2Table(
       .getOrElse(org.apache.spark.sql.functions.lit(true))
 
   /** The deletes [[canDeleteWhere]] admits, by `graft.delete.mode`:
-    * under `copy-on-write` (default) [[SnapshotTable.delete]] rewrites
-    * hit files; under `equality` (VERDICT r14 #7) a KEY-predicate
-    * DELETE commits an Iceberg-v2 equality-delete file of the key
-    * tuples — O(keys) bytes with ZERO scan of the target at any table
-    * size. The metadata-only deletes of both merge-on-read modes go
-    * through [[SnapshotTable.deleteRouted]], which drops the fully
-    * matched files without opening one.
+    * under `equality` (VERDICT r14 #7) a KEY-predicate DELETE commits
+    * an Iceberg-v2 equality-delete file of the key tuples — O(keys)
+    * bytes with ZERO scan of the target at any table size. Every other
+    * admitted delete goes through [[SnapshotTable.deleteRouted]]: stats-
+    * covered files drop without being opened, and the rest, if any, run
+    * as the row-level plan of the table's mode.
     */
   override def deleteWhere(filters: Array[Filter]): Unit = {
     requireWritable("DELETE FROM")
@@ -509,6 +534,8 @@ final class GraftV2Table(
 
   override def truncateTable(): Boolean = {
     requireWritable("TRUNCATE")
+    require(dml.isEmpty, s"a row-level statement on ${table.root} " +
+      "cannot truncate")
     table.overwrite(table.session.createDataFrame(
       new java.util.ArrayList[Row](), table.schemaAt(None)))
     true
@@ -661,7 +688,73 @@ final class GraftChangesV2Table(
     }
 }
 
+/** One row-level statement a [[SnapshotTable]] front end (`delete`,
+  * `update`, `merge` and their explicit-mode and routed twins) plans
+  * over its own [[GraftV2Table]]:
+  *
+  *  - `target` is the head the statement scans and commits against,
+  *    under the schema it writes — evolved, ids included, when a MERGE
+  *    source adds or widens columns;
+  *  - `mergeOnRead` is the mode the method forces or routed to, read
+  *    before any table property;
+  *  - `covered` names the data files whose manifest stats prove every
+  *    live row matches the WHOLE delete predicate: the scans leave them
+  *    out and the commit removes them.
+  *
+  * The commit hands back the snapshot it published ([[committed]]), so
+  * the front end returns its own statement's version, not a head a
+  * concurrent writer may have moved.
+  */
+private[graft] final class GraftDml(val target: Snapshot,
+    val mergeOnRead: Boolean, val covered: Set[String]) {
+
+  /** What the statement's scans read: the target without its covered
+    * files.
+    */
+  private[catalog] lazy val scanned: Snapshot =
+    target.copy(files = target.files.filterNot(f => covered(f.path)))
+
+  @volatile private var published: Option[Snapshot] = None
+
+  private[catalog] def committed(s: Snapshot): Unit = published = Some(s)
+
+  /** The snapshot the statement's commit published, or returned when it
+    * had nothing to publish; None when no commit ran.
+    */
+  private[graft] def result: Option[Snapshot] = published
+}
+
 object GraftV2Table {
+
+  /** (name, predicate) of one enforced CHECK per value `schema` records
+    * as non-nullable: a top-level column, a struct field at any depth
+    * (checked only where its parents are not NULL), and the elements of
+    * an array or the values of a map (through `forall`).
+    */
+  private[catalog] def notNullChecks(
+      schema: StructType): Seq[(String, String)] = {
+    import org.apache.spark.sql.types.{ArrayType, MapType}
+    def walk(parents: Seq[String], st: StructType): Seq[(String, String)] =
+      st.fields.toSeq.flatMap { f =>
+        val path = parents :+ f.name
+        val ref = path.map(SnapshotTable.quoted).mkString(".")
+        val guards = parents.indices.map(i => parents.take(i + 1)
+          .map(SnapshotTable.quoted).mkString(".") + " IS NULL")
+        def check(what: String, pred: String) =
+          Seq((path.mkString("_") + what, (guards :+ pred).mkString(" OR ")))
+        val own =
+          if (f.nullable) Nil else check("_not_null", s"$ref IS NOT NULL")
+        own ++ (f.dataType match {
+          case nested: StructType => walk(path, nested)
+          case ArrayType(_, false) => check("_elements_not_null",
+            s"$ref IS NULL OR forall($ref, x -> x IS NOT NULL)")
+          case MapType(_, _, false) => check("_values_not_null",
+            s"$ref IS NULL OR forall(map_values($ref), x -> x IS NOT NULL)")
+          case _ => Nil
+        })
+      }
+    walk(Nil, schema)
+  }
 
   /** A `changesFrom`/`changesTo` bound — one parser for the catalog
     * change feed, the path changes window and the path changelog

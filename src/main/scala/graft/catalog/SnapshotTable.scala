@@ -5,10 +5,12 @@ import java.time.{Instant, YearMonth}
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Literal => CatalystLiteral}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, DateFormatClass, EqualTo, Expression, Literal => CatalystLiteral}
+import org.apache.spark.sql.catalyst.plans.{logical => L}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge, ParquetReadBridge}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge, ParquetReadBridge, ParquetWriteBridge}
 import org.apache.spark.sql.types._
 
 import graft.schema.SchemaOps
@@ -783,7 +785,7 @@ final class SnapshotTable private (
     * entry and their superseded positions ride `op = "update"` delete
     * vectors, so serving a labeled commit costs O(changed data) — the
     * new files plus the DV-masked rows — never an endpoint diff. The
-    * copy-on-write Scala-API `update` relabels its netted diff
+    * copy-on-write `update` relabels its netted diff
     * (everything in an `update` commit IS an update image); CoW
     * `upsert` stages its matched rows in an `upd`-flagged lane and
     * records the key field ids in the operation string, so its frames
@@ -1365,19 +1367,6 @@ final class SnapshotTable private (
       for { cn <- currentById.get(id); st <- f.stats.get(wn) } yield cn -> st
     }.toMap)
 
-  /** Row-level DELETE, copy-on-write (Iceberg `DELETE FROM` with
-    * copy-on-write row-level operations): manifest stats prune to
-    * candidate files, one scoped job finds the files that ACTUALLY
-    * contain matching rows, and only those are rewritten without their
-    * matches — every other file survives physically untouched. SQL
-    * semantics: rows where `pred` is TRUE are deleted; FALSE and NULL
-    * rows are kept. Read-modify-write: a concurrent commit between read
-    * and publish raises [[SnapshotConflictException]].
-    *
-    * At 100 TB the cost is bounded by the candidate set — with data
-    * sort-clustered on the predicate columns ([[compact]] `sortBy`),
-    * that is O(files actually holding matches), not O(table).
-    */
   /** Files among `candidates` whose manifest stats PROVE every live
     * row matches `pred` — droppable from the manifest without being
     * opened ([[StatsPruner.mustMatchAll]]). This is what makes a
@@ -1398,32 +1387,87 @@ final class SnapshotTable private (
       case _ => Set.empty
     }
 
-  def delete(pred: Column): Snapshot = {
+  /** Row-level DELETE, copy-on-write (Iceberg `DELETE FROM` under
+    * `write.delete.mode=copy-on-write`), whatever `graft.delete.mode`
+    * says. SQL semantics: rows where `pred` is TRUE are deleted; FALSE
+    * and NULL rows are kept. A front end over the plan SQL runs: files
+    * whose manifest stats prove every live row matches drop unopened,
+    * Spark's group-based rewrite ([[GraftCopyOnWriteOperation]])
+    * rewrites only the other files holding a match, and one strict
+    * commit publishes both — a concurrent commit raises
+    * [[SnapshotConflictException]]. Returns the statement's snapshot;
+    * a delete that matches nothing publishes nothing.
+    *
+    * At 100 TB the cost is bounded by the candidate set — with data
+    * sort-clustered on the predicate columns ([[compact]] `sortBy`),
+    * that is O(files actually holding matches), not O(table).
+    */
+  def delete(pred: Column): Snapshot = deleteAs(mergeOnRead = false, pred)
+
+  /** The DELETE front end: the files the whole predicate's stats cover
+    * are found here, never in the scan (a scan sees only the conjuncts
+    * that push, and a proof over a subset proves a weaker predicate).
+    * When they are every candidate, the manifest-only drop commits
+    * here; otherwise Spark plans `DeleteFromTable` in the given mode
+    * with the covered files left out of the scan and removed by the
+    * commit.
+    */
+  private def deleteAs(mergeOnRead: Boolean, pred: Column): Snapshot = {
     val base = currentSnapshot()
-    val candidates0 = pruneFiles(base, pred)
-    // metadata-only drops first: provably-all-matching files leave the
-    // manifest unopened; only the rest pay the discovery scan
-    val covered = fullyMatchedFiles(base, pred, candidates0)
-    val candidates = candidates0.filterNot(f => covered(f.path))
-    val hit = filesHolding(base, candidates, pred)
-    if (hit.isEmpty && covered.isEmpty) return base // nothing matches
-    val hitSet = hit.map(_.path).toSet
-    // keep rows where pred is FALSE or NULL: <=> TRUE is null-safe
-    val staged =
-      if (hit.isEmpty) Nil
-      else stage(readFiles(base, hit)
-        .filter(!(pred <=> lit(true))), base.spec, base.properties)
-    commitStrict(base, next(base, "delete", base.schema,
-      base.files.filterNot(f => hitSet.contains(f.path) || covered(f.path)) ++
-        staged.map(_.copy(cols = base.ids, nested = nestedPairsOf(base)))))
+    val candidates = pruneFiles(base, pred)
+    val cond = ColumnBridge.expression(spark, pred)
+    // a literal TRUE is Spark's truncate shape, which a statement's
+    // table refuses: every live row matches, so every candidate drops
+    val covered =
+      if (cond == CatalystLiteral.TrueLiteral) candidates.map(_.path).toSet
+      else fullyMatchedFiles(base, pred, candidates)
+    if (candidates.isEmpty) base
+    else if (covered.size == candidates.size)
+      commitStrict(base, next(base,
+        if (mergeOnRead) "delete-pos" else "delete", base.schema,
+        base.files.filterNot(f => covered(f.path))))
+    else runDml(base, mergeOnRead, covered)(L.DeleteFromTable(_, cond))
   }
+
+  /** Run one row-level statement the way Spark plans SQL: `statement`
+    * gets this table as a relation aliased `t` over a [[GraftV2Table]]
+    * carrying the statement ([[GraftDml]]: its mode, its snapshot and
+    * its covered files), and [[DatasetBridge.ofRows]] executes it, so
+    * the rows commit through [[commitRewrite]] or [[commitDeltaAt]].
+    * Returns the snapshot that commit published, or `base` when no
+    * commit ran.
+    */
+  private def runDml(base: Snapshot, mergeOnRead: Boolean,
+      covered: Set[String] = Set.empty, target: Snapshot = null)(
+      statement: L.LogicalPlan => L.LogicalPlan): Snapshot = {
+    val dml = new GraftDml(Option(target).getOrElse(base), mergeOnRead,
+      covered)
+    DatasetBridge.ofRows(spark, statement(L.SubqueryAlias("t",
+      DataSourceV2Relation.create(new GraftV2Table(this, root.toString,
+        None, streaming = false, dml = Some(dml)), None, None))))
+    afterStatementHook()
+    dml.result.getOrElse(base)
+  }
+
+  /** Test seam: runs after a front end's statement executed and before
+    * the method returns, letting a spec land a commit right after the
+    * statement's own. No-op in production.
+    */
+  private[graft] var afterStatementHook: () => Unit = () => ()
+
+  /** `SET n = e` with the value cast to `n`'s declared type. */
+  private def assignment(schema: StructType, n: String,
+      e: Column): L.Assignment =
+    L.Assignment(UnresolvedAttribute(Seq(n)), ColumnBridge.expression(spark,
+      e.cast(SnapshotTable.nullableType(schema(n).dataType))))
 
   /** Atomic FILTER overwrite (Iceberg `overwrite(filters)` — SQL
     * `INSERT INTO t REPLACE WHERE pred SELECT …`): ONE commit removes
     * every row matching `pred` (copy-on-write at file granularity —
-    * the [[delete]] discovery: manifest stats prune to candidates, one
-    * scoped job finds files actually holding matches, only those
-    * rewrite without their matches) and adopts `df` as the
+    * manifest stats prune to candidates, files they prove fully
+    * matched drop unopened, one scoped job finds the other files
+    * actually holding matches, only those rewrite without their
+    * matches) and adopts `df` as the
     * replacement. A reader never observes the deleted-but-not-yet-
     * replaced intermediate state that separate delete+append commits
     * would expose; a concurrent commit conflicts (strict — filter
@@ -1452,119 +1496,67 @@ final class SnapshotTable private (
           nested = nestedPairsOf(base)))))
   }
 
-  /** Row-level UPDATE, copy-on-write at FILE granularity (SQL
-    * `UPDATE … SET … WHERE …`): same candidate discovery as [[delete]]
-    * — manifest stats prune, one scoped job finds files actually
-    * holding matches, only those rewrite. Rows where `pred` is TRUE get
-    * every assignment applied (evaluated against the ORIGINAL row, SQL
+  /** Row-level UPDATE, copy-on-write (SQL `UPDATE … SET … WHERE …`
+    * under `graft.update.mode=copy-on-write`), whatever the table's
+    * mode says: Spark's group-based rewrite of the files holding a
+    * match, as SQL plans it. Rows where `pred` is TRUE get every
+    * assignment applied (evaluated against the ORIGINAL row, SQL
     * semantics — assignments never see each other) and cast to the
-    * column's declared type; FALSE/NULL rows pass through byte-
-    * identical. Cost bounds as [[delete]]: O(files holding matches)
-    * with predicate-clustered data, never O(table).
+    * column's declared type; FALSE/NULL rows pass through unchanged.
+    * Returns the statement's snapshot; an update that matches nothing
+    * publishes nothing.
     */
-  def update(set: Seq[(String, Column)], pred: Column): Snapshot = {
-    require(set.nonEmpty, "update needs at least one assignment")
-    val base = currentSnapshot()
-    val dup = set.groupBy(_._1).collect { case (n, as) if as.size > 1 => n }
-    require(dup.isEmpty, s"duplicate assignment for column(s): ${dup.mkString(", ")}")
-    val missing = set.map(_._1).filterNot(base.schema.fieldNames.contains)
-    require(missing.isEmpty,
-      s"update assigns unknown column(s): ${missing.mkString(", ")}")
-    val byName = set.toMap
-    val hit = filesHolding(base, pruneFiles(base, pred), pred)
-    if (hit.isEmpty) return base // nothing matches: no new snapshot
-    val hitSet = hit.map(_.path).toSet
-    val outCols = base.schema.fields.toIndexedSeq.map { f =>
-      byName.get(f.name) match {
-        case Some(e) => when(pred <=> lit(true), e.cast(f.dataType))
-          .otherwise(col(SnapshotTable.quoted(f.name))).as(f.name)
-        case None => col(SnapshotTable.quoted(f.name))
-      }
-    }
-    val rewritten = readFiles(base, hit).select(outCols: _*)
-    val staged = stage(rewritten, base.spec, base.properties)
-    commitStrict(base, next(base, "update", base.schema,
-      base.files.filterNot(f => hitSet.contains(f.path)) ++
-        staged.map(_.copy(cols = base.ids, nested = nestedPairsOf(base)))))
-  }
+  def update(set: Seq[(String, Column)], pred: Column): Snapshot =
+    updateAs(mergeOnRead = false, set, pred)
 
   /** Row-level UPDATE via POSITIONAL DELETE VECTORS, merge-on-read
     * (Iceberg `write.update.mode=merge-on-read` over v3 deletion
-    * vectors): matched rows are hidden IN PLACE by a KB-sized roaring
-    * bitmap per touched file and re-appended with the assignments
-    * applied — ZERO data files rewritten, O(changed rows) bytes
-    * written, vs [[update]]'s rewrite of every hit file. Assignment
-    * semantics are identical to [[update]]: expressions evaluate
-    * against the ORIGINAL row and cast to the declared type.
-    *
-    * Positions come from the delete-APPLIED read: a row an older
-    * vector or equality delete already hides must be neither re-marked
-    * (harmless) nor re-emitted (that would RESURRECT it with the
-    * update applied). One eager materialization feeds both the vectors
-    * and the appended rows, so the two sides can never disagree about
-    * which rows matched.
+    * vectors), whatever the table's mode says: the delta plan SQL runs
+    * ([[GraftRowLevelOperation]]) hides matched rows under a KB-sized
+    * roaring bitmap per touched file, built in the task, and appends
+    * them with the assignments applied — ZERO data files rewritten.
+    * Assignment semantics are identical to [[update]]. The scan applies
+    * older deletes, so a row an older vector or equality delete hides
+    * is never re-emitted.
     */
-  def updateWithVectors(set: Seq[(String, Column)], pred: Column): Snapshot = {
-    require(set.nonEmpty, "update needs at least one assignment")
-    val base = currentSnapshot()
-    val dup = set.groupBy(_._1).collect { case (n, as) if as.size > 1 => n }
-    require(dup.isEmpty, s"duplicate assignment for column(s): ${dup.mkString(", ")}")
-    val missing = set.map(_._1).filterNot(base.schema.fieldNames.contains)
-    require(missing.isEmpty,
-      s"update assigns unknown column(s): ${missing.mkString(", ")}")
-    val byName = set.toMap
-    val candidates = pruneFiles(base, pred)
-    if (candidates.isEmpty) return base
-    val marked = readFiles(base, candidates, withPos = true)
-      .filter(pred <=> lit(true))
-      .localCheckpoint(true)
-    val stagedDv = stageDvsFor(marked)
-    if (stagedDv.isEmpty) return base // nothing matches: no new snapshot
-    // every marked row satisfies pred, so assignments apply
-    // unconditionally (no per-row branch as in the COW rewrite)
-    val outCols = base.schema.fields.toIndexedSeq.map { f =>
-      byName.get(f.name).map(_.cast(f.dataType))
-        .getOrElse(col(SnapshotTable.quoted(f.name))).as(f.name)
-    }
-    val staged = stage(marked.select(outCols: _*), base.spec, base.properties)
-    // CDC provenance (r18): every image here is a matched-row rewrite
-    // and every vector an update mark — flag them so the labeled
-    // change feed serves this commit without inference
-    val c = next(base, "update-pos", base.schema, base.files ++
-      staged.map(_.copy(cols = base.ids, nested = nestedPairsOf(base),
-        upd = true)))
-    commitStrict(base, withVectors(base, c, stagedDv, "update"))
-  }
+  def updateWithVectors(set: Seq[(String, Column)], pred: Column): Snapshot =
+    updateAs(mergeOnRead = true, set, pred)
 
   /** SQL `UPDATE` routing — the Iceberg `write.update.mode` table
     * property as `graft.update.mode`: `copy-on-write` (default —
     * [[update]] rewrites hit files) or `merge-on-read`
     * ([[updateWithVectors]] hides old rows under positional vectors
     * and appends the updated ones). SQL `UPDATE` routes by the same
-    * property ([[SnapshotTable.mergeOnRead]]) to the matching Spark
-    * row-level plan.
+    * property ([[SnapshotTable.mergeOnRead]]) to the same plans.
     */
   def updateRouted(set: Seq[(String, Column)], pred: Column): Snapshot =
-    if (SnapshotTable.mergeOnRead(currentSnapshot().properties, "update"))
-      updateWithVectors(set, pred)
-    else update(set, pred)
+    updateAs(SnapshotTable.mergeOnRead(currentSnapshot().properties,
+      "update"), set, pred)
 
-  /** MERGE INTO, copy-on-write at FILE granularity: source key bounds
-    * prune candidate files via manifest stats, only files holding an
-    * actually-matched key are rewritten, and not-matched source rows
-    * append as new files — finer-grained than [[upsert]]'s
-    * partition-scoped rewrite when data is key-clustered (after
-    * [[compact]] `sortBy` on the key), identical cost otherwise.
-    * Semantics per SQL MERGE: `whenMatched` applies to target rows
-    * whose key exists in `source` ([[MergeAction.UpdateAll]] replaces
+  private def updateAs(mergeOnRead: Boolean, set: Seq[(String, Column)],
+      pred: Column): Snapshot = {
+    require(set.nonEmpty, "update needs at least one assignment")
+    val base = currentSnapshot()
+    val dup = set.groupBy(_._1).collect { case (n, as) if as.size > 1 => n }
+    require(dup.isEmpty, s"duplicate assignment for column(s): ${dup.mkString(", ")}")
+    val missing = set.map(_._1).filterNot(base.schema.fieldNames.contains)
+    require(missing.isEmpty,
+      s"update assigns unknown column(s): ${missing.mkString(", ")}")
+    runDml(base, mergeOnRead)(L.UpdateTable(_,
+      set.map { case (n, e) => assignment(base.schema, n, e) },
+      Some(ColumnBridge.expression(spark, pred))))
+  }
+
+  /** MERGE INTO by key columns: target rows whose key exists in
+    * `source` take `whenMatched` ([[MergeAction.UpdateAll]] replaces
     * the row with the source row, [[MergeAction.Delete]] drops it);
     * `insertNotMatched` appends source rows with no target match
     * (including NULL-keyed source rows — a NULL key never matches).
     * Source keys must identify at most one source row (the
-    * Iceberg/Delta MERGE cardinality rule) — violations throw.
-    * Read-modify-write: concurrent commits raise
-    * [[SnapshotConflictException]]. Schema evolution applies (new
-    * source columns append; int→long / float→double widen).
+    * Iceberg/Delta MERGE cardinality rule) — violations throw. Schema
+    * evolution applies (new source columns append; int→long /
+    * float→double widen). The plan, mode and commit are
+    * [[mergeConditional]]'s.
     */
   def merge(source: DataFrame, on: Seq[String],
       whenMatched: MergeAction = MergeAction.UpdateAll,
@@ -1572,20 +1564,12 @@ final class SnapshotTable private (
     mergeConditional(source, on, Seq(MergeClause(None, whenMatched)),
       insertNotMatched)
 
-  /** MERGE INTO with conditional `WHEN MATCHED AND <cond>` clauses —
-    * the remaining distance to Iceberg's full `MERGE INTO` surface on
-    * top of [[merge]]'s file-granularity copy-on-write. Each matched
-    * (target, source) pair walks `whenMatched` in order and the FIRST
-    * clause whose condition evaluates TRUE applies ([[MergeAction
-    * .UpdateAll]] replaces the target row with the source row,
-    * [[MergeAction.Delete]] drops it); a pair satisfying no clause
-    * keeps the target row unchanged — so a file whose matched rows all
-    * fall through is still rewritten only if it held a matched key
-    * (candidate pruning is clause-independent: key-range stats).
+  /** MERGE INTO with conditional `WHEN MATCHED AND <cond>` clauses.
+    * Each matched (target, source) pair walks `whenMatched` in order
+    * and the FIRST clause whose condition evaluates TRUE applies; a
+    * pair satisfying no clause keeps the target row unchanged.
     * Conditions see both sides: `col("t.x")` is the target row,
-    * `col("s.x")` the source row. Everything else ([[merge]]'s
-    * cardinality rule, schema evolution, pruning, strict
-    * read-modify-write commit) is identical.
+    * `col("s.x")` the source row. Everything else is [[merge]]'s.
     */
   def mergeConditional(source: DataFrame, on: Seq[String],
       whenMatched: Seq[MergeClause],
@@ -1601,13 +1585,17 @@ final class SnapshotTable private (
     * (target rows with no source match; `UpdateSet` with target-only
     * expressions, or `Delete`).
     *
-    * Scale note: without NOT-MATCHED-BY-SOURCE clauses candidate files
-    * prune at the manifest to the source's key range — O(touched
-    * files). WITH them, every target row is potentially affected, so
-    * every file is a candidate and hit detection reads the full table
-    * once (the same full-table shape the clause costs on Iceberg/Delta)
-    * — but a file still rewrites ONLY if it holds a row some clause
-    * actually fires on.
+    * A front end over Spark's `MergeIntoTable`, routed by
+    * `graft.merge.mode` as SQL is: the group-based rewrite of the files
+    * holding a match under copy-on-write, vectors plus appended images
+    * under merge-on-read. The source is evaluated once (a local
+    * checkpoint) after the write-defaults are applied to the columns it
+    * omits, and its non-NULL keys are checked for duplicates up front.
+    * A source that adds or widens columns evolves the schema in the
+    * same commit: the statement's table carries the evolved schema and
+    * ids, and its scan renders older files under them by field id.
+    * Without NOT MATCHED BY SOURCE clauses the target files are pruned
+    * to the source's keys ([[graft.plans.GraftMergeSourcePrune]]).
     */
   def mergeConditional(source: DataFrame, on: Seq[String],
       whenMatched: Seq[MergeClause],
@@ -1618,12 +1606,6 @@ final class SnapshotTable private (
     require(notMatchedBySource.forall(_.action != MergeAction.UpdateAll),
       "WHEN NOT MATCHED BY SOURCE cannot UPDATE SET * — there is no source row")
     val base = currentSnapshot()
-    // graft.merge.mode (Iceberg `write.merge.mode`): merge-on-read
-    // hides updated/deleted target rows under positional delete
-    // vectors and APPENDS the new row images — untouched rows of
-    // matched files stay in place, O(changed rows) written instead of
-    // O(hit files) rewritten. The 100 TB shape for CDC-heavy tables.
-    val mor = SnapshotTable.mergeOnRead(base.properties, "merge")
     val evolved = SnapshotTable.evolve(base.schema, source.schema)
     require(on.forall(evolved.fieldNames.contains),
       s"merge keys ${on.mkString(",")} must exist in the table schema")
@@ -1635,16 +1617,13 @@ final class SnapshotTable private (
       require(evolved.fieldNames.contains(n),
         s"INSERT target column $n is not in the table schema")
     val ig = integrate(base, evolved)
-    val (pairs, nestedPairs) = (ig.pairs, ig.nested)
-    // the target read renders under the evolved schema by field id
-    val target = base.copy(schema = evolved, fieldIds = pairs,
-      nestedIds = ig.nestedIds2)
+    val target = base.copy(schema = ig.schema2, fieldIds = ig.ids2,
+      nextFieldId = ig.nextId, nestedIds = ig.nestedIds2)
     // alignForWrite: a source that OMITS a defaulted column carries
     // the write-default into BOTH the UPDATE SET * and INSERT branches
     // ("the writer doesn't know the column"), matching append/upsert —
     // a source that explicitly supplies NULL keeps the NULL
     val src = alignForWrite(source, evolved).localCheckpoint(true)
-    val srcKeys = src.select(on.map(col): _*).distinct()
     // cardinality rule applies to MATCHABLE keys only: a NULL key never
     // matches any target row (it always inserts), so duplicate
     // NULL-keyed source rows are legal
@@ -1654,192 +1633,29 @@ final class SnapshotTable private (
       throw new IllegalArgumentException(
         s"merge source has duplicate rows for key (${on.mkString(",")}) — " +
           "each target row must match at most one source row")
-    // candidate files: manifest key-range overlap with the source's
-    // observed key bounds (per-key between() translates to the same
-    // filters parquet pushdown uses). NOT-MATCHED-BY-SOURCE widens the
-    // affected set to every target row, so pruning is off there.
-    val boundsRow = src.select(on.flatMap(k =>
-      Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k"))): _*)
-      .collect()(0)
-    val keyPreds = on.zipWithIndex.flatMap { case (k, i) =>
-      val (lo, hi) = (boundsRow.get(2 * i), boundsRow.get(2 * i + 1))
-      if (lo == null || hi == null) None // no non-null source keys
-      else Some(col(k) >= lit(lo) && col(k) <= lit(hi))
+    def cond(c: Option[Column]) = c.map(ColumnBridge.expression(spark, _))
+    def action(cl: MergeClause): L.MergeAction = cl.action match {
+      case MergeAction.UpdateAll => L.UpdateStarAction(cond(cl.condition))
+      case MergeAction.Delete => L.DeleteAction(cond(cl.condition))
+      case MergeAction.UpdateSet(assigns) => L.UpdateAction(
+        cond(cl.condition),
+        assigns.map { case (n, e) => assignment(evolved, n, e) },
+        false)
     }
-    val candidates =
-      if (notMatchedBySource.nonEmpty) base.files
-      else if (keyPreds.size < on.size) Nil // some key entirely NULL: nothing matches
-      else if (!on.forall(base.schema.fieldNames.contains))
-        Nil // a key column new to the table: target side is all-NULL, pure insert
-      else pruneFiles(base, keyPreds.reduce(_ && _))
-    // does any not-matched-by-source clause fire on a target row?
-    // conditions reference t.<col>; an always-true clause fires on
-    // every unmatched row
-    val nmbsFires = notMatchedBySource
-      .map(_.condition.getOrElse(lit(true)))
-      .reduceOption(_ || _)
-    val hit =
-      if (candidates.isEmpty) Nil
-      else if (mor) candidates // no rewrite → no hit-refinement job:
-        // positions come only from rows a clause actually fires on
-      else {
-        val rows = readFiles(base, candidates, target, withPos = true)
-        val hitDf = nmbsFires match {
-          case None => rows.join(srcKeys, on, "left_semi")
-          case Some(fires) =>
-            rows.alias("t")
-              .join(srcKeys.withColumn("__graft_m", lit(1)), on, "left")
-              .filter(col("__graft_m").isNotNull || fires)
-        }
-        val hitPaths = pathsOf(hitDf)
-        candidates.filter(f => hitPaths.contains(f.path))
-      }
-    val hitSet = hit.map(_.path).toSet
-    val hitRows = readFiles(base, hit, target, withPos = mor)
-    // expression-list projection under the t/s aliases: assigned
-    // columns evaluate and cast to the declared type, the rest take
-    // `restFrom` (t.* for UPDATE SET, NULL for column-list INSERT)
-    def assignProjection(df: DataFrame, assigns: Seq[(String, Column)],
-        restFrom: String => Column): DataFrame =
-      df.select(evolved.fields.toSeq.map { f =>
-        assigns.collectFirst { case (n, e) if n == f.name => e }
-          .map(_.cast(f.dataType))
-          .getOrElse(restFrom(f.name))
-          .as(f.name)
-      }: _*)
-    // rows in hit files whose key is NOT in the source: untouched
-    // without NOT-MATCHED-BY-SOURCE clauses, else first-match-wins
-    val unmatchedRows = hitRows.join(srcKeys, on, "left_anti")
-    val uTagged =
-      if (notMatchedBySource.isEmpty) None
-      else Some(unmatchedRows.alias("t").withColumn("__graft_clause",
-        notMatchedBySource.zipWithIndex.foldLeft(when(lit(false), -1)) {
-          case (acc, (cl, i)) =>
-            acc.when(cl.condition.getOrElse(lit(true)), lit(i))
-        }.otherwise(lit(-1))))
-    val unmatchedRewritten = uTagged.toSeq.flatMap { u =>
-      notMatchedBySource.zipWithIndex.collect {
-        case (MergeClause(_, MergeAction.UpdateSet(assigns)), i) =>
-          assignProjection(u.filter(col("__graft_clause") === i), assigns,
-            n => col("t." + SnapshotTable.quoted(n)))
-      }
+    // a column-list INSERT sets every column it does not name to NULL
+    val inserts = notMatched.map {
+      case InsertClause(c, None) => L.InsertStarAction(cond(c))
+      case InsertClause(c, Some(assigns)) => L.InsertAction(cond(c),
+        evolved.fieldNames.toSeq.map(n => assignment(evolved, n,
+          assigns.collectFirst { case (`n`, e) => e }.getOrElse(lit(null)))))
     }
-    // COW re-emits the untouched rows of hit files (the whole file is
-    // being rewritten); MoR leaves them in place — only rows a clause
-    // fires on cost anything
-    val unmatched =
-      if (mor) unmatchedRewritten
-      else uTagged match {
-        case None => Seq(unmatchedRows)
-        case Some(u) =>
-          u.filter(col("__graft_clause") === -1).select(col("t.*")) +:
-            unmatchedRewritten
-      }
-    val matchedKeys = hitRows.select(on.map(col): _*).distinct()
-    // matched (target, source) pairs: the cardinality rule guarantees
-    // at most one source row per target row; a target key duplicated
-    // across rows updates EACH row (SQL UPDATE semantics)
-    val joinCond = on.map(k =>
-      col("t." + SnapshotTable.quoted(k)) === col("s." + SnapshotTable.quoted(k)))
-      .reduce(_ && _)
-    val pairsDf = hitRows.alias("t").join(src.alias("s"), joinCond, "inner")
-      .withColumn("__graft_clause",
-        whenMatched.zipWithIndex.foldLeft(when(lit(false), -1)) {
-          case (acc, (cl, i)) => acc.when(cl.condition.getOrElse(lit(true)), lit(i))
-        }.otherwise(lit(-1)))
-    // -1 = no clause applied: the matched row is kept unchanged (COW
-    // re-emits it into the rewrite; MoR leaves it in place); Delete
-    // clauses contribute nothing; UpdateAll emits the source row;
-    // UpdateSet projects assignment expressions over the pair
-    val cowKept =
-      if (mor) Nil
-      else Seq(pairsDf.filter(col("__graft_clause") === -1).select(col("t.*")))
-    val updated = whenMatched.zipWithIndex.collect {
-      case (MergeClause(_, MergeAction.UpdateAll), i) =>
-        pairsDf.filter(col("__graft_clause") === i).select(col("s.*"))
-      case (MergeClause(_, MergeAction.UpdateSet(assigns)), i) =>
-        assignProjection(pairsDf.filter(col("__graft_clause") === i), assigns,
-          n => col("t." + SnapshotTable.quoted(n)))
-    }
-    // MoR: every target row a clause fired on — matched update/delete,
-    // NMBS update/delete — is hidden under a positional vector; the
-    // update images re-enter through the staged additions. Vectors are
-    // SPLIT by action class (r18 CDC provenance): positions superseded
-    // by an update image ride "update" vectors, genuine removals ride
-    // "delete" vectors — reads mask both identically, only the labeled
-    // change feed ([[changesCdf]]) distinguishes them.
-    def actionIdx(clauses: Seq[MergeClause],
-        isUpd: Boolean): Seq[Int] = clauses.zipWithIndex.collect {
-      case (MergeClause(_, MergeAction.Delete), i) if !isUpd => i
-      case (MergeClause(_, a), i) if isUpd && a != MergeAction.Delete => i
-    }
-    val deadPositionsBy: Option[Boolean => DataFrame] =
-      if (!mor) None
-      else Some { (isUpd: Boolean) =>
-        val posSel = Seq(
-          col("t." + SnapshotTable.DvFileCol).as(SnapshotTable.DvFileCol),
-          col("t." + SnapshotTable.DvPosCol).as(SnapshotTable.DvPosCol))
-        def sel(df: DataFrame, idx: Seq[Int]): DataFrame =
-          df.filter(col("__graft_clause")
-            .isin(idx.map(Int.box): _*)).select(posSel: _*)
-        val matchedDead = sel(pairsDf, actionIdx(whenMatched, isUpd))
-        val unmatchedDead = uTagged.map(
-          sel(_, actionIdx(notMatchedBySource, isUpd)))
-        unmatchedDead.foldLeft(matchedDead)(_ unionByName _)
-      }
-    val emitted = cowKept ++ unmatched ++ updated
-    // not-matched source rows walk the INSERT clauses first-match-wins;
-    // a row no clause accepts is not inserted
-    val notMatchedSrc = src.join(matchedKeys, on, "left_anti")
-    val additions = notMatched match {
-      case Nil => Seq(src.limit(0))
-      case Seq(InsertClause(None, None)) => Seq(notMatchedSrc) // plain INSERT *
-      case clauses =>
-        val n = notMatchedSrc.alias("s").withColumn("__graft_clause",
-          clauses.zipWithIndex.foldLeft(when(lit(false), -1)) {
-            case (acc, (cl, i)) =>
-              acc.when(cl.condition.getOrElse(lit(true)), lit(i))
-          }.otherwise(lit(-1)))
-        clauses.zipWithIndex.map {
-          case (InsertClause(_, None), i) =>
-            n.filter(col("__graft_clause") === i).select(col("s.*"))
-          case (InsertClause(_, Some(assigns)), i) =>
-            assignProjection(n.filter(col("__graft_clause") === i), assigns,
-              f => lit(null).cast(evolved(f).dataType))
-        }
-    }
-    if (mor) {
-      // stage update images and genuine inserts SEPARATELY so the
-      // manifest entries carry their CDC provenance (`upd`); under MoR
-      // `emitted` is exactly the update-image set (cowKept is empty,
-      // `unmatched` = NMBS-rewritten images only)
-      val stagedUpd = stage(
-        (emitted :+ src.limit(0)).reduce(_ unionByName _),
-        base.spec, base.properties)
-      val stagedIns = stage(
-        additions.reduce(_ unionByName _), base.spec, base.properties)
-      val stagedDvUpd = deadPositionsBy.map(f => stageDvsFor(f(true)))
-        .getOrElse(Nil)
-      val stagedDvDel = deadPositionsBy.map(f => stageDvsFor(f(false)))
-        .getOrElse(Nil)
-      val c = nextWithIds(base, "merge-pos", ig.schema2, ig.ids2, ig.nextId,
-        base.files ++
-          stagedUpd.map(_.copy(cols = pairs, nested = nestedPairs,
-            upd = true)) ++
-          stagedIns.map(_.copy(cols = pairs, nested = nestedPairs)))
-        .copy(nestedIds = ig.nestedIds2)
-      commitStrict(base, withVectors(base,
-        withVectors(base, c, stagedDvUpd, "update"), stagedDvDel, "delete"))
-    } else {
-      val staged = stage(
-        (emitted ++ additions).reduce(_ unionByName _),
-        base.spec, base.properties)
-      commitStrict(base, nextWithIds(base, "merge", ig.schema2, ig.ids2,
-        ig.nextId,
-        base.files.filterNot(f => hitSet.contains(f.path)) ++
-          staged.map(_.copy(cols = pairs, nested = nestedPairs)))
-        .copy(nestedIds = ig.nestedIds2))
-    }
+    val on2 = on.map(k => EqualTo(UnresolvedAttribute(Seq("t", k)),
+      UnresolvedAttribute(Seq("s", k)))).reduce[Expression](And(_, _))
+    runDml(base, SnapshotTable.mergeOnRead(base.properties, "merge"),
+      target = target)(L.MergeIntoTable(_,
+      L.SubqueryAlias("s", src.queryExecution.analyzed), on2,
+      whenMatched.map(action), inserts, notMatchedBySource.map(action),
+      withSchemaEvolution = false))
   }
 
   /** Sub-path of a freshly staged file INSIDE its batch directory, from
@@ -1872,8 +1688,7 @@ final class SnapshotTable private (
     * resolve through `owner`'s ids.
     */
   private def readFiles(owner: Snapshot, files: Seq[DataFileEntry],
-      as: Snapshot = null, withPos: Boolean = false,
-      raw: Boolean = false): DataFrame = {
+      as: Snapshot = null, withPos: Boolean = false): DataFrame = {
     val t = Option(as).getOrElse(owner)
     if (files.isEmpty) {
       // nothing to scan: a typed empty frame, position columns included
@@ -1887,7 +1702,7 @@ final class SnapshotTable private (
     }
     val df = DatasetBridge.ofRows(spark, DataSourceV2Relation.create(
       new GraftV2Table(this, root.toString, None, streaming = false,
-        view = Some(SnapshotTable.readView(owner, files, t, raw))),
+        view = Some(SnapshotTable.readView(owner, files, t, raw = false))),
       None, None))
     if (!withPos) df
     else df.select(col("*"),
@@ -1998,43 +1813,20 @@ final class SnapshotTable private (
       }
   }
 
-  /** Row-level DELETE via POSITIONAL DELETE VECTORS (Iceberg v3
-    * deletion vectors / Delta DVs), merge-on-read: manifest stats
-    * prune to candidate files, one scoped job finds the matching rows'
-    * (file, row ordinal) positions, and the commit publishes a
-    * KB-sized roaring bitmap per touched file — ZERO data files
-    * rewritten. The scale story the reference's own
-    * `optimize_rewrite_delete_file_threshold` knob exists to manage:
-    * deleting one row from a 1 GB file costs the vector, not the
-    * rewrite; reads mask the positions until [[compact]]/[[maintain]]
-    * folds vectors into a rewrite and retires them.
-    *
-    * vs [[delete]] (copy-on-write): same SQL semantics (TRUE deletes;
-    * FALSE/NULL keep), read-modify-write commit (concurrent commits
-    * raise [[SnapshotConflictException]] — positions are only valid
-    * against the base file set), but writes O(deleted positions)
-    * bytes instead of rewriting every hit file. vs [[deleteByKeys]]
-    * (equality MoR): takes an arbitrary predicate instead of key
-    * tuples, and being position-based it is column-independent — no
-    * key column to strand on dropColumn.
-    */
   /** `DELETE` routing — the Iceberg `write.delete.mode` table
     * property: `copy-on-write` (default — [[delete]] rewrites hit
     * files) or `merge-on-read` ([[deleteWithVectors]] commits
     * positional vectors). SQL's metadata-delete path (the native v2
-    * `deleteWhere`) calls this; every other SQL delete is a Spark
-    * row-level plan chosen by the same property
-    * ([[SnapshotTable.mergeOnRead]]): a copy-on-write rewrite or the
-    * delta write of the same vectors.
+    * `deleteWhere`) calls this; every other SQL delete is the Spark
+    * row-level plan the same property chooses
+    * ([[SnapshotTable.mergeOnRead]]). `equality` mode's key-predicate
+    * shortcut lives on the SQL path ([[GraftV2Table.deleteWhere]] →
+    * [[deleteByKeys]]); here it is merge-on-read like any other
+    * predicate.
     */
   def deleteRouted(pred: Column): Snapshot =
-    // `equality` mode's key-predicate shortcut lives on the SQL path
-    // ([[GraftV2Table.deleteWhere]] → [[deleteByKeys]], O(keys) bytes,
-    // zero target scan); here it is merge-on-read like any other
-    // predicate: positional vectors, no file rewrite
-    if (SnapshotTable.mergeOnRead(currentSnapshot().properties, "delete"))
-      deleteWithVectors(pred)
-    else delete(pred)
+    deleteAs(SnapshotTable.mergeOnRead(currentSnapshot().properties,
+      "delete"), pred)
 
   /** True when a merge-on-read DELETE of `pred` opens no data file: no
     * file is a candidate, or every candidate's manifest stats prove all
@@ -2050,36 +1842,22 @@ final class SnapshotTable private (
       fullyMatchedFiles(base, pred, candidates).size == candidates.size
   }
 
-  def deleteWithVectors(pred: Column): Snapshot = {
-    val base = currentSnapshot()
-    val candidates0 = pruneFiles(base, pred)
-    if (candidates0.isEmpty) return base
-    // a provably-all-matching file DROPS from the manifest outright —
-    // cheaper than a vector covering its every ordinal, and the
-    // retention shape stays metadata-only under merge-on-read too
-    val covered = fullyMatchedFiles(base, pred, candidates0)
-    val candidates = candidates0.filterNot(f => covered(f.path))
-    // RAW per-file positions (vectors compose by union, so re-marking a
-    // row an older vector or equality delete already hides is a no-op)
-    val staged =
-      if (candidates.isEmpty) Nil
-      else stageDvsFor(readFiles(base, candidates, withPos = true, raw = true)
-        .filter(pred <=> lit(true)))
-    if (staged.isEmpty && covered.isEmpty) return base // nothing matched
-    val c = next(base, "delete-pos", base.schema,
-      base.files.filterNot(f => covered(f.path)))
-    commitStrict(base, withVectors(base, c, staged, "delete"))
-  }
-
-  /** `c` with `staged` vectors (path, rows, covered data paths) of
-    * kind `op` attached, after [[requireLiveCoverage]].
+  /** Row-level DELETE via POSITIONAL DELETE VECTORS (Iceberg v3
+    * deletion vectors / Delta DVs), merge-on-read whatever
+    * `graft.delete.mode` says: the delta plan SQL runs
+    * ([[GraftRowLevelOperation]]) builds a KB-sized roaring bitmap per
+    * touched file in the task and commits it — ZERO data files
+    * rewritten; reads mask the positions until [[compact]]/[[maintain]]
+    * folds vectors into a rewrite and retires them. A provably
+    * all-matching file drops from the manifest outright, as in
+    * [[delete]]. The commit is [[commitDeltaAt]]'s: a disjoint
+    * concurrent commit rebases under `graft.write.isolation-level=
+    * snapshot` and conflicts under `serializable`. vs [[deleteByKeys]]
+    * (equality MoR): takes an arbitrary predicate instead of key
+    * tuples, and being position-based it is column-independent.
     */
-  private def withVectors(base: Snapshot, c: Snapshot,
-      staged: Seq[(String, Long, Seq[String])], op: String): Snapshot = {
-    requireLiveCoverage(base, staged.flatMap(_._3))
-    c.copy(dvFiles = c.dvFiles ++ staged.map { case (p, rows, dataPaths) =>
-      DvFileEntry(p, rows, dataPaths, c.version, op) })
-  }
+  def deleteWithVectors(pred: Column): Snapshot =
+    deleteAs(mergeOnRead = true, pred)
 
   /** Every path new delete vectors cover must be a live data file of
     * the snapshot they were computed against: a vector over any other
@@ -2097,62 +1875,6 @@ final class SnapshotTable private (
           phantom.take(3).mkString(", ") +
           (if (phantom.size > 3) ", …" else "") + ") — refusing a " +
           "commit whose deletes would not apply")
-  }
-
-  /** Roaring-bitmap delete vectors for a frame carrying
-    * ([[SnapshotTable.DvFileCol]] = manifest path, [[SnapshotTable
-    * .DvPosCol]] = row ordinal): positions group per file EXECUTOR-side
-    * (no deleted-position list ever on the driver), each file's bitmap
-    * is built, run-optimized and serialized in its task, and the
-    * vectors stage as parquet. Shared by [[deleteWithVectors]],
-    * [[updateWithVectors]] and the merge-on-read MERGE path — one
-    * encode discipline, one 32-bit-domain guard.
-    *
-    * @return (staged path, deleted positions, covered data paths) per
-    *         vector file; empty when no position was marked.
-    */
-  private def stageDvsFor(positions: DataFrame): Seq[(String, Long, Seq[String])] = {
-    import spark.implicits._
-    val perFile = positions
-      .select(col(SnapshotTable.DvFileCol), col(SnapshotTable.DvPosCol))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (rel, it) =>
-        val bm = new org.roaringbitmap.RoaringBitmap()
-        it.foreach { case (_, pos) =>
-          require(pos <= 0xFFFFFFFFL,
-            s"row ordinal $pos exceeds the 32-bit vector domain in $rel " +
-              "— split the file (compact with a smaller targetRowsPerFile)")
-          bm.add(pos.toInt)
-        }
-        bm.runOptimize()
-        val buf = new Array[Byte](bm.serializedSizeInBytes())
-        bm.serialize(java.nio.ByteBuffer.wrap(buf))
-        (rel, buf, bm.getLongCardinality)
-      }.toDF("path", "dv", "rows")
-    stageDvs(perFile)
-  }
-
-  /** Stage per-data-file delete vectors as parquet under
-    * `data/<batch>/`; returns (staged path, deleted positions, covered
-    * data paths) per written vector file — empty when no row matched.
-    */
-  private def stageDvs(perFile: DataFrame): Seq[(String, Long, Seq[String])] = {
-    val batch = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val rel = s"${SnapshotLog.DataDirName}/$batch"
-    perFile.write.parquet(new Path(root, rel).toString)
-    val marker = s"/$batch/"
-    spark.read.schema(SnapshotTable.DvSchema)
-      .parquet(new Path(root, rel).toString)
-      .groupBy(input_file_name().as("__f"))
-      .agg(sum(col("rows")).as("__rows"),
-        collect_list(col("path")).as("__paths"))
-      .collect().toSeq.flatMap { r =>
-        val sub = stagedSubPath(r.getString(0), rel, marker)
-        val dataPaths = r.getSeq[String](2)
-        if (dataPaths.isEmpty) None
-        else Some((s"$rel/$sub", r.getLong(1), dataPaths))
-      }
   }
 
   /** Vectors still applicable given the post-commit data-file list: an
@@ -2215,16 +1937,28 @@ final class SnapshotTable private (
       .mapGroups { (dp, it) =>
         val acc = new org.roaringbitmap.RoaringBitmap()
         it.foreach { case (_, bytes) =>
-          val bm = new org.roaringbitmap.RoaringBitmap()
-          bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
-          acc.or(bm)
+          acc.or(GraftDeltaWriterFactory.bitmapOf(bytes))
         }
-        acc.runOptimize()
-        val buf = new Array[Byte](acc.serializedSizeInBytes())
-        acc.serialize(java.nio.ByteBuffer.wrap(buf))
-        (dp, buf, acc.getLongCardinality)
-      }.toDF("path", "dv", "rows")
-    val staged = stageDvs(merged)
+        (dp, GraftDeltaWriterFactory.bytesOf(acc))
+      }
+    // each task writes its data files' unions as ONE vector file and
+    // reports it: no read-back of what was written
+    val dvRel = GraftDeltaWriterFactory.freshRel()
+    val rootStr = root.toString
+    val dvFactory = ParquetWriteBridge.writerFactory(spark,
+      SnapshotTable.DvSchema)
+    val staged = merged.mapPartitions { it =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val ctx = org.apache.spark.TaskContext.get()
+        val rel = f"$dvRel/dv-rewrite-${ctx.partitionId()}%05d-" +
+          s"${ctx.taskAttemptId()}.parquet"
+        val (rows, covered) = GraftDeltaWriterFactory.writeVectors(
+          rootStr, rel, dvFactory,
+          it.map { case (dp, bytes) => dp -> GraftDeltaWriterFactory.bitmapOf(bytes) })
+        Iterator((rel, rows, covered))
+      }
+    }.collect().toSeq
     val c = next(base, "rewrite-dv", base.schema, base.files)
     commitStrict(base, c.copy(dvFiles =
       staged.map { case (p, rows, dataPaths) =>
@@ -3920,21 +3654,32 @@ final class SnapshotTable private (
   }
 
   /** Commit one Spark-planned copy-on-write rewrite
-    * ([[GraftCopyOnWriteOperation]]): the data files the rewrite scanned
-    * leave, the files its writers staged (manifest stats computed
-    * inline) arrive, in ONE strict commit against the scanned version —
-    * the staged files carry every surviving row of the scanned ones, so
-    * any commit since the scan raises [[SnapshotConflictException]]
-    * and nothing is published. A statement that read and wrote nothing
-    * commits nothing.
+    * ([[GraftCopyOnWriteOperation]]): the data files the rewrite
+    * `removed` — the files it scanned, plus a front end's stats-covered
+    * files — leave, the files its writers staged (manifest stats
+    * computed inline) arrive, in ONE strict commit against `base`, the
+    * version scanned — the staged files carry every surviving row of
+    * the scanned ones, so any commit since the scan raises
+    * [[SnapshotConflictException]] and nothing is published. `base`
+    * may carry the schema a front end's MERGE evolved, which publishes
+    * with the rows. A statement that removes, writes and evolves
+    * nothing commits nothing and returns `base`.
     */
-  private[catalog] def commitRewrite(baseVersion: Long, op: String,
-      scanned: Set[String], entries: Seq[DataFileEntry]): Snapshot = {
-    val base = snapshotAt(baseVersion)
-    if (scanned.isEmpty && entries.isEmpty) return currentSnapshot()
+  private[catalog] def commitRewrite(base: Snapshot, op: String,
+      removed: Set[String], entries: Seq[DataFileEntry]): Snapshot = {
+    if (removed.isEmpty && entries.isEmpty && !evolves(base)) return base
     commitStrict(base, next(base, op, base.schema,
-      base.files.filterNot(f => scanned(f.path)) ++
+      base.files.filterNot(f => removed(f.path)) ++
         entries.map(_.copy(cols = base.ids, nested = nestedPairsOf(base)))))
+  }
+
+  /** Whether `target` — a statement's snapshot of its base version —
+    * carries a schema, ids or nested ids the base version does not.
+    */
+  private def evolves(target: Snapshot): Boolean = {
+    val head = snapshotAt(target.version)
+    head.schema != target.schema || head.ids != target.ids ||
+      head.nestedIds != target.nestedIds
   }
 
   /** Commit a dynamic partition overwrite planned by Spark (SQL `INSERT
@@ -3989,9 +3734,24 @@ final class SnapshotTable private (
   private[catalog] def commitDelta(baseVersion: Long, op: String,
       entries: Seq[DataFileEntry],
       dvs: Seq[(String, Long, Seq[String], String)],
-      updFiles: Set[String] = Set.empty): Snapshot = {
-    val base = snapshotAt(baseVersion)
-    if (entries.isEmpty && dvs.isEmpty) return currentSnapshot() // no-op
+      updFiles: Set[String] = Set.empty): Snapshot =
+    commitDeltaAt(snapshotAt(baseVersion), op, entries, dvs, updFiles,
+      Set.empty)
+
+  /** [[commitDelta]] against `base`, which may carry the schema a front
+    * end's MERGE evolved (published with the rows; such a statement
+    * conflicts with any concurrent commit), removing a front end's
+    * stats-covered files in the same commit. A statement that writes,
+    * removes and evolves nothing commits nothing and returns `base`.
+    */
+  private[catalog] def commitDeltaAt(base: Snapshot, op: String,
+      entries: Seq[DataFileEntry],
+      dvs: Seq[(String, Long, Seq[String], String)],
+      updFiles: Set[String], covered: Set[String]): Snapshot = {
+    val evolving = evolves(base)
+    if (entries.isEmpty && dvs.isEmpty && covered.isEmpty && !evolving)
+      return base // no-op
+    val head = snapshotAt(base.version)
     val serial = base.properties
       .getOrElse("graft.write.isolation-level", "snapshot") match {
       case "snapshot" => false
@@ -3999,30 +3759,34 @@ final class SnapshotTable private (
       case other => sys.error(s"graft.write.isolation-level='$other' — " +
         "use snapshot (write-set revalidation) or serializable")
     }
-    val touched = dvs.flatMap(_._3).toSet // data paths our vectors cover
-    requireLiveCoverage(base, touched)
+    val marked = dvs.flatMap(_._3).toSet // data paths our vectors cover
+    requireLiveCoverage(head, marked)
+    // the files this statement reads or drops: a concurrent rewrite of
+    // any of them conflicts
+    val touched = marked ++ covered
     commitRetry { latest =>
-      if (latest.version != baseVersion) {
+      if (latest.version != base.version) {
         def conflict(why: String): Nothing =
           throw new SnapshotConflictException(
             s"table at $root advanced to v${latest.version} since the " +
-              s"row-level scan at v$baseVersion and $why — re-run the " +
+              s"row-level scan at v${base.version} and $why — re-run the " +
               "statement")
         if (serial) conflict("isolation-level is serializable")
-        if (latest.schema != base.schema || latest.ids != base.ids)
+        if (evolving) conflict("this statement evolves the schema")
+        if (latest.schema != head.schema || latest.ids != head.ids)
           conflict("the schema evolved (row images carry the scanned " +
             "schema)")
-        if (latest.spec != base.spec || latest.specSince != base.specSince)
+        if (latest.spec != head.spec || latest.specSince != head.specSince)
           conflict("the partition spec evolved (staged files are laid " +
             "out under the scanned spec)")
         val livePaths = latest.files.map(_.path).toSet
         val gone = touched.filterNot(livePaths.contains)
         if (gone.nonEmpty)
           conflict(s"rewrote/removed scanned data files the delta " +
-            s"marks positions in (${gone.take(3).mkString(", ")}${
+            s"marks positions in or drops (${gone.take(3).mkString(", ")}${
               if (gone.size > 3) ", …" else ""})")
         val racedDvs = latest.dvFiles.filter(d =>
-          d.seq > baseVersion && d.dataPaths.exists(touched.contains))
+          d.seq > base.version && d.dataPaths.exists(marked.contains))
         if (racedDvs.nonEmpty)
           conflict("committed delete vectors over the same data files " +
             "(this delta's update images could resurrect rows the " +
@@ -4039,15 +3803,19 @@ final class SnapshotTable private (
         // narrowing: delta images are FULL rows, so the delete's key
         // columns always intersect the write set.)
         if (entries.nonEmpty &&
-            latest.deleteFiles.exists(_.seq > baseVersion))
+            latest.deleteFiles.exists(_.seq > base.version))
           conflict("committed equality deletes after this statement's " +
             "scan (its appended row images carry a newer sequence " +
             "number and would escape the delete — deleted keys could " +
             "resurrect)")
       }
-      val c = next(latest, op, latest.schema, latest.files ++
-        entries.map(f => f.copy(cols = base.ids, nested = nestedPairsOf(base),
-          upd = updFiles.contains(f.path))))
+      // at the scanned version the statement's own snapshot is the
+      // parent: it carries an evolved schema
+      val parent = if (latest.version == base.version) base else latest
+      val c = next(parent, op, parent.schema,
+        parent.files.filterNot(f => covered(f.path)) ++
+          entries.map(f => f.copy(cols = base.ids,
+            nested = nestedPairsOf(base), upd = updFiles.contains(f.path))))
       c.copy(dvFiles = c.dvFiles ++
         dvs.map { case (p, rows, dataPaths, dvOp) =>
           DvFileEntry(p, rows, dataPaths, c.version, dvOp) })

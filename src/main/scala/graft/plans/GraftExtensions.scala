@@ -97,9 +97,11 @@ object GraftExtensions {
     ext.injectResolutionRule(_ => GraftViewDml)
     // filterless COUNT/MIN/MAX over a graft relation → manifest answer
     ext.injectOptimizerRule(session => GraftAggregatePushdown(session))
-    // native delta MERGE: source-derived key predicate → manifest file
-    // pruning on the target scan (see GraftMergeSourcePrune)
+    // MERGE: source-derived key predicate → manifest file pruning on
+    // the target scan (see GraftMergeSourcePrune)
     ext.injectOptimizerRule(session => GraftMergeSourcePrune(session))
+    // a delta write's CHECK constraints skip the rows it deletes
+    ext.injectOptimizerRule(_ => GraftDeltaChecks)
     // NO parser seam: time travel (VERSION/TIMESTAMP AS OF) and CALL
     // procedures are native DSv2 catalog paths — see
     // graft.catalog.GraftCatalog / GraftCatalogProcedures

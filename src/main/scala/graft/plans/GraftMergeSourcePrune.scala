@@ -4,34 +4,24 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GenericInternalRow, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
-import org.apache.spark.sql.catalyst.plans.{Inner, RightOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, Filter, Join, LocalRelation, LogicalPlan, MergeRows, OneRowRelation, Project, Range, WriteDelta}
+import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftOuter, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, Filter, Join, LocalRelation, LogicalPlan, MergeRows, OneRowRelation, Project, Range, ReplaceData, WriteDelta}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{approx_count_distinct, count, lit, max, min}
 import org.apache.spark.sql.graftbridge.{DatasetBridge, RowLevelBridge}
-import graft.catalog.GraftRowLevelOperation
+import graft.catalog.{GraftCopyOnWriteOperation, GraftRowLevelOperation, Snapshot}
 
-/** Runtime file pruning for the NATIVE delta MERGE (VERDICT r12 #2 /
-  * r13 #2): without it, `MERGE INTO graft.t USING src ON t.k = s.k`
-  * reads EVERY target file — the join filters rows, not files — while
-  * the Scala-API merge keeps manifest key-range pruning. This rule
-  * closes that gap at the logical level: it derives a key predicate
-  * from the SOURCE side of the merge join and injects it as an
-  * ordinary static filter above the target's row-level scan relation,
-  * where the v2 filter pushdown lands it in the manifest pruner
-  * ([[graft.catalog.SnapshotTable.prunedFiles]] via
-  * [[graft.catalog.GraftBatchScan]] — min/max bounds, Bloom sidecars,
-  * bucket-transform partition values all apply, the same machinery
-  * `readKeysIn` probes).
-  *
-  * Spark's own runtime group filtering
-  * (`RowLevelOperationRuntimeGroupFiltering`) covers only GROUP-based
-  * operations (`ReplaceData`); delta-based writes (`WriteDelta`) get
-  * nothing. So the rule reads the source's join keys during
-  * optimization:
+/** Source-key file pruning for every MERGE into a graft table, delta
+  * (`WriteDelta`) or copy-on-write (`ReplaceData`), from SQL and from
+  * the Scala API alike. Without it a merge-on-read MERGE reads EVERY
+  * target file — the join filters rows, not files — and a copy-on-write
+  * MERGE's runtime group filter joins the source against every target
+  * file to find the files to rewrite. The rule derives a key predicate
+  * from the SOURCE side of the merge join during optimization:
   *
   *  - a DRIVER-RESIDENT source — its key projection optimizes to one
   *    `LocalRelation` (`createDataFrame`/`toDF` of local rows,
@@ -46,31 +36,46 @@ import graft.catalog.GraftRowLevelOperation
   * Either way, at most `max-keys` distinct tuples become per-key `IN`
   * predicates (point pruning: bounds + Blooms + bucket partition
   * values), and a wider key set degrades to the [min, max] range
-  * predicate (file skipping on range-clustered targets). The probe
-  * runs the source plan one extra time, so the rule is gated on the
-  * source's estimated size (driver-resident sources too); a CDC-shaped
-  * merge (small source, huge target) is exactly where both the probe
-  * is cheap and the pruning pays at 100 TB.
+  * predicate (file skipping on range-clustered targets). The predicate
+  * lands in the manifest pruner ([[graft.catalog.SnapshotTable
+  * .prunedFiles]] via [[graft.catalog.GraftBatchScan]]) by a different
+  * road per plan:
+  *
+  *  - `WriteDelta`: a static filter above the target's row-level scan
+  *    relation, which the v2 filter pushdown lands in the scan;
+  *  - `ReplaceData`: a conjunct of the plan's `condition`, which Spark's
+  *    group-scan planning pushes into the rewrite's scan (file skipping
+  *    only — that scan returns every row of each file it keeps), and of
+  *    its `groupFilterCondition`, which drives the runtime query that
+  *    picks the files to rewrite. Never a row filter above the target:
+  *    the unmatched rows of a rewritten file would be lost. The rule
+  *    runs among the operator optimizations, before the early scan
+  *    push-down batch plans the group scan from `condition`.
+  *
+  * The probe runs the source plan one extra time, so the rule is gated
+  * on the source's estimated size (driver-resident sources too); a
+  * CDC-shaped merge (small source, huge target) is exactly where both
+  * the probe is cheap and the pruning pays at 100 TB.
   *
   * ## When the pushdown is sound
   *
-  * A target row can produce a delta only if some source row matches it
-  * through the merge join. Restricting the target scan to rows that
-  * COULD match is semantics-preserving iff unmatched target rows
-  * produce no delta, i.e. the MERGE has no NOT MATCHED BY SOURCE
-  * clauses — visible in the rewritten plan's join type: Inner
-  * (matched-only) or RightOuter with the target on the left (inserts
-  * present) are safe; LeftOuter/FullOuter (NOT MATCHED BY SOURCE
-  * present) are NOT, and the rule leaves them untouched. From the ON
-  * condition it uses only top-level `t.col = <source expr>` EQUALITY
-  * conjuncts (each conjunct is independently sound: every matched row
-  * satisfies all of them). Null-safe equality (`<=>`) is skipped —
-  * NULL keys match under it, and `IN`/range predicates drop NULLs.
-  * Non-deterministic or streaming sources are skipped (the probe
-  * would observe different rows than the join). The injected filter
+  * A target row can produce a change only if some source row matches
+  * it through the merge join. Skipping target rows (or files) that
+  * cannot match is semantics-preserving iff unmatched target rows
+  * change nothing, i.e. the MERGE has no NOT MATCHED BY SOURCE clauses.
+  * For a delta that shows in the join type: Inner (matched-only) or
+  * RightOuter with the target on the left (inserts present) are safe;
+  * LeftOuter/FullOuter are NOT. For a rewrite Spark itself sets a group
+  * filter only without NOT MATCHED BY SOURCE clauses, and the join is
+  * LeftOuter or FullOuter with the target on the left. From the ON
+  * condition the rule uses only top-level `t.col = <source expr>`
+  * EQUALITY conjuncts (each conjunct is independently sound: every
+  * matched row satisfies all of them). Null-safe equality (`<=>`) is
+  * skipped — NULL keys match under it, and `IN`/range predicates drop
+  * NULLs. Non-deterministic or streaming sources are skipped (the
+  * probe would observe different rows than the join). The predicate
   * also drops target rows with NULL keys — sound, because `=` never
-  * matches NULL and unmatched rows emit nothing under the allowed
-  * join types.
+  * matches NULL and unmatched rows emit nothing.
   *
   * Knobs (table properties): `graft.merge.source-prune` = `auto`
   * (default) | `off`; `graft.merge.source-prune.max-keys` (IN-list
@@ -86,39 +91,40 @@ final case class GraftMergeSourcePrune(session: SparkSession)
   import GraftMergeSourcePrune._
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
-    case wd: WriteDelta if wd.getTagValue(Attempted).isEmpty =>
+    case w @ (_: WriteDelta | _: ReplaceData)
+        if w.getTagValue(Attempted).isEmpty =>
       // one attempt per statement, even on bail-out — the rule sits in
       // a fixed-point batch and the probe must not run twice
-      wd.setTagValue(Attempted, true)
-      try tryPrune(wd).getOrElse(wd)
-      catch { case NonFatal(_) => wd }
+      w.setTagValue(Attempted, true)
+      try tryPrune(w).getOrElse(w)
+      catch { case NonFatal(_) => w }
   }
 
-  private def tryPrune(wd: WriteDelta): Option[LogicalPlan] = {
-    val join = wd.query match {
-      case m: MergeRows => m.child match {
+  private def tryPrune(write: LogicalPlan): Option[LogicalPlan] = {
+    // sound only when unmatched target rows change nothing (no NOT
+    // MATCHED BY SOURCE); UPDATE/DELETE carry no MergeRows, and their
+    // static predicates already push
+    val (query, safeJoins) = write match {
+      case wd: WriteDelta => (wd.query, Set[JoinType](Inner, RightOuter))
+      case rd: ReplaceData if rd.groupFilterCondition.isDefined =>
+        (rd.query, Set[JoinType](LeftOuter, FullOuter))
+      case _ => return None
+    }
+    val join = query.collectFirst { case m: MergeRows => m.child }
+      .collect {
         case j: Join => j
         case Project(_, j: Join) => j
-        case _ => return None
-      }
-      case _ => return None // UPDATE/DELETE: static predicates already push
-    }
+      }.getOrElse(return None)
     // the row-level scan relation lives on the TARGET side of the
     // rewritten merge join (Spark puts the target left)
     val targetRel = join.left.collectFirst {
-      case r: DataSourceV2Relation if RowLevelBridge.operationOf(r.table)
-        .exists(_.isInstanceOf[GraftRowLevelOperation]) => r
+      case r: DataSourceV2Relation if baseOf(r).isDefined => r
     }.getOrElse(return None)
-    val op = RowLevelBridge.operationOf(targetRel.table).get
-      .asInstanceOf[GraftRowLevelOperation]
+    val base = baseOf(targetRel).get
+    if (!safeJoins(join.joinType)) return None
 
-    // sound only when unmatched target rows emit no delta (no NOT
-    // MATCHED BY SOURCE): Inner or RightOuter-with-target-left
-    if (!(join.joinType == Inner || join.joinType == RightOuter))
-      return None
-
-    if (op.baseFileCount <= 1) return None // nothing to skip
-    val props = op.baseProperties
+    if (base.files.size <= 1) return None // nothing to skip
+    val props = base.properties
     if (props.getOrElse("graft.merge.source-prune", "auto") == "off")
       return None
 
@@ -136,7 +142,8 @@ final case class GraftMergeSourcePrune(session: SparkSession)
     // execution rows the probe never saw, and their matches would be
     // pruned into spurious INSERTs (duplicate keys). Only leaves whose
     // statement-scope contents are stable may feed the probe: literal
-    // relations, range(), cached relations, and graft snapshot reads
+    // relations, range(), cached or checkpointed relations (the Scala
+    // API's merge checkpoints its source), and graft snapshot reads
     // (manifest-committed, at-most-snapshot-read caveat per ADVICE).
     // `graft.merge.source-prune.assume-stable-source=true` opts an
     // external-but-known-quiescent source back in.
@@ -146,6 +153,7 @@ final case class GraftMergeSourcePrune(session: SparkSession)
       case _: LocalRelation | _: Range | _: OneRowRelation => true
       case _: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
         true
+      case r: LogicalRDD => r.rdd.isCheckpointed
       case r: DataSourceV2Relation =>
         r.table.isInstanceOf[graft.catalog.GraftV2Table]
       case _ => false
@@ -202,23 +210,28 @@ final case class GraftMergeSourcePrune(session: SparkSession)
       }
 
     val pred = perKey.reduce(And)
-    val newLeft = join.left.transformUp {
-      case r: DataSourceV2Relation if r eq targetRel => Filter(pred, r)
-    }
-    val newQuery = wd.query match {
-      case m: MergeRows => m.withNewChildren(Seq(m.child match {
-        case j: Join => j.copy(left = newLeft)
-        case p @ Project(_, j: Join) =>
-          p.copy(child = j.copy(left = newLeft))
-        case other => other
-      }))
-      case other => other
-    }
-    logInfo(s"graft MERGE source-prune on ${op.v2Table.name()}: " +
+    logInfo(s"graft MERGE source-prune on ${targetRel.table.name()}: " +
       s"${ks.rows} source rows -> ${pred.sql.take(200)}")
-    Some(WriteDelta(wd.table, wd.condition, newQuery, wd.originalTable,
-      wd.projections, wd.write))
+    write match {
+      case rd: ReplaceData =>
+        Some(rd.copy(condition = And(rd.condition, pred),
+          groupFilterCondition = rd.groupFilterCondition.map(And(pred, _))))
+      case wd: WriteDelta =>
+        val newLeft = join.left.transformUp {
+          case r: DataSourceV2Relation if r eq targetRel => Filter(pred, r)
+        }
+        Some(wd.copy(query = wd.query.transformUp {
+          case j: Join if j eq join => j.copy(left = newLeft)
+        }))
+    }
   }
+
+  /** The base snapshot of a graft row-level operation's scan relation. */
+  private def baseOf(r: DataSourceV2Relation): Option[Snapshot] =
+    RowLevelBridge.operationOf(r.table).collect {
+      case op: GraftRowLevelOperation => op.base
+      case op: GraftCopyOnWriteOperation => op.base
+    }
 
   /** Keys of a driver-resident source, exact: row count, each key's
     * [min, max] under Spark's ordering, and the distinct key tuples
@@ -287,7 +300,7 @@ final case class GraftMergeSourcePrune(session: SparkSession)
 }
 
 object GraftMergeSourcePrune {
-  /** Set once per WriteDelta statement — the probe must not re-run on
+  /** Set once per MERGE write — the probe must not re-run on
     * later fixed-point iterations (transformDown copies tags onto the
     * rewritten node).
     */

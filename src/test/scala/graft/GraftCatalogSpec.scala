@@ -79,6 +79,74 @@ class GraftCatalogSpec extends AnyFunSuite {
       .as[(Long, Double)].collect().toSeq == Seq((1L, 1.0), (2L, 2.0)))
   }
 
+  test("a merge-on-read MERGE that deletes is not refused by a NOT NULL column") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graft.nn")
+    sql("DROP TABLE IF EXISTS graft.nn.mor")
+    sql("CREATE TABLE graft.nn.mor (id BIGINT NOT NULL, v DOUBLE) " +
+      "TBLPROPERTIES ('graft.merge.mode'='merge-on-read')")
+    sql("INSERT INTO graft.nn.mor VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
+    Seq((1L, 0.0), (3L, 30.0), (4L, 4.0)).toDF("id", "v")
+      .createOrReplaceTempView("nn_mor_src")
+    sql("""MERGE INTO graft.nn.mor t USING nn_mor_src s ON t.id = s.id
+          |WHEN MATCHED AND s.v = 0 THEN DELETE
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(sql("SELECT id, v FROM graft.nn.mor ORDER BY id")
+      .as[(Long, Double)].collect().toSeq ==
+      Seq((2L, 2.0), (3L, 30.0), (4L, 4.0)))
+    val e = intercept[Exception](sql("MERGE INTO graft.nn.mor t USING " +
+      "(SELECT CAST(NULL AS BIGINT) AS id, 5.0 AS v) s ON t.id = s.id " +
+      "WHEN NOT MATCHED THEN INSERT *"))
+    assert(e.getMessage.contains("IS NOT NULL"), e.getMessage)
+  }
+
+  test("a NOT NULL struct field, array element or map value refuses NULL in INSERT, UPDATE and MERGE") {
+    import org.apache.spark.sql.types._
+    sql("CREATE NAMESPACE IF NOT EXISTS graft.nn")
+    sql("DROP TABLE IF EXISTS graft.nn.nested")
+    // the snapshot records the non-nullable values; the catalog table
+    // reads them nullable
+    val warehouse = spark.conf.get("spark.sql.catalog.graft.warehouse")
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("s", StructType(Seq(
+        StructField("a", IntegerType, nullable = false),
+        StructField("in", StructType(Seq(
+          StructField("c", StringType, nullable = false))))))),
+      StructField("xs", ArrayType(IntegerType, containsNull = false)),
+      StructField("m", MapType(StringType, IntegerType,
+        valueContainsNull = false))))
+    SnapshotTable.create(spark, s"$warehouse/nn/nested", schema, None)
+    sql("INSERT INTO graft.nn.nested VALUES " +
+      "(1, named_struct('a', 1, 'in', named_struct('c', 'x')), " +
+      "array(1), map('k', 1)), (2, NULL, NULL, NULL), " +
+      "(3, named_struct('a', 3, 'in', NULL), array(), map())")
+    def s(a: String, c: String) =
+      s"named_struct('a', CAST($a AS INT), 'in', named_struct('c', CAST($c AS STRING)))"
+    val bad = Seq(
+      s"INSERT INTO graft.nn.nested VALUES (4, ${s("NULL", "'y'")}, NULL, NULL)",
+      s"INSERT INTO graft.nn.nested VALUES (4, ${s("4", "NULL")}, NULL, NULL)",
+      "INSERT INTO graft.nn.nested VALUES (4, NULL, array(1, NULL), NULL)",
+      "INSERT INTO graft.nn.nested VALUES (4, NULL, NULL, map('k', NULL))",
+      s"UPDATE graft.nn.nested SET s = ${s("NULL", "'z'")} WHERE id = 1",
+      "UPDATE graft.nn.nested SET m = map('k', CAST(NULL AS INT)) WHERE id = 1",
+      "MERGE INTO graft.nn.nested t USING (SELECT 2L AS id, " +
+        s"${s("2", "NULL")} AS s) src ON t.id = src.id " +
+        "WHEN MATCHED THEN UPDATE SET s = src.s",
+      "MERGE INTO graft.nn.nested t USING (SELECT 5L AS id) src " +
+        "ON t.id = src.id WHEN NOT MATCHED THEN INSERT (id, xs) " +
+        "VALUES (src.id, array(CAST(NULL AS INT)))")
+    bad.foreach { q =>
+      val e = intercept[Exception](sql(q))
+      assert(e.getMessage.contains("IS NOT NULL"), s"$q: ${e.getMessage}")
+    }
+    // a NULL parent holds no field to check
+    sql(s"UPDATE graft.nn.nested SET s = NULL, xs = NULL WHERE id = 1")
+    assert(sql("SELECT id FROM graft.nn.nested WHERE s IS NULL ORDER BY id")
+      .as[Long].collect().toSeq == Seq(1L, 2L))
+    assert(sql("SELECT count(*) FROM graft.nn.nested").as[Long]
+      .collect().head == 3L)
+  }
+
   test("ALTER TABLE: add/rename/drop/widen columns and set/unset properties") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.ddl2")
     sql("DROP TABLE IF EXISTS graft.ddl2.t")

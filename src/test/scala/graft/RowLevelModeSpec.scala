@@ -3,10 +3,10 @@ package graft
 import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.{call_udf, col, lit, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{InsertClause, MergeAction, MergeClause, SnapshotConflictException, SnapshotTable}
+import graft.catalog.{InsertClause, MergeAction, MergeClause, ScanEvents, Snapshot, SnapshotConflictException, SnapshotTable}
 
 /** One row-level engine: a table's `graft.{delete,update,merge}.mode`
   * decides how a statement commits, whichever surface it arrives
@@ -213,6 +213,153 @@ class RowLevelModeSpec extends AnyFunSuite {
     }
   }
 
+  test("explicit-mode Scala methods commit the kind they name, whatever the table's mode") {
+    val mor = fresh("force_mor", Some("merge-on-read"))
+    val cow = fresh("force_cow", Some("copy-on-write"))
+    val s1 = mor.delete(col("id") === 3L)
+    val s2 = mor.update(Seq("v" -> lit(-4.0)), col("id") === 4L)
+    val s3 = cow.deleteWithVectors(col("id") === 3L)
+    val s4 = cow.updateWithVectors(Seq("v" -> lit(-4.0)), col("id") === 4L)
+    assert(Seq(s1, s2, s3, s4).map(_.operation) ==
+      Seq("delete", "update", "delete-pos", "update-pos"))
+    // copy-on-write rewrote the hit file; merge-on-read wrote vectors
+    assert(mor.currentSnapshot().dvFiles.isEmpty)
+    assert(cow.currentSnapshot().dvFiles.size == 2)
+    assert(rows(mor) == rows(cow))
+    assert(rows(cow).take(4) == Seq((1L, 1.0), (2L, 2.0), (4L, -4.0),
+      (5L, 5.0)))
+  }
+
+  test("a Scala DML call returns its own statement's snapshot, even when a commit lands right after it") {
+    val t = fresh("own", None)
+    t.afterStatementHook = () => t.setProperties(Map("rlm.after" -> "1"))
+    try {
+      Seq[SnapshotTable => Snapshot](
+        _.delete(col("id") === 2L),
+        _.deleteWithVectors(col("id") === 3L),
+        _.update(Seq("v" -> lit(0.0)), col("id") === 4L),
+        _.updateWithVectors(Seq("v" -> lit(0.0)), col("id") === 5L),
+        _.merge(Seq((8L, -8.0)).toDF("id", "v"), Seq("id"))
+      ).zip(Seq("delete", "delete-pos", "update", "update-pos", "merge"))
+        .foreach { case (call, op) =>
+          val before = t.currentVersion()
+          val own = call(t)
+          assert(own.version == before + 1 && own.operation == op,
+            s"$op returned v${own.version} ${own.operation}")
+          assert(t.currentSnapshot().operation == "set-properties")
+        }
+    } finally t.afterStatementHook = () => ()
+  }
+
+  test("a Scala DML call that matches nothing publishes no version") {
+    val t = fresh("noop", None)
+    val m = fresh("noop_mor", Some("merge-on-read"))
+    val none = col("id") === 999L
+    Seq(t, m).foreach { tbl =>
+      val base = tbl.currentSnapshot()
+      val got = Seq(tbl.delete(none), tbl.deleteWithVectors(none),
+        tbl.deleteRouted(col("v") > 1000.0), tbl.update(Seq("v" -> lit(0.0)),
+          none), tbl.updateWithVectors(Seq("v" -> lit(0.0)), none),
+        tbl.updateRouted(Seq("v" -> lit(0.0)), col("v") > 1000.0),
+        tbl.merge(Seq((99L, 9.0)).toDF("id", "v"), Seq("id"),
+          insertNotMatched = false))
+      assert(got.forall(_ == base), got.map(_.operation))
+      assert(tbl.currentSnapshot() == base)
+    }
+  }
+
+  test("a Scala merge-on-read DELETE rebases over a disjoint append made during it; serializable conflicts") {
+    Seq("snapshot", "serializable").foreach { level =>
+      val t = fresh(s"iso_$level", None)
+      t.setProperties(Map("graft.write.isolation-level" -> level))
+      val before = rows(t)
+      // the append stages first and commits while the DELETE's scan
+      // evaluates its first row
+      val appender = SnapshotTable.load(spark, t.root.toString)
+      val staged = new java.util.concurrent.CountDownLatch(1)
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val appended = new java.util.concurrent.CountDownLatch(1)
+      appender.onStagedHook = () => { staged.countDown(); go.await() }
+      val writer = new Thread(() => {
+        appender.append(Seq((100L, 100.0)).toDF("id", "v"))
+        appended.countDown()
+      })
+      writer.start()
+      staged.await()
+      RowLevelModeSpec.scanned.set(false)
+      RowLevelModeSpec.duringScan = () => { go.countDown(); appended.await() }
+      spark.udf.register("rlm_during", udf { (id: Long) =>
+        if (RowLevelModeSpec.scanned.compareAndSet(false, true))
+          RowLevelModeSpec.duringScan()
+        id
+      })
+      val out = scala.util.Try(
+        t.deleteWithVectors(call_udf("rlm_during", col("id")) === 3L))
+      writer.join()
+      val ops = t.history().map(_.operation).takeRight(2)
+      if (level == "snapshot") {
+        assert(out.get.operation == "delete-pos" &&
+          out.get == t.currentSnapshot(), out)
+        assert(ops == Seq("append", "delete-pos"))
+        assert(rows(t) == (before.filterNot(_._1 == 3L) :+ (100L, 100.0)))
+      } else {
+        val e = out.failed.get
+        val chain = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null)
+        assert(chain.exists(_.isInstanceOf[SnapshotConflictException]), e)
+        assert(ops.last == "append")
+        assert(rows(t) == (before :+ (100L, 100.0)))
+      }
+    }
+  }
+
+  test("a Scala merge whose source adds a column publishes one version on a path table") {
+    Seq("copy-on-write", "merge-on-read").foreach { mode =>
+      val t = SnapshotTable.create(spark,
+        java.nio.file.Files.createTempDirectory("rlm-evolve").resolve("t")
+          .toString, org.apache.spark.sql.types.StructType.fromDDL(
+          "id BIGINT, v DOUBLE"), None, Map("graft.merge.mode" -> mode))
+      t.append(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"))
+      val before = t.currentVersion()
+      val out = t.merge(Seq((2L, 20.0, "b"), (3L, 3.0, "c"))
+        .toDF("id", "v", "tag"), Seq("id"))
+      assert(t.currentVersion() == before + 1 && out == t.currentSnapshot(),
+        mode)
+      assert(out.schema.fieldNames.toSeq == Seq("id", "v", "tag"), mode)
+      assert(t.read().select("id", "tag").as[(Long, Option[String])]
+        .collect().sortBy(_._1).toSeq ==
+        Seq((1L, None), (2L, Some("b")), (3L, Some("c"))), mode)
+    }
+  }
+
+  test("a partially covered DELETE opens only the boundary file, on every surface") {
+    def fourFiles(t: SnapshotTable): SnapshotTable = {
+      (0 until 4).foreach(k => t.append(spark.range(k * 100, k * 100 + 100)
+        .selectExpr("id", "cast(id as double) as v").repartition(1)))
+      t
+    }
+    def path(): SnapshotTable = fourFiles(SnapshotTable.create(spark,
+      java.nio.file.Files.createTempDirectory("rlm-cover").resolve("t")
+        .toString, org.apache.spark.sql.types.StructType.fromDDL(
+        "id BIGINT, v DOUBLE"), None))
+    val catalog = fresh("cover", None, Nil)
+    fourFiles(catalog)
+    Seq[(String, SnapshotTable, SnapshotTable => Any)](
+      ("SQL copy-on-write", catalog,
+        _ => sql("DELETE FROM graft.rlm.cover WHERE id < 250")),
+      ("Scala delete", path(), _.delete(col("id") < 250L)),
+      ("Scala deleteWithVectors", path(),
+        _.deleteWithVectors(col("id") < 250L))
+    ).foreach { case (what, t, delete) =>
+      val (_, events) = ScanEvents.capture(delete(t))
+      val mine = events.filter(_.root.endsWith(t.root.toUri.getPath))
+      assert(mine.nonEmpty && mine.forall(_.kept == 1), s"$what: $events")
+      assert(t.read().select("id").as[Long].collect().sorted.toSeq ==
+        (250L until 400L), what)
+      assert(t.currentSnapshot().files.size == 2, what)
+    }
+  }
+
   test("dynamic partition overwrite through writeTo(...).overwritePartitions()") {
     sql("CREATE NAMESPACE IF NOT EXISTS graft.rlm")
     sql("DROP TABLE IF EXISTS graft.rlm.dyn")
@@ -231,4 +378,7 @@ class RowLevelModeSpec extends AnyFunSuite {
 object RowLevelModeSpec {
   @volatile private var racer: SnapshotTable = _
   private val raced = new AtomicBoolean(false)
+  /** Run once by the first row a predicate UDF sees. */
+  @volatile private var duringScan: () => Unit = () => ()
+  private val scanned = new AtomicBoolean(false)
 }

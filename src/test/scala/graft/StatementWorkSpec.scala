@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, WriteDeltaExec}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -264,6 +264,91 @@ class StatementWorkSpec extends AnyFunSuite {
     assert(work.jobs > offWork.jobs, s"probe jobs: $work vs $offWork")
     assert(kept < total, s"the target scan must prune: $kept of $total")
     assert(rows == mergeModel(keys) && offRows == rows)
+  }
+
+  test("a copy-on-write MERGE from local rows prunes its rewrite to the files its keys overlap") {
+    // keys 150 and 160 fall in file 1, 350 in file 3, 999 in none
+    val keys = Seq(150L, 160L, 350L, 999L)
+    val want = ((0L until 400L).map(id => id -> id.toDouble).toMap ++
+      keys.map(_ -> -1.0)).toSeq.sorted
+    def check(what: String, t: SnapshotTable, merge: => Any): Unit = {
+      val before = t.currentSnapshot().files.map(_.path).toSet
+      val (_, events) = ScanEvents.capture(merge)
+      val ev = events.filter(_.root.endsWith(t.root.toUri.getPath))
+      assert(ev.nonEmpty && ev.forall(_.kept == 2), s"$what: $events")
+      val after = t.currentSnapshot()
+      assert(after.operation == "merge", what)
+      // the two overlapped files were rewritten, their unmatched rows
+      // carried over
+      assert((before -- after.files.map(_.path)).size == 2, what)
+      assert(idsAndValues(t) == want, what)
+    }
+    sql("CREATE NAMESPACE IF NOT EXISTS graft.stmt")
+    sql("DROP TABLE IF EXISTS graft.stmt.cowp")
+    sql("CREATE TABLE graft.stmt.cowp (id BIGINT, v DOUBLE)")
+    (0 until 4).foreach { k =>
+      sql("INSERT INTO graft.stmt.cowp SELECT /*+ REPARTITION(1) */ id, " +
+        s"cast(id as double) FROM range(${k * 100}, ${k * 100 + 100})")
+    }
+    localRows(keys).createOrReplaceTempView("stmt_cowp_src")
+    check("SQL", SnapshotTable.load(spark, s"$warehouse/stmt/cowp"), sql(
+      """MERGE INTO graft.stmt.cowp t USING stmt_cowp_src s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET v = s.v
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+    val t = fourFiles()
+    check("Scala", t, t.merge(localRows(keys), Seq("id")))
+  }
+
+  /** A fresh path table of four single-file appends of 100 ids (file k
+    * holds [100k, 100k + 100)).
+    */
+  private def fourFiles(props: Map[String, String] = Map.empty)
+      : SnapshotTable = {
+    val t = SnapshotTable.create(spark, java.nio.file.Files
+      .createTempDirectory("stmt-api").resolve("t").toString, srcSchema,
+      None, properties = props)
+    (0 until 4).foreach(k => t.append(spark.range(k * 100, k * 100 + 100)
+      .selectExpr("id", "cast(id as double) as v").repartition(1)))
+    t
+  }
+
+  private def idsAndValues(t: SnapshotTable): Seq[(Long, Double)] =
+    t.read().select("id", "v").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toSeq.sorted
+
+  test("the Scala API's DELETE, UPDATE and MERGE stay within their work budget") {
+    val mor = fourFiles(Map("graft.merge.mode" -> "merge-on-read"))
+    val cow = fourFiles()
+    // (call, jobs, stages) upper bounds, measured on a 4-core local
+    // session. Each call is one Spark row-level plan; a MERGE adds its
+    // source checkpoint, duplicate-key check and key probe. When the
+    // Scala API ran its own discovery, staging and vector read-back
+    // jobs the counts were 4, 6 and 18 on merge-on-read and 3, 3 and
+    // 16 on copy-on-write (jobs = stages).
+    val calls: Seq[(String, Int, Int, () => Any)] = Seq(
+      ("deleteWithVectors", 2, 2,
+        () => mor.deleteWithVectors(col("id") === 152L)),
+      ("updateWithVectors", 1, 1, () => mor.updateWithVectors(
+        Seq("v" -> lit(-1.0)), col("id") === 153L)),
+      ("merge-on-read merge", 11, 11,
+        () => mor.merge(localRows(Seq(250L, 900L)), Seq("id"))),
+      ("delete", 3, 3, () => cow.delete(col("id") === 152L)),
+      ("update", 3, 3, () => cow.update(
+        Seq("v" -> lit(-1.0)), col("id") === 153L)),
+      ("merge", 14, 14,
+        () => cow.merge(localRows(Seq(250L, 900L)), Seq("id"))))
+    val work = calls.map { case (what, _, _, call) => workOf(call())._2 }
+    info(calls.map(_._1).zip(work).mkString("; "))
+    calls.zip(work).foreach { case ((what, jobs, stages, _), w) =>
+      assert(w.jobs <= jobs && w.stages <= stages, s"$what: $w")
+    }
+    val want = ((0L until 400L).map(id => id -> id.toDouble).toMap - 152L ++
+      Seq(153L -> -1.0, 250L -> -1.0, 900L -> -1.0)).toSeq.sorted
+    assert(idsAndValues(mor) == want && idsAndValues(cow) == want)
+    assert(mor.history().map(_.operation).takeRight(3) ==
+      Seq("delete-pos", "update-pos", "merge-pos"))
+    assert(cow.history().map(_.operation).takeRight(3) ==
+      Seq("delete", "update", "merge"))
   }
 
   test("a copy-on-write SQL UPDATE and MERGE from local rows stay within their work budget") {
