@@ -3809,8 +3809,8 @@ object Queries {
     // never seen (`priority INT`), matched rows (%45) update value
     // +9000 and stamp priority, and a disjoint shifted-key batch
     // inserts with priority set. The commit must GROW the table schema
-    // (diff→evolve→conform, EvolvingWriter.scala's append contract on
-    // the merge path), hide old row images under positional vectors
+    // (diff→evolve→conform, SnapshotTable.append's evolution contract
+    // on the merge path), hide old row images under positional vectors
     // WITHOUT rewriting any pre-merge data file (those files keep
     // their old physical schema — the read resolves priority to
     // typed NULL by field id), and append only the new images with

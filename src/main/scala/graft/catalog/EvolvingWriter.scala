@@ -1,44 +1,20 @@
 package graft.catalog
 
-import scala.util.Try
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-import graft.schema.{SchemaOps, TypeMapping}
-
-/** Distributed schema-evolving catalog writer — the Spark-native
-  * replacement for the reference's `write_to_s3_glue`
-  * (`src/utils/spark/spark_utils.py:113-140`), which collects the frame
-  * to pandas on the driver and has Athena (a second engine) commit into
-  * Iceberg with `schema_evolution=True, fill_missing_columns_in_df=True`.
-  * That driver collect is the reference's scalability cliff (SURVEY §3.1
-  * stage W); here the append stays distributed end-to-end:
-  *
-  *   diff incoming vs table schema (E2) → `ALTER TABLE … ADD COLUMNS`
-  *   for new columns → conform the frame to the evolved table schema
-  *   (E1: cast common, null-fill missing) → `writeTo(t).append()`.
-  *
-  * Iceberg's hidden partition `month(created_at)` (reference
-  * `job.py:125`, `spark_utils.py:163`) is unavailable offline (no
-  * Iceberg jar — SURVEY §7.0), so the same pruning is obtained with an
-  * explicit derived `month_created_at` column and
-  * `PARTITIONED BY (month_created_at)`; Catalyst then gives static and
-  * dynamic partition pruning on it for free. ZSTD parquet compression
-  * (`spark_utils.py:167-168`) comes from the session conf set in
-  * [[configure]].
+/** Default table properties for graft snapshot tables. Every evolving
+  * write goes through [[SnapshotTable]] or the `graft` catalog, which
+  * evolve the schema by field id; this object only holds the properties
+  * their tables are created with. It keeps the name of the
+  * session-catalog writer it once was because callers outside the main
+  * sources (the benchmark harness) import it from here.
   */
 object EvolvingWriter {
 
-  /** Derived partition column standing in for Iceberg's hidden
-    * `month(created_at)` transform.
-    */
-  val PartitionColumn = "month_created_at"
-
-  /** Reference TBLPROPERTIES (`spark_utils.py:165-172`) — carried as
-    * inert properties for parity; the compaction/vacuum knobs were
-    * executed by Athena, not by the reference code (SURVEY §4).
+  /** Reference TBLPROPERTIES (`spark_utils.py:165-172`). The
+    * compaction and vacuum thresholds are executed by
+    * [[SnapshotTable.maintain]] and [[SnapshotTable.expireSnapshots]].
+    * `write_compression` is inert: no graft write reads it, and graft
+    * writes compress with the session's
+    * `spark.sql.parquet.compression.codec`.
     */
   val DefaultTableProps: Map[String, String] = Map(
     "format" -> "parquet",
@@ -46,352 +22,4 @@ object EvolvingWriter {
     "optimize_rewrite_data_file_threshold" -> "5",
     "optimize_rewrite_delete_file_threshold" -> "2",
     "vacuum_min_snapshots_to_keep" -> "5")
-
-  /** H2/B4 analog — session conf for the local warehouse: ZSTD parquet,
-    * dynamic partition overwrite (`spark_utils.py:56`).
-    */
-  def configure(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-  }
-
-  /** Escape a value for embedding in a single-quoted SQL string
-    * literal. Today's partition values are `yyyy-MM` strings from
-    * `date_format` and can't contain quotes, but as a LIBRARY surface a
-    * quote-bearing value must not break (or redirect) the generated
-    * DDL.
-    */
-  private[graft] def sqlStringLiteral(v: String): String =
-    v.replace("\\", "\\\\").replace("'", "\\'")
-
-  /** All writer DDL goes through the [[RunQuery]] status contract (the
-    * reference's writer submits its DDL via `run_query.py` the same
-    * way); a non-SUCCEEDED status becomes an exception here because the
-    * writer cannot proceed past failed DDL.
-    */
-  private def ddl(spark: SparkSession, sql: String): Unit = {
-    val o = RunQuery.run(spark, sql)
-    if (!o.succeeded)
-      throw new IllegalStateException(
-        s"DDL failed: ${o.message.getOrElse("(no message)")}\n$sql")
-  }
-
-  /** B2 — `CREATE DATABASE IF NOT EXISTS` (`spark_utils.py:142-150`). */
-  def createDatabase(spark: SparkSession, db: String,
-      location: Option[String] = None): Unit = {
-    val loc = location.map(l => s" LOCATION '$l'").getOrElse("")
-    ddl(spark, s"CREATE DATABASE IF NOT EXISTS `$db`$loc")
-  }
-
-  /** A3 — catalog table schema, `None` if the table doesn't exist
-    * (`spark_utils.py:176-192`). The reference has a second fetch path
-    * via Glue metadata (A4, `spark_utils.py:237-242`); both report the
-    * same fact, so they are unified here.
-    */
-  def tableSchema(spark: SparkSession, table: String): Option[StructType] =
-    Try(spark.table(table).schema).toOption
-
-  /** B3 — create a partitioned table for `schema`
-    * (`spark_utils.py:153-173`). Partition column goes last, as Spark
-    * stores it.
-    */
-  def createTable(spark: SparkSession, table: String, schema: StructType,
-      props: Map[String, String] = DefaultTableProps): Unit = {
-    val dataFields = schema.fields.filterNot(_.name == PartitionColumn).toIndexedSeq
-    val partitioned = schema.fieldNames.contains(PartitionColumn)
-    val partClause =
-      if (partitioned) s" PARTITIONED BY (`$PartitionColumn` string)" else ""
-    val tblProps =
-      if (props.isEmpty) ""
-      else props.map { case (k, v) => s"'$k'='$v'" }
-        .mkString(" TBLPROPERTIES (", ", ", ")")
-    ddl(spark,
-      s"""CREATE TABLE IF NOT EXISTS $table (${TypeMapping.columnsDdl(dataFields)})
-         |USING parquet$partClause$tblProps""".stripMargin)
-  }
-
-  /** Stamp the derived partition column from `created_at` (no-op if the
-    * frame has no `created_at`).
-    */
-  def withPartitionColumn(df: DataFrame): DataFrame =
-    if (!df.columns.contains("created_at") ||
-        df.columns.contains(PartitionColumn)) df
-    else df.withColumn(PartitionColumn,
-      date_format(col("created_at"), "yyyy-MM"))
-
-  /** Evolve `table` so it can hold `df` by NAME: `ALTER TABLE … ADD
-    * COLUMNS` for columns only in `df`, then metadata-only type
-    * promotion for common columns arriving WIDER (int→long,
-    * float→double — the lossless promotions Iceberg's schema evolution
-    * allows and Spark 4's parquet reader applies to old narrow pages at
-    * scan). v1 `ALTER COLUMN TYPE` refuses widening, so the promotion
-    * goes through [[org.apache.spark.sql.graftbridge.CatalogBridge]] —
-    * the same `SessionCatalog.alterTableDataSchema` mutation Spark's
-    * own ADD COLUMNS command uses. No data file is touched either way.
-    *
-    * @return (evolved table schema, columns added)
-    */
-  private def evolveTable(spark: SparkSession, df: DataFrame,
-      table: String): (StructType, Seq[StructField]) = {
-    val existing = tableSchema(spark, table).get
-    val d = SchemaOps.diff(df.schema, existing)
-    if (d.extraInSource.nonEmpty)
-      ddl(spark, s"ALTER TABLE $table ADD COLUMNS (${TypeMapping.columnsDdl(d.extraInSource)})")
-    val afterAdd = tableSchema(spark, table).get
-    val widened = SnapshotTable.evolve(afterAdd, df.schema)
-    if (widened != afterAdd) {
-      // the catalog's DATA schema excludes partition columns (which are
-      // never widened — month strings by construction)
-      val dataSchema = StructType(
-        widened.fields.filterNot(_.name == PartitionColumn))
-      org.apache.spark.sql.graftbridge.CatalogBridge
-        .alterTableDataSchema(spark, table, dataSchema)
-    }
-    (tableSchema(spark, table).get, d.extraInSource)
-  }
-
-  /** B1 — distributed append with schema evolution (new columns AND
-    * int→long / float→double widening, see [[evolveTable]]). Returns
-    * the columns added to the table (empty when no evolution happened).
-    */
-  def appendWithEvolution(spark: SparkSession, input: DataFrame,
-      table: String): Seq[StructField] = {
-    val df = withPartitionColumn(input)
-    tableSchema(spark, table) match {
-      case None =>
-        createTable(spark, table, df.schema)
-        val created = tableSchema(spark, table).getOrElse(df.schema)
-        append(spark, SchemaOps.alignTo(df, created), table)
-        Seq.empty
-      case Some(_) =>
-        val (evolved, added) = evolveTable(spark, df, table)
-        append(spark, SchemaOps.alignTo(df, evolved), table)
-        added
-    }
-  }
-
-  /** B4 — dynamic-partition overwrite of the months present in `input`
-    * (same evolution semantics as append).
-    */
-  def overwritePartitions(spark: SparkSession, input: DataFrame,
-      table: String): Unit = {
-    val df = withPartitionColumn(input)
-    if (tableSchema(spark, table).isEmpty) {
-      appendWithEvolution(spark, df, table)
-    } else {
-      val (evolved, _) = evolveTable(spark, df, table)
-      // alignTo puts columns in exact table order, so the position-based
-      // v1 insertInto is safe; with partitionOverwriteMode=dynamic only
-      // the months present in `input` are replaced.
-      SchemaOps.alignTo(df, evolved)
-        .write.mode("overwrite").insertInto(table)
-    }
-  }
-
-  /** MERGE-style keyed upsert (extension beyond the reference's
-    * append-only writer — the backfill/correction path a production
-    * pipeline needs): incoming rows replace table rows sharing the same
-    * `keyCols`; everything else is untouched. Same schema-evolution
-    * semantics as [[appendWithEvolution]].
-    *
-    * Scale shape: only TOUCHED partitions are rewritten — the months
-    * present in the incoming batch plus the months holding old versions
-    * of the incoming keys (a key's `created_at` may have moved it).
-    * Survivors of those partitions are anti-joined against the incoming
-    * keys and unioned with the batch under dynamic partition overwrite,
-    * so rewrite cost is bounded by the touched partitions, not the
-    * table. The only driver-side data is the touched-partition NAME
-    * list (one value per month — model-sized). A partition whose rows
-    * all migrate away would be skipped by dynamic overwrite, so empties
-    * are dropped explicitly.
-    *
-    * Duplicate keys WITHIN `input` are inserted as-is (SQL MERGE would
-    * reject them); callers needing last-writer-wins should dedup the
-    * batch first (e.g. [[graft.operators.Dedup.exact]] semantics).
-    * NULL key values follow SQL MERGE semantics: `NULL = NULL` never
-    * matches, so a null-key incoming row always inserts and never
-    * replaces an existing null-key row.
-    *
-    * The partition-scoped rewrite requires dynamic partition overwrite;
-    * upsert pins the conf itself for the duration of the write (static
-    * mode would truncate the whole table on `insertInto(overwrite)`),
-    * restoring the caller's setting afterwards.
-    *
-    * Atomicity: this path rewrites live partitions in place, so a crash
-    * mid-write can lose the touched partitions — the session-catalog
-    * storage layout offers nothing better. [[SnapshotTable.upsert]] is
-    * the crash-safe variant (immutable files, one atomic manifest
-    * commit, snapshot-isolation conflict detection); prefer it when the
-    * table does not need to live in the Hive-style session catalog.
-    */
-  def upsert(spark: SparkSession, input: DataFrame, table: String,
-      keyCols: Seq[String]): Unit = {
-    require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevMode = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try upsertImpl(spark, input, table, keyCols)
-    finally prevMode match {
-      case Some(m) => spark.conf.set(modeKey, m)
-      case None    => spark.conf.unset(modeKey)
-    }
-  }
-
-  private def upsertImpl(spark: SparkSession, input: DataFrame,
-      table: String, keyCols: Seq[String]): Unit = {
-    val df = withPartitionColumn(input)
-    tableSchema(spark, table) match {
-      case None =>
-        appendWithEvolution(spark, df, table); ()
-      case Some(_) =>
-        val (evolved, _) = evolveTable(spark, df, table)
-        val incoming = SchemaOps.alignTo(df, evolved).localCheckpoint(true)
-        val keys = incoming.select(keyCols.map(col): _*).distinct()
-        val tbl = spark.table(table)
-        if (!evolved.fieldNames.contains(PartitionColumn)) {
-          // unpartitioned: rewrite the whole table (small-table path)
-          tbl.join(keys, keyCols, "left_anti").unionByName(incoming)
-            .localCheckpoint(true)
-            .write.mode("overwrite").insertInto(table)
-        } else {
-          val touched = incoming.select(col(PartitionColumn))
-            .unionByName(tbl.join(keys, keyCols, "left_semi")
-              .select(col(PartitionColumn)))
-            .distinct().collect().map(r => Option(r.getString(0))).toSeq
-          if (touched.contains(None)) {
-            // NULL partition values poison the partition-scoped path:
-            // isin() never matches null (rows silently dropped from
-            // survivors → data loss or stale keys) and DROP PARTITION
-            // cannot name the null partition. Fall back to a STATIC
-            // whole-table rewrite — correct for every edge (including
-            // fully-drained partitions), just not partition-bounded
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-            tbl.join(keys, keyCols, "left_anti").unionByName(incoming)
-              .localCheckpoint(true)
-              .write.mode("overwrite").insertInto(table)
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          } else {
-            val touchedVals = touched.flatten
-            val survivors = tbl
-              .filter(col(PartitionColumn).isin(touchedVals: _*))
-              .join(keys, keyCols, "left_anti")
-            val out = survivors.unionByName(incoming).localCheckpoint(true)
-            out.write.mode("overwrite").insertInto(table)
-            val written = out.select(col(PartitionColumn)).distinct()
-              .collect().map(_.getString(0)).toSet
-            for (p <- touchedVals if !written.contains(p))
-              ddl(spark,
-                s"ALTER TABLE $table DROP IF EXISTS PARTITION " +
-                  s"($PartitionColumn='${sqlStringLiteral(p)}')")
-          }
-        }
-    }
-  }
-
-  /** Spark-native analog of the compaction the reference delegates to
-    * Athena via `optimize_rewrite_data_file_threshold`
-    * (`spark_utils.py:165-172` — table properties only; the engine that
-    * honored them was Athena's OPTIMIZE): partitions accumulating one
-    * small file per append are rewritten in place with
-    * `targetRowsPerFile` rows per output file. Dynamic partition
-    * overwrite rewrites ONLY the partitions present (all of them here,
-    * since compaction reads the whole table — run it per-partition at
-    * 100 TB by filtering first).
-    *
-    * Chunking: hashing by the partition column alone would send ALL of
-    * one partition's rows to a single task (one straggler, one giant
-    * file, `targetRowsPerFile` ignored). Instead per-partition row
-    * counts — driver data bounded by the partition count — size a
-    * per-partition chunk count, broadcast-joined back so each row gets
-    * a stable `pmod(xxhash64(row), chunks)` chunk key; the shuffle then
-    * spreads each partition over ~chunks tasks of ~target rows each.
-    *
-    * `partitions`: compact ONLY these partition values — the 100 TB
-    * entry point (run partition-by-partition or month-batch-by-month;
-    * reads, counts, and the rewrite all stay bounded by the selected
-    * partitions, and dynamic overwrite leaves the rest untouched). An
-    * inner `None` selects the NULL partition (isin() never matches
-    * null, so a plain value list could never reach it and its small
-    * files would accumulate forever). With outer `None` the whole
-    * table is read and rewritten — fine at warehouse-maintenance scale
-    * on small/medium tables only.
-    *
-    * Atomicity caveat (both scopes): the rewrite is parquet overwrite,
-    * so a crash mid-write can lose the partitions being rewritten —
-    * [[SnapshotTable.compact]] is the crash-safe variant (immutable
-    * files + one atomic manifest swap per partition).
-    *
-    * @return (files before, files after) within the compacted scope
-    */
-  def compact(spark: SparkSession, table: String,
-      targetRowsPerFile: Long = 1000000L,
-      partitions: Option[Seq[Option[String]]] = None): (Long, Long) = {
-    val whole = spark.table(table)
-    require(partitions.isEmpty || whole.columns.contains(PartitionColumn),
-      s"partition-scoped compact needs a $PartitionColumn column")
-    def scoped(): DataFrame = partitions match {
-      case Some(ps) =>
-        val vals = ps.flatten
-        val cond0 =
-          if (vals.isEmpty) lit(false) else col(PartitionColumn).isin(vals: _*)
-        val cond =
-          if (ps.contains(None)) cond0 || col(PartitionColumn).isNull else cond0
-        spark.table(table).filter(cond)
-      case None => spark.table(table)
-    }
-    val df = scoped()
-    def fileCount(): Long =
-      scoped().select(input_file_name()).distinct().count()
-    val before = fileCount()
-    val rows = df.count()
-    val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile)
-    val partitioned = df.columns.contains(PartitionColumn)
-    val compacted =
-      if (partitioned) {
-        import spark.implicits._
-        val chunks = df.groupBy(col(PartitionColumn)).count()
-          .collect().map { r =>
-            Option(r.getString(0)) ->
-              math.max(1L, (r.getLong(1) + targetRowsPerFile - 1) / targetRowsPerFile)
-          }.toSeq.toDF("__p", "__chunks")
-        val dataCols = df.columns.map(c => col(s"`$c`"))
-        // null-safe join key: the null partition's rows must ride the
-        // rewrite too, and `=` would silently drop them from the plan
-        df.join(broadcast(chunks), col(PartitionColumn) <=> col("__p"))
-          .withColumn("__chunk", pmod(xxhash64(dataCols: _*), col("__chunks")))
-          .repartition(col(PartitionColumn), col("__chunk"))
-          .select(dataCols: _*)
-      } else df.repartition(nFiles.toInt)
-    // Spark refuses to overwrite a table it is reading from in the same
-    // plan — localCheckpoint materializes the compacted rows (bounded
-    // by the selected partitions) and cuts the lineage first. insertInto
-    // is position-based; the frame came from the table, so order
-    // already matches. Dynamic overwrite is pinned for the write: under
-    // static mode a partition-scoped rewrite would TRUNCATE the table.
-    val materialized = compacted.localCheckpoint(true)
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevMode = spark.conf.getOption(modeKey)
-    if (partitioned) spark.conf.set(modeKey, "dynamic")
-    try materialized.write.mode("overwrite").insertInto(table)
-    finally if (partitioned) prevMode match {
-      case Some(m) => spark.conf.set(modeKey, m)
-      case None    => spark.conf.unset(modeKey)
-    }
-    (before, fileCount())
-  }
-
-  /** Distributed append. Spark 4's DataFrameWriterV2 (`writeTo`) refuses
-    * v1 session-catalog tables, so this uses the v1 writer; `saveAsTable`
-    * in append mode resolves columns BY NAME against the existing table
-    * (unlike `insertInto`), which is the semantic the evolving append
-    * needs.
-    */
-  private def append(spark: SparkSession, aligned: DataFrame,
-      table: String): Unit = {
-    val w = aligned.write.mode("append").format("parquet")
-    val partitioned =
-      if (aligned.columns.contains(PartitionColumn)) w.partitionBy(PartitionColumn)
-      else w
-    partitioned.saveAsTable(table)
-  }
 }

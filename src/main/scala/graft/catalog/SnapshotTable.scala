@@ -25,9 +25,7 @@ import graft.schema.SchemaOps
   * under `data/<batch>/` (never touching live files), then publish them
   * with ONE atomic manifest commit. A crash mid-write leaves only
   * unreferenced orphan files (cleaned by [[removeOrphanFiles]]) — the
-  * table is never observed half-written, unlike the Hive-catalog
-  * overwrite paths in [[EvolvingWriter]] (kept for session-catalog SQL
-  * parity; their scaladoc points here for atomicity).
+  * table is never observed half-written.
   *
   * What the snapshot log buys, mirroring the reference's Iceberg
   * feature set:
@@ -54,8 +52,7 @@ import graft.schema.SchemaOps
   * Iceberg's own manifests before manifest-list sharding); data moves
   * only through distributed jobs scoped to the touched partitions.
   * NULL partition values are first-class here (`partition=None` swaps
-  * atomically like any other value) — the Hive-DDL fallback dance in
-  * `EvolvingWriter.upsertImpl` does not exist on this path.
+  * atomically like any other value).
   */
 /** What [[SnapshotTable.merge]] does with target rows whose key exists
   * in the source: replace the whole row with the source row
@@ -2169,8 +2166,9 @@ final class SnapshotTable private (
   /** Snapshot-isolated keyed upsert (MERGE): rows matching `keyCols`
     * are replaced, everything else untouched; only TOUCHED partitions
     * (months holding incoming rows or old versions of incoming keys)
-    * are rewritten — same partition-bounded cost shape as
-    * [[EvolvingWriter.upsert]], but the swap is one atomic commit.
+    * are rewritten, and the swap is one atomic commit. A key whose
+    * partition source moves it to another month leaves its old month;
+    * a month it drains completely leaves the manifest.
     * Read-modify-write is NOT rebasable: if any other commit lands
     * between the read and the commit, [[SnapshotConflictException]] is
     * raised and the caller re-runs against the new state (Iceberg

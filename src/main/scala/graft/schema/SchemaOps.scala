@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Difference between an incoming frame's schema and a target schema
-  * (reference `compare_schemas`, `src/utils/spark/spark_utils.py:59-79` —
-  * dead code there, live here because the evolving writer needs it to
-  * compute `ALTER TABLE … ADD COLUMNS`).
+  * (reference `compare_schemas`, `src/utils/spark/spark_utils.py:59-79`).
+  * Graft tables evolve by field id in `SnapshotTable.evolve`, so no
+  * write path calls [[SchemaOps.diff]].
   *
   * @param missingInSource target fields absent from the source
   * @param extraInSource   source fields absent from the target

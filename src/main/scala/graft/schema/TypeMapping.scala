@@ -2,17 +2,18 @@ package graft.schema
 
 import org.apache.spark.sql.types._
 
-/** Closed type universe + Spark↔catalog-DDL type rendering.
+/** Closed type universe + Spark type rendering.
   *
   * Re-expresses the reference's `TypeUtils.datatype_to_str`
   * (reference `src/utils/spark/type_utils.py:31-77`): the reference maps
   * each Spark type to its Athena/Iceberg DDL string by hand; in Spark the
   * same rendering is `DataType.catalogString`, so this object keeps only
-  * (a) the closed-universe validation (anything outside the table is an
-  * error, `type_utils.py:75-76`) and (b) the inverse parse used by DDL
-  * construction. The reference's nested-type rendering crashes on a
-  * missing import (`type_utils.py:63,66,72`); here nested types are
-  * first-class (SURVEY §7.4 risk 6 — deliberate divergence/fix).
+  * the closed-universe validation (anything outside the table is an
+  * error, `type_utils.py:75-76`), which `SnapshotTable.addColumns` and
+  * `addStructField` run before a column joins a table. The reference's
+  * nested-type rendering crashes on a missing import
+  * (`type_utils.py:63,66,72`); here nested types are first-class
+  * (SURVEY §7.4 risk 6 — deliberate divergence/fix).
   */
 object TypeMapping {
 
@@ -36,17 +37,4 @@ object TypeMapping {
     require(isSupported(dt), s"Unsupported data type: $dt")
     dt.catalogString
   }
-
-  /** Schema → name→DDL map (reference `job.py:121`). */
-  def schemaToDdlMap(schema: StructType): Map[String, String] =
-    schema.fields.map(f => f.name -> render(f.dataType)).toMap
-
-  /** Schema → column-list DDL fragment for CREATE/ALTER statements,
-    * e.g. `id bigint, name string`. Names are backtick-quoted.
-    */
-  def columnsDdl(fields: Seq[StructField]): String =
-    fields.map(f => s"`${f.name}` ${render(f.dataType)}").mkString(", ")
-
-  /** DDL string → Spark type (inverse of render; Spark-native parser). */
-  def parse(ddl: String): DataType = DataType.fromDDL(ddl)
 }

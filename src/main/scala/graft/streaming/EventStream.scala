@@ -15,6 +15,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * programs, so the same function serves `spark.read` (backfill) and
   * `spark.readStream` (live) — the Kappa-architecture property Spark
   * gives for free.
+  *
+  * A stream lands in a graft table through `writeStream.format("graft")`
+  * (exactly-once per micro-batch; the `keys` option upserts on those
+  * columns). [[applyChangesToSnapshotTable]] replays a change feed onto
+  * a second table.
   */
 object EventStream {
 
@@ -211,50 +216,6 @@ object EventStream {
         col("view_ts").cast(outT).as("view_ts"),
         col("click_ts").cast(outT).as("click_ts"))
   }
-
-  /** Continuous ingest into the evolving catalog table: the reference's
-    * batch pipeline (align → evolve → append, `EvolvingWriter`) run as
-    * a stream via `foreachBatch`. Each micro-batch appends through the
-    * same schema-evolution path the batch job uses — one code path for
-    * backfill and live (the Kappa property), and the writer's
-    * ALTER-then-append handles a schema change between deployments.
-    * Exactly-once note: `foreachBatch` gives at-least-once delivery;
-    * the downstream exact-dedup ([[dedupEvents]] /
-    * `Queries.stream_dedup_events`) is the standard repair.
-    *
-    * @return the started query (caller awaits/stops it)
-    */
-  def writeToTable(stream: DataFrame, table: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.catalog.EvolvingWriter.appendWithEvolution(
-          batch.sparkSession, batch, table)
-        ()
-      }
-      .start()
-
-  /** CDC-style continuous ingest: like [[writeToTable]] but each
-    * micro-batch UPSERTS on `keyCols` — a late correction for a key
-    * replaces the earlier row instead of appending a duplicate. This is
-    * the streaming face of `EvolvingWriter.upsert`, so all its
-    * guarantees carry over (touched-partition-bounded rewrite, schema
-    * evolution, null-partition fallback). Micro-batch replays after a
-    * crash re-apply the same upserts idempotently — upsert-by-key makes
-    * foreachBatch's at-least-once effectively exactly-once for keyed
-    * data (the standard Structured Streaming idempotent-sink recipe).
-    */
-  def upsertToTable(stream: DataFrame, table: String, keyCols: Seq[String],
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.catalog.EvolvingWriter.upsert(
-          batch.sparkSession, batch, table, keyCols)
-        ()
-      }
-      .start()
 
   /** CDC replication consumer — the downstream half of the changelog:
     * apply a graft change stream (`_change_type` ∈ insert/delete plus

@@ -341,67 +341,6 @@ class MultimodalStreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("writeToTable streams micro-batches through the evolving writer") {
-    import spark.implicits._
-    val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    def at(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000)
-    val dir = Files.createTempDirectory("graft-ingest").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val table = "spark_catalog.default.events_streamed"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    graft.catalog.EvolvingWriter.configure(spark)
-    // two files -> two micro-batches through the same evolving append
-    Seq(EventStream.Event(1, at(0), 7L, "view", 1.0, ""))
-      .toDS().withColumn("created_at", lit(at(0)))
-      .coalesce(1).write.parquet(s"$dir/f1")
-    Seq(EventStream.Event(2, at(5), 8L, "click", 2.0, ""))
-      .toDS().withColumn("created_at", lit(at(5)))
-      .coalesce(1).write.parquet(s"$dir/f2")
-    val schema = spark.read.parquet(s"$dir/f1").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/*")
-    val q = EventStream.writeToTable(stream, table, ckpt)
-    try {
-      q.processAllAvailable()
-      val rows = spark.table(table)
-      assert(rows.count() == 2)
-      // partition column derived from created_at by the writer
-      assert(rows.columns.contains(graft.catalog.EvolvingWriter.PartitionColumn))
-    } finally {
-      q.stop()
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
-  }
-
-  test("upsertToTable applies late corrections as updates, not duplicate appends") {
-    import spark.implicits._
-    val base = java.sql.Timestamp.valueOf("2026-03-01 00:00:00")
-    def at(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000)
-    val dir = Files.createTempDirectory("graft-cdc").toString
-    val ckpt = Files.createTempDirectory("graft-cdc-ckpt").toString
-    val table = "spark_catalog.default.events_cdc"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    graft.catalog.EvolvingWriter.configure(spark)
-    // batch 1 inserts keys 1,2; batch 2 corrects key 1 and adds key 3
-    Seq((1L, "v1", at(0)), (2L, "w1", at(1)))
-      .toDF("id", "v", "created_at").coalesce(1).write.parquet(s"$dir/f1")
-    Seq((1L, "v2", at(2)), (3L, "x1", at(3)))
-      .toDF("id", "v", "created_at").coalesce(1).write.parquet(s"$dir/f2")
-    val schema = spark.read.parquet(s"$dir/f1").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/*")
-    val q = EventStream.upsertToTable(stream, table, Seq("id"), ckpt)
-    try {
-      q.processAllAvailable()
-      val rows = spark.table(table).select("id", "v")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(rows == Set((1L, "v2"), (2L, "w1"), (3L, "x1")))
-    } finally {
-      q.stop()
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
-  }
-
   test("stream-stream interval join attributes clicks to in-horizon views only") {
     import spark.implicits._
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")

@@ -156,6 +156,59 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.read().select("id").as[Long].collect().sorted.toSeq == before)
   }
 
+  test("upsert moves keys across months; a drained month leaves the manifest") {
+    val t = SnapshotTable.create(spark, freshRoot(), eventsSchema, monthSpec)
+    t.append(rows((1, "2024-01-05", 1.0), (2, "2024-01-06", 2.0)))
+    t.append(rows((3, "2024-02-10", 3.0)))
+    def byId(): Set[(Long, String, Double)] = t.read()
+      .select($"id", date_format($"ts", "yyyy-MM"), $"v")
+      .as[(Long, String, Double)].collect().toSet
+    // id 1 stays in January, id 2 moves to March, id 4 is new
+    t.upsert(rows((1, "2024-01-20", 10.0), (2, "2024-03-01", 20.0),
+      (4, "2024-03-02", 4.0)), Seq("id"))
+    assert(byId() == Set((1L, "2024-01", 10.0), (2L, "2024-03", 20.0),
+      (3L, "2024-02", 3.0), (4L, "2024-03", 4.0)))
+    assert(t.currentSnapshot().partitions.flatten.toSet ==
+      Set("2024-01", "2024-02", "2024-03"))
+    // the last January key moves to April: January drains completely
+    t.upsert(rows((1, "2024-04-01", 100.0)), Seq("id"))
+    val snap = t.currentSnapshot()
+    assert(!snap.files.exists(_.partition.contains("2024-01")),
+      "a drained month must leave no file in the manifest")
+    assert(snap.partitions.flatten.toSet == Set("2024-02", "2024-03", "2024-04"))
+    assert(byId() == Set((1L, "2024-04", 100.0), (2L, "2024-03", 20.0),
+      (3L, "2024-02", 3.0), (4L, "2024-03", 4.0)))
+  }
+
+  test("upsert on an unpartitioned table rewrites keyed rows in place") {
+    val kv = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
+    val t = SnapshotTable.create(spark, freshRoot(), kv, None)
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    t.upsert(Seq((2L, "b2"), (3L, "c")).toDF("id", "v"), Seq("id"))
+    assert(t.currentSnapshot().spec.isEmpty)
+    assert(t.read().as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b2"), (3L, "c")))
+  }
+
+  test("upsert of a NULL partition-source key neither loses nor duplicates rows") {
+    val t = SnapshotTable.create(spark, freshRoot(), eventsSchema, monthSpec)
+    def nullTs(id: Long, v: Double) =
+      Seq((id, null.asInstanceOf[Timestamp], v)).toDF("id", "ts", "v")
+    t.append(rows((1, "2024-01-10", 1.0), (3, "2024-02-10", 3.0))
+      .unionByName(nullTs(2, 2.0)))
+    assert(t.currentSnapshot().partitions.toSet ==
+      Set(Some("2024-01"), Some("2024-02"), None))
+    def byId(): Map[Long, Double] =
+      t.read().select("id", "v").as[(Long, Double)].collect().toMap
+    t.upsert(nullTs(2, 20.0), Seq("id"))
+    assert(byId() == Map(1L -> 1.0, 2L -> 20.0, 3L -> 3.0))
+    // a repeated upsert of the same key leaves exactly one row
+    t.upsert(nullTs(2, 200.0), Seq("id"))
+    assert(t.read().filter($"id" === 2L).count() == 1L)
+    assert(byId() == Map(1L -> 1.0, 2L -> 200.0, 3L -> 3.0))
+    assert(t.read().count() == 3L)
+  }
+
   test("concurrent appends both land via commit retry") {
     val t = SnapshotTable.create(spark, freshRoot(), eventsSchema, monthSpec)
     val start = new CountDownLatch(1)
@@ -200,6 +253,13 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(s("id").dataType == LongType && s("score").dataType == DoubleType)
     val out = t.read().orderBy("id").as[(Long, Double)].collect().toSeq
     assert(out == Seq((1L, 1.5), (2L, 2.5)))
+    // a NARROWER later batch still appends (cast up), with no demotion
+    t.append(Seq((3, 3.5f)).toDF("id", "score"))
+    assert(t.schema("id").dataType == LongType &&
+      t.schema("score").dataType == DoubleType)
+    assert(t.read().count() == 3L)
+    assert(t.read().orderBy("id").as[(Long, Double)].collect().toSeq ==
+      Seq((1L, 1.5), (2L, 2.5), (3L, 3.5)))
   }
 
   test("readTimestampRange prunes at the manifest and filters exactly") {
